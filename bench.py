@@ -846,7 +846,9 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": float(sf_match.group(1)) if sf_match else None,
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", 0) or 0) or None,
+        # local[*] (os.cpu_count()) when SPARK_GRAFT_CPUS is unset —
+        # stamped either way so the lower-core guard below always fires
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
         **bulky,
         **{k: extras[k] for k in tail_keys},
         "queries": timings,

@@ -625,19 +625,22 @@ def test_hnsw_partitioned_auto_matches_in_memory(spark, sf_dir, exact,
     idx = hnsw_build(emb, num_shards=4, shard_by="kmeans")
     path = str(tmp_path / "hnsw_auto_part")
     hnsw_persist_partitioned(idx, path)
-    served = hnsw_probe_partitioned(spark, path, qs, K, ef_search=64,
-                                    probe_shards="auto").collect()
-    mem = hnsw_search(idx, qs, K, ef_search=64,
-                      probe_shards="auto").collect()
+    import warnings
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        served = hnsw_probe_partitioned(spark, path, qs, K, ef_search=64,
+                                        probe_shards="auto").collect()
+        mem = hnsw_search(idx, qs, K, ef_search=64,
+                          probe_shards="auto").collect()
     assert sorted(map(tuple, served)) == sorted(map(tuple, mem))
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
 
 
 def test_hnsw_partitioned_fixed_low_probe_warns(spark, sf_dir, tmp_path):
     """The partitioned serving path must emit the same recall-risk
-    warning as the in-memory search for a risky fixed probe count: the
-    inner hnsw_search only sees the PRUNED cell union (probe == its
-    whole world), so the outer router is the only place the full cell
-    population is known (review finding)."""
+    warning as the in-memory search for a risky fixed probe count, priced
+    against the FULL cell population, and exactly once: the batch is
+    routed once per call."""
     import pytest as _pytest
 
     from vectordb_explorations_spark.operators.hnsw import (
@@ -651,9 +654,11 @@ def test_hnsw_partitioned_fixed_low_probe_warns(spark, sf_dir, tmp_path):
     path = str(tmp_path / "hnsw_idx_warn")
     hnsw_persist_partitioned(idx, path)
     queries = sample_queries(emb, 2).cache()
-    with _pytest.warns(RuntimeWarning, match="probe_shards=2"):
+    with _pytest.warns(RuntimeWarning, match="probe_shards=2") as rec:
         hnsw_probe_partitioned(spark, path, queries, 5,
                                probe_shards=2).collect()
+    assert len([w for w in rec
+                if issubclass(w.category, RuntimeWarning)]) == 1
     idx.unpersist()
 
 

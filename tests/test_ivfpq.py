@@ -152,9 +152,9 @@ def test_ivfpq_append_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     codes.count()
     path = str(tmp_path / "ivfpq_inc")
     ivfpq_persist_partitioned(codes, path)
-    n0 = _read_corpus_meta(path)
+    n0 = _read_corpus_meta(spark, path)
     ivfpq_append_partitioned(path, cents, books, new)
-    assert _read_corpus_meta(path) == n0 + new.count()
+    assert _read_corpus_meta(spark, path) == n0 + new.count()
 
     queries = sample_queries(emb, 5).cache()
     served = ivfpq_probe_partitioned(spark, path, cents, books, queries, 5,

@@ -151,14 +151,14 @@ def test_append_clears_corpus_memo(spark, sf_dir, tmp_path):
                                       k_codes=16)
     path = str(tmp_path / "ivfpq_grow")
     ivfpq_persist_partitioned(codes, path)
-    n0 = _read_corpus_meta(path)
+    n0 = _read_corpus_meta(spark, path)
     df = spark.read.parquet(path)
     rep = IVF_ASSIGN_N
     assert _corpus_rows(df, rep) == n0
     batch = emb.limit(20).selectExpr("vec_id + 1000000 AS vec_id",
                                      "embedding", "label")
     ivfpq_append_partitioned(path, cents, books, batch)
-    assert _read_corpus_meta(path) == n0 + 20
+    assert _read_corpus_meta(spark, path) == n0 + 20
     # the append cleared the memo (no stale entry survives), and a
     # fresh read of the layout — what probe_partitioned does per call —
     # resolves against the grown N; the old snapshot object honestly
@@ -185,8 +185,47 @@ def test_layout_corpus_n_fallback_counts_unpruned(spark, tmp_path):
     assert n == 100  # 200 rows / replication 2 — the UNPRUNED count
     assert any("_corpus_meta.json" in str(w.message) for w in caught)
 
-    _write_corpus_meta(path, 100)
+    _write_corpus_meta(spark, path, 100)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         assert _layout_corpus_n(spark, path, 2) == 100
     assert not [w for w in caught if "corpus" in str(w.message)]
+
+
+def test_corpus_meta_sidecar_on_uri_layout(spark, sf_dir, tmp_path):
+    """The corpus-size sidecar goes through the Hadoop FS API, so a
+    layout addressed by URI (``file://`` here; HDFS / object stores the
+    same way) keeps it: N resolves with no count job and no
+    missing-sidecar warning, and the layout serves."""
+    import warnings
+
+    from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
+    from vectordb_explorations_spark.operators.pq import (
+        _layout_corpus_n, _read_corpus_meta, ivfpq_build,
+        ivfpq_persist_partitioned, ivfpq_probe_partitioned)
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    codes, cents, books = ivfpq_build(emb, num_centroids=8, m_subspaces=8,
+                                      k_codes=16)
+    path = "file://" + str(tmp_path / "ivfpq_uri")
+    ivfpq_persist_partitioned(codes, path)
+    n = emb.count()
+    assert _read_corpus_meta(spark, path) == n
+
+    sc = spark.sparkContext
+    sc.setJobGroup("corpus-meta-uri", "resolve corpus N")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            assert _layout_corpus_n(spark, path, IVF_ASSIGN_N) == n
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("corpus-meta-uri")) == []
+    assert not [w for w in caught if "_corpus_meta.json" in str(w.message)]
+
+    queries = sample_queries(emb, 3)
+    served = ivfpq_probe_partitioned(spark, path, cents, books, queries, K,
+                                     nprobe=3, refine_with=emb,
+                                     refine_factor="auto").collect()
+    assert len(served) == 3 * K

@@ -1,0 +1,116 @@
+"""Serving contract: every public ANN serve call reads its query frame
+once, and the engine builds no Python-RDD frame of its own.
+
+A Python-RDD query frame runs Python-worker tasks on every read, so a
+serve call that re-reads the frame (to route, to probe, to refine) pays
+for it again each time. The frame here bumps an accumulator once per row
+evaluated; one read of a Q-row frame adds exactly Q.
+"""
+
+import pytest
+
+from vectordb_explorations_spark.operators.ann import (
+    ivf_build, ivf_persist_partitioned, ivf_probe_partitioned)
+from vectordb_explorations_spark.operators.hnsw import (
+    hnsw_build, hnsw_persist_partitioned, hnsw_probe_partitioned)
+from vectordb_explorations_spark.operators.knn import (
+    knn_join_blockwise, sample_queries)
+from vectordb_explorations_spark.operators.pq import (
+    ivfpq_build, ivfpq_persist_partitioned, ivfpq_probe_partitioned)
+from vectordb_explorations_spark.operators.sq import (
+    ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned)
+from vectordb_explorations_spark.sources import load_table
+
+K = 5
+NUM_Q = 12
+
+
+@pytest.fixture(scope="module")
+def layouts(spark, sf_dir, tmp_path_factory):
+    emb = load_table(spark, "embeddings", sf_dir)
+    base = tmp_path_factory.mktemp("serve_reads")
+    out = {"emb": emb}
+
+    idx = hnsw_build(emb, num_shards=4, shard_by="kmeans")
+    out["hnsw"] = str(base / "hnsw")
+    hnsw_persist_partitioned(idx, out["hnsw"])
+
+    assigned, cents = ivf_build(emb, num_centroids=8)
+    out["ivf"] = (str(base / "ivf"), cents)
+    ivf_persist_partitioned(assigned, out["ivf"][0])
+
+    codes, cents, books = ivfpq_build(emb, num_centroids=8, m_subspaces=8,
+                                      k_codes=16)
+    out["ivfpq"] = (str(base / "ivfpq"), cents, books)
+    ivfpq_persist_partitioned(codes, out["ivfpq"][0])
+
+    codes, cents, mins, maxs = ivfsq_build(emb, num_centroids=8)
+    out["ivfsq"] = (str(base / "ivfsq"), cents, mins, maxs)
+    ivfsq_persist_partitioned(codes, out["ivfsq"][0])
+    return out
+
+
+def _counting_queries(spark, emb):
+    """A Python-RDD query frame (4 partitions) and the accumulator its
+    rows bump when evaluated."""
+    rows = [(int(r[0]), [float(x) for x in r[1]])
+            for r in sample_queries(emb, NUM_Q).collect()]
+    sc = spark.sparkContext
+    acc = sc.accumulator(0)
+
+    def bump(row):
+        acc.add(1)
+        return row
+
+    qdf = spark.createDataFrame(sc.parallelize(rows, 4).map(bump),
+                                "query_id long, query_vec array<double>")
+    return qdf, acc
+
+
+def _serve_calls(spark, lay):
+    emb = lay["emb"]
+    ivf_path, ivf_cents = lay["ivf"]
+    pq_path, pq_cents, books = lay["ivfpq"]
+    sq_path, sq_cents, mins, maxs = lay["ivfsq"]
+    return {
+        "knn_join_blockwise": lambda q: knn_join_blockwise(emb, q, K),
+        "hnsw_probe_partitioned": lambda q: hnsw_probe_partitioned(
+            spark, lay["hnsw"], q, K, probe_shards="auto"),
+        "ivfpq_probe_partitioned": lambda q: ivfpq_probe_partitioned(
+            spark, pq_path, pq_cents, books, q, K, nprobe=3,
+            refine_with=emb, refine_factor=4),
+        "ivf_probe_partitioned": lambda q: ivf_probe_partitioned(
+            spark, ivf_path, ivf_cents, q, K, nprobe=3),
+        "ivfsq_probe_partitioned": lambda q: ivfsq_probe_partitioned(
+            spark, sq_path, sq_cents, mins, maxs, q, K, nprobe=3,
+            refine_with=emb, refine_factor=4),
+    }
+
+
+@pytest.mark.parametrize("call", ["knn_join_blockwise",
+                                  "hnsw_probe_partitioned",
+                                  "ivfpq_probe_partitioned",
+                                  "ivf_probe_partitioned",
+                                  "ivfsq_probe_partitioned"])
+def test_serve_call_reads_query_frame_once(spark, layouts, call):
+    qdf, acc = _counting_queries(spark, layouts["emb"])
+    result = _serve_calls(spark, layouts)[call](qdf).collect()
+    assert {r["query_id"] for r in result}  # the call really served
+    assert acc.value == NUM_Q, (call, acc.value)
+
+
+def test_refine_query_side_is_not_a_python_rdd(spark, layouts, tmp_path):
+    """Over a parquet query source the refined IVF-PQ plan scans no
+    ExistingRDD: the engine rebuilds the collected batch as a local
+    table, not as a Python-RDD frame."""
+    emb = layouts["emb"]
+    path, cents, books = layouts["ivfpq"]
+    qpath = str(tmp_path / "queries")
+    sample_queries(emb, NUM_Q).write.parquet(qpath)
+    served = ivfpq_probe_partitioned(
+        spark, path, cents, books, spark.read.parquet(qpath), K,
+        nprobe=3, refine_with=emb, refine_factor=4)
+    plan = served._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan[:2000]
+    assert "LocalTableScan" in plan, plan[:2000]
+    assert len(served.collect()) == NUM_Q * K

@@ -211,9 +211,9 @@ def test_ivfsq_append_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     codes.count()
     path = str(tmp_path / "ivfsq_inc")
     ivfsq_persist_partitioned(codes, path)
-    n0 = _read_corpus_meta(path)
+    n0 = _read_corpus_meta(spark, path)
     ivfsq_append_partitioned(path, cents, mins, maxs, new)
-    assert _read_corpus_meta(path) == n0 + new.count()
+    assert _read_corpus_meta(spark, path) == n0 + new.count()
 
     queries = sample_queries(emb, 5).cache()
     served = ivfsq_probe_partitioned(spark, path, cents, mins, maxs,

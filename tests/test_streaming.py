@@ -441,7 +441,7 @@ def test_incremental_ivfpq_ingest_matches_batch_encode(spark, sf_dir,
     b = sorted((int(r[0]), int(r[1]), tuple(r[2])) for r in
                codes.select("vec_id", "list_id", "codes").collect())
     assert a == b and a
-    assert _read_corpus_meta(path) == emb.count()
+    assert _read_corpus_meta(spark, path) == emb.count()
 
     queries = sample_queries(emb, 5).cache()
     served = ivfpq_probe_partitioned(spark, path, cents, books, queries, 5,
@@ -472,12 +472,12 @@ def test_ingest_replay_is_idempotent(spark, sf_dir, tmp_path):
     q = incremental_ivfpq_ingest(spark, sf_dir, path, cents, books)
     q.awaitTermination(300)
     rows1 = spark.read.parquet(path).count()
-    meta1 = _read_corpus_meta(path)
+    meta1 = _read_corpus_meta(spark, path)
 
     q2 = incremental_ivfpq_ingest(spark, sf_dir, path, cents, books)
     q2.awaitTermination(300)
     assert spark.read.parquet(path).count() == rows1
-    assert _read_corpus_meta(path) == meta1 == emb.count()
+    assert _read_corpus_meta(spark, path) == meta1 == emb.count()
 
 
 def test_batch_key_is_content_keyed(spark, tmp_path):

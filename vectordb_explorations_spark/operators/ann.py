@@ -102,7 +102,13 @@ def collect_query_batch(queries: DataFrame, qid_col: str, qvec_col: str,
                         cap: int = QUERY_BATCH_CAP) -> list:
     """Driver-side query-batch collect, capped (LIMIT cap+1 bounds the
     transfer BEFORE the overflow check, so an oversized frame can never
-    flood the driver)."""
+    flood the driver).
+
+    Contract: a public serve call evaluates its query frame through this
+    function exactly ONCE. The caller's frame may be arbitrarily costly to
+    re-read (a Python-RDD frame runs Python-worker tasks per read), so
+    routing, probe selection, scoring and exact refine all work from the
+    collected batch, never from the frame."""
     rows = queries.select(qid_col, qvec_col).limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(
@@ -113,6 +119,34 @@ def collect_query_batch(queries: DataFrame, qid_col: str, qvec_col: str,
             f"corpus-scale scoring (knn_join_blockwise also routes its "
             f"query side through this cap)")
     return rows
+
+
+def collect_query_arrays(queries: DataFrame, qid_col: str, qvec_col: str
+                         ) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`collect_query_batch` as arrays: int64 ids (Q,) and the
+    float64 query matrix (Q, dim)."""
+    rows = collect_query_batch(queries, qid_col, qvec_col)
+    return (np.asarray([int(r[0]) for r in rows], dtype=np.int64),
+            np.asarray([r[1] for r in rows], dtype=np.float64))
+
+
+def _probe_map(centroids: np.ndarray, qmat: np.ndarray,
+               nprobe: int) -> dict[int, np.ndarray]:
+    """IVF-family probe selection: list id -> indices (ascending) of the
+    queries whose ``nprobe`` nearest centroids include it, ties broken by
+    list id. A (Q, C) NumPy distance over driver-resident centroids; the
+    keys are the probed-list union, which the searches apply as a literal
+    ``list_id IN (...)`` filter — on a hive list_id layout that filter
+    partition-prunes the scan."""
+    cd = qmat[:, None, :] - centroids[None, :, :]
+    cdist = (cd * cd).sum(-1)  # (Q, C)
+    n_lists = centroids.shape[0]
+    nn = min(nprobe, n_lists)
+    by_list: dict[int, list[int]] = {}
+    for qi in range(len(qmat)):
+        for li in np.lexsort((np.arange(n_lists), cdist[qi]))[:nn]:
+            by_list.setdefault(int(li), []).append(qi)
+    return {li: np.asarray(v, dtype=np.int64) for li, v in by_list.items()}
 
 
 def _hyperplanes(num_tables: int, num_planes: int, dim: int, seed: int) -> np.ndarray:
@@ -701,7 +735,7 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries: DataFrame,
     exact distances make the replicas tie, so the bounded merge just
     dedupes before ranking.
 
-    When to use which (10M in-memory measurement, SCALE_NOTES r10): on a
+    When to use which (10M in-memory measurement, SCALE_NOTES): on a
     CACHED corpus the blockwise exact GEMM is competitive past what
     intuition suggests (10M x batch-100: exact 4.0 s vs IVF 9.1 s —
     sequential cache-friendly FLOPs beat list-gather overhead), so this
@@ -716,20 +750,9 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries: DataFrame,
     # Probe selection is a (Q, C) argmin over driver-resident centroids —
     # pure NumPy, no crossJoin/window stage (queries and centroids are both
     # tiny; the cluster only ever sees the final probed-list isin filter).
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [int(r[0]) for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)  # (Q, C)
-    nn = min(nprobe, centroids.shape[0])
-    by_list: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        order = np.lexsort((np.arange(centroids.shape[0]), cdist[qi]))[:nn]
-        for li in order:
-            by_list.setdefault(int(li), []).append(qi)
-    list_q = {li: np.asarray(v, dtype=np.int64) for li, v in by_list.items()}
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    scan = (assigned.where(F.col("list_id").isin(sorted(by_list)))
+    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col)
+    list_q = _probe_map(centroids, qmat, nprobe)
+    scan = (assigned.where(F.col("list_id").isin(sorted(list_q)))
             .select("list_id", id_col, vec_col))
     out_schema = T.StructType([
         T.StructField(qid_col, T.LongType()),
@@ -1070,23 +1093,11 @@ def ivf_probe_partitioned(spark, path: str, centroids: np.ndarray,
                           id_col: str = "vec_id", vec_col: str = "embedding",
                           qid_col: str = "query_id",
                           qvec_col: str = "query_vec") -> DataFrame:
-    """Serve from the partitioned index: select the union of all queries'
-    probed lists driver-side (centroids are driver-resident), apply it as
-    a LITERAL isin filter — this is what partition-prunes the scan — and
-    run the standard ivf_search over the pruned frame (its closure
-    probe map then restricts each query to ITS lists within the
-    union)."""
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)
-    nn = min(nprobe, centroids.shape[0])
-    probed = sorted({int(li)
-                     for qi in range(len(qrows))
-                     for li in np.lexsort((np.arange(centroids.shape[0]),
-                                           cdist[qi]))[:nn]})
-    assigned = (spark.read.parquet(path)
-                .where(F.col("list_id").isin(probed)))
-    return ivf_search(assigned, centroids, queries, k, nprobe=nprobe,
-                      id_col=id_col, vec_col=vec_col,
+    """Serve from the partitioned index: ``ivf_search`` over the unpruned
+    hive layout. Its one query collect and one probe selection yield the
+    probed-list union as a LITERAL ``list_id IN (...)`` filter, which
+    partition-prunes the scan (unprobed list directories are never read),
+    and its closure probe map restricts each query to ITS lists."""
+    return ivf_search(spark.read.parquet(path), centroids, queries, k,
+                      nprobe=nprobe, id_col=id_col, vec_col=vec_col,
                       qid_col=qid_col, qvec_col=qvec_col)

@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from vectordb_explorations_spark.operators.ann import collect_query_batch
+from vectordb_explorations_spark.operators.ann import collect_query_arrays
 
 
 class HnswGraph:
@@ -636,6 +636,9 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
     """Per-shard graph search + global top-k merge — SURVEY §3 entry point
     C, two stages and one shuffle of only shards×k rows per query.
 
+    The query frame is collected once (``collect_query_batch``); routing
+    and scoring both work from that batch.
+
     With ``probe_shards=None`` every query runs on every shard (required
     for hash-sharded indexes, whose shards are uniform corpus samples).
     With ``probe_shards=n`` on a kmeans-sharded index (centroid column
@@ -644,17 +647,16 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
     serving work is O(n cells), not O(shards): the scale path when shard
     count grows with the corpus. Routing is a (Q, cells) NumPy argmin
     over driver-resident centroids (num_shards rows collected once); no
-    vectors move. ``probe_shards='auto'`` resolves the count from the
-    index's cell count at the calibrated probed-fraction operating point
-    (policy block above); a fixed int below that fraction emits a loud
+    vectors move, and the union of routed shards prunes the blob scan.
+    ``probe_shards='auto'`` resolves the count from the index's cell
+    count at the calibrated probed-fraction operating point (policy
+    block above); a fixed int below that fraction emits one loud
     RuntimeWarning instead of silently degrading.
 
     ef_search defaults to 128: at the 200k probe this lifts recall@10
     0.865 → 0.935 for <25% extra beam work (per-shard graphs are small, so
     a wider beam is cheap relative to the fan-out overhead)."""
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [int(r[0]) for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
 
     routed: dict[int, list[int]] | None = None
     if probe_shards is not None:
@@ -803,54 +805,18 @@ def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
                            qid_col: str = "query_id",
                            qvec_col: str = "query_vec",
                            id_col: str = "vec_id") -> DataFrame:
-    """Serve from the partitioned index: read the (tiny) shard->centroid
-    metadata columns, route every query driver-side, apply the UNION of
-    routed shards as a literal isin filter — that is what partition-prunes
-    the scan — and run the standard ``hnsw_search`` over the pruned frame.
-
-    Routing stability under pruning: each query's ``probe_shards`` nearest
-    cells are in the union by construction, so re-routing inside
-    ``hnsw_search`` over the union's cells selects the same cells per
-    query — bit-equality with the in-memory search is pinned by
-    tests/test_ann.py. Requires a kmeans-sharded index (non-null
+    """Serve from the partitioned index: ``hnsw_search`` over the
+    unpruned hive layout. It reads the (tiny) shard -> centroid columns,
+    collects the query batch once, routes every query once over the full
+    cell population, and applies the union of routed shards as a literal
+    ``shard IN (...)`` filter — that is what partition-prunes the blob
+    scan, so unrouted shard directories are never read. Bit-equal to the
+    in-memory ``hnsw_search`` over the same index (pinned by
+    tests/test_ann.py). Requires a kmeans-sharded index (non-null
     centroids); hash shards cannot be routed."""
-    full = spark.read.parquet(path)
-    cent_rows = full.select("shard", "centroid").collect()
-    if any(r["centroid"] is None for r in cent_rows):
-        raise ValueError(
-            "hnsw_probe_partitioned requires a kmeans-sharded index "
-            "(hnsw_build(shard_by='kmeans'))")
-    cell_shards: dict[tuple, list[int]] = {}
-    for r in cent_rows:
-        cell_shards.setdefault(tuple(r["centroid"]), []).append(int(r["shard"]))
-    C = np.asarray(list(cell_shards), dtype=np.float64)
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    if probe_shards == "auto":
-        # resolve ONCE here (the inner hnsw_search re-resolves over the
-        # pruned union's cells, which is the same cell population by
-        # construction — but pass the resolved int so the risk warning
-        # cannot double-fire)
-        probe_shards = adaptive_probe_shards(len(C))
-    else:
-        probe_shards = int(probe_shards)
-        # risk-warn HERE against the FULL cell population: the inner
-        # hnsw_search re-routes over the PRUNED union (only the probed
-        # cells survive the isin filter), so from its viewpoint a risky
-        # fixed probe looks like a full fan-out and its own check stays
-        # silent (caught by review — the comment previously claimed the
-        # populations were the same, which is only true for 'auto')
-        _warn_probe_recall_risk(min(probe_shards, len(cell_shards)),
-                                len(cell_shards))
-    nn = min(probe_shards, len(C))
-    d2 = -2.0 * qmat @ C.T + (C ** 2).sum(-1)
-    near = np.argpartition(d2, nn - 1, axis=1)[:, :nn]
-    cells = list(cell_shards.values())
-    routed = sorted({s for qi in range(len(qrows))
-                     for ci in near[qi] for s in cells[ci]})
-    pruned = full.where(F.col("shard").isin(routed))
-    return hnsw_search(pruned, queries, k, ef_search=ef_search,
-                       qid_col=qid_col, qvec_col=qvec_col, id_col=id_col,
+    return hnsw_search(spark.read.parquet(path), queries, k,
+                       ef_search=ef_search, qid_col=qid_col,
+                       qvec_col=qvec_col, id_col=id_col,
                        probe_shards=probe_shards)
 
 

@@ -22,7 +22,8 @@ from pyspark.sql import types as T
 
 from vectordb_explorations_spark.functions.vectors import l2_distance_sql
 from vectordb_explorations_spark.operators import ann as ANN
-from vectordb_explorations_spark.operators.ann import collect_query_batch
+from vectordb_explorations_spark.operators.ann import (_probe_map,
+                                                       collect_query_arrays)
 
 
 # ---- corpus-adaptive exact-refine shortlist (round 8) ----
@@ -219,17 +220,25 @@ def _exact_refine(cand: DataFrame, qids, qmat: np.ndarray,
                   qid_col: str = "query_id",
                   qvec_col: str = "query_vec") -> DataFrame:
     """Shared exact-refine tail for every compressed-index search (PQ,
-    IVF-PQ, SQ8): re-score the bounded candidate set against the original
-    vectors and re-rank. Broadcast the CANDIDATE side (bounded at
-    Q * k * refine_factor rows by construction) so the vector corpus never
-    shuffles for the re-score — without the hint this planned as a
-    sort-merge join (2 extra exchanges + sorts, the round-4 PQ latency
-    gap), and at 100 TB AQE would try to broadcast the corpus
-    statistics-blind. ``dim`` is statically known from the index, so the
-    distance unrolls into codegen."""
+    IVF-PQ, SQ8, IVF-SQ8, BQ): re-score the bounded candidate set against
+    the original vectors and re-rank. Broadcast the CANDIDATE side
+    (bounded at Q * k * refine_factor rows by construction) so the vector
+    corpus never shuffles for the re-score — without the hint this
+    planned as a sort-merge join (2 extra exchanges + sorts), and at
+    100 TB AQE would try to broadcast the corpus statistics-blind.
+    ``dim`` is statically known from the index, so the distance unrolls
+    into codegen.
+
+    The query side is the caller's already-collected batch, rebuilt from
+    a pandas frame: with Arrow enabled (the session default) that plans
+    as a ``LocalTableScan``, so the refine runs no Python-worker task to
+    read it (a Python-list ``createDataFrame`` is a Python-RDD scan)."""
+    import pandas as pd
+
     spark = refine_with.sparkSession
     qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in zip(qids, qmat)],
+        pd.DataFrame({qid_col: np.asarray(qids, dtype=np.int64),
+                      qvec_col: qmat.tolist()}),
         f"{qid_col} long, {qvec_col} array<double>")
     scored = (refine_with.select(id_col, vec_col)
               .join(F.broadcast(cand), id_col)
@@ -268,9 +277,7 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
             refine_factor, codes_df, k, PQ_REFINE_FRACTION, "pq",
             corpus_n=corpus_n)
     m, kc, dsub = codebooks.shape
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([int(r[0]) for r in qrows])
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
     # (Q, m, kc) squared-distance LUTs
     luts = np.stack([
         ((qmat[:, s * dsub:(s + 1) * dsub][:, None, :]
@@ -288,7 +295,7 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
         # Accumulate per-BATCH top-n_local and emit one per-PARTITION
         # top-n_local at close: emitting per batch multiplied the window
         # prefilter's shuffle input by the batch count (10x at sf0.1 with
-        # 10k-row Arrow batches — the round-4 PQ latency hot spot).
+        # 10k-row Arrow batches).
         acc_i, acc_d = [], []  # per-batch (top, ids) candidate pools
         for pdf in batches:
             if pdf.empty:
@@ -449,23 +456,17 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
             refine_factor, codes_df, k, IVFPQ_REFINE_FRACTION, "ivfpq",
             corpus_n=corpus_n, replication=ANN.IVF_ASSIGN_N)
     m, kc, dsub = codebooks.shape
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [int(r[0]) for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)  # (Q, C)
-    nn = min(nprobe, centroids.shape[0])
-    luts, by_list = [], {}
-    for qi, qid in enumerate(qids):
-        order = np.lexsort((np.arange(centroids.shape[0]), cdist[qi]))[:nn]
-        for li in order:
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
+    by_list = _probe_map(centroids, qmat, nprobe)
+    luts, list_lix = [], {}
+    for li, qis in by_list.items():
+        list_lix[li] = np.arange(len(luts), len(luts) + len(qis))
+        for qi in qis:
             r = qmat[qi] - centroids[li]  # residual query for this list
-            lut = np.stack([
+            luts.append(np.stack([
                 ((r[s * dsub:(s + 1) * dsub][None, :]
                   - codebooks[s]) ** 2).sum(-1)
-                for s in range(m)])  # (m, kc)
-            by_list.setdefault(int(li), []).append((qid, len(luts)))
-            luts.append(lut)
+                for s in range(m)]))  # (m, kc)
     luts = np.stack(luts)  # (Q*nprobe, m, kc)
     # The probe map (list -> probing queries + their LUT rows) rides the
     # UDF closure — Q x nprobe entries, kilobytes. The earlier probe-frame
@@ -474,10 +475,7 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
     # the ADC stage alone was 7.5 of 8.4 s/batch100) — codes now stream
     # through Arrow ONCE and each list's rows score against a (nq, m)
     # LUT gather.
-    list_qids = {li: np.asarray([q for q, _ in v], dtype=np.int64)
-                 for li, v in by_list.items()}
-    list_lix = {li: np.asarray([x for _, x in v], dtype=np.int64)
-                for li, v in by_list.items()}
+    list_qids = {li: qids[qis] for li, qis in by_list.items()}
     scan = (codes_df.where(F.col("list_id").isin(sorted(by_list)))
             .select("list_id", id_col, "codes"))
 
@@ -492,7 +490,7 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
     def score2(batches):
         # Accumulate per-PARTITION and emit once (pq_search's pattern —
         # per-batch emission multiplies the merge shuffle's input by the
-        # batch count, the measured round-4 ADC hot spot).
+        # batch count).
         accs = []
         for pdf in batches:
             if pdf.empty:
@@ -554,39 +552,26 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
                          id_col, vec_col, qid_col, qvec_col)
 
 
-# ---- partitioned serving for the compressed composite (round 9) ----
+# ---- partitioned serving for the compressed composite ----
 # IVF and sharded HNSW already had hive-partitioned serving; the
 # COMPRESSED router family did not — yet at 100 TB it is exactly the
 # configuration you'd serve (probe-pruned file listing over 16-byte
 # codes instead of 256-byte vectors: the scan that survives is
 # nprobe/C of the INDEX bytes, already 16x smaller than the corpus).
 
-def _probed_union(centroids: np.ndarray, queries: DataFrame, nprobe: int,
-                  qid_col: str = "query_id",
-                  qvec_col: str = "query_vec") -> list[int]:
-    """Driver-side union of every query's nprobe nearest lists — the
-    literal isin filter that partition-prunes a hive list_id layout.
-    Same lexsort tie-break as ivf_search's probe selection."""
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)
-    nn = min(nprobe, centroids.shape[0])
-    return sorted({int(li)
-                   for qi in range(len(qrows))
-                   for li in np.lexsort((np.arange(centroids.shape[0]),
-                                         cdist[qi]))[:nn]})
+def _corpus_meta_path(path: str) -> str:
+    return path.rstrip("/") + "/_corpus_meta.json"
 
 
-def _write_corpus_meta(path: str, corpus_n: int) -> None:
+def _write_corpus_meta(spark, path: str, corpus_n: int) -> None:
     """Persist the corpus size next to the index — THE build-time
     metadata the adaptive refine policy resolves from, so serving never
     schedules a count job (and never mis-counts the assign_n-replicated
-    code rows)."""
-    import json
-    import os
-    with open(os.path.join(path, "_corpus_meta.json"), "w") as f:
-        json.dump({"corpus_n": int(corpus_n)}, f)
+    code rows). Written through the Hadoop FS API, so any filesystem the
+    layout itself lives on (``file://``, HDFS, object stores) holds it."""
+    from vectordb_explorations_spark.sources.sinks import write_json_sidecar
+    write_json_sidecar(spark, _corpus_meta_path(path),
+                       {"corpus_n": int(corpus_n)})
 
 
 def _layout_corpus_n(spark, path: str, replication: int) -> int:
@@ -595,7 +580,7 @@ def _layout_corpus_n(spark, path: str, replication: int) -> int:
     must never count a probe-pruned frame — that badly underestimates N
     and resolves ``refine_factor='auto'`` too small (silently degraded
     recall) while pricing the fixed-rf warning against the wrong N."""
-    n = _read_corpus_meta(path)
+    n = _read_corpus_meta(spark, path)
     if n is not None:
         return n
     import warnings
@@ -607,14 +592,11 @@ def _layout_corpus_n(spark, path: str, replication: int) -> int:
     return spark.read.parquet(path).count() // max(1, int(replication))
 
 
-def _read_corpus_meta(path: str) -> int | None:
-    import json
-    import os
-    p = os.path.join(path, "_corpus_meta.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return int(json.load(f)["corpus_n"])
-    return None
+def _read_corpus_meta(spark, path: str) -> int | None:
+    """The sidecar's corpus size, or None when the layout has none."""
+    from vectordb_explorations_spark.sources.sinks import read_json_sidecar
+    meta = read_json_sidecar(spark, _corpus_meta_path(path))
+    return None if meta is None else int(meta["corpus_n"])
 
 
 def ivfpq_persist_partitioned(codes_df: DataFrame, path: str,
@@ -627,7 +609,8 @@ def ivfpq_persist_partitioned(codes_df: DataFrame, path: str,
     (codes_df.select(id_col, "codes", "list_id")
      .write.mode("overwrite").partitionBy("list_id").parquet(path))
     _write_corpus_meta(
-        path, codes_df.select(id_col).distinct().count())
+        codes_df.sparkSession, path,
+        codes_df.select(id_col).distinct().count())
 
 
 def _append_codes_partitioned(path: str, codes: DataFrame,
@@ -656,8 +639,9 @@ def _append_codes_partitioned(path: str, codes: DataFrame,
      .write.mode("append").options(**V1_COMMITTER)
      .partitionBy("list_id").parquet(path))
     inc = int(obs.get.get("rows") or 0) // max(1, assign_rows_per_vec)
-    old_n = _read_corpus_meta(path) or 0
-    _write_corpus_meta(path, old_n + inc)
+    spark = codes.sparkSession
+    old_n = _read_corpus_meta(spark, path) or 0
+    _write_corpus_meta(spark, path, old_n + inc)
     # The layout just grew: any memoized count over a pre-existing
     # DataFrame of it is stale. Appends are rare next to searches, so
     # clearing the whole memo (one re-count per live index, worst case)
@@ -700,16 +684,15 @@ def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             vec_col: str = "embedding",
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
-    """Serve IVF-PQ from the hive layout: driver-side probed-list union
-    as a literal isin (PartitionFilters pruning — unprobed list
-    directories are never listed, let alone read), then the standard
-    ivfpq_search over the pruned frame; its closure probe map restricts
-    each query to ITS lists within the union. The refine policy
-    resolves from the sidecar corpus metadata — no count job."""
-    probed = _probed_union(centroids, queries, nprobe, qid_col, qvec_col)
-    codes = (spark.read.parquet(path)
-             .where(F.col("list_id").isin(probed)))
-    return ivfpq_search(codes, centroids, codebooks, queries, k,
+    """Serve IVF-PQ from the hive layout: ``ivfpq_search`` over the
+    unpruned layout. Its one query collect and one probe selection yield
+    the probed-list union as a literal ``list_id IN (...)`` filter
+    (PartitionFilters pruning — unprobed list directories are never
+    read), and its closure probe map restricts each query to ITS lists.
+    The refine policy resolves from the sidecar corpus metadata — no
+    count job."""
+    return ivfpq_search(spark.read.parquet(path), centroids, codebooks,
+                        queries, k,
                         nprobe=nprobe, refine_with=refine_with,
                         refine_factor=refine_factor,
                         id_col=id_col, vec_col=vec_col,

@@ -26,7 +26,8 @@ from pyspark.sql import types as T
 
 from vectordb_explorations_spark.functions.rounding import r6, round6
 from vectordb_explorations_spark.functions.vectors import l2_distance
-from vectordb_explorations_spark.operators.ann import collect_query_batch
+from vectordb_explorations_spark.operators.ann import (_probe_map,
+                                                       collect_query_arrays)
 
 SQ_LEVELS = 255  # codes 0..255
 
@@ -101,9 +102,7 @@ def sq_search(codes_df: DataFrame, mins: np.ndarray, maxs: np.ndarray,
     import pandas as pd
 
     scales = _scales(mins, maxs)
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([int(r[0]) for r in qrows])
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)  # (Q, dim)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
     qsq = (qmat ** 2).sum(-1)  # (Q,)
 
     n_local = k * refine_factor if refine_with is not None else k
@@ -295,27 +294,15 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
             corpus_n=corpus_n, replication=IVF_ASSIGN_N)
 
     scales = _scales(mins, maxs)
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [int(r[0]) for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
+    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col)
     qsq = (qmat ** 2).sum(-1)
-
-    cd = (qmat[:, None, :] - centroids[None, :, :])
-    cdist = (cd * cd).sum(-1)
-    nn = min(nprobe, centroids.shape[0])
-    by_list: dict[int, list[int]] = {}
-    for qi in range(len(qids)):
-        order = np.lexsort((np.arange(centroids.shape[0]), cdist[qi]))[:nn]
-        for li in order:
-            by_list.setdefault(int(li), []).append(qi)
     # Probe map in the UDF closure (Q x nprobe entries) — probed code rows
     # stream through Arrow ONCE instead of once per probing query (the
     # probe-frame broadcast join measured 12.6x row replication at 1M:
     # the 64-byte code arrays alone were ~1.6 GB of duplicated Arrow
     # traffic; 10.1 s -> this shape).
-    list_q = {li: np.asarray(v, dtype=np.int64) for li, v in by_list.items()}
-    qid_arr = np.asarray(qids, dtype=np.int64)
-    scan = (codes_df.where(F.col("list_id").isin(sorted(by_list)))
+    list_q = _probe_map(centroids, qmat, nprobe)
+    scan = (codes_df.where(F.col("list_id").isin(sorted(list_q)))
             .select("list_id", id_col, "codes"))
 
     n_local = k * refine_factor if refine_with is not None else k
@@ -378,7 +365,7 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
                         F.round("sq_dist", 6).alias("dist"), "rank"))
     cand = (merged.where(F.col("rank") <= n_local)
             .select(qid_col, id_col))
-    return _exact_refine(cand, qids, qmat, refine_with, k, qmat.shape[1],
+    return _exact_refine(cand, qid_arr, qmat, refine_with, k, qmat.shape[1],
                          id_col, vec_col, qid_col, qvec_col)
 
 
@@ -393,7 +380,8 @@ def ivfsq_persist_partitioned(codes_df: DataFrame, path: str,
     (codes_df.select(id_col, "codes", "list_id")
      .write.mode("overwrite").partitionBy("list_id").parquet(path))
     _write_corpus_meta(
-        path, codes_df.select(id_col).distinct().count())
+        codes_df.sparkSession, path,
+        codes_df.select(id_col).distinct().count())
 
 
 def ivfsq_append_partitioned(path: str, centroids: np.ndarray,
@@ -434,16 +422,14 @@ def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             vec_col: str = "embedding",
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
-    """Serve IVF-SQ8 from the hive layout: literal probed-list isin
-    (PartitionFilters pruning) + the standard ivfsq_search over the
-    pruned frame, refine policy resolved from sidecar metadata."""
+    """Serve IVF-SQ8 from the hive layout: ``ivfsq_search`` over the
+    unpruned layout, whose one query collect and one probe selection
+    yield the literal probed-list isin (PartitionFilters pruning); the
+    refine policy resolves from sidecar metadata."""
     from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
-    from vectordb_explorations_spark.operators.pq import (
-        _probed_union, _layout_corpus_n)
-    probed = _probed_union(centroids, queries, nprobe, qid_col, qvec_col)
-    codes = (spark.read.parquet(path)
-             .where(F.col("list_id").isin(probed)))
-    return ivfsq_search(codes, centroids, mins, maxs, queries, k,
+    from vectordb_explorations_spark.operators.pq import _layout_corpus_n
+    return ivfsq_search(spark.read.parquet(path), centroids, mins, maxs,
+                        queries, k,
                         nprobe=nprobe, refine_with=refine_with,
                         refine_factor=refine_factor,
                         id_col=id_col, vec_col=vec_col,

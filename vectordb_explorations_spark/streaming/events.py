@@ -448,7 +448,7 @@ def streaming_ivfpq_refresh_stats(spark: SparkSession,
     q = incremental_ivfpq_ingest(spark, sf_dir, out, cents, books)
     await_drained(q)
     idx = spark.read.parquet(out)
-    meta_n = _read_corpus_meta(out) or 0
+    meta_n = _read_corpus_meta(spark, out) or 0
     return (idx.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct("vec_id").alias("n_vectors"),
