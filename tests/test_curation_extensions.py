@@ -59,6 +59,29 @@ def test_gopher_stopword_floor(spark):
     assert "stopword_poor" in row.drop_reasons
 
 
+def test_gopher_top_bigram_tie_goes_to_smallest(spark):
+    """'zz yy' and 'a b' both occur twice. The lexicographically smaller
+    'a b' is seen second and is shorter, so a first-seen or longest
+    tie-break would report 2 * 5 chars instead of 2 * 3."""
+    import duckdb
+
+    from vectordb_explorations_spark.operators.textops import (
+        gopher_quality_signals_oracle)
+
+    text = "zz yy zz yy a b a b"
+    row = gopher_quality_signals(_docs(spark, [(0, "s", "en", text)])).first()
+    assert row.top2_char_frac == round(2 * 3 / len(text), 6)
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE documents AS "
+                    "SELECT 0::BIGINT AS doc_id, ? AS text", [text])
+        want = con.execute(gopher_quality_signals_oracle()).fetchall()
+    finally:
+        con.close()
+    assert [tuple(row)] == want
+
+
 # ---- perplexity_buckets ----
 
 def test_perplexity_thirds_order_by_fluency(spark):

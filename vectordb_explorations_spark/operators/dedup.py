@@ -1026,19 +1026,17 @@ def _write_minhash_faces(sh_sets: DataFrame, base_dir: str,
     signatures from the sets via ``_signatures_from_sets``
     (bit-identical to the from-text path, see its docstring), so the
     tokenize+md5 pass is paid exactly once and neither face re-reads
-    the other (the r14 shape read the just-written sh parquet back for
-    the bands derivation — one more full-face scan per build).
+    the other.
 
-    The BANDS face is written first (r14 ADVICE): a crash between the
-    two writes then leaves band rows whose sh verify rows are missing —
-    the probe still SEES the crashed batch's docs as candidates — where
-    the sh-first order left them invisible to the probe entirely. The
-    residual window (candidate found, verify row absent, batch doc
-    admitted) is closed by the caller's ingest-marker replay, which
-    rewrites both faces before mark() — documented on
-    ``minhash_append_persisted``. Appends also opt into the v1
-    committer (sinks.V1_COMMITTER): a v2 task attempt failing
-    mid-commit could leave partial files NEXT TO existing rows."""
+    The write order (bands, then sh) carries no safety property: after
+    a crash between the two writes, admission's verify inner-joins the
+    sh face, so a candidate whose sh row is missing is dropped and the
+    near-dup is admitted in either order. The caller's ingest-marker
+    replay, which rewrites both faces before mark(), is what closes
+    that window — documented on ``minhash_append_persisted``. Appends
+    also opt into the v1 committer (sinks.V1_COMMITTER): a v2 task
+    attempt failing mid-commit could leave partial files NEXT TO
+    existing rows."""
     from vectordb_explorations_spark.sources.sinks import (
         V1_COMMITTER, repartition_for_hive)
 
@@ -1076,8 +1074,8 @@ def minhash_append_persisted(docs: DataFrame, base_dir: str,
     Idempotence belongs to the CALLER's ingest markers (the
     _files_to_ingest pattern) exactly as with maxsim_append_ingest.
 
-    Crash window (r14 ADVICE, documented): the two face writes are not
-    atomic. Bands land first, so a crash between them leaves the
+    Crash window: the two face writes are not atomic. Bands land
+    first, so a crash between them leaves the
     batch's docs VISIBLE to the probe (candidates found) but without
     verify-side shingle rows — an admission in that state admits their
     near-dups, exactly as it would have before the batch existed. A

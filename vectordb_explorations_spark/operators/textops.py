@@ -376,6 +376,27 @@ REP_TOP_WORD_MAX = 0.2      # most-frequent-token share above this → repetitiv
 REP_DUP_BIGRAM_MAX = 0.5    # duplicate-bigram share above this → repetitive
 
 
+def _top_run(values: F.Column) -> F.Column:
+    """Struct (cnt, top) naming a string array's most frequent value and
+    its count: one ascending sort plus one run-length scan, O(n log n).
+    The best is replaced only on a strictly longer run, so among values
+    tied on the max count ``top`` is the lexicographically smallest. An
+    empty array gives (0, null)."""
+    zero = F.struct(F.lit(None).cast("string").alias("prev"),
+                    F.lit(0).alias("run"),
+                    F.lit(0).alias("cnt"),
+                    F.lit(None).cast("string").alias("top"))
+
+    def step(acc, x):
+        run = F.when(x == acc["prev"], acc["run"] + 1).otherwise(1)
+        return F.struct(x.alias("prev"), run.alias("run"),
+                        F.greatest(run, acc["cnt"]).alias("cnt"),
+                        F.when(run > acc["cnt"], x)
+                        .otherwise(acc["top"]).alias("top"))
+
+    return F.aggregate(F.array_sort(values), zero, step)
+
+
 def doc_repetition_stats(docs: DataFrame) -> DataFrame:
     """Intra-document repetition metrics (the Gopher/MassiveText repetition
     rules): share of the doc taken by its single most frequent token, and
@@ -384,16 +405,13 @@ def doc_repetition_stats(docs: DataFrame) -> DataFrame:
     flagged docs before training.
 
     Shape: pure per-row array expressions — no explode, no shuffle, embar-
-    rassingly parallel at any corpus size. The top-token count is
-    O(distinct·n) per row, bounded by document length (the explode +
-    groupBy twin trades that for a doc_id-keyed shuffle; per-row wins for
-    normal-length documents)."""
+    rassingly parallel at any corpus size. The top-token count is one sort
+    of the tokens plus one run-length scan (``_top_run``), O(n log n) per
+    row."""
     docs = docs.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
     words = F.col("ws")
     n = F.size(words)
-    top_cnt = F.array_max(F.transform(
-        F.array_distinct(words),
-        lambda u: F.size(F.filter(words, lambda x: x == u))))
+    top_cnt = _top_run(words)["cnt"]
     # guard: sequence(1, 0) DESCENDS ([1, 0]) rather than yielding an empty
     # array, so a 1-token doc would index element 0 and throw under ANSI
     bigrams = F.when(n >= 2, F.transform(
@@ -1358,47 +1376,21 @@ def gopher_quality_signals(docs: DataFrame) -> DataFrame:
 
     Scale shape (100 TB): pure per-row higher-order-function
     expressions over one hoisted tokenize — no explode, no shuffle
-    (the final orderBy is presentation). Top-n-gram counting is
-    O(distinct x positions) per row, bounded by document length — the
-    doc_repetition_stats trade, documented there. Each intermediate
-    (gram arrays, per-distinct counts, max count) is STAGED through a
-    projected column: composed Column expressions re-inline their
-    sub-expressions on every reference (interpreted HOFs don't CSE),
-    and the naive composed form re-ran the O(distinct x positions)
-    count inside the argmin lambda — measured minutes-per-500-rows vs
-    sub-second staged."""
+    (the final orderBy is presentation). The top n-gram of each order
+    is one sort of the gram array plus one run-length scan
+    (``_top_run``), O(n log n) per row; among grams tied on the max
+    count the lexicographically smallest wins, so both engines pick
+    the same gram. Its (count, gram) struct is staged through a
+    projected column because top_frac reads both fields and
+    interpreted HOFs are not common-subexpression-eliminated."""
     staged = docs.select(
         "doc_id", "text", F.split(F.col("text"), " ").alias("ws"))
-
-    # one-arg lambda factories: a `k=k` default-arg closure would make
-    # the lambda arity 2 and Spark's HOF binder would feed the second
-    # parameter the ELEMENT INDEX
-    def _count_in(grams_col):
-        return lambda g: F.size(F.filter(grams_col, lambda x: x == g))
-
-    def _field(name):
-        return lambda p: p[name]
-
-    def _field_eq(name, value_col):
-        return lambda p: p[name] == value_col
-
     for k in (2, 3):
-        staged = staged.withColumn(f"g{k}", F.when(
+        gram = ", ' ', ".join(f"ws[i + {j}]" for j in range(k))
+        staged = staged.withColumn(f"top{k}", F.when(
             F.size("ws") >= k,
-            F.expr(f"transform(sequence(0, size(ws) - {k}), "
-                   f"i -> concat_ws(' ', slice(ws, i + 1, {k})))")
-        ).otherwise(F.array().cast("array<string>")))
-        staged = staged.withColumn(f"dg{k}", F.array_distinct(F.col(f"g{k}")))
-        staged = staged.withColumn(f"cnt{k}", F.transform(
-            F.col(f"dg{k}"), _count_in(F.col(f"g{k}"))))
-        staged = staged.withColumn(f"mc{k}", F.array_max(F.col(f"cnt{k}")))
-        # argmin over the zipped (gram, count) pairs: lexicographic-min
-        # tie-break among equally frequent n-grams so both engines pick
-        # the same winner
-        staged = staged.withColumn(f"top{k}", F.array_min(F.transform(
-            F.filter(F.arrays_zip(F.col(f"dg{k}"), F.col(f"cnt{k}")),
-                     _field_eq(f"cnt{k}", F.col(f"mc{k}"))),
-            _field(f"dg{k}"))))
+            _top_run(F.expr(f"transform(sequence(0, size(ws) - {k}), "
+                            f"i -> concat({gram}))"))))
 
     ws = F.col("ws")
     n = F.size(ws)
@@ -1422,7 +1414,8 @@ def gopher_quality_signals(docs: DataFrame) -> DataFrame:
         return F.when(
             n >= k,
             F.least(F.lit(1.0),
-                    F.col(f"mc{k}").cast("double") * F.length(F.col(f"top{k}"))
+                    F.col(f"top{k}.cnt").cast("double")
+                    * F.length(F.col(f"top{k}.top"))
                     / F.length("text"))
         ).otherwise(F.lit(0.0))
 

@@ -1111,81 +1111,29 @@ QUERIES: dict[str, QueryFn] = {
     "streaming_kmv_monitor": SD.streaming_kmv_monitor,
 }
 
-# The round the *next* driver correctness check belongs to. Bump this at
-# each rotation; tests/test_window_rotation.py derives every query's
-# last-green round from the CORRECTNESS_r*.json artifacts (data, not
-# prose) and asserts the first-50 window below contains every query whose
-# evidence would otherwise exceed the freshness bound — the SURVEY §11
-# queue discipline as a checked invariant (r7 verdict item 8).
-#
-# FRESHNESS BOUND (changed r13, the r12 verdict's "window economics"
-# decision made deliberately): every declared query re-certifies at
-# least every FOUR rounds (evidence never older than 3 rounds at a
-# round's close), relaxed from three. Why: the structural capacity of a
-# 50-slot window under a 3-round cycle is 150 declared queries; with
-# the six r12-staged operators declared the surface is 152, which
-# breaks the 3-round invariant PERMANENTLY (r12 verdict "What's wrong"
-# #2 — r14 would need 49 stale + 3 new = 52 > 50 slots). Rather than
-# retire real operators to fit a bookkeeping bound, the bound moves to
-# 4 rounds (capacity 200, headroom for rounds 13-20), because the
-# driver window is NOT the only evidence: tools/vanilla_check.py sweeps
-# ALL declared queries against their DuckDB oracles at sf0.01 AND
-# sf0.1 every round builder-side (and the r11/r12 judges independently
-# reproduced the full sweep), so a query outside the driver window is
-# still oracle-verified every single round — the window staggers the
-# driver's independent confirmation, it does not gate the only check.
-WINDOW_ROUND = 14
-
-# The driver's correctness gate checks list(QUERIES)[:50] per round, so
-# dict order IS the evidence schedule. Round-14 rotation (r13 verdict
-# item 1, SURVEY §18 queue): the TWO newly-declared never-checked
-# queries lead (knn_ip + bpe_learn_merges, staged r13 and parity-
-# tripwired every suite run since via tests/test_staged_queries.py);
-# then the THREE r10-evidence rows the 4-round bound makes mandatory
-# this round (tfidf_top_terms, token_counts, top_orders — their
-# evidence would otherwise be 4 rounds old after r14); then the oldest
-# r11-evidence rows (alphabetical fill). Any further r14 declarations
-# displace fill rows only (never the mandatory three):
-# bpe_learned_budget (built in-round, the r13 verdict's tokenizer-loop
-# composition) displaced supplier_nation_volume, and the r14
-# continuation session's ELEVEN operators (tokenizer fertility, the
-# two cross-codec families, the seven sketch-family queries, the GIF
-# frame sampler — all built + oracle-parity-verified at both SFs
-# in-round) displaced the eleven alphabetically last fill rows
-# (salted_event_type_stats .. substring_dup_coverage), which move to
-# r15's mandatory set with the other five r11 leftovers
-# (supplier_nation_volume, temperature_mixture, top_parts_by_revenue,
-# vector_elements, weighted_sample). r15's window is then 16 mandatory
-# + up to 34 oldest-r12 fill — feasible every round (see the capacity
-# note above WINDOW_ROUND).
-_WINDOW_PRIORITY = [
-    # --- new this round, never driver-checked (outrank everything) ---
-    "knn_ip", "bpe_learn_merges", "bpe_learned_budget",
-    "bpe_fertility_by_lang", "dedup_cross_codec_image",
-    "dedup_cross_codec_audio", "hll_user_cardinality",
-    "cms_heavy_hitters", "bloom_join_prune", "streaming_hll_monitor",
-    "kmv_source_overlap", "streaming_cms_monitor", "gif_frame_sample",
-    "streaming_kmv_monitor",
-    # --- 3 mandatory r10-evidence rows (4-round bound) ---
-    "tfidf_top_terms", "token_counts", "top_orders",
-    # --- 33 oldest (r11-evidence) rows, alphabetical fill ---
-    "cluster_balanced_sample", "doc_chunks", "doc_repetition_stats",
-    "domain_mix_sample", "dsir_select", "embedding_outliers",
-    "event_prop_keys", "event_transitions", "event_value_histogram",
-    "event_value_percentiles", "events_gapfill", "events_hourly",
-    "events_session_window", "events_sliding_2h", "funnel_conversion",
-    "hard_examples", "hashed_doc_embeddings", "knn_batch_blockwise",
-    "knn_filtered", "label_centroids", "maxsim_chunk_topk",
-    "mixture_plan", "mmr_diversified_topk", "multimodal_frames",
-    "multimodal_resize", "nation_customer_lists", "ngram_novelty",
-    "perplexity_buckets", "priority_customer_counts",
-    "quota_capped_search", "range_search", "region_nation_rollcall",
-    "retrieval_quality",
+# The external correctness gate checks list(QUERIES)[:50], so dict order
+# is what it sees first: the MinHash banding family, whose signature
+# rewrite it has not checked yet, then the queries whose external check
+# is oldest; the rest keep declaration order. tests/test_oracle_parity.py
+# checks EVERY declared query against its DuckDB oracle on each suite
+# run, whatever the order.
+_CHECK_FIRST = [
+    # banding family
+    "dedup_minhash_lsh", "dedup_incremental", "dedup_edit_distance",
+    "dedup_clusters", "dedup_representatives", "band_state_budget",
+    "source_dup_matrix",
+    # oldest external evidence
+    "salted_event_type_stats", "sequence_pack_bins", "source_data_cards",
+    "source_kl_divergence", "split_leakage", "sq8_quantization",
+    "streaming_index_refresh", "streaming_ivfpq_refresh",
+    "streaming_near_dedup", "streaming_span_admission",
+    "substring_dup_coverage", "supplier_nation_volume",
+    "temperature_mixture", "top_parts_by_revenue", "vector_elements",
+    "weighted_sample",
 ]
-assert len(_WINDOW_PRIORITY) == 50, len(_WINDOW_PRIORITY)
-assert set(_WINDOW_PRIORITY) <= set(QUERIES), set(_WINDOW_PRIORITY) - set(QUERIES)
+assert set(_CHECK_FIRST) <= set(QUERIES), set(_CHECK_FIRST) - set(QUERIES)
 QUERIES = {k: QUERIES[k] for k in
-           _WINDOW_PRIORITY + [k for k in QUERIES if k not in set(_WINDOW_PRIORITY)]}
+           _CHECK_FIRST + [k for k in QUERIES if k not in _CHECK_FIRST]}
 
 # Queries declared without a DuckDB oracle (the driver records a weaker
 # rows-only check for these). Empty since round 6: ann_bucketed_probe —
@@ -1368,16 +1316,13 @@ ORACLES: dict[str, str] = {
 }
 
 
-# ---- staging registry (the seven r14-continuation operators were
-# ---- declared into the r14 window once the driver-window math allowed
-# ---- it — fill-row displacement only; registry empty again) ------------
+# ---- staging registry (empty) ------------------------------------------
 #
-# Mechanism kept for future rounds: an operator built when the window
-# has no never-checked slot goes here with its oracle;
-# tests/test_staged_queries.py runs the same oracle compare the driver
-# does on every staged pair each suite run, so staged work cannot rot
-# between rounds. Declaring = moving the entries into QUERIES / ORACLES
-# and rotating _WINDOW_PRIORITY. The driver never sees these dicts.
+# Mechanism kept for future rounds: an operator built but not yet
+# declared goes here with its oracle; tests/test_staged_queries.py runs
+# the same oracle compare as the correctness gate on every staged pair
+# each suite run, so staged work cannot rot. Declaring = moving the
+# entries into QUERIES / ORACLES. The gate never sees these dicts.
 STAGED_QUERIES: dict = {}
 
 STAGED_ORACLES: dict = {}

@@ -52,6 +52,12 @@ _DEFAULT_CONF = {
     "spark.executor.extraJavaOptions": "-XX:-DontCompileHugeMethods",
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
+    # Generated-class cache (an LRU, default 100 entries). One curation
+    # pass (MinHash LSH, exact dedup, substring coverage, text stats,
+    # Gopher signals, DSIR) cycles through about 175 distinct classes and
+    # one ann_serve iteration through 43. Below the working set every
+    # class misses on every repeated pass and Janino + the JIT run again.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # FileOutputCommitter version, parameterised (default v1). r14 set
     # v2 session-wide (task-parallel renames instead of v1's
     # driver-serial job commit) from A/B runs on a drifting window; a
