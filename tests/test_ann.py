@@ -1021,7 +1021,7 @@ def test_hnsw_members_sidecar_bounds_locate(spark, sf_dir, tmp_path):
     deleting victims from OTHER shards (the legacy blob-pass locate
     would unpickle it and crash); (2) the sidecar stays bit-consistent
     with blob-derived membership across persist, append, and delete;
-    (3) removing the sidecar falls back to the legacy locate."""
+    (3) removing the sidecar makes delete and append raise."""
     import glob
     import shutil
 
@@ -1094,18 +1094,19 @@ def test_hnsw_members_sidecar_bounds_locate(spark, sf_dir, tmp_path):
     assert side_after == blob_after
     assert not {vid for _, vid in side_after} & set(victims)
 
-    # (3) legacy fallback: removing the sidecar re-enables the blob
-    # pass — deleting a victim from a READABLE shard still works
+    # (3) no blob-pass fallback: without the members face, delete and
+    # append raise a named error before touching any shard
     shutil.rmtree(mp)
     survivor = next(vid for sh in shards[1:]
                     for vid in sorted(by_shard[sh])
                     if vid not in victims
                     and vid not in by_shard[corrupt_shard])
-    with pytest.raises(Exception):
-        # the legacy locate must unpickle EVERY blob — the corrupted
-        # shard now bites, which is exactly the cost the sidecar
-        # removes
+    from vectordb_explorations_spark.sources.substrate import (
+        SubstrateMetaError)
+    with pytest.raises(SubstrateMetaError, match="_members is missing"):
         hnsw_delete_partitioned(spark, path, [survivor])
+    with pytest.raises(SubstrateMetaError, match="_members is missing"):
+        hnsw_append_partitioned(spark, path, batch)
 
 
 def test_hnsw_delete_stale_sidecar_never_drops_survivors(

@@ -566,12 +566,15 @@ def test_minhash_append_persisted_closes_the_loop(spark, tmp_path):
 
 
 def test_minhash_persisted_meta_guards(spark, tmp_path):
-    """The substrate meta sidecar (r13 verdict item 5): admission on a
-    small corpus warns toward the in-memory path (and is SILENT past
-    the floor), the doc count tracks persist/append/delete, and a
-    banding-geometry mismatch vs the build RAISES instead of probing
-    the wrong buckets."""
+    """The substrate sidecar: admission on a small corpus warns toward
+    the in-memory path (and is SILENT past the floor), the doc count
+    tracks persist/append/delete, and a substrate whose sidecar is
+    missing raises on every serve and maintenance path instead of
+    probing a default geometry."""
+    import os
     import warnings
+
+    from vectordb_explorations_spark.sources import substrate
 
     t0 = ("the quick brown fox jumps over the lazy dog while rain "
           "falls softly on the quiet gray town tonight")
@@ -582,7 +585,8 @@ def test_minhash_persisted_meta_guards(spark, tmp_path):
         "doc_id long, lang string, text string, n_chars int")
     base = str(tmp_path / "mh_meta")
     D.minhash_persist(mk([(0, t0)]), base)
-    assert D._read_minhash_meta(spark, base)["docs"] == 1
+    rows = lambda: substrate.read_meta(spark, base, "test")["rows"]
+    assert rows() == 1
 
     batch = mk([(1, t1)])
     with pytest.warns(RuntimeWarning, match="below the"):
@@ -590,50 +594,112 @@ def test_minhash_persisted_meta_guards(spark, tmp_path):
 
     # count tracks append and delete
     D.minhash_append_persisted(batch, base)
-    assert D._read_minhash_meta(spark, base)["docs"] == 2
+    assert rows() == 2
     D.minhash_delete_persisted(spark, base, [1])
-    assert D._read_minhash_meta(spark, base)["docs"] == 1
+    assert rows() == 1
 
     # past the floor the warning is silent (fake the count — building
     # 100k docs in a unit test is the tool's own probe ladder's job)
-    meta = D._read_minhash_meta(spark, base)
-    meta["docs"] = D.MINHASH_ADMIT_MIN_CORPUS
-    D._write_minhash_meta(spark, base, meta)
+    meta = substrate.read_meta(spark, base, "test")
+    substrate.write_ready(spark, base,
+                          {**meta, "rows": D.MINHASH_ADMIT_MIN_CORPUS})
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
         D.minhash_admit_persisted(spark, base, batch).collect()
 
-    # geometry drift refuses: wrong num_hashes at admit AND append
-    with pytest.raises(ValueError, match="build parameters"):
-        D.minhash_admit_persisted(spark, base, batch, num_hashes=8)
-    with pytest.raises(ValueError, match="build parameters"):
-        D.minhash_append_persisted(batch, base, band_size=4)
-
-    # legacy substrate (no sidecar): everything still works, silently
+    # no sidecar: every serve/maintenance path raises, naming the file
     legacy = str(tmp_path / "mh_legacy")
     D.minhash_persist(mk([(0, t0)]), legacy)
-    import os
-    os.remove(f"{legacy}/meta.json")
+    os.remove(f"{legacy}/_meta.json")
+    for call in (lambda: D.minhash_admit_persisted(spark, legacy, batch),
+                 lambda: D.minhash_append_persisted(batch, legacy),
+                 lambda: D.minhash_delete_persisted(spark, legacy, [0])):
+        with pytest.raises(substrate.SubstrateMetaError,
+                           match="_meta.json is missing"):
+            call()
+
+
+def test_minhash_truncated_sidecar_raises(spark, tmp_path):
+    """A truncated sidecar is an error, not an absent one: admitting an
+    exact copy of a substrate doc must raise rather than probe a
+    default geometry and admit the copy."""
+    from vectordb_explorations_spark.sources import substrate
+
+    texts = ["the quick brown fox jumps over the lazy dog while rain "
+             "falls softly on the quiet gray town tonight",
+             "entirely different prose about columnar execution engines "
+             "and vectorized query compilation pipelines"]
+    docs = spark.createDataFrame(
+        [(i, "en", t, len(t)) for i, t in enumerate(texts)],
+        "doc_id long, lang string, text string, n_chars int")
+    base = str(tmp_path / "mh_trunc")
+    D.minhash_persist(docs, base)
+    copy = spark.createDataFrame(
+        [(10, "en", texts[0], len(texts[0]))],
+        "doc_id long, lang string, text string, n_chars int")
+    with open(f"{base}/_meta.json", "r+") as f:
+        f.truncate(len(f.read()) // 2)
+    with pytest.raises(substrate.SubstrateMetaError, match="unreadable"):
+        D.minhash_admit_persisted(spark, base, copy).collect()
+
+
+def test_minhash_append_crash_between_faces(spark, tmp_path, monkeypatch):
+    """Crash injection between the bands and sh appends: the sidecar
+    stays ``building``, so an admission of the crashed batch's
+    near-duplicate raises instead of admitting it (the bands face finds
+    the candidate, the sh face cannot verify it). The marker replay of
+    the append completes, flips the sidecar to ``ready``, and the copy
+    is then rejected."""
+    import warnings
+
+    from pyspark.sql import DataFrameWriter
+
+    from vectordb_explorations_spark.sources import substrate
+
+    t0 = ("the quick brown fox jumps over the lazy dog while rain "
+          "falls softly on the quiet gray town tonight")
+    t1 = ("entirely different prose about columnar execution engines "
+          "and vectorized query compilation pipelines")
+    mk = lambda rows: spark.createDataFrame(
+        [(i, "en", t, len(t)) for i, t in rows],
+        "doc_id long, lang string, text string, n_chars int")
+    base = str(tmp_path / "mh_crash")
+    D.minhash_persist(mk([(0, t0)]), base)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_on_sh(self, path, *args, **kwargs):
+        if str(path).endswith("/sh"):
+            raise RuntimeError("injected crash before the sh append")
+        return real_parquet(self, path, *args, **kwargs)
+
+    batch = mk([(1, t1)])
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash_on_sh)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            D.minhash_append_persisted(batch, base)
+    assert spark.read.parquet(f"{base}/bands").where("doc_id = 1").count()
+
+    near_dup = mk([(2, t1)])
+    with pytest.raises(substrate.SubstrateMetaError, match="building"):
+        D.minhash_admit_persisted(spark, base, near_dup).collect()
+
+    D.minhash_append_persisted(batch, base)  # the marker replay
+    assert substrate.read_meta(spark, base, "test")["state"] == "ready"
     with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        out = D.minhash_admit_persisted(spark, legacy, batch).collect()
-    assert out[0]["admitted"]
+        warnings.simplefilter("ignore", RuntimeWarning)
+        out = D.minhash_admit_persisted(spark, base, near_dup).collect()
+    assert not out[0]["admitted"] and out[0]["matched_old"] == 1
 
 
 def test_minhash_auto_buckets_policy(spark, tmp_path):
-    """The corpus-adaptive substrate geometry (r14 optimization): the
-    'auto' bucket count holds >= MINHASH_BUCKET_TARGET_DOCS docs per
-    bucket directory (pow2, floor 16, cap MINHASH_PERSIST_BUCKETS), the
-    build stamps the RESOLVED value into the meta sidecar, 'auto' at
-    admit time reads it back, and an explicit mismatching int still
-    raises."""
-    import pytest as _pytest
+    """The build stamps the RESOLVED 'auto' bucket count (the shared
+    policy is pinned in tests/test_substrate.py) into the sidecar,
+    every bucket in the banded face respects it, and admission reads it
+    back."""
+    import warnings
 
-    assert D.minhash_auto_buckets(0) == 16
-    assert D.minhash_auto_buckets(500) == 16
-    assert D.minhash_auto_buckets(5000) == 64
-    assert D.minhash_auto_buckets(16384) == 256
-    assert D.minhash_auto_buckets(10_000_000) == 256
+    from vectordb_explorations_spark.sources import substrate
 
     t = ("the quick brown fox jumps over the lazy dog while rain "
          "falls softly on the quiet gray town tonight")
@@ -642,22 +708,15 @@ def test_minhash_auto_buckets_policy(spark, tmp_path):
         "doc_id long, lang string, text string, n_chars int")
     base = str(tmp_path / "mh_auto")
     D.minhash_persist(docs, base)
-    meta = D._read_minhash_meta(spark, base)
-    assert meta["buckets"] == 16  # resolved, not 'auto'
+    meta = substrate.read_meta(spark, base, "test")
+    assert meta["build"]["buckets"] == 16  # resolved, not 'auto'
     # every bucket value in the face respects the resolved modulus
     vals = {r["bucket"] for r in spark.read.parquet(f"{base}/bands")
             .select("bucket").distinct().collect()}
     assert vals and all(0 <= v < 16 for v in vals)
-    # 'auto' admit resolves from the sidecar (no raise), explicit
-    # mismatch raises
+    # admission resolves the geometry from the sidecar
     batch = docs.where("doc_id = 0")
-    import warnings as _w
-    with _w.catch_warnings():
-        _w.simplefilter("ignore", RuntimeWarning)
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
         out = D.minhash_admit_persisted(spark, base, batch).collect()
     assert not out[0]["admitted"]
-    with _pytest.raises(ValueError, match="build parameters"):
-        with _w.catch_warnings():
-            _w.simplefilter("ignore", RuntimeWarning)
-            D.minhash_admit_persisted(spark, base, batch,
-                                      buckets=128).collect()

@@ -109,8 +109,8 @@ def test_ivfpq_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
     ivfpq_persist_partitioned(codes, path)
 
     # sidecar metadata carries corpus rows, not replicated code rows
-    with open(_os.path.join(path, "_corpus_meta.json")) as f:
-        assert json.load(f)["corpus_n"] == emb.count()
+    with open(_os.path.join(path, "_meta.json")) as f:
+        assert json.load(f)["rows"] == emb.count()
 
     queries = sample_queries(emb, 5).cache()
     served = ivfpq_probe_partitioned(spark, path, cents, books, queries,
@@ -139,9 +139,10 @@ def test_ivfpq_append_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     resolution job-free AND true to N."""
     from vectordb_explorations_spark.operators.ann import ivf_assign
     from vectordb_explorations_spark.operators.pq import (
-        _ivfpq_encode, _read_corpus_meta, ivfpq_append_partitioned,
+        _ivfpq_encode, ivfpq_append_partitioned,
         ivfpq_build, ivfpq_persist_partitioned, ivfpq_probe_partitioned,
         ivfpq_search)
+    from vectordb_explorations_spark.sources.substrate import read_rows
 
     emb = load_table(spark, "embeddings", sf_dir)
     old = emb.where(F.col("vec_id") % 5 != 0)
@@ -152,9 +153,9 @@ def test_ivfpq_append_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     codes.count()
     path = str(tmp_path / "ivfpq_inc")
     ivfpq_persist_partitioned(codes, path)
-    n0 = _read_corpus_meta(spark, path)
+    n0 = read_rows(spark, path)
     ivfpq_append_partitioned(path, cents, books, new)
-    assert _read_corpus_meta(spark, path) == n0 + new.count()
+    assert read_rows(spark, path) == n0 + new.count()
 
     queries = sample_queries(emb, 5).cache()
     served = ivfpq_probe_partitioned(spark, path, cents, books, queries, 5,

@@ -171,9 +171,7 @@ def test_persisted_substrate_matches_in_memory_banded(spark, tmp_path):
     # asserted on the LAZY candidate frame: the serve path
     # localCheckpoints it (the probe fed two semi-joins and executed
     # twice, r13), which hides the index scan from the serve plan
-    cands = LS._persisted_candidates(
-        spark, base, LS.MAXSIM_QUERIES, LS.MAXSIM_LSH_TABLES,
-        LS.MAXSIM_LSH_PLANES, LS.MAXSIM_LSH_SEED)
+    cands = LS._persisted_candidates(spark, base, LS.MAXSIM_QUERIES)
     plan = cands._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "table_id" in plan
 
@@ -321,6 +319,56 @@ def test_crash_window_replay_cannot_double_append_weights(spark, tmp_path):
                               LS.maxsim_banded_persisted(spark,
                                                          base).collect()))
     assert served_after == served_before
+
+
+def test_append_crash_serves_raise_until_replay(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """Crash injection inside an append batch, after the weights write
+    and before the index write: the sidecar stays ``building``, so a
+    serve raises instead of scoring against a half-appended substrate.
+    The marker replay (mark() never ran) completes the batch and flips
+    the sidecar to ``ready``; serving then equals a full rebuild."""
+    from pyspark.sql import DataFrameWriter
+
+    from vectordb_explorations_spark.sources import substrate
+    from vectordb_explorations_spark.streaming.events import await_drained
+
+    docs = load_table(spark, "documents", sf_dir)
+    half = docs.agg(F.floor(F.max("doc_id") / 2)).first()[0]
+    base = str(tmp_path / "sub_crash_replay")
+    LS.maxsim_persist(docs.where(F.col("doc_id") <= half), base)
+
+    src = tmp_path / "new_docs"
+    (docs.where(F.col("doc_id") > half).coalesce(1)
+     .write.parquet(str(src / "batch.parquet")))
+
+    def stream():
+        return (spark.readStream.schema(docs.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(str(src) + "/*.parquet"))
+
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_on_index(self, path, *args, **kwargs):
+        if str(path).endswith("/index"):
+            raise RuntimeError("injected crash before the index write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash_on_index)
+        with pytest.raises(Exception, match="injected crash"):
+            await_drained(LS.maxsim_append_ingest(spark, stream(), base))
+    with pytest.raises(substrate.SubstrateMetaError, match="building"):
+        LS.maxsim_banded_persisted(spark, base)
+
+    await_drained(LS.maxsim_append_ingest(spark, stream(), base))
+    assert substrate.read_meta(spark, base, "test")["state"] == "ready"
+    served = sorted(map(tuple,
+                        LS.maxsim_banded_persisted(spark, base).collect()))
+    full = str(tmp_path / "sub_crash_full")
+    LS.maxsim_persist(docs, full)
+    assert served == sorted(map(
+        tuple, LS.maxsim_banded_persisted(spark, full).collect()))
 
 
 def test_maxsim_delete_docs_serves_filtered_corpus(spark, tmp_path):

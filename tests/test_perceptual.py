@@ -326,15 +326,15 @@ def test_persisted_admission_prunes_and_rejects(spark, tmp_path):
 
 
 def test_perceptual_buckets_guard(spark, tmp_path):
-    """The geometry sidecar (r14, the minhash meta-guard discipline):
-    admit/append with a buckets value differing from the build's
-    raises instead of silently probing the wrong directories; a
-    legacy substrate without the sidecar stays permissive."""
+    """The geometry lives in the sidecar: admit and append read it
+    back, and a substrate without the sidecar raises on every serve and
+    maintenance path instead of probing a default bucket count."""
     import os
 
     from vectordb_explorations_spark.operators.perceptual import (
         perceptual_admit_persisted, perceptual_append_persisted,
-        perceptual_persist)
+        perceptual_delete_persisted, perceptual_persist)
+    from vectordb_explorations_spark.sources import substrate
 
     rng = np.random.default_rng(72)
     vocab = ["alpha", "bridge", "copper", "delta", "ember", "flint"]
@@ -345,15 +345,53 @@ def test_perceptual_buckets_guard(spark, tmp_path):
     perceptual_persist(corpus, base)
     batch = spark.createDataFrame([(50, mk())], ["doc_id", "text"])
 
-    with pytest.raises(ValueError, match="build value"):
-        perceptual_admit_persisted(spark, base, batch, buckets=128)
-    with pytest.raises(ValueError, match="build value"):
-        perceptual_append_persisted(batch, base, buckets=64)
-    # matching value passes; legacy substrate (sidecar removed) too
     assert perceptual_admit_persisted(spark, base, batch).count() == 1
     os.remove(f"{base}/_meta.json")
-    assert perceptual_admit_persisted(
-        spark, base, batch, buckets=256).count() == 1
+    for call in (lambda: perceptual_admit_persisted(spark, base, batch),
+                 lambda: perceptual_append_persisted(batch, base),
+                 lambda: perceptual_delete_persisted(spark, base, [0])):
+        with pytest.raises(substrate.SubstrateMetaError,
+                           match="_meta.json is missing"):
+            call()
+
+
+def test_perceptual_repersist_crash_before_sidecar(spark, tmp_path,
+                                                   monkeypatch):
+    """Crash injection between the face write and the sidecar write of
+    a re-persist that changes the geometry (fixed 256 -> 'auto' 16):
+    the admission of an exact copy raises instead of probing the stale
+    bucket count and admitting the copy."""
+    from vectordb_explorations_spark.operators.perceptual import (
+        perceptual_admit_persisted, perceptual_persist)
+    from vectordb_explorations_spark.sources import substrate
+
+    rng = np.random.default_rng(73)
+    vocab = ["alpha", "bridge", "copper", "delta", "ember", "flint"]
+    mk = lambda: " ".join(vocab[i] for i in rng.integers(0, 6, size=60))
+    texts = [mk() for _ in range(4)]
+    corpus = spark.createDataFrame(list(enumerate(texts)),
+                                   ["doc_id", "text"])
+    base = str(tmp_path / "perc_crash")
+    perceptual_persist(corpus, base, buckets=substrate.AUTO_BUCKETS_CAP)
+
+    real_write = substrate.write_json_sidecar
+
+    def crash_on_ready(spark_, path, meta):
+        if meta.get("state") == "ready":
+            raise RuntimeError("injected crash before the sidecar write")
+        real_write(spark_, path, meta)
+
+    with monkeypatch.context() as m:
+        m.setattr(substrate, "write_json_sidecar", crash_on_ready)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            perceptual_persist(corpus, base)
+    buckets = {r["bucket"] for r in spark.read.parquet(base)
+               .select("bucket").distinct().collect()}
+    assert buckets and max(buckets) < 16   # the new geometry landed
+
+    copy = spark.createDataFrame([(100, texts[1])], ["doc_id", "text"])
+    with pytest.raises(substrate.SubstrateMetaError):
+        perceptual_admit_persisted(spark, base, copy).collect()
 
 
 def test_perceptual_delete_persisted_forgets_image(spark, tmp_path):
@@ -432,24 +470,15 @@ def test_perceptual_append_persisted_closes_the_loop(spark, tmp_path):
 
 
 def test_phash_auto_buckets_policy(spark, tmp_path):
-    """Corpus-adaptive perceptual substrate geometry (r15): 'auto'
-    holds >= PHASH_BUCKET_TARGET_DOCS assets per bucket directory
-    (pow2, floor 16, cap PHASH_PERSIST_BUCKETS), the build stamps the
-    RESOLVED value into the sidecar, 'auto' at admit/append reads it
-    back, and admission verdicts are bucket-count-independent."""
+    """Corpus-adaptive perceptual substrate geometry: the build stamps
+    the RESOLVED 'auto' bucket count (the shared policy is pinned in
+    tests/test_substrate.py) into the sidecar, admission reads it back,
+    and admission verdicts are bucket-count-independent."""
     import numpy as np
 
     from vectordb_explorations_spark.operators.perceptual import (
-        PHASH_PERSIST_BUCKETS, perceptual_admit_persisted,
-        perceptual_persist, phash_auto_buckets)
-    from vectordb_explorations_spark.sources.sinks import (
-        read_json_sidecar)
-
-    assert phash_auto_buckets(0) == 16
-    assert phash_auto_buckets(500) == 16
-    assert phash_auto_buckets(5000) == 64
-    assert phash_auto_buckets(16384) == 256
-    assert phash_auto_buckets(10_000_000) == 256
+        perceptual_admit_persisted, perceptual_persist)
+    from vectordb_explorations_spark.sources import substrate
 
     rng = np.random.default_rng(92)
     vocab = ["alpha", "bridge", "copper", "delta", "ember", "flint"]
@@ -461,8 +490,8 @@ def test_phash_auto_buckets_policy(spark, tmp_path):
         ["doc_id", "text"])
     base = str(tmp_path / "perc_auto")
     perceptual_persist(corpus, base)
-    meta = read_json_sidecar(spark, f"{base}/_meta.json")
-    assert meta["buckets"] == 16    # resolved, not 'auto'
+    meta = substrate.read_meta(spark, base, "test")
+    assert meta["build"]["buckets"] == 16    # resolved, not 'auto'
     # every bucket value in the face respects the resolved modulus
     vals = {r["bucket"] for r in
             spark.read.parquet(base).select("bucket")
@@ -472,7 +501,7 @@ def test_phash_auto_buckets_policy(spark, tmp_path):
     # fixed-cap substrate returns identical rows
     base_fixed = str(tmp_path / "perc_fixed")
     perceptual_persist(corpus, base_fixed,
-                       buckets=PHASH_PERSIST_BUCKETS)
+                       buckets=substrate.AUTO_BUCKETS_CAP)
     batch = spark.createDataFrame(
         [(100, corpus_texts[2]), (101, mk_text())], ["doc_id", "text"])
     got_auto = sorted(map(tuple, perceptual_admit_persisted(

@@ -141,8 +141,9 @@ def test_append_clears_corpus_memo(spark, sf_dir, tmp_path):
     partitioned-serving contract) resolves auto policies against the
     grown N (the ADVICE staleness edge)."""
     from vectordb_explorations_spark.operators.pq import (
-        _corpus_rows, _read_corpus_meta, ivfpq_build,
+        _corpus_rows, ivfpq_build,
         ivfpq_append_partitioned, ivfpq_persist_partitioned)
+    from vectordb_explorations_spark.sources.substrate import read_rows
     from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
     from vectordb_explorations_spark.sources.catalog import load_table
 
@@ -151,14 +152,14 @@ def test_append_clears_corpus_memo(spark, sf_dir, tmp_path):
                                       k_codes=16)
     path = str(tmp_path / "ivfpq_grow")
     ivfpq_persist_partitioned(codes, path)
-    n0 = _read_corpus_meta(spark, path)
+    n0 = read_rows(spark, path)
     df = spark.read.parquet(path)
     rep = IVF_ASSIGN_N
     assert _corpus_rows(df, rep) == n0
     batch = emb.limit(20).selectExpr("vec_id + 1000000 AS vec_id",
                                      "embedding", "label")
     ivfpq_append_partitioned(path, cents, books, batch)
-    assert _read_corpus_meta(spark, path) == n0 + 20
+    assert read_rows(spark, path) == n0 + 20
     # the append cleared the memo (no stale entry survives), and a
     # fresh read of the layout — what probe_partitioned does per call —
     # resolves against the grown N; the old snapshot object honestly
@@ -173,8 +174,8 @@ def test_layout_corpus_n_fallback_counts_unpruned(spark, tmp_path):
     is job-free and silent."""
     import warnings
 
-    from vectordb_explorations_spark.operators.pq import (
-        _layout_corpus_n, _write_corpus_meta)
+    from vectordb_explorations_spark.operators.pq import _layout_corpus_n
+    from vectordb_explorations_spark.sources.substrate import write_ready
 
     path = str(tmp_path / "nosidecar")
     (spark.range(200).selectExpr("id AS vec_id", "id % 4 AS list_id")
@@ -183,9 +184,9 @@ def test_layout_corpus_n_fallback_counts_unpruned(spark, tmp_path):
         warnings.simplefilter("always")
         n = _layout_corpus_n(spark, path, 2)
     assert n == 100  # 200 rows / replication 2 — the UNPRUNED count
-    assert any("_corpus_meta.json" in str(w.message) for w in caught)
+    assert any("_meta.json" in str(w.message) for w in caught)
 
-    _write_corpus_meta(spark, path, 100)
+    write_ready(spark, path, {"rows": 100})
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         assert _layout_corpus_n(spark, path, 2) == 100
@@ -201,8 +202,9 @@ def test_corpus_meta_sidecar_on_uri_layout(spark, sf_dir, tmp_path):
 
     from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
     from vectordb_explorations_spark.operators.pq import (
-        _layout_corpus_n, _read_corpus_meta, ivfpq_build,
+        _layout_corpus_n, ivfpq_build,
         ivfpq_persist_partitioned, ivfpq_probe_partitioned)
+    from vectordb_explorations_spark.sources.substrate import read_rows
 
     emb = load_table(spark, "embeddings", sf_dir)
     codes, cents, books = ivfpq_build(emb, num_centroids=8, m_subspaces=8,
@@ -210,7 +212,7 @@ def test_corpus_meta_sidecar_on_uri_layout(spark, sf_dir, tmp_path):
     path = "file://" + str(tmp_path / "ivfpq_uri")
     ivfpq_persist_partitioned(codes, path)
     n = emb.count()
-    assert _read_corpus_meta(spark, path) == n
+    assert read_rows(spark, path) == n
 
     sc = spark.sparkContext
     sc.setJobGroup("corpus-meta-uri", "resolve corpus N")
@@ -222,7 +224,7 @@ def test_corpus_meta_sidecar_on_uri_layout(spark, sf_dir, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup("corpus-meta-uri")) == []
-    assert not [w for w in caught if "_corpus_meta.json" in str(w.message)]
+    assert not [w for w in caught if "_meta.json" in str(w.message)]
 
     queries = sample_queries(emb, 3)
     served = ivfpq_probe_partitioned(spark, path, cents, books, queries, K,

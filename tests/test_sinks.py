@@ -398,7 +398,7 @@ def test_read_hive_pruned_matches_full_read(spark, sf_dir, tmp_path):
     directory exists."""
     from pyspark.sql import functions as F
 
-    from vectordb_explorations_spark.sources.sinks import read_hive_pruned
+    from vectordb_explorations_spark.sources.substrate import read_hive_pruned
 
     df = load_table(spark, "nation", sf_dir).select(
         "n_nationkey", "n_name",

@@ -198,7 +198,7 @@ def test_ivfsq_append_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from vectordb_explorations_spark.operators.ann import ivf_assign
-    from vectordb_explorations_spark.operators.pq import _read_corpus_meta
+    from vectordb_explorations_spark.sources.substrate import read_rows
     from vectordb_explorations_spark.operators.sq import (
         ivfsq_append_partitioned, ivfsq_build, ivfsq_persist_partitioned,
         ivfsq_probe_partitioned, ivfsq_search, sq_encode)
@@ -211,9 +211,9 @@ def test_ivfsq_append_incremental_equals_rebuild(spark, sf_dir, tmp_path):
     codes.count()
     path = str(tmp_path / "ivfsq_inc")
     ivfsq_persist_partitioned(codes, path)
-    n0 = _read_corpus_meta(spark, path)
+    n0 = read_rows(spark, path)
     ivfsq_append_partitioned(path, cents, mins, maxs, new)
-    assert _read_corpus_meta(spark, path) == n0 + new.count()
+    assert read_rows(spark, path) == n0 + new.count()
 
     queries = sample_queries(emb, 5).cache()
     served = ivfsq_probe_partitioned(spark, path, cents, mins, maxs,

@@ -421,8 +421,8 @@ def test_incremental_ivfpq_ingest_matches_batch_encode(spark, sf_dir,
     over those codes bit for bit."""
     from vectordb_explorations_spark.operators.knn import sample_queries
     from vectordb_explorations_spark.operators.pq import (
-        _read_corpus_meta, ivfpq_build, ivfpq_probe_partitioned,
-        ivfpq_search)
+        ivfpq_build, ivfpq_probe_partitioned, ivfpq_search)
+    from vectordb_explorations_spark.sources.substrate import read_rows
     from vectordb_explorations_spark.sources import load_table
     from vectordb_explorations_spark.streaming.events import (
         incremental_ivfpq_ingest)
@@ -441,7 +441,7 @@ def test_incremental_ivfpq_ingest_matches_batch_encode(spark, sf_dir,
     b = sorted((int(r[0]), int(r[1]), tuple(r[2])) for r in
                codes.select("vec_id", "list_id", "codes").collect())
     assert a == b and a
-    assert _read_corpus_meta(spark, path) == emb.count()
+    assert read_rows(spark, path) == emb.count()
 
     queries = sample_queries(emb, 5).cache()
     served = ivfpq_probe_partitioned(spark, path, cents, books, queries, 5,
@@ -459,8 +459,8 @@ def test_ingest_replay_is_idempotent(spark, sf_dir, tmp_path):
     the same source (same epoch ids, no checkpoint) must be a no-op —
     the epoch markers make replays skip, so the layout's rows AND the
     sidecar corpus count are unchanged by the second run."""
-    from vectordb_explorations_spark.operators.pq import (_read_corpus_meta,
-                                                          ivfpq_build)
+    from vectordb_explorations_spark.operators.pq import ivfpq_build
+    from vectordb_explorations_spark.sources.substrate import read_rows
     from vectordb_explorations_spark.sources import load_table
     from vectordb_explorations_spark.streaming.events import (
         incremental_ivfpq_ingest)
@@ -472,12 +472,12 @@ def test_ingest_replay_is_idempotent(spark, sf_dir, tmp_path):
     q = incremental_ivfpq_ingest(spark, sf_dir, path, cents, books)
     q.awaitTermination(300)
     rows1 = spark.read.parquet(path).count()
-    meta1 = _read_corpus_meta(spark, path)
+    meta1 = read_rows(spark, path)
 
     q2 = incremental_ivfpq_ingest(spark, sf_dir, path, cents, books)
     q2.awaitTermination(300)
     assert spark.read.parquet(path).count() == rows1
-    assert _read_corpus_meta(spark, path) == meta1 == emb.count()
+    assert read_rows(spark, path) == meta1 == emb.count()
 
 
 def test_batch_key_is_content_keyed(spark, tmp_path):

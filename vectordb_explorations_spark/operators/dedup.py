@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from vectordb_explorations_spark.functions.rounding import r6, round6
+from vectordb_explorations_spark.sources import substrate
 
 # 3-word shingles over the space-separated text, de-duplicated per doc.
 # Guarded so docs with < 3 words yield an empty set (Spark's `sequence`
@@ -836,57 +837,12 @@ def incremental_dedup(docs: DataFrame,
             .orderBy("doc_id"))
 
 
-MINHASH_PERSIST_BUCKETS = 256   # cap of the 'auto' policy below, and the
-                                # fixed default of pre-r14 substrates
-MINHASH_BUCKET_TARGET_DOCS = 64  # 'auto' keeps >= this many docs per
-                                 # bucket directory
-
-
-def minhash_auto_buckets(n_docs: int) -> int:
-    """Corpus-adaptive bucket count for the persisted banded face (the
-    LSH-cap / cand-per-term 'auto' discipline applied to the substrate
-    GEOMETRY, r14 optimization round; guide §2 scale-adaptive
-    partitioning): a fixed 256 buckets puts n_bands x 256 + 256 = 1,280
-    directories under every substrate regardless of corpus size — at
-    fixture scale that is a ~5 s write-commit and listing floor for a
-    few thousand rows, while at 100 TB it is exactly right. The policy
-    holds >= MINHASH_BUCKET_TARGET_DOCS docs per bucket directory
-    (power of two, floor 16, cap MINHASH_PERSIST_BUCKETS), so small
-    corpora get proportionally fewer directories and every corpus past
-    ~16k docs gets the same 256 as before. Admission results are
-    bucket-count-independent (the bucket is a pruning route; candidates
-    still join on the full band_key — pinned by the bit-equality
-    pytest), and the build stamps the RESOLVED value into the meta
-    sidecar, which admit/append consult ('auto' reads it back; an
-    explicit mismatching int still raises)."""
-    if n_docs <= 0:
-        return 16
-    raw = n_docs // MINHASH_BUCKET_TARGET_DOCS
-    p = 1 << max(0, raw.bit_length() - 1)
-    return max(16, min(MINHASH_PERSIST_BUCKETS, p))
-
-
-def _resolve_minhash_buckets(meta: dict | None, buckets) -> int:
-    """'auto' at serve time = the build's stamped value (legacy
-    substrates without a sidecar predate the auto policy and were
-    always built at the fixed cap)."""
-    if buckets == "auto":
-        if meta is not None and "buckets" in meta:
-            return int(meta["buckets"])
-        return MINHASH_PERSIST_BUCKETS
-    return int(buckets)
-
-
 def minhash_persist(docs: DataFrame, base_dir: str,
                     num_hashes: int = NUM_HASHES,
                     band_size: int = BAND_SIZE,
                     buckets: int | str = "auto") -> None:
-    """Build + persist the MinHash admission substrate ONCE — the
-    serving design the banding_candidates docstring has promised since
-    r10 ("persist the banded frame ... pays the signature pass once"),
-    now built (r12 verdict item 6) on the ivf/maxsim/perceptual
-    partitioned-serving discipline. TWO faces, both written in one
-    build from one signature pass:
+    """Build + persist the MinHash admission substrate ONCE. TWO faces,
+    both written in one build from one signature pass:
 
     - ``{base_dir}/bands``: the NARROW banded frame (doc_id, band_key)
       hive-partitioned by (band_idx, bucket) where bucket = the
@@ -898,16 +854,20 @@ def minhash_persist(docs: DataFrame, base_dir: str,
     - ``{base_dir}/sh``: the per-doc hashed-shingle sets partitioned by
       sh_bucket = doc_id % buckets, so the exact-Jaccard verify reads
       only the candidate old docs' buckets. Kept SEPARATE from the
-      banded face deliberately: folding sh into the band rows (the
-      perceptual discipline, where the carried state is two longs)
-      would store every shingle set n_bands times — corpus-scale
-      duplication for nothing, since candidates are few at admission
-      time and their buckets prune.
+      banded face deliberately: folding sh into the band rows would
+      store every shingle set n_bands times — corpus-scale duplication
+      for nothing, since candidates are few at admission time and
+      their buckets prune.
 
-    Incremental maintenance: plain engine tables — append the new
-    batch's band/sh rows after each admitted batch via
-    ``minhash_append_persisted`` (both routes are stateless functions
-    of the row).
+    ``buckets='auto'`` resolves ``substrate.auto_buckets`` from the doc
+    count. The sidecar (``{base_dir}/_meta.json``, contract in
+    ``sources/substrate.py``) stamps the resolved geometry, the doc
+    count and both faces' read-back schemas; admit, append and delete
+    read them from there.
+
+    Incremental maintenance: append each admitted batch's band/sh rows
+    via ``minhash_append_persisted`` (both routes are stateless
+    functions of the row).
 
     Write shape: repartition on the partition columns BEFORE the
     write — without it every writer input partition drops a file into
@@ -916,39 +876,21 @@ def minhash_persist(docs: DataFrame, base_dir: str,
     budget on listings/opens). One file per directory is the
     file-count floor for a hive layout.
 
-    Corpus-pass budget (r15, guide §2.3/§5): ONE tokenize+md5 pass.
-    The shingle sets are materialized once (localCheckpoint) and feed
-    the 'auto' geometry count, BOTH face writes and the meta doc
-    count — the r14 shape paid a docs.count() corpus scan just to
-    resolve geometry (r14 ADVICE: re-adding the cost the code had
-    already removed, and overcounting shingle-less docs), then a
-    read-back scan of the written sh face for the bands derivation,
-    then a third footer-count job for the sidecar."""
+    Corpus-pass budget: ONE tokenize+md5 pass. The shingle sets are
+    materialized once (localCheckpoint) and feed the 'auto' geometry
+    count, both face writes and the sidecar's doc count."""
     spark = docs.sparkSession
-    from vectordb_explorations_spark.sources.sinks import hive_leaf_schema
     sets = _shingle_sets(docs).localCheckpoint()
     n_docs = sets.count()   # counts materialized blocks, not a re-scan
     if buckets == "auto":
-        buckets = minhash_auto_buckets(n_docs)
-    _write_minhash_faces(sets, base_dir, num_hashes, band_size, buckets,
-                         mode="overwrite")
-    # READ-BACK schemas via ONE leaf directory each (hive_leaf_schema —
-    # a root read would re-list the full 1,024-dir banded tree just to
-    # capture what one footer carries): admissions pass these to
-    # read_hive_pruned so a probe never pays the per-call footer read +
-    # partition-type inference
-    bands_schema = hive_leaf_schema(spark, f"{base_dir}/bands", 2)
-    sh_schema = hive_leaf_schema(spark, f"{base_dir}/sh", 1)
-    _write_minhash_meta(spark, base_dir, {
-        # one shingle-set row per substrate doc — the same unit the sh
-        # face stores and delete decrements by
-        "docs": n_docs,
-        "num_hashes": num_hashes,
-        "band_size": band_size, "buckets": buckets,
-        **({"bands_schema": bands_schema.json()}
-           if bands_schema is not None else {}),
-        **({"sh_schema": sh_schema.json()}
-           if sh_schema is not None else {})})
+        buckets = substrate.auto_buckets(n_docs)
+    build = {"num_hashes": num_hashes, "band_size": band_size,
+             "buckets": buckets}
+    substrate.write_building(spark, base_dir)
+    _write_minhash_faces(sets, base_dir, build, mode="overwrite")
+    # one shingle-set row per substrate doc — the same unit the sh face
+    # stores and delete decrements by
+    substrate.stamp(spark, base_dir, build, n_docs, {"bands": 2, "sh": 1})
 
 
 # Below this substrate size the persisted face is SLOWER than deriving
@@ -956,46 +898,6 @@ def minhash_persist(docs: DataFrame, base_dir: str,
 # listing is a fixed floor (measured 5.8 s vs 1.5 s at 2.5k docs;
 # crossover past ~100k docs and an 8.6x win at 10M — SCALE_NOTES).
 MINHASH_ADMIT_MIN_CORPUS = 100_000
-
-
-def _write_minhash_meta(spark, base_dir: str, meta: dict) -> None:
-    """One-file JSON sidecar ({base_dir}/meta.json) carrying the
-    substrate's doc count and build parameters. The count drives the
-    small-corpus serving warning; the parameters let admit/append
-    REFUSE a mismatched num_hashes/band_size/buckets (a mismatch would
-    probe the wrong buckets and silently admit near-dups — the same
-    failure class as the IVF assign_n erasure gap, r13 ADVICE).
-
-    IO rides sinks.write_json_sidecar — the Hadoop-FS direct stream,
-    not a Spark job (the ~5 s one-row-write lesson, r14)."""
-    from vectordb_explorations_spark.sources.sinks import (
-        write_json_sidecar)
-
-    write_json_sidecar(spark, f"{base_dir}/meta.json", meta)
-
-
-def _read_minhash_meta(spark, base_dir: str) -> dict | None:
-    """None for substrates persisted before the sidecar existed —
-    callers skip validation/warning rather than failing legacy faces."""
-    from vectordb_explorations_spark.sources.sinks import (
-        read_json_sidecar)
-
-    return read_json_sidecar(spark, f"{base_dir}/meta.json")
-
-
-def _check_minhash_params(meta: dict | None, num_hashes: int,
-                          band_size: int, buckets: int, op: str) -> None:
-    if meta is None:
-        return
-    got = {"num_hashes": num_hashes, "band_size": band_size,
-           "buckets": buckets}
-    built = {k: meta[k] for k in got if k in meta}
-    if built and built != {k: got[k] for k in built}:
-        raise ValueError(
-            f"{op}: caller parameters {got} do not match the substrate's "
-            f"build parameters {built} — a mismatched banding geometry "
-            f"probes the wrong buckets and silently misses near-dups. "
-            f"Use the build's values (persisted in {{base_dir}}/meta).")
 
 
 def _signatures_from_sets(sh_sets: DataFrame,
@@ -1016,8 +918,7 @@ def _signatures_from_sets(sh_sets: DataFrame,
     return sh_sets.select("doc_id", *cols)
 
 
-def _write_minhash_faces(sh_sets: DataFrame, base_dir: str,
-                         num_hashes: int, band_size: int, buckets: int,
+def _write_minhash_faces(sh_sets: DataFrame, base_dir: str, build: dict,
                          mode: str) -> None:
     """Both substrate faces from ONE materialized (doc_id, sh)
     shingle-set frame — shared by the bulk build (overwrite) and the
@@ -1026,23 +927,17 @@ def _write_minhash_faces(sh_sets: DataFrame, base_dir: str,
     signatures from the sets via ``_signatures_from_sets``
     (bit-identical to the from-text path, see its docstring), so the
     tokenize+md5 pass is paid exactly once and neither face re-reads
-    the other.
-
-    The write order (bands, then sh) carries no safety property: after
-    a crash between the two writes, admission's verify inner-joins the
-    sh face, so a candidate whose sh row is missing is dropped and the
-    near-dup is admitted in either order. The caller's ingest-marker
-    replay, which rewrites both faces before mark(), is what closes
-    that window — documented on ``minhash_append_persisted``. Appends
-    also opt into the v1 committer (sinks.V1_COMMITTER): a v2 task
-    attempt failing mid-commit could leave partial files NEXT TO
-    existing rows."""
+    the other. Appends opt into the v1 committer
+    (sinks.V1_COMMITTER): a v2 task attempt failing mid-commit could
+    leave partial files NEXT TO existing rows."""
     from vectordb_explorations_spark.sources.sinks import (
         V1_COMMITTER, repartition_for_hive)
 
+    buckets = build["buckets"]
     append_opts = V1_COMMITTER if mode == "append" else {}
-    banded = banded_keys(_signatures_from_sets(sh_sets, num_hashes),
-                         num_hashes, band_size)
+    banded = banded_keys(
+        _signatures_from_sets(sh_sets, build["num_hashes"]),
+        build["num_hashes"], build["band_size"])
     (repartition_for_hive(
         banded.withColumn(
             "bucket",
@@ -1060,45 +955,36 @@ def _write_minhash_faces(sh_sets: DataFrame, base_dir: str,
      .parquet(f"{base_dir}/sh"))
 
 
-def minhash_append_persisted(docs: DataFrame, base_dir: str,
-                             num_hashes: int = NUM_HASHES,
-                             band_size: int = BAND_SIZE,
-                             buckets: int | str = "auto"
-                             ) -> None:
+def minhash_append_persisted(docs: DataFrame, base_dir: str) -> None:
     """Append an ADMITTED batch to both substrate faces — the
     maintenance step after ``minhash_admit_persisted`` says yes, so
-    the next crawl's admissions see today's documents. Both routes are
-    stateless functions of the row (band-key prefix, doc_id modulus),
-    so appended rows bucket exactly as a full rebuild would; hive
-    append touches only the batch's own bucket directories.
-    Idempotence belongs to the CALLER's ingest markers (the
-    _files_to_ingest pattern) exactly as with maxsim_append_ingest.
+    the next crawl's admissions see today's documents. The geometry
+    comes from the sidecar, and both routes are stateless functions of
+    the row (band-key prefix, doc_id modulus), so appended rows bucket
+    exactly as a full rebuild would; hive append touches only the
+    batch's own bucket directories. Idempotence belongs to the
+    CALLER's ingest markers (the _files_to_ingest pattern).
 
-    Crash window: the two face writes are not atomic. Bands land
-    first, so a crash between them leaves the
-    batch's docs VISIBLE to the probe (candidates found) but without
-    verify-side shingle rows — an admission in that state admits their
-    near-dups, exactly as it would have before the batch existed. A
-    marker-guarded replay re-appends both faces; the crashed partial
-    rows it duplicates are verdict-benign (candidates are distinct
-    pairs, the best-match window collapses repeated jaccard rows) but
-    inflate band occupancy, so a crashed-batch substrate should be
-    rebuilt rather than replayed when exactness matters."""
+    Crash window: the two face writes are not atomic, so the sidecar
+    reads ``building`` from before the first until after the last, and
+    an admission in between raises instead of admitting near-dups of
+    a half-written batch. The marker-guarded replay re-appends both
+    faces and flips the sidecar back to ``ready``. The partial rows it
+    duplicates are verdict-benign (candidates are distinct pairs, the
+    best-match window collapses repeated jaccard rows) but inflate
+    band occupancy, so rebuild a crashed-batch substrate when
+    exactness matters."""
     spark = docs.sparkSession
-    meta = _read_minhash_meta(spark, base_dir)
-    buckets = _resolve_minhash_buckets(meta, buckets)
-    _check_minhash_params(meta, num_hashes, band_size, buckets,
-                          "minhash_append_persisted")
+    meta = substrate.read_meta(spark, base_dir, "minhash_append_persisted",
+                               replay=True)
     # one tokenize pass over the batch: both faces read the checkpoint
     sets = _shingle_sets(docs).localCheckpoint()
-    _write_minhash_faces(sets, base_dir, num_hashes, band_size, buckets,
-                         mode="append")
-    if meta is not None:
-        # absolute recount from the sh face's parquet footers (one row
-        # per substrate doc) — no extra pass over the batch frame, and
-        # the same unit delete decrements by
-        meta["docs"] = spark.read.parquet(f"{base_dir}/sh").count()
-        _write_minhash_meta(spark, base_dir, meta)
+    substrate.write_building(spark, base_dir, meta)
+    _write_minhash_faces(sets, base_dir, meta["build"], mode="append")
+    # absolute recount from the sh face's parquet footers (one row per
+    # substrate doc) — no extra pass over the batch frame
+    substrate.write_ready(spark, base_dir, {
+        **meta, "rows": spark.read.parquet(f"{base_dir}/sh").count()})
 
 
 def minhash_delete_persisted(spark, base_dir: str, doc_ids) -> int:
@@ -1112,62 +998,52 @@ def minhash_delete_persisted(spark, base_dir: str, doc_ids) -> int:
     from vectordb_explorations_spark.sources.sinks import (
         delete_rows_partitioned)
 
+    meta = substrate.read_meta(spark, base_dir, "minhash_delete_persisted")
     n = delete_rows_partitioned(spark, f"{base_dir}/bands",
                                 ["band_idx", "bucket"], "doc_id", doc_ids)
     n_sh = delete_rows_partitioned(spark, f"{base_dir}/sh",
                                    ["sh_bucket"], "doc_id", doc_ids)
-    meta = _read_minhash_meta(spark, base_dir)
-    if meta is not None:
-        # sh face holds exactly one row per doc — its removal count is
-        # the number of erased documents
-        meta["docs"] = max(0, int(meta.get("docs", 0)) - n_sh)
-        _write_minhash_meta(spark, base_dir, meta)
+    # the sh face holds exactly one row per doc — its removal count is
+    # the number of erased documents
+    substrate.write_ready(spark, base_dir,
+                          {**meta, "rows": max(0, meta["rows"] - n_sh)})
     return n + n_sh
 
 
 def minhash_admit_persisted(spark, base_dir: str, new_docs: DataFrame,
-                            num_hashes: int = NUM_HASHES,
-                            band_size: int = BAND_SIZE,
                             threshold: float = JACCARD_THRESHOLD,
-                            buckets: int | str = "auto",
                             bucket_cap: int = BANDING_BUCKET_CAP
                             ) -> DataFrame:
     """Admit a NEW batch against the persisted substrate — the serving
     twin of ``incremental_dedup`` (bit-equal verdicts when the batch is
     the corpus' upper id half; pinned in tests/test_dedup.py). The
-    batch's banded rows collect ONCE driver-side (BOUNDED: batch docs
-    x n_bands rows whatever the corpus size) and resolve the
-    (band_idx, bucket) probe pairs locally; the banded face read
-    carries the band_idx/bucket isin conjuncts the FILE LISTING prunes
-    on plus the combined-key isin that keeps the probe exact inside
-    the pruned rectangles; the candidate pairs collect in the SAME job
-    that probes the pruned index, and the old docs' sh buckets derive
-    from them locally (r15: one collect job where r14 ran two collects
-    plus two localCheckpoint jobs). Old band groups over ``bucket_cap`` drop before the join
-    (the BANDING_BUCKET_CAP hot-bucket guard; identical results
-    whenever no group exceeds the cap, which the in-memory path
-    implicitly assumes). Verify is the same 6-dp exact Jaccard, best
-    match by (jaccard DESC, old_id ASC). The corpus signature pass is
-    paid at BUILD time, once ever — an admission run scans only the
-    batch plus the pruned buckets.
+    banding geometry comes from the sidecar. The batch's banded rows
+    collect ONCE driver-side (BOUNDED: batch docs x n_bands rows
+    whatever the corpus size) and resolve the (band_idx, bucket) probe
+    pairs locally; ``substrate.read_probe`` lists only those
+    directories and keeps the probe exact inside them; the candidate
+    pairs collect in the SAME job that probes the pruned index, and
+    the old docs' sh buckets derive from them locally. Old band groups
+    over ``bucket_cap`` drop before the join (the BANDING_BUCKET_CAP
+    hot-bucket guard; identical results whenever no group exceeds the
+    cap, which the in-memory path implicitly assumes). Verify is the
+    same 6-dp exact Jaccard, best match by (jaccard DESC, old_id ASC).
+    The corpus signature pass is paid at BUILD time, once ever — an
+    admission run scans only the batch plus the pruned buckets.
 
     This is a >=100k-docs tool: below MINHASH_ADMIT_MIN_CORPUS
     substrate docs the fixed 1,024-directory probe floor makes it
     SLOWER than ``incremental_dedup``'s derive-in-memory shape
     (measured in SCALE_NOTES) — a RuntimeWarning says so, from the
-    doc count the meta sidecar carries. Parameter drift vs the build
-    (num_hashes/band_size/buckets) raises instead of silently probing
-    the wrong buckets."""
-    meta = _read_minhash_meta(spark, base_dir)
-    buckets = _resolve_minhash_buckets(meta, buckets)
-    _check_minhash_params(meta, num_hashes, band_size, buckets,
-                          "minhash_admit_persisted")
-    if meta is not None and int(meta.get("docs", 0)) < \
-            MINHASH_ADMIT_MIN_CORPUS:
+    doc count the sidecar carries."""
+    meta = substrate.read_meta(spark, base_dir, "minhash_admit_persisted")
+    num_hashes, band_size, buckets = (
+        meta["build"][k] for k in ("num_hashes", "band_size", "buckets"))
+    if meta["rows"] < MINHASH_ADMIT_MIN_CORPUS:
         import warnings
         warnings.warn(
             f"minhash_admit_persisted: substrate holds "
-            f"{int(meta.get('docs', 0)):,} docs — below the "
+            f"{meta['rows']:,} docs — below the "
             f"{MINHASH_ADMIT_MIN_CORPUS:,}-doc floor where the "
             f"1,024-directory probe listing dominates (SCALE_NOTES: "
             f"5.8 s vs 1.5 s in-memory at 2.5k docs). Use "
@@ -1179,9 +1055,7 @@ def minhash_admit_persisted(spark, base_dir: str, new_docs: DataFrame,
     # x n_bands rows whatever the corpus size. Those few rows resolve
     # the probe pairs, provide the candidate join side (a literal
     # broadcast frame) and, after the candidate collect below, the old
-    # docs' sh buckets — replacing r14's second localCheckpoint job,
-    # separate probe-collect job and separate bucket-collect job
-    # (guide §5 driver-boundary discipline; VERDICT r14 item 4).
+    # docs' sh buckets (guide §5 driver-boundary discipline).
     sh_new = _shingle_sets(new_docs).localCheckpoint()
     new_rows = (banded_keys(_signatures_from_sets(sh_new, num_hashes),
                             num_hashes, band_size)
@@ -1197,27 +1071,8 @@ def minhash_admit_persisted(spark, base_dir: str, new_docs: DataFrame,
             F.lit(None).cast("long").alias("matched_old"),
             F.lit(None).cast("double").alias("best_jaccard"))
             .orderBy("doc_id"))
-    # read ONLY the probed (band_idx, bucket) directories: the full
-    # spark.read.parquet(bands) pays a recursive listing of all
-    # n_bands x buckets leaf dirs per admission BEFORE PartitionFilters
-    # prune (measured 3.4 s of the 5.7 s sf0.1 row, re-paid per call);
-    # the probe knows its directories, so the listing is O(probe)
-    from pyspark.sql.types import StructType
-    from vectordb_explorations_spark.sources.sinks import read_hive_pruned
-    schemas = {
-        k: StructType.fromJson(__import__("json").loads(meta[k]))
-        for k in ("bands_schema", "sh_schema")
-        if meta is not None and k in meta}
-    idx = read_hive_pruned(spark, f"{base_dir}/bands",
-                           ["band_idx", "bucket"], probe,
-                           schema=schemas.get("bands_schema"))
-    if idx is None:
-        idx = spark.read.parquet(f"{base_dir}/bands").limit(0)
-    pred = (F.col("band_idx").isin(sorted({b for b, _ in probe}))
-            & F.col("bucket").isin(sorted({k for _, k in probe}))
-            & (F.col("band_idx") * buckets + F.col("bucket")).isin(
-                sorted(b * buckets + k for b, k in probe)))
-    old = idx.where(pred)
+    old = substrate.read_probe(spark, base_dir, meta, "bands",
+                               ["band_idx", "bucket"], probe)
     occ = F.count(F.lit(1)).over(Window.partitionBy("band_idx",
                                                     "band_key"))
     old = (old.withColumn("bucket_n", occ)
@@ -1227,9 +1082,7 @@ def minhash_admit_persisted(spark, base_dir: str, new_docs: DataFrame,
     # the batch's banded rows are already driver-side — ship them back
     # as a literal broadcast frame and COLLECT the candidate pairs in
     # the same job that probes the pruned index (bounded: batch docs x
-    # matched band groups, cap-guarded). r14 instead localCheckpointed
-    # the candidate frame and ran a second collect just for the old
-    # docs' buckets — two extra jobs per admission.
+    # matched band groups, cap-guarded)
     nb = spark.createDataFrame(
         [(r["doc_id"], int(r["band_idx"]), r["band_key"])
          for r in new_rows],
@@ -1239,17 +1092,12 @@ def minhash_admit_persisted(spark, base_dir: str, new_docs: DataFrame,
                  .select("new_id", "old_id")
                  .distinct()
                  .collect())
-    old_buckets = sorted({int(r["old_id"]) % buckets for r in cand_rows})
     cand = spark.createDataFrame(
         [(r["new_id"], r["old_id"]) for r in cand_rows],
         "new_id long, old_id long")
-    sh_old = (read_hive_pruned(spark, f"{base_dir}/sh", ["sh_bucket"],
-                               {(b,) for b in old_buckets},
-                               schema=schemas.get("sh_schema"))
-              if old_buckets else None)
-    sh_old = (sh_old.where(F.col("sh_bucket").isin(old_buckets))
-              if sh_old is not None else
-              spark.read.parquet(f"{base_dir}/sh").limit(0))
+    sh_old = substrate.read_probe(
+        spark, base_dir, meta, "sh", ["sh_bucket"],
+        {(int(r["old_id"]) % buckets,) for r in cand_rows})
     jac = (F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
            / F.size(F.array_union("sh_a", "sh_b")))
     ver = (F.broadcast(cand)

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from vectordb_explorations_spark.operators.ann import collect_query_arrays
+from vectordb_explorations_spark.sources import substrate
 
 
 class HnswGraph:
@@ -781,14 +782,12 @@ def hnsw_persist_partitioned(index_df: DataFrame, path: str) -> None:
     (PartitionFilters), before any blob byte is read. At scale the
     per-probe I/O is O(routed cells), independent of shard count.
 
-    Also writes the ``{path}_members`` sidecar: narrow (shard, vec_id)
+    Also writes the ``{path}_members`` face: narrow (shard, vec_id)
     rows, one per graph membership (assign_n replicas appear once per
     holding shard), hive-partitioned by shard and sorted by vec_id so
     an erasure locate reads two int columns with parquet row-group
-    pruning instead of unpickling every graph blob (r13 verdict item
-    6 — the locate used to be O(index blobs) per delete batch).
-    Maintained by append and delete; absent for pre-r14 layouts, where
-    delete falls back to the blob pass."""
+    pruning instead of unpickling every graph blob. Maintained by
+    append and delete, both of which raise when it is missing."""
     from vectordb_explorations_spark.sources.sinks import (
         repartition_for_hive)
 
@@ -829,15 +828,11 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
     number of graph entries removed (a replicated id counts once per
     shard that held it).
 
-    Locate: with the ``{path}_members`` sidecar (written by
-    hnsw_persist_partitioned since r14, maintained by append/delete),
-    victim membership is TWO narrow scans of (shard, vec_id) — the
-    victims' rows via a pushed isin over the sorted vec_id column
-    (row-group pruned), and the touched shards' totals via partition
-    pruning — no blob is unpickled outside the rebuild itself, so a
-    delete batch costs O(victims' shards), not O(index). Without the
-    sidecar (pre-r14 layouts) the legacy path unpickles each shard's
-    blob in one Arrow pass over (shard, blob). Rebuild:
+    Locate: victim membership is ONE narrow scan of the
+    ``{path}_members`` face — a pushed isin over the sorted vec_id
+    column (row-group pruned), grouped per shard — so no blob is unpickled outside the rebuild itself and a delete batch
+    costs O(victims' shards), not O(index). A missing members face
+    raises SubstrateMetaError. Rebuild:
     touched shards re-run the deterministic bulk build over their
     SURVIVORS with the shard's own recorded hyperparameters and
     seed + shard (identical to the append discipline, so a delete
@@ -849,55 +844,18 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
     victims = sorted({int(i) for i in delete_ids})
     if not victims:
         return 0
-    full = spark.read.parquet(path)
-    vict_arr = np.asarray(victims, dtype=np.int64)
-    bc = spark.sparkContext.broadcast(vict_arr)
-
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        spark._jsc.hadoopConfiguration())
     mp = _members_path(path)
-    has_sidecar = fs.exists(jvm.org.apache.hadoop.fs.Path(mp))
-
-    if has_sidecar:
-        mem = spark.read.parquet(mp)
-        per_shard = {int(r["shard"]): int(r["n"]) for r in
-                     mem.where(F.col("vec_id").isin(victims))
-                     .groupBy("shard")
-                     .agg(F.count(F.lit(1)).alias("n")).collect()}
-        touched = sorted(per_shard)
-        n_removed = sum(per_shard.values())
-        if not touched:
-            return 0
-    else:
-        count_schema = T.StructType([
-            T.StructField("shard", T.IntegerType()),
-            T.StructField("n_victims", T.LongType()),
-            T.StructField("n_total", T.LongType()),
-        ])
-
-        def locate(batches: Iterator[pd.DataFrame]
-                   ) -> Iterator[pd.DataFrame]:
-            v = bc.value
-            for pdf in batches:
-                rows = []
-                for _, r in pdf.iterrows():
-                    g: HnswGraph = pickle.loads(r["blob"])
-                    ids = np.asarray(g.ids, dtype=np.int64)
-                    rows.append((int(r["shard"]),
-                                 int(np.isin(ids, v).sum()),
-                                 int(len(ids))))
-                if rows:
-                    yield pd.DataFrame(rows,
-                                       columns=["shard", "n_victims",
-                                                "n_total"])
-
-        located = (full.select("shard", "blob")
-                   .mapInPandas(locate, schema=count_schema).collect())
-        touched = sorted(r["shard"] for r in located if r["n_victims"])
-        n_removed = sum(int(r["n_victims"]) for r in located)
-        if not touched:
-            return 0
+    substrate.require_face(spark, mp, "hnsw_delete_partitioned")
+    per_shard = {int(r["shard"]): int(r["n"]) for r in
+                 spark.read.parquet(mp)
+                 .where(F.col("vec_id").isin(victims))
+                 .groupBy("shard")
+                 .agg(F.count(F.lit(1)).alias("n")).collect()}
+    touched = sorted(per_shard)
+    if not touched:
+        return 0
+    full = spark.read.parquet(path)
+    bc = spark.sparkContext.broadcast(np.asarray(victims, dtype=np.int64))
 
     def rebuild(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         v = bc.value
@@ -928,10 +886,9 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
                .mapInPandas(rebuild, schema=INDEX_SCHEMA)
                .localCheckpoint(eager=True))
     # "Emptied" is decided by the REBUILD OUTPUT (the blobs are the
-    # ground truth), never by sidecar arithmetic: a sidecar missing an
-    # appended id (crash between index write and sidecar append) must
-    # not cause a shard directory holding survivors to be deleted
-    # (r14 continuation review).
+    # ground truth), never by members arithmetic: a members face
+    # missing an appended id must not cause a shard directory holding
+    # survivors to be deleted.
     survivors = {int(r["shard"]) for r in
                  rebuilt.select("shard").distinct().collect()}
     emptied = sorted(set(touched) - survivors)
@@ -942,14 +899,16 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
             overwrite_partitions(rebuilt, path, ["shard"])
     finally:
         rebuilt.unpersist()
+    jvm = spark._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+        spark._jsc.hadoopConfiguration())
     for sh in emptied:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/shard={sh}"),
                   True)
-    if has_sidecar:
-        from vectordb_explorations_spark.sources.sinks import (
-            delete_rows_partitioned)
-        delete_rows_partitioned(spark, mp, ["shard"], "vec_id", victims)
-    return n_removed
+    from vectordb_explorations_spark.sources.sinks import (
+        delete_rows_partitioned)
+    delete_rows_partitioned(spark, mp, ["shard"], "vec_id", victims)
+    return sum(per_shard.values())
 
 
 def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
@@ -970,7 +929,10 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     the index is sharded. ``assign_n`` and ``seed`` must match the
     build's values (they are not persisted per-row). Requires a
     kmeans-sharded index. Probe correctness and untouched-file stability
-    are pinned by tests/test_ann.py."""
+    are pinned by tests/test_ann.py. A missing ``{path}_members`` face
+    raises SubstrateMetaError before anything is written."""
+    mp = _members_path(path)
+    substrate.require_face(spark, mp, "hnsw_append_partitioned")
     full = spark.read.parquet(path)
     cent_rows = full.select("shard", "centroid").collect()
     if any(r["centroid"] is None for r in cent_rows):
@@ -984,10 +946,10 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     sub_base = np.asarray([s[0] for s in cell_shards])
     n_sub = np.asarray([len(s) for s in cell_shards])
 
-    # route the batch DISTRIBUTED (r7 verdict item 5): the same
-    # mapInPandas assign kernel hnsw_build uses — only the tiny
-    # (cells × dim) centroid table rides the broadcast; no O(batch)
-    # driver collect, symmetric with ivf_append_partitioned.
+    # route the batch DISTRIBUTED: the same mapInPandas assign kernel
+    # hnsw_build uses — only the tiny (cells × dim) centroid table
+    # rides the broadcast; no O(batch) driver collect, symmetric with
+    # ivf_append_partitioned.
     an = max(1, min(assign_n, len(cell_cents)))
     bc = spark.sparkContext.broadcast((cell_cents, sub_base, n_sub))
     cnorm_route = (cell_cents ** 2).sum(-1)
@@ -1058,28 +1020,22 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     # (same read-after-replace hazard merge_upsert documents)
     rebuilt = rebuilt.localCheckpoint(eager=True)
     try:
-        # keep the (vec_id -> shard) erasure sidecar consistent: the
+        # keep the (vec_id -> shard) members face consistent: the
         # appended memberships are exactly the routed (shard, id)
         # pairs; hive append touches only the batch's own shard dirs.
-        # Pre-r14 layouts have no sidecar — stay legacy. The sidecar
-        # append runs BEFORE the index overwrite (r14 continuation
-        # review): a crash between the two then leaves EXTRA sidecar
-        # rows (harmless — locate over-counts, rebuild reads blobs),
-        # never memberships the locate pass could miss.
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            spark._jsc.hadoopConfiguration())
-        mp = _members_path(path)
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(mp)):
-            from vectordb_explorations_spark.sources.sinks import (
-                V1_COMMITTER, repartition_for_hive)
-            (repartition_for_hive(
-                new_rows_df.select("shard",
-                                   F.col(id_col).cast("long")
-                                   .alias("vec_id")), "shard")
-             .sortWithinPartitions("vec_id")
-             .write.mode("append").options(**V1_COMMITTER)
-             .partitionBy("shard").parquet(mp))
+        # The members append runs BEFORE the index overwrite: a crash
+        # between the two then leaves EXTRA members rows (harmless —
+        # locate over-counts, rebuild reads blobs), never memberships
+        # the locate pass could miss.
+        from vectordb_explorations_spark.sources.sinks import (
+            V1_COMMITTER, repartition_for_hive)
+        (repartition_for_hive(
+            new_rows_df.select("shard",
+                               F.col(id_col).cast("long")
+                               .alias("vec_id")), "shard")
+         .sortWithinPartitions("vec_id")
+         .write.mode("append").options(**V1_COMMITTER)
+         .partitionBy("shard").parquet(mp))
         overwrite_partitions(rebuilt, path, ["shard"])
     finally:
         rebuilt.unpersist()

@@ -56,6 +56,7 @@ from vectordb_explorations_spark.functions.text import TOKENS_SQL
 from vectordb_explorations_spark.operators.featurize import HASH_DIM
 from vectordb_explorations_spark.operators.sampling import (
     CHUNK_STRIDE, CHUNK_WIN)
+from vectordb_explorations_spark.sources import substrate
 
 # (query_id, phrases). Each phrase is one late-interaction "query term":
 # its embedding is the hashed-trick vector of ITS OWN tokens (2 tokens ->
@@ -442,8 +443,8 @@ def maxsim_chunk_topk_banded(docs: DataFrame,
 
     Scale shape — with one honest measurement attached: this face
     RECOMPUTES the chunk index and chunk weights from raw text per call,
-    so banding cannot beat the exact face here (1M-doc ladder,
-    tools/maxsim_scale_probe.py: exact 27 s vs recomputed-banded 257 s —
+    so banding cannot beat the exact face here (1M-doc ladder in
+    SCALE_NOTES: exact 27 s vs recomputed-banded 257 s —
     the densify + GEMM + second weight pass dwarf the exact face's one
     broadcast-dot scan). Banding pays when the substrate is PERSISTED
     and built once: :func:`maxsim_persist` writes the chunk-weight table
@@ -547,6 +548,19 @@ def _term_bucket_df(spark, queries, num_tables: int, num_planes: int,
         "query_id int, table_id int, bucket int")
 
 
+def _chunk_index(ce: DataFrame, build: dict) -> DataFrame:
+    """The hyperplane chunk index rows of densified chunk weights —
+    shared by the build and the append so appended chunks bucket
+    exactly as the build's (the planes are seeded)."""
+    from vectordb_explorations_spark.operators.ann import (
+        random_hyperplane_lsh)
+
+    return random_hyperplane_lsh(ce, num_tables=build["num_tables"],
+                                 num_planes=build["num_planes"],
+                                 seed=build["seed"], dim=HASH_DIM,
+                                 id_col="cid", vec_col="embedding")
+
+
 def maxsim_persist(docs: DataFrame, base_dir: str,
                    win: int = CHUNK_WIN, stride: int = CHUNK_STRIDE,
                    num_tables: int = MAXSIM_LSH_TABLES,
@@ -564,132 +578,87 @@ def maxsim_persist(docs: DataFrame, base_dir: str,
       serving discipline), reading O(terms x tables) bucket directories
       regardless of corpus size.
 
-    Incremental maintenance: both artifacts are plain engine tables —
-    append new docs' weights and bucket rows per batch (the
-    _files_to_ingest foreachBatch pattern); the plane matrix is seeded,
-    so appended chunks bucket consistently."""
-    from vectordb_explorations_spark.operators.ann import (
-        random_hyperplane_lsh)
+    The sidecar (``{base_dir}/_meta.json``, contract in
+    ``sources/substrate.py``) stamps the chunking and hyperplane
+    parameters, the weight-row count and the index face's read-back
+    schema; serve, append and delete read them from there.
+
+    Both faces carry an ``ingest_key`` partition level ('base' for the
+    bulk build): ``maxsim_append_ingest`` dynamic-OVERWRITES its own
+    key's partitions on replay, so a replay cannot double-append weight
+    rows (which would silently inflate every affected chunk's norm and
+    score). Serving prunes on the (table_id, bucket) prefix levels; the
+    key level only namespaces writers."""
+    from pyspark.sql import Observation
+
     from vectordb_explorations_spark.sources.sinks import (
         repartition_for_hive)
 
-    # Both artifacts carry an `ingest_key` partition level ('base' for
-    # the bulk build): maxsim_append_ingest dynamic-OVERWRITES its own
-    # key's partitions on replay, so the crash window between the two
-    # appends and mark() cannot double-append weight rows (which would
-    # silently inflate every affected chunk's norm/score — caught by
-    # review). Serving prunes on the (table_id, bucket) prefix levels
-    # exactly as before; the key level only namespaces writers.
-    cw = _chunk_weights(docs, win, stride)
-    (cw.withColumn("ingest_key", F.lit("base"))
+    spark = docs.sparkSession
+    build = {"win": win, "stride": stride, "num_tables": num_tables,
+             "num_planes": num_planes, "seed": seed}
+    substrate.write_building(spark, base_dir)
+    obs = Observation()
+    (_chunk_weights(docs, win, stride)
+     .observe(obs, F.count(F.lit(1)).alias("rows"))
+     .withColumn("ingest_key", F.lit("base"))
      .write.mode("overwrite").partitionBy("ingest_key")
      .parquet(f"{base_dir}/weights"))
     # derive the index FROM the just-written weights table: one
-    # tokenize+md5 corpus scan total, not two (like-for-like A/B at
-    # sf0.1: 7.7 -> 6.7 s median-of-3 build)
-    ce = _densify_chunk_weights(
-        docs.sparkSession.read.parquet(f"{base_dir}/weights"))
+    # tokenize+md5 corpus scan total, not two
+    ce = _densify_chunk_weights(spark.read.parquet(f"{base_dir}/weights"))
     # repartition on the hive partition columns before the write: the
     # GEMM stage's task count otherwise multiplies into every occupied
     # (table_id, bucket) directory — one file per writer task per
-    # directory (the perceptual/minhash one-file-per-directory lesson;
-    # the serve side then pays the fan-out again in listings/opens)
+    # directory, paid again on the serve side in listings/opens
     (repartition_for_hive(
-        random_hyperplane_lsh(ce, num_tables=num_tables,
-                              num_planes=num_planes, seed=seed,
-                              dim=HASH_DIM, id_col="cid",
-                              vec_col="embedding")
-        .withColumn("ingest_key", F.lit("base")),
+        _chunk_index(ce, build).withColumn("ingest_key", F.lit("base")),
         "table_id", "bucket")
      .write.mode("overwrite")
      .partitionBy("table_id", "bucket", "ingest_key")
      .parquet(f"{base_dir}/index"))
-    # READ-BACK schema sidecar (underscore prefix — invisible to
-    # Spark's discovery), captured from ONE leaf directory (a root
-    # read would re-list the full index tree): serves pass it to
-    # read_hive_pruned so the per-probe footer read + partition-type
-    # inference is skipped
-    from vectordb_explorations_spark.sources.sinks import (
-        hive_leaf_schema, write_json_sidecar)
-    schema = hive_leaf_schema(docs.sparkSession, f"{base_dir}/index", 3)
-    if schema is not None:
-        write_json_sidecar(
-            docs.sparkSession, f"{base_dir}/index/_schema.json",
-            {"schema": schema.json()})
+    substrate.stamp(spark, base_dir, build, obs.get["rows"], {"index": 3})
 
 
 def maxsim_banded_persisted(spark, base_dir: str,
                             queries: tuple[tuple[int, tuple[str, ...]], ...]
                             = MAXSIM_QUERIES,
-                            top: int = MAXSIM_TOP,
-                            num_tables: int = MAXSIM_LSH_TABLES,
-                            num_planes: int = MAXSIM_LSH_PLANES,
-                            seed: int = MAXSIM_LSH_SEED) -> DataFrame:
+                            top: int = MAXSIM_TOP) -> DataFrame:
     """Serve banded MaxSim from the persisted substrate: term buckets
-    resolve driver-side, the chunk-index read carries a
-    (table_id, bucket) filter that PRUNES unprobed bucket directories at
-    the file listing, candidates semi-join the persisted weight table
-    (columnar ints — no tokenize, no md5), and the shared scorer
-    finishes. Identical scores to the exact face for every returned doc
-    (pinned in tests); recall-gated like every ANN face."""
+    resolve driver-side with the sidecar's hyperplanes, the chunk-index
+    read lists only the probed (table_id, bucket) directories,
+    candidates semi-join the persisted weight table (columnar ints — no
+    tokenize, no md5), and the shared scorer finishes. Identical scores
+    to the exact face for every returned doc (pinned in tests);
+    recall-gated like every ANN face."""
     # localCheckpoint: the scorer consumes cands TWICE (the weight-table
     # semi-join and the final per-query semi-join) and Spark 4.1.2 does
     # not reuse the identical child subtree, so without materialization
-    # the pruned index probe executed twice per serve — measured ~1 s of
-    # the ~4 s sf0.1 row (r12 verdict item 3 bisect). The frame is
-    # BOUNDED: (query_id, doc_id) candidates only. Partition pruning is
-    # plan-asserted on the LAZY frame below (the checkpoint hides the
-    # scan from the serve plan).
-    cands = _persisted_candidates(spark, base_dir, queries, num_tables,
-                                  num_planes, seed).localCheckpoint()
+    # the pruned index probe executes twice per serve (~1 s of the ~4 s
+    # sf0.1 row). The frame is BOUNDED: (query_id, doc_id) candidates
+    # only. Partition pruning is plan-asserted on the LAZY frame (the
+    # checkpoint hides the scan from the serve plan).
+    cands = _persisted_candidates(spark, base_dir, queries).localCheckpoint()
     cw = spark.read.parquet(f"{base_dir}/weights")
     return _maxsim_from_weights(spark, cw, queries, cands=cands, top=top)
 
 
 def _persisted_candidates(spark, base_dir: str,
-                          queries: tuple[tuple[int, tuple[str, ...]], ...],
-                          num_tables: int, num_planes: int,
-                          seed: int) -> DataFrame:
+                          queries: tuple[tuple[int, tuple[str, ...]], ...]
+                          ) -> DataFrame:
     """The LAZY pruned candidate probe behind maxsim_banded_persisted —
-    kept separate so tests can assert PartitionFilters on its plan."""
-    # probe pairs resolve with ZERO Spark jobs: the term buckets are
-    # driver-side rows already (r15 — the old shape paid a
-    # createDataFrame().distinct().collect() shuffle job per serve)
-    tb_rows = _term_bucket_rows(queries, num_tables, num_planes, seed)
+    kept separate so tests can assert PartitionFilters on its plan.
+    The probe pairs resolve with ZERO Spark jobs (the term buckets are
+    driver-side rows already)."""
+    meta = substrate.read_meta(spark, base_dir, "maxsim_banded_persisted")
+    b = meta["build"]
+    tb_rows = _term_bucket_rows(queries, b["num_tables"], b["num_planes"],
+                                b["seed"])
     term_buckets = spark.createDataFrame(
         tb_rows, "query_id int, table_id int, bucket int")
-    pairs = {(t, b) for _, t, b in tb_rows}
-    # read ONLY the probed (table_id, bucket) directories (ingest_key
-    # discovers inside the probed subtree) with the build's read-back
-    # schema — full-tree discovery + footer reads are the serve's
-    # fixed per-call floor otherwise (guide §6; the minhash admission
-    # measurement)
-    import json as _json
-
-    from pyspark.sql.types import StructType
-    from vectordb_explorations_spark.sources.sinks import (
-        read_hive_pruned, read_json_sidecar)
-    _meta = read_json_sidecar(spark,
-                              f"{base_dir}/index/_schema.json") or {}
-    _schema = (StructType.fromJson(_json.loads(_meta["schema"]))
-               if "schema" in _meta else None)
-    idx = read_hive_pruned(spark, f"{base_dir}/index",
-                           ["table_id", "bucket"], pairs,
-                           schema=_schema)
-    if idx is None:
-        idx = spark.read.parquet(f"{base_dir}/index").limit(0)
-    # ONE isin on a packed (table, bucket) key, not an OR-chain — with
-    # term-side multiprobe the chain is terms x tables x (planes+1) legs
-    # and overflows Catalyst's column-tree conversion (measured
-    # StackOverflowError at 504 legs); the per-column isin conjuncts are
-    # what the file listing prunes on (PartitionFilters), the packed key
-    # keeps the probe exact within the pruned rectangles.
-    pack = 1 << num_planes
-    pred = (F.col("table_id").isin(sorted({t for t, _ in pairs}))
-            & F.col("bucket").isin(sorted({b for _, b in pairs}))
-            & (F.col("table_id") * pack + F.col("bucket")).isin(
-                sorted(t * pack + b for t, b in pairs)))
-    return (idx.where(pred)
+    return (substrate.read_probe(spark, base_dir, meta, "index",
+                                 ["table_id", "bucket"],
+                                 {(t, k) for _, t, k in tb_rows})
             .join(F.broadcast(term_buckets), ["table_id", "bucket"])
             .select("query_id", _cid_doc().alias("doc_id"))
             .distinct())
@@ -697,26 +666,28 @@ def _persisted_candidates(spark, base_dir: str,
 
 def maxsim_delete_docs(spark, base_dir: str, doc_ids) -> int:
     """Erase documents from BOTH faces of the persisted MaxSim
-    substrate — the last substrate to gain the
-    persist/append/probe/DELETE lifecycle. The weights face rewrites
-    only the ingest_key partitions that contain the victims (bounded
-    by those batches' sizes); the index face rewrites only the
-    (table_id, bucket, ingest_key) directories holding the victims'
-    chunk rows — cid encodes the doc (cid // CHUNK_ID_STRIDE), so the
-    shared primitive locates by the derived expression. After erasure
-    maxsim_banded_persisted serves exactly the corpus-minus-victims
-    results (pinned bit-equal to the in-memory banded face over the
-    filtered corpus). Returns total rows removed across both faces."""
+    substrate. The weights face rewrites only the ingest_key partitions
+    that contain the victims (bounded by those batches' sizes); the
+    index face rewrites only the (table_id, bucket, ingest_key)
+    directories holding the victims' chunk rows — cid encodes the doc
+    (cid // CHUNK_ID_STRIDE), so the shared primitive locates by the
+    derived expression. After erasure maxsim_banded_persisted serves
+    exactly the corpus-minus-victims results (pinned bit-equal to the
+    in-memory banded face over the filtered corpus). Returns total rows
+    removed across both faces."""
     from vectordb_explorations_spark.sources.sinks import (
         delete_rows_partitioned)
 
-    n = delete_rows_partitioned(spark, f"{base_dir}/weights",
-                                ["ingest_key"], "doc_id", doc_ids)
-    n += delete_rows_partitioned(
+    meta = substrate.read_meta(spark, base_dir, "maxsim_delete_docs")
+    n_w = delete_rows_partitioned(spark, f"{base_dir}/weights",
+                                  ["ingest_key"], "doc_id", doc_ids)
+    n_i = delete_rows_partitioned(
         spark, f"{base_dir}/index",
         ["table_id", "bucket", "ingest_key"],
         f"CAST(floor(cid / {CHUNK_ID_STRIDE}) AS BIGINT)", doc_ids)
-    return n
+    substrate.write_ready(spark, base_dir,
+                          {**meta, "rows": max(0, meta["rows"] - n_w)})
+    return n_w + n_i
 
 
 def maxsim_query_from_text(texts: "list[str] | tuple[str, ...]",
@@ -739,58 +710,60 @@ def maxsim_query_from_text(texts: "list[str] | tuple[str, ...]",
     return tuple(out)
 
 
-def maxsim_append_ingest(spark, docs_stream: DataFrame, base_dir: str,
-                         win: int = CHUNK_WIN, stride: int = CHUNK_STRIDE,
-                         num_tables: int = MAXSIM_LSH_TABLES,
-                         num_planes: int = MAXSIM_LSH_PLANES,
-                         seed: int = MAXSIM_LSH_SEED) -> "object":
-    """Streaming maintenance of the persisted multi-vector substrate —
-    the maxsim_persist docstring's append contract made real: each
-    micro-batch of new documents appends its chunk weights to
+def maxsim_append_ingest(spark, docs_stream: DataFrame,
+                         base_dir: str) -> "object":
+    """Streaming maintenance of the persisted multi-vector substrate:
+    each micro-batch of new documents appends its chunk weights to
     ``base_dir/weights`` and its hyperplane bucket rows into the
-    (table_id, bucket)-partitioned ``base_dir/index`` (dynamic partition
-    append: only touched bucket directories gain files). The plane
-    matrix is seeded, so appended chunks bucket consistently with the
-    original build, and `maxsim_banded_persisted` serves the union with
-    no rebuild. Idempotence is TWO-layered: the per-source-file markers
+    (table_id, bucket)-partitioned ``base_dir/index`` (only touched
+    bucket directories gain files). Chunking and planes come from the
+    sidecar, so appended chunks bucket consistently with the build, and
+    `maxsim_banded_persisted` serves the union with no rebuild.
+
+    Idempotence is TWO-layered: the per-source-file markers
     (streaming/events._files_to_ingest) skip already-applied files
-    across restarts AND each write is a dynamic partition OVERWRITE
-    keyed on the batch's deterministic ``ingest_key`` — a crash in the
-    window between the data writes and mark() replays into the SAME
+    across restarts, AND each write is a dynamic partition OVERWRITE
+    keyed on the batch's deterministic ``ingest_key``, so a crash
+    between the data writes and mark() replays into the SAME
     partitions instead of double-appending (duplicated weight rows
-    would silently inflate chunk norms and served scores; caught by
-    review). Cost per batch: O(batch tokens) — the same two artifacts
-    the bulk build writes, computed over the batch only."""
-    from vectordb_explorations_spark.operators.ann import (
-        random_hyperplane_lsh)
+    would silently inflate chunk norms and served scores). The sidecar
+    reads ``building`` from before the first write of a batch until
+    after its last, so a serve in that window raises; the replay
+    finishes the batch and writes ``ready``. Cost per batch: O(batch
+    tokens)."""
+    from vectordb_explorations_spark.sources.sinks import V1_COMMITTER
     from vectordb_explorations_spark.streaming.events import (
         _files_to_ingest)
+
+    meta = substrate.read_meta(spark, base_dir, "maxsim_append_ingest",
+                               replay=True)
+    build = meta["build"]
 
     def ingest(batch_df: DataFrame, epoch_id: int) -> None:
         df, mark = _files_to_ingest(batch_df, base_dir, epoch_id)
         if df is None or df.isEmpty():
             return
         key = mark.ingest_key
+        substrate.write_building(spark, base_dir, meta)
         # one tokenize pass per batch: weights checkpointed, the index
         # densifies from them (the maxsim_persist one-scan shape)
-        from vectordb_explorations_spark.sources.sinks import V1_COMMITTER
-        cw = _chunk_weights(df, win, stride).localCheckpoint(eager=True)
+        cw = (_chunk_weights(df, build["win"], build["stride"])
+              .localCheckpoint(eager=True))
         (cw.withColumn("ingest_key", F.lit(key))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .options(**V1_COMMITTER)
          .partitionBy("ingest_key").parquet(f"{base_dir}/weights"))
-        (random_hyperplane_lsh(_densify_chunk_weights(cw),
-                               num_tables=num_tables,
-                               num_planes=num_planes, seed=seed,
-                               dim=HASH_DIM, id_col="cid",
-                               vec_col="embedding")
+        (_chunk_index(_densify_chunk_weights(cw), build)
          .withColumn("ingest_key", F.lit(key))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .options(**V1_COMMITTER)
          .partitionBy("table_id", "bucket", "ingest_key")
          .parquet(f"{base_dir}/index"))
+        # footer recount: a replayed key overwrites, never adds
+        meta["rows"] = spark.read.parquet(f"{base_dir}/weights").count()
+        substrate.write_ready(spark, base_dir, meta)
         mark()
 
     return (docs_stream.writeStream

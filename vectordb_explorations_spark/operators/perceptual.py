@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from vectordb_explorations_spark.functions.rounding import round6
+from vectordb_explorations_spark.sources import substrate
 from vectordb_explorations_spark.sources.sinks import repartition_for_hive
 from vectordb_explorations_spark.operators.multimodal import (
     decode_audio, decode_image)
@@ -994,35 +995,6 @@ ORDER BY d.doc_id
 """
 
 
-PHASH_PERSIST_BUCKETS = 256   # cap of the 'auto' policy below, and the
-                              # fixed default of pre-r15 substrates
-PHASH_BUCKET_TARGET_DOCS = 64  # 'auto' keeps >= this many hashed assets
-                               # per bucket directory
-
-
-def phash_auto_buckets(n_assets: int) -> int:
-    """Corpus-adaptive bucket count for the persisted perceptual face —
-    the minhash_auto_buckets policy applied to the LAST substrate with
-    a fixed geometry (r14 VERDICT item 3 / OPTIMIZATION_r14 "Not yet
-    optimized" #1): a fixed 256 buckets puts 4 x 256 = 1,024
-    directories under every substrate regardless of corpus size — a
-    multi-second hive write-commit and listing floor at fixture scale,
-    exactly right at 100 TB. Hold >= PHASH_BUCKET_TARGET_DOCS assets
-    per bucket directory (power of two, floor 16, cap
-    PHASH_PERSIST_BUCKETS); every corpus past ~16k assets resolves to
-    the same 256 as before. Admission verdicts are bucket-count-
-    independent — the bucket is a pruning route; candidates still
-    equi-join on the full 16-bit band_val (pinned by the lifecycle
-    pytests). The build stamps the RESOLVED value into the _meta.json
-    sidecar; 'auto' at admit/append reads it back, an explicit
-    mismatching int still raises."""
-    if n_assets <= 0:
-        return 16
-    raw = n_assets // PHASH_BUCKET_TARGET_DOCS
-    p = 1 << max(0, raw.bit_length() - 1)
-    return max(16, min(PHASH_PERSIST_BUCKETS, p))
-
-
 def perceptual_persist(docs: DataFrame, base_dir: str,
                        buckets: int | str = "auto") -> None:
     """Build + persist the perceptual admission substrate ONCE — the
@@ -1035,69 +1007,37 @@ def perceptual_persist(docs: DataFrame, base_dir: str,
     size — the pruned-read bound that makes daily-crawl admission
     corpus-size-independent at the file listing.
 
+    ``buckets='auto'`` resolves ``substrate.auto_buckets`` from the
+    hashed-doc count. The sidecar (``{base_dir}/_meta.json``, contract
+    in ``sources/substrate.py``) stamps the resolved geometry, the doc
+    count and the read-back schema; admit and append read them from
+    there. The face IS ``base_dir``, so the overwrite also removes the
+    ``building`` marker: until the ``ready`` stamp lands the sidecar
+    is missing, which raises just the same.
+
     Incremental maintenance: a plain engine table — append new docs'
     band rows per batch via ``perceptual_append_persisted`` (the
-    banding is stateless, so appended rows bucket consistently).
-
-    A ``_meta.json`` sidecar (underscore prefix — invisible to Spark's
-    partition discovery) records the build's ``buckets`` so admit and
-    append can REFUSE a mismatched geometry instead of silently
-    probing the wrong directories (the minhash meta-guard discipline,
-    r14). ``buckets='auto'`` (default, r15) resolves corpus-adaptive
-    geometry from the hashed-asset count — see phash_auto_buckets."""
+    banding is stateless, so appended rows bucket consistently)."""
+    spark = docs.sparkSession
     # the decode+hash pass is paid ONCE and materialized
     # (localCheckpoint): it feeds the 'auto' geometry count and the
     # banded write — the frame is compact (5 longs per asset), so the
     # materialization is cheap insurance against Spark re-running the
     # Arrow decode subtree per consumer
     h = _doc_hashes(docs).localCheckpoint()
+    n = h.count()
     if buckets == "auto":
-        buckets = phash_auto_buckets(h.count())
+        buckets = substrate.auto_buckets(n)
+    substrate.write_building(spark, base_dir)
     # repartition on the partition columns: one file per occupied
-    # directory instead of one per writer task per directory (the
-    # minhash_persist probe measured the multi-file layout burying the
-    # pruned read in listings/opens — r13)
+    # directory instead of one per writer task per directory (a
+    # multi-file layout buries the pruned read in listings/opens)
     (repartition_for_hive(_banded_from_hashes(h, buckets),
                           "band_idx", "bucket")
      .write.mode("overwrite")
      .partitionBy("band_idx", "bucket")
      .parquet(base_dir))
-    from vectordb_explorations_spark.sources.sinks import (
-        hive_leaf_schema, write_json_sidecar)
-    # READ-BACK schema via one leaf dir (a root read would re-list the
-    # full tree): admissions pass it to read_hive_pruned so a probe
-    # skips the per-call footer read + type inference
-    schema = hive_leaf_schema(docs.sparkSession, base_dir, 2)
-    write_json_sidecar(docs.sparkSession, f"{base_dir}/_meta.json",
-                       {"buckets": buckets,
-                        **({"schema": schema.json()}
-                           if schema is not None else {})})
-
-
-def _resolve_perceptual_buckets(spark, base_dir: str, buckets,
-                                op: str) -> int:
-    """'auto' at serve/append time = the build's stamped value (legacy
-    substrates without a sidecar predate the auto policy and were
-    always built at the fixed cap); an explicit int differing from the
-    build's raises — a silent geometry mismatch would probe the wrong
-    bucket directories and miss near-dups."""
-    from vectordb_explorations_spark.sources.sinks import (
-        read_json_sidecar)
-
-    meta = read_json_sidecar(spark, f"{base_dir}/_meta.json")
-    if buckets == "auto":
-        if meta is not None and "buckets" in meta:
-            return int(meta["buckets"])
-        return PHASH_PERSIST_BUCKETS
-    buckets = int(buckets)
-    if meta is not None and int(meta.get("buckets", buckets)) != buckets:
-        raise ValueError(
-            f"{op}: caller buckets={buckets} does not match the "
-            f"substrate's build value {meta['buckets']} — a mismatched "
-            f"geometry probes the wrong bucket directories and "
-            f"silently misses near-dups. Use the build's value "
-            f"(persisted in {{base_dir}}/_meta.json).")
-    return buckets
+    substrate.stamp(spark, base_dir, {"buckets": buckets}, n, {"": 2})
 
 
 def _doc_hashes(docs: DataFrame) -> DataFrame:
@@ -1112,7 +1052,8 @@ def _doc_hashes(docs: DataFrame) -> DataFrame:
 
 def _banded_from_hashes(h: DataFrame, buckets: int) -> DataFrame:
     """(doc_id, dh_w0, dh_w1, band_idx, band_val, bucket) substrate
-    rows from an already-hashed frame."""
+    rows from an already-hashed frame — shared by the build, the
+    append and the admission batch so they cannot drift."""
     bands = []
     for w in ("dh_w0", "dh_w1"):
         bands.append(F.shiftright(F.col(w), 16).bitwiseAND(F.lit(0xFFFF)))
@@ -1123,32 +1064,33 @@ def _banded_from_hashes(h: DataFrame, buckets: int) -> DataFrame:
         .withColumn("bucket", F.col("band_val") % buckets))
 
 
-def _banded_fingerprints(docs: DataFrame, buckets: int) -> DataFrame:
-    """(doc_id, dh_w0, dh_w1, band_idx, band_val, bucket) substrate rows
-    — shared by the bulk build and the incremental append so the two
-    writers cannot drift."""
-    return _banded_from_hashes(_doc_hashes(docs), buckets)
-
-
-def perceptual_append_persisted(docs: DataFrame, base_dir: str,
-                                buckets: int | str = "auto"
-                                ) -> None:
+def perceptual_append_persisted(docs: DataFrame, base_dir: str) -> None:
     """Append an ADMITTED batch's image fingerprints to the substrate —
     the maintenance step after ``perceptual_admit_persisted`` says yes.
-    The banding is stateless (band_val % buckets), so appended rows
-    bucket exactly as the bulk build did; hive append touches only the
-    batch's own bucket directories ('auto' reads the build's stamped
-    value back). Caller owns idempotence markers. A buckets value
-    differing from the build's (sidecar) raises."""
-    buckets = _resolve_perceptual_buckets(docs.sparkSession, base_dir,
-                                          buckets,
-                                          "perceptual_append_persisted")
+    The banding is stateless (band_val % the sidecar's buckets), so
+    appended rows bucket exactly as the bulk build did; hive append
+    touches only the batch's own bucket directories. The caller owns
+    idempotence markers. The sidecar reads ``building`` until the write
+    lands; a marker replay of a crashed append finishes it."""
+    from pyspark.sql import Observation
+
     from vectordb_explorations_spark.sources.sinks import V1_COMMITTER
-    (repartition_for_hive(_banded_fingerprints(docs, buckets),
-                          "band_idx", "bucket")
+
+    spark = docs.sparkSession
+    meta = substrate.read_meta(spark, base_dir,
+                               "perceptual_append_persisted", replay=True)
+    substrate.write_building(spark, base_dir, meta)
+    obs = Observation()
+    (repartition_for_hive(
+        _banded_from_hashes(_doc_hashes(docs), meta["build"]["buckets"])
+        .observe(obs, F.count(F.lit(1)).alias("rows")),
+        "band_idx", "bucket")
      .write.mode("append").options(**V1_COMMITTER)
      .partitionBy("band_idx", "bucket")
      .parquet(base_dir))
+    # four band rows per hashed doc
+    substrate.write_ready(spark, base_dir, {
+        **meta, "rows": meta["rows"] + int(obs.get["rows"]) // 4})
 
 
 def perceptual_delete_persisted(spark, base_dir: str, doc_ids) -> int:
@@ -1160,75 +1102,46 @@ def perceptual_delete_persisted(spark, base_dir: str, doc_ids) -> int:
     from vectordb_explorations_spark.sources.sinks import (
         delete_rows_partitioned)
 
-    return delete_rows_partitioned(spark, base_dir,
-                                   ["band_idx", "bucket"], "doc_id",
-                                   doc_ids)
+    meta = substrate.read_meta(spark, base_dir,
+                               "perceptual_delete_persisted")
+    n = delete_rows_partitioned(spark, base_dir, ["band_idx", "bucket"],
+                                "doc_id", doc_ids)
+    substrate.write_ready(spark, base_dir,
+                          {**meta, "rows": max(0, meta["rows"] - n // 4)})
+    return n
 
 
 def perceptual_admit_persisted(spark, base_dir: str, new_docs: DataFrame,
-                               max_hamming: int = PHASH_IMG_MAX_HAMMING,
-                               buckets: int | str = "auto"
+                               max_hamming: int = PHASH_IMG_MAX_HAMMING
                                ) -> DataFrame:
     """Admit a NEW batch against the persisted substrate: the batch's
-    hashes band locally, their distinct (band_idx, bucket) probe pairs
-    resolve driver-side (BOUNDED: at most 4 x buckets <= 1024 pairs
-    whatever the batch size), and the substrate read carries the
-    band_idx/bucket isin conjuncts the FILE LISTING prunes on
-    (PartitionFilters — plan-asserted in tests) plus the packed-key
-    isin that keeps the probe exact within the pruned rectangles (the
-    maxsim 504-leg OR-chain lesson). Candidates equi-join on the full
-    band value, verify Hamming inside the pruned rows, best match by
-    (hamming ASC, old doc_id ASC). Output: one row per payload-eligible
-    batch doc with its admission verdict — the serving twin of
-    perceptual_incremental's batch-internal split. ``buckets='auto'``
-    (default) reads the build's stamped geometry back; an explicit
-    value differing from the build's (sidecar) raises — a silent
-    geometry mismatch would probe the wrong directories (r14 guard)."""
-    buckets = _resolve_perceptual_buckets(spark, base_dir, buckets,
-                                          "perceptual_admit_persisted")
-    nh = image_hashes(
-        _p6_assets(new_docs).select(F.shiftright("asset_id", 1)
-                                    .alias("asset_id"), "payload")) \
-        .withColumnRenamed("asset_id", "new_id")
-    bands = []
-    for w in ("dh_w0", "dh_w1"):
-        bands.append(F.shiftright(F.col(w), 16).bitwiseAND(F.lit(0xFFFF)))
-        bands.append(F.col(w).bitwiseAND(F.lit(0xFFFF)))
+    hashes band locally with the sidecar's bucket count, their
+    distinct (band_idx, bucket) probe pairs resolve driver-side
+    (BOUNDED: at most 4 x buckets <= 1024 pairs whatever the batch
+    size), and ``substrate.read_probe`` lists only those directories
+    (PartitionFilters — plan-asserted in tests) and keeps the probe
+    exact within them. Candidates equi-join on the full band value,
+    verify Hamming inside the pruned rows, best match by (hamming ASC,
+    old doc_id ASC). Output: one row per payload-eligible batch doc
+    with its admission verdict — the serving twin of
+    perceptual_incremental's batch-internal split."""
+    meta = substrate.read_meta(spark, base_dir,
+                               "perceptual_admit_persisted")
     # localCheckpoint: nb feeds the driver-side probe collect AND the
     # candidate join below, and Spark re-executes identical subtrees —
     # without it the batch's Arrow decode+hash pass ran twice per
-    # admission (the maxsim/minhash serve lesson, r13). Bounded: the
-    # admission batch's band rows only.
-    nb = (nh.select("new_id",
-                    F.col("dh_w0").alias("n_w0"),
-                    F.col("dh_w1").alias("n_w1"),
-                    F.posexplode(F.array(*bands)).alias("band_idx",
-                                                        "band_val"))
-          .withColumn("bucket", F.col("band_val") % buckets)
+    # admission. Bounded: the admission batch's band rows only.
+    nb = (_banded_from_hashes(_doc_hashes(new_docs),
+                              meta["build"]["buckets"])
+          .select(F.col("doc_id").alias("new_id"),
+                  F.col("dh_w0").alias("n_w0"),
+                  F.col("dh_w1").alias("n_w1"),
+                  "band_idx", "band_val", "bucket")
           .localCheckpoint())
     probe = {(int(r["band_idx"]), int(r["bucket"]))
              for r in nb.select("band_idx", "bucket").distinct().collect()}
-    # read ONLY the probed (band_idx, bucket) directories with the
-    # build's read-back schema: the full-tree discovery + footer read
-    # re-paid per admission is the probe's fixed floor (the minhash
-    # admission measurement — guide §6 file-listing discipline)
-    import json as _json
-
-    from pyspark.sql.types import StructType
-    from vectordb_explorations_spark.sources.sinks import (
-        read_hive_pruned, read_json_sidecar)
-    _meta = read_json_sidecar(spark, f"{base_dir}/_meta.json") or {}
-    _schema = (StructType.fromJson(_json.loads(_meta["schema"]))
-               if "schema" in _meta else None)
-    idx = read_hive_pruned(spark, base_dir, ["band_idx", "bucket"],
-                           probe, schema=_schema)
-    if idx is None:
-        idx = spark.read.parquet(base_dir).limit(0)
-    pred = (F.col("band_idx").isin(sorted({b for b, _ in probe}))
-            & F.col("bucket").isin(sorted({k for _, k in probe}))
-            & (F.col("band_idx") * buckets + F.col("bucket")).isin(
-                sorted(b * buckets + k for b, k in probe)))
-    old = (idx.where(pred)
+    old = (substrate.read_probe(spark, base_dir, meta, "",
+                                ["band_idx", "bucket"], probe)
            .select(F.col("doc_id").alias("old_id"),
                    F.col("dh_w0").alias("o_w0"),
                    F.col("dh_w1").alias("o_w1"),

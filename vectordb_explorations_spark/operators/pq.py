@@ -24,6 +24,7 @@ from vectordb_explorations_spark.functions.vectors import l2_distance_sql
 from vectordb_explorations_spark.operators import ann as ANN
 from vectordb_explorations_spark.operators.ann import (_probe_map,
                                                        collect_query_arrays)
+from vectordb_explorations_spark.sources import substrate
 
 
 # ---- corpus-adaptive exact-refine shortlist (round 8) ----
@@ -559,44 +560,23 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
 # codes instead of 256-byte vectors: the scan that survives is
 # nprobe/C of the INDEX bytes, already 16x smaller than the corpus).
 
-def _corpus_meta_path(path: str) -> str:
-    return path.rstrip("/") + "/_corpus_meta.json"
-
-
-def _write_corpus_meta(spark, path: str, corpus_n: int) -> None:
-    """Persist the corpus size next to the index — THE build-time
-    metadata the adaptive refine policy resolves from, so serving never
-    schedules a count job (and never mis-counts the assign_n-replicated
-    code rows). Written through the Hadoop FS API, so any filesystem the
-    layout itself lives on (``file://``, HDFS, object stores) holds it."""
-    from vectordb_explorations_spark.sources.sinks import write_json_sidecar
-    write_json_sidecar(spark, _corpus_meta_path(path),
-                       {"corpus_n": int(corpus_n)})
-
-
 def _layout_corpus_n(spark, path: str, replication: int) -> int:
-    """Corpus N for a persisted layout: the sidecar when present
-    (job-free), else ONE count over the UNPRUNED layout. The fallback
-    must never count a probe-pruned frame — that badly underestimates N
-    and resolves ``refine_factor='auto'`` too small (silently degraded
-    recall) while pricing the fixed-rf warning against the wrong N."""
-    n = _read_corpus_meta(spark, path)
+    """Corpus N for a persisted layout: the sidecar's ``rows`` when
+    present (job-free), else ONE count over the UNPRUNED layout. The
+    fallback must never count a probe-pruned frame — that badly
+    underestimates N and resolves ``refine_factor='auto'`` too small
+    (silently degraded recall) while pricing the fixed-rf warning
+    against the wrong N."""
+    n = substrate.read_rows(spark, path)
     if n is not None:
         return n
     import warnings
     warnings.warn(
-        f"layout at {path} has no _corpus_meta.json sidecar — resolving "
+        f"{substrate.meta_path(path)} is missing — resolving "
         f"auto policies with a one-off count over the full layout; "
         f"persist via the engine's build/append helpers to make probe "
         f"policy resolution job-free.", RuntimeWarning, stacklevel=3)
     return spark.read.parquet(path).count() // max(1, int(replication))
-
-
-def _read_corpus_meta(spark, path: str) -> int | None:
-    """The sidecar's corpus size, or None when the layout has none."""
-    from vectordb_explorations_spark.sources.sinks import read_json_sidecar
-    meta = read_json_sidecar(spark, _corpus_meta_path(path))
-    return None if meta is None else int(meta["corpus_n"])
 
 
 def ivfpq_persist_partitioned(codes_df: DataFrame, path: str,
@@ -608,9 +588,9 @@ def ivfpq_persist_partitioned(codes_df: DataFrame, path: str,
     N) as sidecar metadata for job-free refine-policy resolution."""
     (codes_df.select(id_col, "codes", "list_id")
      .write.mode("overwrite").partitionBy("list_id").parquet(path))
-    _write_corpus_meta(
+    substrate.write_ready(
         codes_df.sparkSession, path,
-        codes_df.select(id_col).distinct().count())
+        {"rows": codes_df.select(id_col).distinct().count()})
 
 
 def _append_codes_partitioned(path: str, codes: DataFrame,
@@ -640,8 +620,8 @@ def _append_codes_partitioned(path: str, codes: DataFrame,
      .partitionBy("list_id").parquet(path))
     inc = int(obs.get.get("rows") or 0) // max(1, assign_rows_per_vec)
     spark = codes.sparkSession
-    old_n = _read_corpus_meta(spark, path) or 0
-    _write_corpus_meta(spark, path, old_n + inc)
+    old_n = substrate.read_rows(spark, path) or 0
+    substrate.write_ready(spark, path, {"rows": old_n + inc})
     # The layout just grew: any memoized count over a pre-existing
     # DataFrame of it is stale. Appends are rare next to searches, so
     # clearing the whole memo (one re-count per live index, worst case)

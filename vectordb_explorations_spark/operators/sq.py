@@ -376,12 +376,9 @@ def ivfsq_persist_partitioned(codes_df: DataFrame, path: str,
     listing, and what survives is nprobe/C of a table already 32x
     narrower than the vectors. Sidecar corpus metadata makes serving's
     refine-policy resolution job-free."""
-    from vectordb_explorations_spark.operators.pq import _write_corpus_meta
-    (codes_df.select(id_col, "codes", "list_id")
-     .write.mode("overwrite").partitionBy("list_id").parquet(path))
-    _write_corpus_meta(
-        codes_df.sparkSession, path,
-        codes_df.select(id_col).distinct().count())
+    from vectordb_explorations_spark.operators.pq import (
+        ivfpq_persist_partitioned)
+    ivfpq_persist_partitioned(codes_df, path, id_col)
 
 
 def ivfsq_append_partitioned(path: str, centroids: np.ndarray,

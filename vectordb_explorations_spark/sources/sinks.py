@@ -205,157 +205,6 @@ def overwrite_partitions(df: DataFrame, path: str,
         spark.conf.set(conf_key, prev)
 
 
-def write_json_sidecar(spark: SparkSession, path: str, meta: dict) -> None:
-    """One-file JSON sidecar through the Hadoop FS API — NOT a Spark
-    job (a one-row ``.write.text`` costs ~5 s of job/commit overhead
-    per call, measured r14; the stream write is 0.02 s and stays
-    portable to non-local filesystems). Shared by the substrate meta
-    files (minhash, perceptual) that carry doc counts and build
-    geometry for the small-corpus warnings and parameter-drift
-    guards."""
-    import json
-
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        spark._jsc.hadoopConfiguration())
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), True)
-    out.write(bytearray(json.dumps(meta).encode("utf-8")))
-    out.close()
-
-
-def read_json_sidecar(spark: SparkSession, path: str) -> dict | None:
-    """None when absent/unreadable — substrates persisted before their
-    sidecar existed keep working (callers skip validation)."""
-    import json
-
-    try:
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-            spark._jsc.hadoopConfiguration())
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        if not fs.exists(p):
-            return None
-        st = fs.open(p)
-        try:
-            s = jvm.org.apache.commons.io.IOUtils.toString(st, "UTF-8")
-        finally:
-            st.close()
-        return json.loads(s)
-    except Exception:
-        return None
-
-
-def read_hive_pruned(spark: SparkSession, base_dir: str,
-                     level_names: list[str],
-                     wanted, schema=None) -> DataFrame | None:
-    """Read ONLY the hive partition directories whose leading partition
-    values appear in ``wanted`` (a set of tuples of stringified values,
-    aligned with ``level_names``) — driver-side file-listing pruning
-    for probe-shaped reads.
-
-    ``spark.read.parquet(base_dir)`` discovers the FULL partition tree
-    before PartitionFilters ever prune (one recursive listing of every
-    leaf directory, per read, per call — measured 3.4 s of a 5.7 s
-    admission on the 1,024-directory minhash banded face at sf0.1, and
-    the re-listing is NOT amortized by the session file-status cache).
-    A probe knows its directories up front, so this walks the tree
-    top-down with one listStatus per matched directory (1 + matched
-    first-level dirs calls, never the full tree), hands Spark the
-    matched paths with ``basePath`` so partition columns still parse,
-    and lets deeper levels (e.g. maxsim's ingest_key) discover only
-    inside the probed subtree. The caller's partition-column predicates
-    still apply as PartitionFilters over the restricted file index —
-    results are identical to the full read, the listing is just bounded
-    by the probe instead of the corpus (guide §6 file-listing
-    discipline; at 100 TB the full tree is millions of directories and
-    this is the difference between O(probe) and O(index) driver work
-    per admission).
-
-    ``schema`` (optional, the READ-BACK schema captured at build time
-    and carried in the substrate's meta sidecar) additionally skips the
-    per-call parquet footer read + partition-type inference — measured
-    another 2x on the pruned read (1.35 -> 0.71 s at 221 probed dirs).
-
-    CONTRACT (r14 ADVICE): partition values are matched by plain
-    ``str(v)`` equality against the raw directory suffix, which is
-    exact ONLY for integers and strings needing no hive URL-escaping.
-    A float, NULL (``__HIVE_DEFAULT_PARTITION__``) or escapable-char
-    value would silently prune everything. Every substrate face using
-    this probe partitions on integer bucket/band columns; a new caller
-    with other types must unescape directory values first.
-
-    Returns ``None`` when no probed directory exists — callers fall
-    back to an empty frame (typically ``read.parquet(base).limit(0)``).
-    """
-    jvm = spark._jvm
-    jconf = spark._jsc.hadoopConfiguration()
-
-    def _ls_dirs(path: str) -> list[str]:
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(jconf)
-        if not fs.exists(p):
-            return []
-        return [st.getPath().toString() for st in fs.listStatus(p)
-                if st.isDirectory()]
-
-    wanted = {tuple(str(v) for v in t) for t in wanted}
-    prefixes: dict[tuple, str] = {(): base_dir}
-    for depth, name in enumerate(level_names):
-        want_prefix = {t[:depth + 1] for t in wanted}
-        nxt: dict[tuple, str] = {}
-        for pref, path in prefixes.items():
-            for child in _ls_dirs(path):
-                leaf = child.rsplit("/", 1)[-1]
-                if not leaf.startswith(name + "="):
-                    continue
-                key = pref + (leaf.split("=", 1)[1],)
-                if key in want_prefix:
-                    nxt[key] = child
-        prefixes = nxt
-        if not prefixes:
-            return None
-    reader = spark.read.option("basePath", base_dir)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(*sorted(prefixes.values()))
-
-
-def hive_leaf_schema(spark: SparkSession, base_dir: str,
-                     n_levels: int):
-    """The READ-BACK schema of a hive-partitioned table, captured from
-    ONE leaf directory instead of a full-tree discovery: walk
-    ``n_levels`` down picking the first partition directory at each
-    level (one listStatus per level), then read that leaf with
-    ``basePath`` so partition columns parse with the same inference
-    rules a full read applies. Builds call this to stamp the schema
-    into the substrate's meta sidecar — capturing it with a root read
-    would re-list every leaf directory (3.4 s on the 1,024-dir banded
-    face) for information one footer already carries. Only
-    ``name=value`` hive directories are descended (r14 ADVICE: a stray
-    ``.spark-staging-*``/``_temporary`` left by a failed job sorts
-    first and would yield a wrong schema or an error). Partition-column
-    TYPES are inferred from that one leaf's directory names — exact for
-    the all-integer bucket/band levels every substrate here uses; a
-    heterogeneous-value layout must capture from a full read instead.
-    Returns None on an empty table."""
-    jvm = spark._jvm
-    jconf = spark._jsc.hadoopConfiguration()
-    path = base_dir
-    for _ in range(n_levels):
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(jconf)
-        if not fs.exists(p):
-            return None
-        dirs = sorted(st.getPath().toString() for st in fs.listStatus(p)
-                      if st.isDirectory()
-                      and "=" in st.getPath().getName())
-        if not dirs:
-            return None
-        path = dirs[0]
-    return (spark.read.option("basePath", base_dir)
-            .parquet(path).schema)
-
-
 def repartition_for_hive(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition on hive partition columns with an EXPLICIT task
     count (the cluster's defaultParallelism) before a partitionBy

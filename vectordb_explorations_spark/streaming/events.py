@@ -437,8 +437,8 @@ def streaming_ivfpq_refresh_stats(spark: SparkSession,
     streamed serving layout end to end."""
     import tempfile
 
-    from vectordb_explorations_spark.operators.pq import (_read_corpus_meta,
-                                                          ivfpq_build)
+    from vectordb_explorations_spark.operators.pq import ivfpq_build
+    from vectordb_explorations_spark.sources import substrate
     from vectordb_explorations_spark.sources.catalog import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -448,7 +448,7 @@ def streaming_ivfpq_refresh_stats(spark: SparkSession,
     q = incremental_ivfpq_ingest(spark, sf_dir, out, cents, books)
     await_drained(q)
     idx = spark.read.parquet(out)
-    meta_n = _read_corpus_meta(spark, out) or 0
+    meta_n = substrate.read_rows(spark, out) or 0
     return (idx.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct("vec_id").alias("n_vectors"),
