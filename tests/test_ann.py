@@ -254,6 +254,7 @@ def test_hnsw_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
         hnsw_search)
     from vectordb_explorations_spark.operators.knn import sample_queries
     from vectordb_explorations_spark.sources import load_table
+    from spark_status import traced
 
     emb = load_table(spark, "embeddings", sf_dir)
     idx = hnsw_build(emb, num_shards=4, shard_by="kmeans").cache()
@@ -262,8 +263,10 @@ def test_hnsw_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
     hnsw_persist_partitioned(idx, path)
     queries = sample_queries(emb, 5).cache()
 
-    served = hnsw_probe_partitioned(spark, path, queries, 5, probe_shards=2)
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    # the served frame is a local table: read the plans the call executed
+    served, _, plans = traced(spark, lambda: hnsw_probe_partitioned(
+        spark, path, queries, 5, probe_shards=2))
+    plan = "\n".join(plans)
     assert "PartitionFilters" in plan and "shard" in plan
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
     assert pf.strip(), plan[:1500]

@@ -83,6 +83,23 @@ def test_encode_deterministic(setup):
     assert a == b
 
 
+@pytest.mark.parametrize("m,dsub", [(16, 4), (8, 8), (4, 16), (2, 32)])
+def test_residual_luts_bit_equal_per_query_formula(m, dsub):
+    """The ADC kernel builds a list's LUTs for all its probing queries at
+    once; every table must equal the one-query formula bit for bit,
+    including subvectors long enough for NumPy's pairwise summation."""
+    import numpy as np
+
+    rng = np.random.default_rng(m)
+    books = rng.normal(size=(m, 64, dsub))
+    resid = rng.normal(size=(37, m * dsub))
+    got = PQ._residual_luts(resid, books)
+    for qi, r in enumerate(resid):
+        want = np.stack([((r[s * dsub:(s + 1) * dsub][None, :]
+                           - books[s]) ** 2).sum(-1) for s in range(m)])
+        assert got[qi].tobytes() == want.tobytes(), qi
+
+
 def test_ivfpq_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
     """Partitioned serving for the compressed composite (round 9): the
     probe's scan must show PartitionFilters on list_id (unprobed list
@@ -99,6 +116,7 @@ def test_ivfpq_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
         ivfpq_build, ivfpq_persist_partitioned, ivfpq_probe_partitioned,
         ivfpq_search)
     from vectordb_explorations_spark.sources import load_table
+    from spark_status import traced
 
     emb = load_table(spark, "embeddings", sf_dir)
     codes, cents, books = ivfpq_build(emb, num_centroids=8,
@@ -113,10 +131,11 @@ def test_ivfpq_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
         assert json.load(f)["rows"] == emb.count()
 
     queries = sample_queries(emb, 5).cache()
-    served = ivfpq_probe_partitioned(spark, path, cents, books, queries,
-                                     5, nprobe=2, refine_with=emb,
-                                     refine_factor=5)
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    # the served frame is a local table: read the plans the call executed
+    served, _, plans = traced(spark, lambda: ivfpq_probe_partitioned(
+        spark, path, cents, books, queries, 5, nprobe=2, refine_with=emb,
+        refine_factor=5))
+    plan = "\n".join(plans)
     pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     # the refine-side embeddings scan legitimately has no partition
     # filters; the CODE scan must carry a non-empty list_id filter

@@ -59,6 +59,35 @@ def test_refined_recall(setup):
     assert r >= 0.9, r
 
 
+def test_exact_refine_equals_sql_distance(setup):
+    """The exact refine scores in NumPy. Each served distance must equal
+    Spark's ``round(l2_distance_sql(...), 6)`` for its (query, vector)
+    pair bit for bit, and each query's rows must be ranked 1..k by
+    (distance, id)."""
+    from pyspark.sql import functions as F
+
+    from vectordb_explorations_spark.functions.vectors import (
+        l2_distance_sql)
+
+    emb, books, codes, queries, _ = setup
+    served = PQ.pq_search(codes, books, queries, K, refine_with=emb,
+                          refine_factor=5).collect()
+    ref = (emb.crossJoin(queries.select("query_id", "query_vec"))
+           .select("query_id", "vec_id", F.round(F.expr(l2_distance_sql(
+               "embedding", "query_vec", books.shape[0] * books.shape[2])),
+               6)))
+    want = {(r[0], r[1]): r[2] for r in ref.collect()}
+    assert served
+    by_q = {}
+    for q, i, d, rank in served:
+        assert d == want[(q, i)], (q, i, d, want[(q, i)])
+        by_q.setdefault(q, []).append((rank, d, i))
+    for rows in by_q.values():
+        rows.sort()
+        assert [r[0] for r in rows] == list(range(1, len(rows) + 1))
+        assert [r[1:] for r in rows] == sorted(r[1:] for r in rows)
+
+
 def test_adaptive_refine_factor_policy(spark, sf_dir):
     """Round-8 policy: refine_factor='auto' holds the rf*k/N candidate
     fraction (the 1M probe measured the fixed-rf decay: PQ 0.958->0.812,

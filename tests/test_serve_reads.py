@@ -1,5 +1,6 @@
 """Serving contract: every public ANN serve call reads its query frame
-once, and the engine builds no Python-RDD frame of its own.
+once, the engine builds no Python-RDD frame of its own, and the routed
+and IVF-family serve calls run a pinned number of Spark jobs.
 
 A Python-RDD query frame runs Python-worker tasks on every read, so a
 serve call that re-reads the frame (to route, to probe, to refine) pays
@@ -20,6 +21,7 @@ from vectordb_explorations_spark.operators.pq import (
 from vectordb_explorations_spark.operators.sq import (
     ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned)
 from vectordb_explorations_spark.sources import load_table
+from spark_status import traced
 
 K = 5
 NUM_Q = 12
@@ -100,17 +102,41 @@ def test_serve_call_reads_query_frame_once(spark, layouts, call):
 
 
 def test_refine_query_side_is_not_a_python_rdd(spark, layouts, tmp_path):
-    """Over a parquet query source the refined IVF-PQ plan scans no
-    ExistingRDD: the engine rebuilds the collected batch as a local
-    table, not as a Python-RDD frame."""
+    """Over a parquet query source the refined IVF-PQ call runs no
+    ExistingRDD scan: no plan it executes (read from the SQL status
+    store) reads a Python-RDD frame, and the served frame is a local
+    table."""
     emb = layouts["emb"]
     path, cents, books = layouts["ivfpq"]
     qpath = str(tmp_path / "queries")
     sample_queries(emb, NUM_Q).write.parquet(qpath)
-    served = ivfpq_probe_partitioned(
+    rows, _, plans = traced(spark, lambda: ivfpq_probe_partitioned(
         spark, path, cents, books, spark.read.parquet(qpath), K,
-        nprobe=3, refine_with=emb, refine_factor=4)
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan, plan[:2000]
-    assert "LocalTableScan" in plan, plan[:2000]
-    assert len(served.collect()) == NUM_Q * K
+        nprobe=3, refine_with=emb, refine_factor=4).collect())
+    assert plans
+    assert not any("ExistingRDD" in p for p in plans), plans
+    assert "LocalTableScan" in plans[-1], plans[-1][:2000]
+    assert len(rows) == NUM_Q * K
+
+
+# Spark jobs per serve call over a local (pandas-built) query frame:
+# schema discovery of the layout, the probe scan and, when refining, the
+# exact re-score. Merges, ranking and the served frame are driver-side.
+SERVE_JOBS = {"hnsw_probe_partitioned": 3,
+              "ivfpq_probe_partitioned": 3,
+              "ivfsq_probe_partitioned": 3}
+
+
+@pytest.mark.parametrize("call", sorted(SERVE_JOBS))
+def test_serve_call_job_count(spark, layouts, call):
+    import pandas as pd
+
+    rows = [(int(r[0]), [float(x) for x in r[1]])
+            for r in sample_queries(layouts["emb"], NUM_Q).collect()]
+    qdf = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["query_id", "query_vec"]),
+        "query_id long, query_vec array<double>")
+    served, jobs, _ = traced(
+        spark, lambda: _serve_calls(spark, layouts)[call](qdf).collect())
+    assert len(served) == NUM_Q * K
+    assert jobs == SERVE_JOBS[call], (call, jobs)

@@ -163,6 +163,7 @@ def test_ivfsq_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
         ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned,
         ivfsq_search)
     from vectordb_explorations_spark.sources import load_table
+    from spark_status import traced
 
     emb = load_table(spark, "embeddings", sf_dir)
     codes, cents, mins, maxs = ivfsq_build(emb, num_centroids=8)
@@ -172,10 +173,11 @@ def test_ivfsq_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
     ivfsq_persist_partitioned(codes, path)
 
     queries = sample_queries(emb, 5).cache()
-    served = ivfsq_probe_partitioned(spark, path, cents, mins, maxs,
-                                     queries, 5, nprobe=2,
-                                     refine_with=emb, refine_factor=5)
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    # the served frame is a local table: read the plans the call executed
+    served, _, plans = traced(spark, lambda: ivfsq_probe_partitioned(
+        spark, path, cents, mins, maxs, queries, 5, nprobe=2,
+        refine_with=emb, refine_factor=5))
+    plan = "\n".join(plans)
     pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
     # the refine-side embeddings scan legitimately has no partition
     # filters; the CODE scan must carry a non-empty list_id filter

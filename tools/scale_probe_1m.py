@@ -209,7 +209,8 @@ def main() -> None:
 
     # r11: the probe-fraction auto policy alongside the legacy fixed-8
     # point, so the matrix records the decay AND its remediation
-    # (tools/hnsw_auto_probe_1m.py measured 0.929 vs 0.974 at 64 cells)
+    # (the since-removed tools/hnsw_auto_probe_1m.py measured 0.929 vs
+    # 0.974 at 64 cells)
     def run_hnsw_auto():
         return hnsw_search(hnsw_state["idx"], queries, K,
                            probe_shards="auto")

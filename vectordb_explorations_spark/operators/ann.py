@@ -130,6 +130,48 @@ def collect_query_arrays(queries: DataFrame, qid_col: str, qvec_col: str
             np.asarray([r[1] for r in rows], dtype=np.float64))
 
 
+def coalesce_to_split_size(df: DataFrame) -> DataFrame:
+    """``df`` in ``max(1, ceil(size estimate / maxPartitionBytes))`` tasks:
+    Spark's own file-split size applied to the plan's size estimate. A
+    Python-worker task pays a fixed start-up cost, so a small probed scan
+    runs as one task, while a large layout keeps the parallelism its
+    splits would give it."""
+    est = int(df._jdf.queryExecution().optimizedPlan().stats()
+              .sizeInBytes())
+    split = (df.sparkSession._jsparkSession.sessionState().conf()
+             .filesMaxPartitionBytes())
+    return df.coalesce(min(max(1, -(-est // split)), 2 ** 31 - 1))
+
+
+def rank_pool(pool, dist_col: str, n: int, qid_col: str, id_col: str):
+    """Per query, the ``n`` best rows of a collected candidate pool:
+    replicas of one (query, id) pair keep their minimum distance, rows
+    order by (distance, id), and ``rank`` numbers them from 1."""
+    top = (pool.sort_values([qid_col, dist_col, id_col])
+           .drop_duplicates([qid_col, id_col])
+           .groupby(qid_col, sort=False).head(n))
+    return top.assign(rank=top.groupby(qid_col, sort=False).cumcount() + 1)
+
+
+def local_result(spark, top, dist_col: str, qid_col: str,
+                 id_col: str) -> DataFrame:
+    """A ranked pool as the served frame ``(qid, id, dist, rank)``: a local
+    relation, so collecting it runs no Spark job. ``dist`` goes through
+    Spark's own ``round(x, 6)`` (folded into the local relation on the
+    driver); rounding an already-rounded distance leaves it unchanged."""
+    import pandas as pd
+
+    pdf = pd.DataFrame({qid_col: top[qid_col].to_numpy(np.int64),
+                        id_col: top[id_col].to_numpy(np.int64),
+                        "dist": top[dist_col].to_numpy(np.float64),
+                        "rank": top["rank"].to_numpy(np.int32)})
+    return (spark.createDataFrame(
+                pdf, f"`{qid_col}` long, `{id_col}` long, dist double, "
+                     f"rank int")
+            .select(qid_col, id_col, F.round("dist", 6).alias("dist"),
+                    "rank"))
+
+
 def _probe_map(centroids: np.ndarray, qmat: np.ndarray,
                nprobe: int) -> dict[int, np.ndarray]:
     """IVF-family probe selection: list id -> indices (ascending) of the

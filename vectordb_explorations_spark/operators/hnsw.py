@@ -41,10 +41,11 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-from vectordb_explorations_spark.operators.ann import collect_query_arrays
+from vectordb_explorations_spark.operators.ann import (
+    collect_query_arrays, local_result, rank_pool)
 from vectordb_explorations_spark.sources import substrate
 
 
@@ -635,10 +636,16 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
                 id_col: str = "vec_id",
                 probe_shards: int | str | None = None) -> DataFrame:
     """Per-shard graph search + global top-k merge — SURVEY §3 entry point
-    C, two stages and one shuffle of only shards×k rows per query.
+    C; returns a local frame (qid, id, dist, rank).
 
     The query frame is collected once (``collect_query_batch``); routing
-    and scoring both work from that batch.
+    and scoring both work from that batch. One Spark stage scans the
+    (routed) shard blobs and each task yields every routed query's
+    per-shard top-k; those rows are collected and ranked on the driver
+    (``ann.rank_pool``: the assign_n replicas of a vector keep their
+    minimum distance, ties break by id), so the driver holds at most
+    shards·Q·k rows. The blob scan keeps its spread: graph search is
+    real Python work per shard.
 
     With ``probe_shards=None`` every query runs on every shard (required
     for hash-sharded indexes, whose shards are uniform corpus samples).
@@ -725,19 +732,9 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
         # (on a shard-partitioned persisted index this is partition
         # pruning — only the probed shards' files are read)
         probed_df = probed_df.where(F.col("shard").isin(sorted(routed)))
-    local = probed_df.mapInPandas(probe, schema=out_schema)
-    w = Window.partitionBy(qid_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    # kmeans sharding with assign_n>1 replicates boundary vectors across
-    # shards, so one (query, vec) pair can arrive from two probes — dedupe
-    # before ranking (no-op for hash shards: partitions are disjoint).
-    # hash(qid) clusters rows for BOTH the (qid, id) distinct and the
-    # window, so the explicit repartition is the plan's only exchange on
-    # the narrow merge rows (same fusion as ivf_search).
-    return (local.repartition(F.col(qid_col))
-            .dropDuplicates([qid_col, id_col])
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, F.round("dist", 6).alias("dist"), "rank"))
+    pool = probed_df.mapInPandas(probe, schema=out_schema).toPandas()
+    top = rank_pool(pool, "dist", k, qid_col, id_col)
+    return local_result(index_df.sparkSession, top, "dist", qid_col, id_col)
 
 
 def _members_path(path: str) -> str:
@@ -805,14 +802,16 @@ def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
                            qvec_col: str = "query_vec",
                            id_col: str = "vec_id") -> DataFrame:
     """Serve from the partitioned index: ``hnsw_search`` over the
-    unpruned hive layout. It reads the (tiny) shard -> centroid columns,
-    collects the query batch once, routes every query once over the full
-    cell population, and applies the union of routed shards as a literal
+    unpruned hive layout, returning its local frame (qid, id, dist,
+    rank). It reads the (tiny) shard -> centroid columns, collects the
+    query batch once, routes every query once over the full cell
+    population, and applies the union of routed shards as a literal
     ``shard IN (...)`` filter — that is what partition-prunes the blob
-    scan, so unrouted shard directories are never read. Bit-equal to the
-    in-memory ``hnsw_search`` over the same index (pinned by
-    tests/test_ann.py). Requires a kmeans-sharded index (non-null
-    centroids); hash shards cannot be routed."""
+    scan, so unrouted shard directories are never read. The per-shard
+    top-k rows (at most routed shards·Q·k) are ranked on the driver.
+    Bit-equal to the in-memory ``hnsw_search`` over the same index
+    (pinned by tests/test_ann.py). Requires a kmeans-sharded index
+    (non-null centroids); hash shards cannot be routed."""
     return hnsw_search(spark.read.parquet(path), queries, k,
                        ef_search=ef_search, qid_col=qid_col,
                        qvec_col=qvec_col, id_col=id_col,

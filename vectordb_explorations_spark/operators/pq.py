@@ -8,9 +8,10 @@ hundred GB and the ADC scan is table lookups, not float math.
 
 Scale shape: codebooks are tiny ((m, k, dsub) ≈ KBs) and train on a driver
 sample (standard practice — quality depends on distribution, not corpus
-size); encoding is an Arrow-batched GEMM per partition; search broadcasts
-per-query lookup tables and does local top-k before the global merge, like
-the other ANN paths. Recall-gated against the exact path, never
+size); encoding is an Arrow-batched GEMM per partition; search ships the
+query batch in the UDF closure and keeps a local top-k per task before
+the global merge, like the other ANN paths; the exact refine re-scores a
+driver-bounded candidate set. Recall-gated against the exact path, never
 hash-matched (SURVEY §0).
 """
 
@@ -20,14 +21,13 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from vectordb_explorations_spark.functions.vectors import l2_distance_sql
 from vectordb_explorations_spark.operators import ann as ANN
 from vectordb_explorations_spark.operators.ann import (_probe_map,
                                                        collect_query_arrays)
 from vectordb_explorations_spark.sources import substrate
 
 
-# ---- corpus-adaptive exact-refine shortlist (round 8) ----
+# ---- corpus-adaptive exact-refine shortlist ----
 # The 1M probe caught PQ's fixed refine_factor in the same decay family
 # as the LSH bucket_cap and the BQ cascade shortlist: rf*k exact-refine
 # candidates are a CONSTANT count, so their corpus fraction shrinks as N
@@ -50,8 +50,8 @@ def adaptive_refine_factor(n: int, k: int, fraction: float,
 # Corpus sizes memoized per code-table DataFrame object: the steady-state
 # serving pattern calls search repeatedly on ONE cached index table, and a
 # count() job per call is a job-scheduling round-trip in the hot path
-# (measured as the r8 bench regression: ann_pq_refined_batch100 0.843 ->
-# 0.995 s). Weak keys so a dropped index frees its entry.
+# (measured: ann_pq_refined_batch100 0.843 -> 0.995 s). Weak keys so a
+# dropped index frees its entry.
 import weakref
 
 _CORPUS_N_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -215,42 +215,78 @@ def pq_encode(vectors: DataFrame, codebooks: np.ndarray,
     return vectors.select(id_col, vec_col).mapInPandas(enc, schema=schema)
 
 
-def _exact_refine(cand: DataFrame, qids, qmat: np.ndarray,
+def _exact_refine(cand, qids, qmat: np.ndarray,
                   refine_with: DataFrame, k: int, dim: int,
                   id_col: str = "vec_id", vec_col: str = "embedding",
-                  qid_col: str = "query_id",
-                  qvec_col: str = "query_vec") -> DataFrame:
+                  qid_col: str = "query_id") -> DataFrame:
     """Shared exact-refine tail for every compressed-index search (PQ,
-    IVF-PQ, SQ8, IVF-SQ8, BQ): re-score the bounded candidate set against
-    the original vectors and re-rank. Broadcast the CANDIDATE side
-    (bounded at Q * k * refine_factor rows by construction) so the vector
-    corpus never shuffles for the re-score — without the hint this
-    planned as a sort-merge join (2 extra exchanges + sorts), and at
-    100 TB AQE would try to broadcast the corpus statistics-blind.
-    ``dim`` is statically known from the index, so the distance unrolls
-    into codegen.
+    IVF-PQ, SQ8, IVF-SQ8, BQ): re-score the bounded candidate set
+    ``cand`` (qid, id) — a Spark frame, collected here, or a pandas frame
+    already on the driver; at most Q·k·refine_factor rows by
+    construction — against the original vectors, and re-rank.
 
-    The query side is the caller's already-collected batch, rebuilt from
-    a pandas frame: with Arrow enabled (the session default) that plans
-    as a ``LocalTableScan``, so the refine runs no Python-worker task to
-    read it (a Python-list ``createDataFrame`` is a Python-RDD scan)."""
+    One ``mapInPandas`` pass over ``refine_with`` does the re-score: the
+    candidate id -> queries map and the query matrix ride the closure,
+    each task keeps its per-query top-k, and Spark's ``round(x, 6)`` is
+    applied before the collect. The driver takes the final top-k by
+    (rounded distance, id) and returns a local frame (see
+    ``ann.local_result``). The distance is ``l2_distance_sql``'s: the
+    squared differences summed dimension by dimension in index order,
+    then the square root, so results are bit-identical to the SQL form
+    (pinned by tests/test_pq.py)."""
     import pandas as pd
 
-    spark = refine_with.sparkSession
-    qdf = spark.createDataFrame(
-        pd.DataFrame({qid_col: np.asarray(qids, dtype=np.int64),
-                      qvec_col: qmat.tolist()}),
-        f"{qid_col} long, {qvec_col} array<double>")
-    scored = (refine_with.select(id_col, vec_col)
-              .join(F.broadcast(cand), id_col)
-              .join(F.broadcast(qdf), qid_col)
-              .withColumn("dist", F.round(
-                  F.expr(l2_distance_sql(vec_col, qvec_col, dim)), 6)))
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, "dist", "rank"))
+    from vectordb_explorations_spark.operators.ann import (
+        coalesce_to_split_size, local_result, rank_pool)
+
+    qids = np.asarray(qids, dtype=np.int64)
+    if isinstance(cand, DataFrame):
+        cand = cand.toPandas()
+    qpos = pd.Series(np.arange(len(qids)), index=qids)
+    pairs = pd.DataFrame({  # candidate id -> positions of its queries
+        "id": cand[id_col].to_numpy(np.int64),
+        "qi": qpos.loc[cand[qid_col].to_numpy(np.int64)].to_numpy()})
+    wanted = pairs["id"].unique()
+    schema = T.StructType([
+        T.StructField(qid_col, T.LongType()),
+        T.StructField(id_col, T.LongType()),
+        T.StructField("dist", T.DoubleType()),
+    ])
+
+    def rescore(batches):
+        outs = []
+        for pdf in batches:
+            ids = pdf[id_col].to_numpy(np.int64)
+            rows = np.flatnonzero(np.isin(ids, wanted))
+            if not len(rows):
+                continue
+            vecs = np.stack(pdf[vec_col].to_numpy()[rows]).astype(np.float64)
+            hit = pd.DataFrame({"id": ids[rows], "row": np.arange(len(rows))}
+                               ).merge(pairs, on="id")
+            qi = hit["qi"].to_numpy()
+            diff = vecs[hit["row"].to_numpy()] - qmat[qi]
+            acc = diff[:, 0] * diff[:, 0]
+            for j in range(1, dim):
+                acc = acc + diff[:, j] * diff[:, j]
+            outs.append(pd.DataFrame({qid_col: qids[qi],
+                                      id_col: hit["id"].to_numpy(),
+                                      "dist": np.sqrt(acc)}))
+        if not outs:
+            return
+        out = pd.concat(outs).sort_values([qid_col, "dist", id_col])
+        # Per-query top-k, kept tie-safe for the rounded ranking: a row
+        # more than 2e-6 past the k-th distance rounds strictly past it.
+        pos = out.groupby(qid_col).cumcount()
+        kth = out["dist"].where(pos == k - 1).groupby(
+            out[qid_col]).transform("max")
+        yield out[kth.isna() | (out["dist"] <= kth + 2e-6)]
+
+    scored = (coalesce_to_split_size(refine_with.select(id_col, vec_col))
+              .mapInPandas(rescore, schema=schema)
+              .select(qid_col, id_col, F.round("dist", 6).alias("dist")))
+    top = rank_pool(scored.toPandas(), "dist", k, qid_col, id_col)
+    return local_result(refine_with.sparkSession, top, "dist", qid_col,
+                        id_col)
 
 
 def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
@@ -260,16 +296,20 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
               qid_col: str = "query_id", qvec_col: str = "query_vec",
               corpus_n: int | None = None) -> DataFrame:
     """ADC search: per query, the (m, k) lookup table of exact
-    query-subvector→code distances broadcasts in the UDF closure; scoring a
-    vector is m table lookups. Local per-partition top-k keeps the shuffle
-    at candidates × queries, then a window merge ranks globally.
+    query-subvector→code distances rides the UDF closure; scoring a
+    vector is m table lookups. Each partition keeps a per-query top-n
+    pool (n = k, or k·refine_factor with ``refine_with``) and a window
+    merge ranks the pools.
 
-    With ``refine_with`` (the original vectors), the top candidates×
-    ``refine_factor`` are re-scored exactly and re-ranked — the standard
-    ADC-then-refine pipeline. ``refine_factor='auto'`` holds the
-    candidate fraction rf*k/N at the 200k-calibrated anchor (the 1M
-    probe measured the fixed-rf decay: 0.958 -> 0.812 at rf=30); a
-    fixed rf below the fraction warns (see adaptive_refine_factor).
+    Without ``refine_with`` the result is that lazy Spark frame. With it
+    (the original vectors), the merge's top n per query — at most
+    Q·k·refine_factor rows — go to ``_exact_refine``, which collects
+    them, re-scores them exactly in one pass over ``refine_with`` and
+    returns a local frame: the standard ADC-then-refine pipeline.
+    ``refine_factor='auto'`` holds the candidate fraction rf*k/N at the
+    200k-calibrated anchor (the 1M probe measured the fixed-rf decay:
+    0.958 -> 0.812 at rf=30); a fixed rf below the fraction warns (see
+    adaptive_refine_factor).
     """
     import pandas as pd
 
@@ -339,7 +379,7 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
             .where(F.col("r") <= k * refine_factor)
             .select(qid_col, id_col))
     return _exact_refine(cand, qids, qmat, refine_with, k, m * dsub,
-                         id_col, vec_col, qid_col, qvec_col)
+                         id_col, vec_col, qid_col)
 
 
 # ---------------- IVF-PQ composite (route coarse, ADC-scan residuals) ---
@@ -431,6 +471,18 @@ def _ivfpq_encode(assigned: DataFrame, centroids: np.ndarray,
             .mapInPandas(enc, schema=schema))
 
 
+def _residual_luts(rq: np.ndarray, codebooks: np.ndarray) -> np.ndarray:
+    """ADC lookup tables for a block of residual queries: (nq, dim) ->
+    (nq, m, kc) squared subvector-to-code distances. Each entry reduces
+    the same dsub-long contiguous row as the one-query form
+    ``((r[sub][None, :] - codebooks[s]) ** 2).sum(-1)``, so the tables are
+    bit-equal to it (pinned by tests/test_ivfpq.py)."""
+    m, kc, dsub = codebooks.shape
+    return np.stack([
+        ((rq[:, None, s * dsub:(s + 1) * dsub] - codebooks[s][None]) ** 2)
+        .sum(-1) for s in range(m)], axis=1)
+
+
 def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
                  codebooks: np.ndarray, queries: DataFrame, k: int,
                  nprobe: int = 8, refine_with: DataFrame | None = None,
@@ -439,13 +491,22 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
                  qid_col: str = "query_id",
                  qvec_col: str = "query_vec",
                  corpus_n: int | None = None) -> DataFrame:
-    """Probe the nprobe nearest lists per query, ADC-score their residual
-    codes against per-(query, list) LUTs built on the residual query
-    (q - centroid), then merge + optional broadcast-candidate exact
-    refine. The LUT block is Q x nprobe x (m, k) doubles — megabytes for a
-    100-query batch — and ships in the UDF closure; probed code rows never
-    carry vectors, so the Arrow stage streams 64-byte codes and emits one
-    per-partition top-n pool of narrow rows.
+    """Probe the nprobe nearest lists per query and ADC-score their
+    residual codes; returns a local frame (qid, id, dist, rank).
+
+    Shape: one collect of the query batch; the probed-list union becomes
+    a literal ``list_id IN (...)`` scan filter, and the scan is coalesced
+    to Spark's split size (``ann.coalesce_to_split_size``). The query
+    rows, the list -> probing-queries map, the centroids and the
+    codebooks ride the closure; each task builds a list's (nq, m, kc)
+    residual LUTs when it first meets the list, scores that list's codes
+    once per probing query, and emits a per-query top-n pool (n = k, or
+    k·refine_factor with ``refine_with``). The pools are collected and
+    merged on the driver (``ann.rank_pool``: replicas keep their
+    minimum distance, since assign_n puts a vector in two lists with
+    different residual estimates), so the driver holds at most
+    tasks·Q·n candidate rows. With ``refine_with`` the top n per query go
+    through ``_exact_refine``; without it the ADC distance is served.
 
     ``refine_factor='auto'`` / the fixed-rf warning follow pq_search's
     corpus-adaptive policy (1M probe: 0.878 at rf=10 -> 0.961 at the
@@ -459,26 +520,9 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
     m, kc, dsub = codebooks.shape
     qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
     by_list = _probe_map(centroids, qmat, nprobe)
-    luts, list_lix = [], {}
-    for li, qis in by_list.items():
-        list_lix[li] = np.arange(len(luts), len(luts) + len(qis))
-        for qi in qis:
-            r = qmat[qi] - centroids[li]  # residual query for this list
-            luts.append(np.stack([
-                ((r[s * dsub:(s + 1) * dsub][None, :]
-                  - codebooks[s]) ** 2).sum(-1)
-                for s in range(m)]))  # (m, kc)
-    luts = np.stack(luts)  # (Q*nprobe, m, kc)
-    # The probe map (list -> probing queries + their LUT rows) rides the
-    # UDF closure — Q x nprobe entries, kilobytes. The earlier probe-frame
-    # broadcast JOIN replicated every probed code row per probing query
-    # (measured 12.6x at 1M: 25.2M joined rows from a 2M-row code table;
-    # the ADC stage alone was 7.5 of 8.4 s/batch100) — codes now stream
-    # through Arrow ONCE and each list's rows score against a (nq, m)
-    # LUT gather.
-    list_qids = {li: qids[qis] for li, qis in by_list.items()}
-    scan = (codes_df.where(F.col("list_id").isin(sorted(by_list)))
-            .select("list_id", id_col, "codes"))
+    scan = ANN.coalesce_to_split_size(
+        codes_df.where(F.col("list_id").isin(sorted(by_list)))
+        .select("list_id", id_col, "codes"))
 
     n_local = k * refine_factor if refine_with is not None else k
     out_schema = T.StructType([
@@ -489,10 +533,7 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
     marange = np.arange(m)
 
     def score2(batches):
-        # Accumulate per-PARTITION and emit once (pq_search's pattern —
-        # per-batch emission multiplies the merge shuffle's input by the
-        # batch count).
-        accs = []
+        accs, luts = [], {}
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -500,19 +541,20 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
             lists = pdf["list_id"].to_numpy(dtype=np.int64)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             for li in np.unique(lists):
+                li = int(li)
                 sel = lists == li
                 c, sids = codes[sel], ids[sel]
-                qv, lixv = list_qids[int(li)], list_lix[int(li)]
-                # d2[q, n] = sum_s LUT[lix[q], s, c[n, s]] — same gather +
-                # length-m reduce as the joined shape: bit-equal
-                # distances. Chunk the query axis so the (nq, n, m)
-                # gather temp stays bounded (~32 x batch x m doubles)
-                # even when every query probes the same hot list.
-                for q0 in range(0, len(qv), 32):
-                    lsel = luts[lixv[q0:q0 + 32]]
-                    d2 = lsel[:, marange[None, :], c].sum(-1)  # (nq', n)
+                qis = by_list[li]
+                if li not in luts:
+                    luts[li] = _residual_luts(qmat[qis] - centroids[li],
+                                              codebooks)
+                # d2[q, n] = sum_s LUT[q, s, c[n, s]]. Chunk the query
+                # axis so the (nq, n, m) gather temp stays bounded even
+                # when every query probes the same hot list.
+                for q0 in range(0, len(qis), 32):
+                    d2 = luts[li][q0:q0 + 32][:, marange[None, :], c].sum(-1)
                     dist = np.sqrt(np.maximum(d2, 0.0))
-                    for row, qid in enumerate(qv[q0:q0 + 32]):
+                    for row, qid in enumerate(qids[qis[q0:q0 + 32]]):
                         top = np.lexsort((sids, dist[row]))[:n_local]
                         accs.append((qid, sids[top], dist[row][top]))
         if not accs:
@@ -523,34 +565,16 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
             id_col: np.concatenate([i for _, i, _ in accs]),
             "adc_dist": np.concatenate([d for _, _, d in accs]),
         })
-        # min-dedupe replicas (assign_n puts a vector in 2 lists with
-        # DIFFERENT residual distances — sorted-ascending keep-first
-        # keeps the closer-list estimate), then bound the pool
-        yield (allf.sort_values([qid_col, "adc_dist", id_col])
-               .drop_duplicates([qid_col, id_col])
-               .groupby(qid_col, sort=False).head(n_local))
+        yield ANN.rank_pool(allf, "adc_dist", n_local, qid_col,
+                                 id_col).drop(columns="rank")
 
-    local = scan.mapInPandas(score2, schema=out_schema)
-    # Cross-partition replica dedupe must keep MIN(adc_dist), not an
-    # arbitrary row: unlike ivf_search (exact dists — replicas tie),
-    # IVF-PQ replicas carry different per-list residual estimates, so a
-    # dropDuplicates pick would be shuffle-order-nondeterministic and
-    # could discard the closer-list estimate. hash(qid) satisfies the
-    # (qid, id) grouped agg AND the window, so one exchange serves both.
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc())
-    ranked = (local.repartition(F.col(qid_col))
-              .groupBy(qid_col, id_col)
-              .agg(F.min("adc_dist").alias("adc_dist"))
-              .withColumn("rank", F.row_number().over(w)))
+    pool = scan.mapInPandas(score2, schema=out_schema).toPandas()
+    top = ANN.rank_pool(pool, "adc_dist", n_local, qid_col, id_col)
     if refine_with is None:
-        return (ranked.where(F.col("rank") <= k)
-                .select(qid_col, id_col,
-                        F.round("adc_dist", 6).alias("dist"), "rank"))
-    cand = (ranked.where(F.col("rank") <= n_local)
-            .select(qid_col, id_col))
-    return _exact_refine(cand, qids, qmat, refine_with, k, m * dsub,
-                         id_col, vec_col, qid_col, qvec_col)
+        return ANN.local_result(codes_df.sparkSession, top, "adc_dist",
+                                qid_col, id_col)
+    return _exact_refine(top, qids, qmat, refine_with, k, m * dsub,
+                         id_col, vec_col, qid_col)
 
 
 # ---- partitioned serving for the compressed composite ----
@@ -665,12 +689,15 @@ def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
     """Serve IVF-PQ from the hive layout: ``ivfpq_search`` over the
-    unpruned layout. Its one query collect and one probe selection yield
-    the probed-list union as a literal ``list_id IN (...)`` filter
-    (PartitionFilters pruning — unprobed list directories are never
-    read), and its closure probe map restricts each query to ITS lists.
-    The refine policy resolves from the sidecar corpus metadata — no
-    count job."""
+    unpruned layout, returning its local frame (qid, id, dist, rank).
+    Its one query collect and one probe selection yield the probed-list
+    union as a literal ``list_id IN (...)`` filter (PartitionFilters
+    pruning — unprobed list directories are never read), and its closure
+    probe map restricts each query to ITS lists. The code scan runs at
+    Spark's split size (one task for a small probed set), its pools merge
+    on the driver (at most tasks·Q·k·refine_factor candidate rows), and
+    ``refine_with`` re-scores them in one more pass. The refine policy
+    resolves from the sidecar corpus metadata — no count job."""
     return ivfpq_search(spark.read.parquet(path), centroids, codebooks,
                         queries, k,
                         nprobe=nprobe, refine_with=refine_with,

@@ -12,10 +12,11 @@ Scale shape: the "codebook" is 2 arrays of ``dim`` doubles computed by ONE
 map-side-combinable aggregation over the corpus (no driver sample, no
 training iterations — exact global extents in a single scan); encoding is a
 pure codegen projection (transform over the array, no Python); search
-mirrors the PQ path — per-partition Arrow GEMM local top-k, window merge,
-broadcast-candidate exact refine. Recall-gated against the exact path, and
-the quantization transform itself is deterministic, so the per-dimension
-error audit IS hash-checked against DuckDB (unlike the trained families).
+mirrors the PQ path — per-partition Arrow GEMM local top-k, merge, then
+the shared driver-bounded exact refine. Recall-gated against the exact
+path, and the quantization transform itself is deterministic, so the
+per-dimension error audit IS hash-checked against DuckDB (unlike the
+trained families).
 """
 
 from __future__ import annotations
@@ -26,8 +27,9 @@ from pyspark.sql import types as T
 
 from vectordb_explorations_spark.functions.rounding import r6, round6
 from vectordb_explorations_spark.functions.vectors import l2_distance
-from vectordb_explorations_spark.operators.ann import (_probe_map,
-                                                       collect_query_arrays)
+from vectordb_explorations_spark.operators.ann import (
+    _probe_map, coalesce_to_split_size, collect_query_arrays, local_result,
+    rank_pool)
 
 SQ_LEVELS = 255  # codes 0..255
 
@@ -95,10 +97,11 @@ def sq_search(codes_df: DataFrame, mins: np.ndarray, maxs: np.ndarray,
     """Approximate search on the dequantized codes: per partition, Arrow
     batches dequantize (codes * scale + min) and score all queries in one
     GEMM, keeping a per-partition top-n pool; a window merge ranks
-    globally; with ``refine_with`` the top k*refine_factor candidates are
-    re-scored exactly via a broadcast-candidate join (same shape as
-    pq_search — candidates bounded at Q*k*refine_factor, the corpus never
-    shuffles)."""
+    globally. Without ``refine_with`` the result is that lazy frame; with
+    it the top k*refine_factor candidates per query (at most
+    Q·k·refine_factor rows) are collected and re-scored exactly by
+    ``pq._exact_refine``, which returns a local frame (same shape as
+    pq_search)."""
     import pandas as pd
 
     scales = _scales(mins, maxs)
@@ -155,7 +158,7 @@ def sq_search(codes_df: DataFrame, mins: np.ndarray, maxs: np.ndarray,
             .select(qid_col, id_col))
     from vectordb_explorations_spark.operators.pq import _exact_refine
     return _exact_refine(cand, qids, qmat, refine_with, k, qmat.shape[1],
-                         id_col, vec_col, qid_col, qvec_col)
+                         id_col, vec_col, qid_col)
 
 
 def sq_quantization_audit(vectors: DataFrame,
@@ -268,19 +271,21 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
                  qid_col: str = "query_id",
                  qvec_col: str = "query_vec",
                  corpus_n: int | None = None) -> DataFrame:
-    """Probe the ``nprobe`` nearest centroid lists, score DEQUANTIZED codes
-    within them (Arrow GEMM local top-n per batch), merge, exact-refine.
+    """Probe the ``nprobe`` nearest centroid lists and score their
+    DEQUANTIZED codes; returns a local frame (qid, id, dist, rank).
 
-    Scale shape mirrors ivf_search: probe selection is a driver-side
-    (Q, C) argmin; the probed-list set becomes an isin scan filter and the
-    list -> probing-queries map rides the UDF closure, so probed codes
-    stream through Arrow once (never replicated per probing query);
-    scoring + per-(list, query) local top-n happen in one Arrow stage; one
-    qid-hash exchange serves both the cross-partition replication dedupe
-    (ivf assign_n=2 surfaces a vector twice) and the ranking window; the
-    refine join broadcasts the bounded candidate set.
-    ``refine_factor='auto'`` holds rf*k at IVFSQ_REFINE_FRACTION of the
-    corpus; a fixed rf below the fraction warns (the shared decay policy).
+    The twin of ``pq.ivfpq_search``: one collect of the query batch; the
+    probed-list union is a literal ``list_id IN (...)`` scan filter and
+    the scan is coalesced to Spark's split size; the list ->
+    probing-queries map rides the closure, so probed codes stream through
+    Arrow once and each task emits a per-query top-n pool (n = k, or
+    k·refine_factor with ``refine_with``). The pools are merged on the
+    driver (``ann.rank_pool``; SQ codes are vector-level, so the assign_n
+    replicas of a vector tie exactly), which holds at most tasks·Q·n
+    candidate rows; with ``refine_with`` the top n per query go through
+    ``pq._exact_refine``. ``refine_factor='auto'`` holds rf*k at
+    IVFSQ_REFINE_FRACTION of the corpus; a fixed rf below the fraction
+    warns (the shared decay policy).
     """
     import pandas as pd
 
@@ -302,8 +307,9 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
     # the 64-byte code arrays alone were ~1.6 GB of duplicated Arrow
     # traffic; 10.1 s -> this shape).
     list_q = _probe_map(centroids, qmat, nprobe)
-    scan = (codes_df.where(F.col("list_id").isin(sorted(list_q)))
-            .select("list_id", id_col, "codes"))
+    scan = coalesce_to_split_size(
+        codes_df.where(F.col("list_id").isin(sorted(list_q)))
+        .select("list_id", id_col, "codes"))
 
     n_local = k * refine_factor if refine_with is not None else k
     schema = T.StructType([
@@ -345,28 +351,19 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
             id_col: np.concatenate([i for _, i, _ in accs]),
             "sq_dist": np.concatenate([d for _, _, d in accs]),
         })
-        # replication dedupe before the local head bounds the merge
+        # replication dedupe before the local head bounds the pool
         # without duplicates eating top-n slots (ivf_search's measured
-        # 0.96 -> 0.66 recall failure mode); SQ codes are vector-level
-        # (global mins/scales), so assign_n replicas tie exactly
-        yield (flat.sort_values([qid_col, "sq_dist", id_col])
-               .drop_duplicates([qid_col, id_col])
-               .groupby(qid_col, sort=False).head(n_local))
+        # 0.96 -> 0.66 recall failure mode)
+        yield rank_pool(flat, "sq_dist", n_local, qid_col,
+                        id_col).drop(columns="rank")
 
-    local = scan.mapInPandas(score, schema=schema)
-    w = Window.partitionBy(qid_col).orderBy(
-        F.col("sq_dist").asc(), F.col(id_col).asc())
-    merged = (local.repartition(F.col(qid_col))
-              .dropDuplicates([qid_col, id_col])
-              .withColumn("rank", F.row_number().over(w)))
+    pool = scan.mapInPandas(score, schema=schema).toPandas()
+    top = rank_pool(pool, "sq_dist", n_local, qid_col, id_col)
     if refine_with is None:
-        return (merged.where(F.col("rank") <= k)
-                .select(qid_col, id_col,
-                        F.round("sq_dist", 6).alias("dist"), "rank"))
-    cand = (merged.where(F.col("rank") <= n_local)
-            .select(qid_col, id_col))
-    return _exact_refine(cand, qid_arr, qmat, refine_with, k, qmat.shape[1],
-                         id_col, vec_col, qid_col, qvec_col)
+        return local_result(codes_df.sparkSession, top, "sq_dist",
+                            qid_col, id_col)
+    return _exact_refine(top, qid_arr, qmat, refine_with, k, qmat.shape[1],
+                         id_col, vec_col, qid_col)
 
 
 def ivfsq_persist_partitioned(codes_df: DataFrame, path: str,
@@ -420,9 +417,13 @@ def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
     """Serve IVF-SQ8 from the hive layout: ``ivfsq_search`` over the
-    unpruned layout, whose one query collect and one probe selection
-    yield the literal probed-list isin (PartitionFilters pruning); the
-    refine policy resolves from sidecar metadata."""
+    unpruned layout, returning its local frame (qid, id, dist, rank).
+    Its one query collect and one probe selection yield the literal
+    probed-list isin (PartitionFilters pruning); the code scan runs at
+    Spark's split size, its pools merge on the driver (at most
+    tasks·Q·k·refine_factor candidate rows) and ``refine_with``
+    re-scores them in one more pass. The refine policy resolves from
+    sidecar metadata."""
     from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
     from vectordb_explorations_spark.operators.pq import _layout_corpus_n
     return ivfsq_search(spark.read.parquet(path), centroids, mins, maxs,
