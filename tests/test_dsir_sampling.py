@@ -9,6 +9,8 @@ on corpora built for the purpose, not the fixture.
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -117,6 +119,37 @@ def test_source_kl_flags_the_planted_drifted_source(spark):
     assert all(v >= 0.0 for v in out.values())   # KL is non-negative
     conformant = max(out[s] for s in ("src0", "src1", "src2"))
     assert out["drifted"] > conformant * 2
+
+
+def test_source_kl_null_source_matches_oracle(spark, tmp_path):
+    """A null-source document keeps all-zero cells and adds nothing to
+    the per-bucket and corpus totals, as the oracle's densifying join
+    gives it."""
+    import duckdb
+
+    from vectordb_explorations_spark.operators.sampling import (
+        source_kl_divergence, source_kl_divergence_oracle)
+
+    path = str(tmp_path / "documents")
+    spark.createDataFrame(
+        [(0, "a", "alpha beta gamma"), (1, "b", "beta delta beta"),
+         (2, None, "alpha alpha zeta"), (3, "a", "gamma delta")],
+        "doc_id long, source string, text string").write.parquet(path)
+    got = source_kl_divergence(spark.read.parquet(path)).collect()
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE VIEW documents AS SELECT * FROM "
+                    f"read_parquet('{path}/*.parquet')")
+        want = con.execute(source_kl_divergence_oracle()).fetchall()
+    finally:
+        con.close()
+    # keyed by source: the engines order a NULL source differently
+    got = {r.source: (r.n_grams, r.kl_divergence) for r in got}
+    want = {w[0]: (w[1], w[2]) for w in want}
+    assert got.keys() == want.keys() == {"a", "b", None}
+    for src, (n, kl) in want.items():
+        assert got[src][0] == n
+        assert got[src][1] == pytest.approx(kl, abs=1e-6)
 
 
 def test_split_leakage_is_the_cross_split_pair_subset(spark, sf_dir):

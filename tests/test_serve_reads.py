@@ -1,6 +1,7 @@
 """Serving contract: every public ANN serve call reads its query frame
-once, the engine builds no Python-RDD frame of its own, and the routed
-and IVF-family serve calls run a pinned number of Spark jobs.
+once, the engine builds no Python-RDD frame of its own, the routed and
+IVF-family serve calls run a pinned number of Spark jobs, and an empty
+query batch serves an empty frame with the normal schema.
 
 A Python-RDD query frame runs Python-worker tasks on every read, so a
 serve call that re-reads the frame (to route, to probe, to refine) pays
@@ -11,15 +12,18 @@ evaluated; one read of a Q-row frame adds exactly Q.
 import pytest
 
 from vectordb_explorations_spark.operators.ann import (
-    ivf_build, ivf_persist_partitioned, ivf_probe_partitioned)
+    ivf_build, ivf_persist_partitioned, ivf_probe_partitioned, ivf_search)
 from vectordb_explorations_spark.operators.hnsw import (
-    hnsw_build, hnsw_persist_partitioned, hnsw_probe_partitioned)
+    hnsw_build, hnsw_persist_partitioned, hnsw_probe_partitioned,
+    hnsw_search)
 from vectordb_explorations_spark.operators.knn import (
     knn_join_blockwise, sample_queries)
 from vectordb_explorations_spark.operators.pq import (
-    ivfpq_build, ivfpq_persist_partitioned, ivfpq_probe_partitioned)
+    ivfpq_build, ivfpq_persist_partitioned, ivfpq_probe_partitioned,
+    ivfpq_search)
 from vectordb_explorations_spark.operators.sq import (
-    ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned)
+    ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned,
+    ivfsq_search)
 from vectordb_explorations_spark.sources import load_table
 from spark_status import traced
 
@@ -35,19 +39,23 @@ def layouts(spark, sf_dir, tmp_path_factory):
 
     idx = hnsw_build(emb, num_shards=4, shard_by="kmeans")
     out["hnsw"] = str(base / "hnsw")
+    out["hnsw_index"] = idx
     hnsw_persist_partitioned(idx, out["hnsw"])
 
     assigned, cents = ivf_build(emb, num_centroids=8)
     out["ivf"] = (str(base / "ivf"), cents)
+    out["ivf_assigned"] = assigned
     ivf_persist_partitioned(assigned, out["ivf"][0])
 
     codes, cents, books = ivfpq_build(emb, num_centroids=8, m_subspaces=8,
                                       k_codes=16)
     out["ivfpq"] = (str(base / "ivfpq"), cents, books)
+    out["ivfpq_codes"] = codes
     ivfpq_persist_partitioned(codes, out["ivfpq"][0])
 
     codes, cents, mins, maxs = ivfsq_build(emb, num_centroids=8)
     out["ivfsq"] = (str(base / "ivfsq"), cents, mins, maxs)
+    out["ivfsq_codes"] = codes
     ivfsq_persist_partitioned(codes, out["ivfsq"][0])
     return out
 
@@ -119,12 +127,14 @@ def test_refine_query_side_is_not_a_python_rdd(spark, layouts, tmp_path):
     assert len(rows) == NUM_Q * K
 
 
-# Spark jobs per serve call over a local (pandas-built) query frame:
-# schema discovery of the layout, the probe scan and, when refining, the
-# exact re-score. Merges, ranking and the served frame are driver-side.
+# Spark jobs per serve call over a local (pandas-built) query frame.
+# IVF-PQ/SQ8: the probe scan and the exact re-score; the layout is read
+# with the schema its sidecar stamps. HNSW: schema discovery of its
+# layout (it has no sidecar), the centroid collect and the blob scan.
+# Merges, ranking and the served frame are driver-side.
 SERVE_JOBS = {"hnsw_probe_partitioned": 3,
-              "ivfpq_probe_partitioned": 3,
-              "ivfsq_probe_partitioned": 3}
+              "ivfpq_probe_partitioned": 2,
+              "ivfsq_probe_partitioned": 2}
 
 
 @pytest.mark.parametrize("call", sorted(SERVE_JOBS))
@@ -140,3 +150,38 @@ def test_serve_call_job_count(spark, layouts, call):
         spark, lambda: _serve_calls(spark, layouts)[call](qdf).collect())
     assert len(served) == NUM_Q * K
     assert jobs == SERVE_JOBS[call], (call, jobs)
+
+
+def _in_memory_calls(spark, lay):
+    emb = lay["emb"]
+    _, ivf_cents = lay["ivf"]
+    _, pq_cents, books = lay["ivfpq"]
+    _, sq_cents, mins, maxs = lay["ivfsq"]
+    return {
+        "hnsw_search": lambda q: hnsw_search(lay["hnsw_index"], q, K),
+        "hnsw_search_routed": lambda q: hnsw_search(
+            lay["hnsw_index"], q, K, probe_shards="auto"),
+        "ivf_search": lambda q: ivf_search(
+            lay["ivf_assigned"], ivf_cents, q, K, nprobe=3),
+        "ivfpq_search": lambda q: ivfpq_search(
+            lay["ivfpq_codes"], pq_cents, books, q, K, nprobe=3),
+        "ivfpq_search_refined": lambda q: ivfpq_search(
+            lay["ivfpq_codes"], pq_cents, books, q, K, nprobe=3,
+            refine_with=emb, refine_factor=4),
+        "ivfsq_search": lambda q: ivfsq_search(
+            lay["ivfsq_codes"], sq_cents, mins, maxs, q, K, nprobe=3),
+    }
+
+
+@pytest.mark.parametrize("call", [
+    "knn_join_blockwise", "hnsw_search", "hnsw_search_routed",
+    "ivf_search", "ivfpq_search", "ivfpq_search_refined", "ivfsq_search",
+    "hnsw_probe_partitioned", "ivfpq_probe_partitioned",
+    "ivf_probe_partitioned", "ivfsq_probe_partitioned"])
+def test_empty_query_batch_serves_empty_frame(spark, layouts, call):
+    calls = {**_serve_calls(spark, layouts),
+             **_in_memory_calls(spark, layouts)}
+    served = calls[call](sample_queries(layouts["emb"], NUM_Q).limit(0))
+    assert served.dtypes == [("query_id", "bigint"), ("vec_id", "bigint"),
+                             ("dist", "double"), ("rank", "int")], call
+    assert served.collect() == []

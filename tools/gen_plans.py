@@ -140,15 +140,16 @@ COMMENTARY = {
         "against the persisted state table (never a corpus self-join), "
         "with per-source-file idempotence markers."),
     "dsir_select": (
-        "DSIR importance resampling (Xie et al. 2023): two corpus passes "
-        "— the paper's own fit/score structure. The fit pass rolls "
-        "hashed-ngram counts up to n_buckets groups map-side and takes "
-        "corpus totals as a whole-frame window over those 64 rows (a "
-        "separate totals agg re-read the corpus a third time — plan-"
-        "audited out); the scoring pass broadcasts the 64-row log-ratio "
-        "table onto its pushed-filter scan and ends in Gumbel-top-k via "
-        "TakeOrderedAndProject. No vocabulary build, no corpus "
-        "self-join, no driver pass."),
+        "DSIR importance resampling (Xie et al. 2023): one corpus pass "
+        "into the per-(doc, bucket) count frame, whose exchange the fit "
+        "and the score share (a ReusedExchange once AQE runs; the "
+        "unexecuted plan below still lists both). The fit rolls it up "
+        "to 64 bucket groups and takes corpus totals as a whole-frame "
+        "window over those rows; the score broadcasts the 64-row "
+        "log-ratio table onto the same frame, keeps raw documents after "
+        "the per-doc aggregate (so no filter reaches the scan) and ends "
+        "in Gumbel-top-k via TakeOrderedAndProject. No vocabulary "
+        "build, no corpus self-join, no driver pass."),
     "cluster_balanced_sample": (
         "Density-equalizing embedding sample: the seed exemplars broadcast "
         "(num_clusters rows), nearest-seed assignment is a codegen "
@@ -170,11 +171,12 @@ COMMENTARY = {
         "already-tiny frames, |sources| vs |mix| rows, so the exchange "
         "is negligible at any corpus size). No second corpus scan."),
     "source_kl_divergence": (
-        "Per-source distribution drift: one corpus scan into a "
+        "Per-source distribution drift: one corpus stage into a "
         "(source, bucket) combinable count; the cell frame densifies "
-        "from the AGGREGATED counts (sources x 64 rows), so the "
-        "windows deriving per-source/per-bucket/corpus totals never "
-        "touch corpus-sized data. Output |sources| rows."),
+        "from one bucket -> count map per source (sources x 64 rows), "
+        "not a join back onto the count frame, which would tokenize the "
+        "corpus again. The windows deriving per-source/per-bucket/corpus "
+        "totals never touch corpus-sized data. Output |sources| rows."),
     "vocab_stats": (
         "Vocabulary heavy-hitters: explode → groupBy(token) aggregates "
         "partially map-side (zipfian head tokens never concentrate raw rows "
@@ -188,15 +190,24 @@ COMMENTARY = {
         "into the parquet scans, customer prunes before its join, revenue "
         "aggregates partially map-side on the order key, and the top-10 "
         "plans as TakeOrderedAndProject — the aggregate never fully sorts."),
+    "text_stats": (
+        "Per-doc quality metrics: per-row array expressions over one "
+        "tokenize, in one corpus stage. The kernel ends at a hash "
+        "exchange on doc_id, so the declared output order's range "
+        "sampling reads shuffle output instead of re-running the kernel "
+        "over the corpus; the second exchange is that output order."),
     "doc_repetition_stats": (
         "Gopher-style repetition filter: every metric is a per-row array "
-        "expression over one tokenize — no explode, zero data-dependent "
-        "shuffles (the only exchange is the declared output order)."),
+        "expression over one tokenize — no explode, one corpus stage. "
+        "The two exchanges are the hash exchange ending the kernel and "
+        "the declared output order (the text_stats shape)."),
     "gopher_quality_signals": (
         "Gopher A1.1 document-shape rules: pure per-row higher-order "
-        "expressions over one tokenize — no explode, zero data-dependent "
-        "shuffles. Gram arrays, per-distinct counts and the max count are "
-        "STAGED through projected columns (composed Column trees re-inline "
+        "expressions over one tokenize — no explode, one corpus stage "
+        "(the text_stats shape: the kernel ends at a hash exchange, then "
+        "the declared output order). Gram arrays, per-distinct counts "
+        "and the max count are STAGED through projected columns "
+        "(composed Column trees re-inline "
         "sub-expressions on every reference; the naive composed argmin "
         "re-ran the O(distinct x positions) count per candidate — "
         "measured minutes vs sub-second staged)."),

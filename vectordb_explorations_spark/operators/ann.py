@@ -121,13 +121,18 @@ def collect_query_batch(queries: DataFrame, qid_col: str, qvec_col: str,
     return rows
 
 
-def collect_query_arrays(queries: DataFrame, qid_col: str, qvec_col: str
+def collect_query_arrays(queries: DataFrame, qid_col: str, qvec_col: str,
+                         dim: int | None = None
                          ) -> tuple[np.ndarray, np.ndarray]:
     """:func:`collect_query_batch` as arrays: int64 ids (Q,) and the
-    float64 query matrix (Q, dim)."""
+    float64 query matrix (Q, dim). An empty batch gives a (0, dim) matrix
+    ((0, 0) when ``dim`` is None), so the search kernels keep their 2-D
+    shapes and serve an empty frame; pass the index's ``dim`` wherever a
+    kernel multiplies the whole matrix."""
     rows = collect_query_batch(queries, qid_col, qvec_col)
-    return (np.asarray([int(r[0]) for r in rows], dtype=np.int64),
-            np.asarray([r[1] for r in rows], dtype=np.float64))
+    qmat = (np.asarray([r[1] for r in rows], dtype=np.float64) if rows
+            else np.empty((0, dim or 0)))
+    return np.asarray([int(r[0]) for r in rows], dtype=np.int64), qmat
 
 
 def coalesce_to_split_size(df: DataFrame) -> DataFrame:
@@ -792,7 +797,8 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries: DataFrame,
     # Probe selection is a (Q, C) argmin over driver-resident centroids —
     # pure NumPy, no crossJoin/window stage (queries and centroids are both
     # tiny; the cluster only ever sees the final probed-list isin filter).
-    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col)
+    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col,
+                                         centroids.shape[1])
     list_q = _probe_map(centroids, qmat, nprobe)
     scan = (assigned.where(F.col("list_id").isin(sorted(list_q)))
             .select("list_id", id_col, vec_col))

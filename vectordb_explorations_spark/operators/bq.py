@@ -30,7 +30,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
-from vectordb_explorations_spark.operators.ann import collect_query_batch
+from vectordb_explorations_spark.operators.ann import collect_query_arrays
 from vectordb_explorations_spark.operators.sq import sq_train
 
 BQ_WORD_BITS = 32  # bits packed per BIGINT word: keeps every engine's
@@ -300,10 +300,8 @@ def bq_search(codes_df: DataFrame, thresholds: np.ndarray, queries: DataFrame,
     (``pq._exact_refine``), which returns a local frame."""
     import pandas as pd
 
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([int(r[0]) for r in qrows])
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
     dim = len(thresholds)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col, dim)
     n_local = k * refine_factor if refine_with is not None else k
 
     if levels is None:
@@ -407,11 +405,9 @@ def bq_cascade_search(bq_codes: DataFrame, thresholds: np.ndarray,
     shortlist must track N, enforced by code rather than prose."""
     import pandas as pd
 
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = np.array([int(r[0]) for r in qrows])
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)
-    qvecs = {int(q): v for q, v in zip(qids, qmat)}
     dim = len(thresholds)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col, dim)
+    qvecs = {int(q): v for q, v in zip(qids, qmat)}
     if dim < BQ_RANKER_MIN_DIM:
         # the pre-filter regime: shortlist adequacy depends on N (count
         # memoized per code table — never one job per search call)

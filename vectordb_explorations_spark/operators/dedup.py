@@ -2112,9 +2112,9 @@ def span_dedup_pipeline(docs: DataFrame,
     back on the stable id (AQE broadcasts it while it fits); the strip
     runs its one corpus scan over only the admitted docs; one grouped
     aggregation ends the pipeline."""
-    from vectordb_explorations_spark.operators.textops import quality_filter
+    from vectordb_explorations_spark.operators.textops import _quality_filter
 
-    kept = quality_filter(docs).where(F.col("keep")).select("doc_id")
+    kept = _quality_filter(docs).where(F.col("keep")).select("doc_id")
     admitted = docs.join(kept, "doc_id")
     stripped = strip_duplicated_spans(admitted, w)
     return (stripped

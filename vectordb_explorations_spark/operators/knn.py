@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from vectordb_explorations_spark.operators.ann import collect_query_batch
+from vectordb_explorations_spark.operators.ann import collect_query_arrays
 from vectordb_explorations_spark.functions.rounding import round6
 from vectordb_explorations_spark.functions.vectors import (
     array_lit_sql, l2_distance, l2_distance_sql)
@@ -109,9 +109,7 @@ def knn_join_blockwise(vectors: DataFrame, queries: DataFrame, k: int,
     """
     import numpy as np
 
-    qrows = collect_query_batch(queries, qid_col, qvec_col)
-    qids = [r[0] for r in qrows]
-    qmat = np.asarray([r[1] for r in qrows], dtype=np.float64)  # (Q, D)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)  # (Q, D)
 
     out_schema = T.StructType([
         T.StructField(qid_col, T.LongType()),
@@ -122,7 +120,7 @@ def knn_join_blockwise(vectors: DataFrame, queries: DataFrame, k: int,
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         q_sq = (qmat * qmat).sum(axis=1)  # (Q,)
         for pdf in batches:
-            if pdf.empty:
+            if pdf.empty or not len(qids):
                 continue
             mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)  # (N, D)
             ids = pdf[id_col].to_numpy()

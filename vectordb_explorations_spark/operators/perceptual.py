@@ -636,10 +636,9 @@ def perceptual_curation_cards(docs: DataFrame,
     pair graph + label propagation (see dedup_perceptual_clusters), and
     the composition is two doc_id-keyed joins + ONE combinable
     source-keyed aggregation."""
-    from vectordb_explorations_spark.operators.textops import (
-        gopher_quality_signals)
+    from vectordb_explorations_spark.operators.textops import _gopher_signals
 
-    g = gopher_quality_signals(docs).select("doc_id", "keep")
+    g = _gopher_signals(docs).select("doc_id", "keep")
     cl = (dedup_perceptual_clusters(docs, max_hamming)
           .select("doc_id", (F.col("root") != F.col("doc_id"))
                   .alias("is_dup")))

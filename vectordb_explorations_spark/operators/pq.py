@@ -318,7 +318,7 @@ def pq_search(codes_df: DataFrame, codebooks: np.ndarray, queries: DataFrame,
             refine_factor, codes_df, k, PQ_REFINE_FRACTION, "pq",
             corpus_n=corpus_n)
     m, kc, dsub = codebooks.shape
-    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col, m * dsub)
     # (Q, m, kc) squared-distance LUTs
     luts = np.stack([
         ((qmat[:, s * dsub:(s + 1) * dsub][:, None, :]
@@ -518,7 +518,7 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
             refine_factor, codes_df, k, IVFPQ_REFINE_FRACTION, "ivfpq",
             corpus_n=corpus_n, replication=ANN.IVF_ASSIGN_N)
     m, kc, dsub = codebooks.shape
-    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col, m * dsub)
     by_list = _probe_map(centroids, qmat, nprobe)
     scan = ANN.coalesce_to_split_size(
         codes_df.where(F.col("list_id").isin(sorted(by_list)))
@@ -603,18 +603,30 @@ def _layout_corpus_n(spark, path: str, replication: int) -> int:
     return spark.read.parquet(path).count() // max(1, int(replication))
 
 
+def _read_layout(spark, path: str) -> DataFrame:
+    """A persisted codes layout, read with the schema its sidecar stamps
+    (no schema-inference job); a layout without one is inferred."""
+    meta = substrate.read_json_sidecar(spark, substrate.meta_path(path))
+    schema = substrate.face_schema(meta or {}, "")
+    return (spark.read if schema is None
+            else spark.read.schema(schema)).parquet(path)
+
+
 def ivfpq_persist_partitioned(codes_df: DataFrame, path: str,
                               id_col: str = "vec_id") -> None:
     """Persist IVF-PQ codes hive-partitioned by list_id: each inverted
     list of m-byte codes is its own directory, so a probe's literal
     ``list_id IN (...)`` prunes unprobed lists at the FILE LISTING.
     Writes the corpus row count (distinct ids — the replication-corrected
-    N) as sidecar metadata for job-free refine-policy resolution."""
+    N) and the read-back schema as sidecar metadata, so a probe resolves
+    its refine policy and reads the layout without a job."""
+    spark = codes_df.sparkSession
     (codes_df.select(id_col, "codes", "list_id")
      .write.mode("overwrite").partitionBy("list_id").parquet(path))
     substrate.write_ready(
-        codes_df.sparkSession, path,
-        {"rows": codes_df.select(id_col).distinct().count()})
+        spark, path,
+        {"rows": codes_df.select(id_col).distinct().count(),
+         "schemas": substrate.face_schemas(spark, path, {"": 1})})
 
 
 def _append_codes_partitioned(path: str, codes: DataFrame,
@@ -644,8 +656,9 @@ def _append_codes_partitioned(path: str, codes: DataFrame,
      .partitionBy("list_id").parquet(path))
     inc = int(obs.get.get("rows") or 0) // max(1, assign_rows_per_vec)
     spark = codes.sparkSession
-    old_n = substrate.read_rows(spark, path) or 0
-    substrate.write_ready(spark, path, {"rows": old_n + inc})
+    meta = substrate.read_json_sidecar(spark, substrate.meta_path(path)) or {}
+    substrate.write_ready(spark, path,
+                          {**meta, "rows": int(meta.get("rows", 0)) + inc})
     # The layout just grew: any memoized count over a pre-existing
     # DataFrame of it is stale. Appends are rare next to searches, so
     # clearing the whole memo (one re-count per live index, worst case)
@@ -698,7 +711,7 @@ def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
     on the driver (at most tasks·Q·k·refine_factor candidate rows), and
     ``refine_with`` re-scores them in one more pass. The refine policy
     resolves from the sidecar corpus metadata — no count job."""
-    return ivfpq_search(spark.read.parquet(path), centroids, codebooks,
+    return ivfpq_search(_read_layout(spark, path), centroids, codebooks,
                         queries, k,
                         nprobe=nprobe, refine_with=refine_with,
                         refine_factor=refine_factor,

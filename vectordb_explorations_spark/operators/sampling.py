@@ -480,9 +480,9 @@ def curation_pipeline_stats(docs: DataFrame, train: float = 0.9,
     on the stable id (AQE broadcasts it while it fits, hash-joins at
     scale); the split adds no shuffle (pure projection); one grouped
     aggregation ends the pipeline."""
-    from vectordb_explorations_spark.operators.textops import quality_filter
+    from vectordb_explorations_spark.operators.textops import _quality_filter
 
-    kept = quality_filter(docs).where(F.col("keep")).select("doc_id")
+    kept = _quality_filter(docs).where(F.col("keep")).select("doc_id")
     return (docs.join(kept, "doc_id")
             .withColumn("split", split_column(F.col("doc_id"), train, val))
             .groupBy("split", "lang")
@@ -527,17 +527,21 @@ _GUMBEL_U_MAX = 1.0 - 2.0 ** -32
 
 def _gram_buckets(docs: DataFrame, n_buckets: int) -> DataFrame:
     """(doc_id, source, bucket): hashed (unigram + bigram) feature buckets
-    over the SHARED whitespace tokenizer — featurize.py's md5-prefix
-    dimension hash applied to grams. The bigram arm needs an explicit
-    size guard: Spark's sequence(1, 0) DESCENDS to [1, 0] (it does not
-    produce an empty array), so an unguarded lambda indexes out of
-    bounds — an ANSI crash — on any <=1-token document (the size>=k
-    when-guard discipline of doc_fingerprints / textops); DuckDB's
-    range(1, 1) IS empty, so the twin needs no guard. The hoisted `w`
-    column tokenizes once (doc_fingerprints' lesson about re-tokenizing
-    inside higher-order lambdas). Shared by dsir_select and
-    source_kl_divergence; keep _gram_buckets_sql in lockstep — the pair
-    is the cross-engine contract the oracle hashes check."""
+    over the shared whitespace tokenizer — featurize.py's md5-prefix
+    dimension hash applied to grams. Shared by dsir_select and
+    source_kl_divergence; keep _gram_buckets_sql in lockstep, the pair is
+    the cross-engine contract the oracle hashes check.
+
+    The bigram arm guards on size: Spark's sequence(1, 0) descends to
+    [1, 0], so an unguarded lambda would index out of bounds (an ANSI
+    error) on a <= 1-token document; DuckDB's range(1, 1) is empty. The
+    tokens are one projected column, so the lambda does not re-tokenize.
+
+    ``bucket`` is non-nullable (an 8-hex-digit md5 prefix always
+    converts). A nullable key would make a join on it infer an
+    ``isnotnull(bucket)`` filter on one side only, and two reads of one
+    bucket frame would then differ below their shared exchange, so Spark
+    could not reuse it and the corpus would be tokenized twice."""
     from vectordb_explorations_spark.functions.text import whitespace_tokens
 
     w = docs.select("doc_id", "source", whitespace_tokens("text").alias("w"))
@@ -550,7 +554,8 @@ def _gram_buckets(docs: DataFrame, n_buckets: int) -> DataFrame:
             " ELSE array() END"))).alias("gram"))
     bucket = (F.conv(F.substring(F.md5(F.col("gram")), 1, 8), 16, 10)
               .cast("long") % n_buckets).cast("int")
-    return grams.select("doc_id", "source", bucket.alias("bucket"))
+    return grams.select("doc_id", "source",
+                        F.coalesce(bucket, F.lit(0)).alias("bucket"))
 
 
 def _gram_buckets_sql(n_buckets: int) -> str:
@@ -593,18 +598,18 @@ def dsir_select(docs: DataFrame,
     and the tokenizer is the SHARED whitespace contract, so the whole
     pipeline is hash-checkable cross-engine.
 
-    Scale shape: TWO corpus passes — fit then score, the paper's own
-    structure. The fit pass rolls the (doc, bucket) count frame up to
-    ``n_buckets`` groups (map-side combinable) and its corpus totals
-    ride a whole-frame window over those ``n_buckets`` rows — the first
-    cut computed totals as a separate aggregation subtree and read the
-    corpus a THIRD time (plan-audited); the window keeps the fit one
-    subtree. The scoring pass joins the broadcast ``n_buckets``-row
-    lambda table onto its own (doc, bucket) frame and ends in one
+    Scale shape: one corpus pass. The corpus is tokenized and hashed
+    once into the per-(doc, bucket) count frame ``docb``; the fit and the
+    score both read it after its exchange, which Spark runs once and
+    reuses (``ReusedExchange``). That holds because the two reads are
+    identical below it: the raw-document restriction is applied after the
+    per-doc score aggregate, not pushed into the scan, and ``bucket`` is
+    non-nullable (``_gram_buckets``). The fit rolls ``docb`` up to
+    ``n_buckets`` groups and takes the corpus totals as a whole-frame
+    window over those rows; the score joins the broadcast
+    ``n_buckets``-row lambda table onto ``docb`` and ends in one
     TakeOrderedAndProject. No corpus self-join, no vocabulary build, no
-    driver pass — at 100 TB the wide exchanges are the per-pass gram
-    counts (the token_counts budget) plus the per-doc score aggregation,
-    whose input is already compacted to <= n_buckets rows per doc."""
+    driver pass."""
     from vectordb_explorations_spark.functions.rounding import round6
 
     docb = (_gram_buckets(docs, n_buckets)
@@ -620,8 +625,6 @@ def dsir_select(docs: DataFrame,
         F.sum(F.when(F.col("is_target"), F.lit(0)).otherwise(F.col("n")))
         .alias("cr"))
     # corpus totals as a whole-frame window over the n_buckets-row fit
-    # (the single-partition move is n_buckets rows — trivial; a separate
-    # agg subtree would re-tokenize the corpus a second time)
     wall = Window.partitionBy()
     tt = F.sum("ct").over(wall).cast("double")
     tr = F.sum("cr").over(wall).cast("double")
@@ -630,13 +633,15 @@ def dsir_select(docs: DataFrame,
         (F.log((F.col("ct") + alpha) / (tt + alpha * n_buckets)) -
          F.log((F.col("cr") + alpha) / (tr + alpha * n_buckets)))
         .alias("lam"))
-    # the raw-side filter sits on docb so it pushes into the scoring
-    # pass's parquet scan (PushedFilters: NOT source IN target)
-    scored = (docb.where(~F.col("is_target"))
-              .join(F.broadcast(lam), "bucket")
+    # keep raw documents only after the per-doc aggregate: a filter on
+    # docb's is_target would push into the scan and give the score its
+    # own corpus pass (is_target is constant per doc, so max is the value)
+    scored = (docb.join(F.broadcast(lam), "bucket")
               .groupBy("doc_id", "source")
               .agg(F.sum("n").alias("n_grams"),
-                   F.sum(F.col("n") * F.col("lam")).alias("score")))
+                   F.sum(F.col("n") * F.col("lam")).alias("score"),
+                   F.max("is_target").alias("is_target"))
+              .where(~F.col("is_target")))
     # md5_uniform's range is (0, 1] and -ln(-ln(1)) is undefined — Spark
     # would yield NULL (doc unselectable) while DuckDB hard-errors, the
     # one place the engines would diverge. Clamp u just under 1: at
@@ -877,24 +882,31 @@ def source_kl_divergence(docs: DataFrame,
     bucket range, so zero-count cells contribute their smoothed mass and
     the divergence is finite by construction.
 
-    Scale shape: one corpus scan into a (source, bucket) count — map-side
-    combinable, |sources| x n_buckets groups; the cell frame is densified
-    from the AGGREGATED counts (sources x n_buckets rows — tiny), so the
-    whole-frame and per-source windows that derive the totals never touch
-    corpus-sized data. Output is |sources| rows."""
+    Scale shape: one corpus stage into a (source, bucket) count — map-side
+    combinable, |sources| x n_buckets groups. The cell frame is densified
+    from those counts, gathered into one bucket -> count map per source
+    (sources x n_buckets rows — tiny), so the whole-frame and per-source
+    windows that derive the totals never touch corpus-sized data, and the
+    count frame is read once: densifying by joining it back onto its own
+    distinct sources would tokenize the corpus a second time. Output is
+    |sources| rows."""
     from vectordb_explorations_spark.functions.rounding import round6
 
     sb = (_gram_buckets(docs, n_buckets)
           .groupBy("source", "bucket")
           .agg(F.count(F.lit(1)).alias("n")))
-    # densify to every (source, bucket) cell — from the aggregated frame,
-    # never the corpus
-    dense = (sb.select("source").distinct()
-             .select("source", F.explode(F.sequence(
-                 F.lit(0), F.lit(n_buckets - 1))).alias("bucket")))
-    cells = (dense.join(sb, ["source", "bucket"], "left")
-             .select("source", "bucket",
-                     F.coalesce(F.col("n"), F.lit(0)).alias("n")))
+    # densify to every (source, bucket) cell from the aggregated frame,
+    # never the corpus. A null source keeps all-zero cells: the oracle's
+    # densifying join matches no count to it.
+    per_source = sb.groupBy("source").agg(F.map_from_entries(
+        F.collect_list(F.struct("bucket", "n"))).alias("m"))
+    cells = (per_source
+             .select("source", "m", F.explode(F.sequence(
+                 F.lit(0), F.lit(n_buckets - 1))).alias("bucket"))
+             .select("source", "bucket", F.coalesce(
+                 F.when(F.col("source").isNotNull(),
+                        F.col("m")[F.col("bucket")]),
+                 F.lit(0)).alias("n")))
     ws = Window.partitionBy("source")
     wb = Window.partitionBy("bucket")
     wall = Window.partitionBy()
@@ -1042,14 +1054,13 @@ def source_data_cards(docs: DataFrame) -> DataFrame:
     not documents."""
     from vectordb_explorations_spark.functions.rounding import round6
     from vectordb_explorations_spark.operators.dedup import ngram_novelty
-    from vectordb_explorations_spark.operators.textops import (
-        gopher_quality_signals)
+    from vectordb_explorations_spark.operators.textops import _gopher_signals
 
     base = docs.select(
         "doc_id", "source",
         F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
         F.sha2(F.col("text"), 256).alias("sha"))
-    g = gopher_quality_signals(docs).select(
+    g = _gopher_signals(docs).select(
         "doc_id", F.col("keep").cast("int").alias("keep_i"))
     nv = ngram_novelty(docs).select("doc_id", "novelty")
     j = base.join(g, "doc_id").join(nv, "doc_id", "left")

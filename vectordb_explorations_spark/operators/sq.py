@@ -105,7 +105,7 @@ def sq_search(codes_df: DataFrame, mins: np.ndarray, maxs: np.ndarray,
     import pandas as pd
 
     scales = _scales(mins, maxs)
-    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col, len(mins))
     qsq = (qmat ** 2).sum(-1)  # (Q,)
 
     n_local = k * refine_factor if refine_with is not None else k
@@ -299,7 +299,8 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
             corpus_n=corpus_n, replication=IVF_ASSIGN_N)
 
     scales = _scales(mins, maxs)
-    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col)
+    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col,
+                                         len(mins))
     qsq = (qmat ** 2).sum(-1)
     # Probe map in the UDF closure (Q x nprobe entries) — probed code rows
     # stream through Arrow ONCE instead of once per probing query (the
@@ -425,8 +426,9 @@ def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
     re-scores them in one more pass. The refine policy resolves from
     sidecar metadata."""
     from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
-    from vectordb_explorations_spark.operators.pq import _layout_corpus_n
-    return ivfsq_search(spark.read.parquet(path), centroids, mins, maxs,
+    from vectordb_explorations_spark.operators.pq import (
+        _layout_corpus_n, _read_layout)
+    return ivfsq_search(_read_layout(spark, path), centroids, mins, maxs,
                         queries, k,
                         nprobe=nprobe, refine_with=refine_with,
                         refine_factor=refine_factor,

@@ -36,10 +36,30 @@ TOKEN_REGEX = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 FINGERPRINT_SHINGLE = 4
 
 
+def _sorted_by(df: DataFrame, *cols: str) -> DataFrame:
+    """``df.orderBy(*cols)`` for a per-row kernel read off the scan, with
+    the kernel ending at a hash exchange on the sort key. A global sort
+    first runs a sampling job over its input to pick range bounds; over
+    the bare kernel that job would tokenize the whole corpus, and the
+    sort's shuffle would tokenize it again. Behind the exchange the
+    sampling job reads shuffle output, so the corpus is read, and the
+    kernel run, in one stage. Stays lazy: nothing is cached. An op
+    composed into a larger plan is read through its unordered kernel
+    (``_text_stats``, ``_gopher_signals``, ...), where the exchange
+    would be a wasted shuffle."""
+    return df.repartition(*cols).orderBy(*cols)
+
+
 def text_stats(docs: DataFrame) -> DataFrame:
     """Per-doc quality metrics: token counts, uniqueness, mean token length,
     stopword ratio, and a composite quality score — the standard features a
-    corpus-quality filter thresholds on."""
+    corpus-quality filter thresholds on. One corpus stage: the kernel runs
+    once, ahead of the ordered output (``_sorted_by``)."""
+    return _sorted_by(_text_stats(docs), "doc_id")
+
+
+def _text_stats(docs: DataFrame) -> DataFrame:
+    """text_stats' per-row kernel, unordered."""
     # tokenize once into a projected column — repeating split(text) in
     # each metric re-tokenizes per expression (interpreted HOFs don't CSE)
     docs = docs.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
@@ -66,7 +86,7 @@ def text_stats(docs: DataFrame) -> DataFrame:
         round6(uniq_ratio).alias("unique_ratio"),
         round6(stop_ratio).alias("stopword_ratio"),
         round6(quality).alias("quality"),
-    ).orderBy("doc_id")
+    )
 
 
 def text_stats_oracle() -> str:
@@ -95,7 +115,12 @@ def lang_id(docs: DataFrame) -> DataFrame:
     """Marker-word language ID: score = count of words in each language's
     marker list; argmax with a fixed tie-break order. Deterministic by
     construction (the fixture's `lang` column is the label to compare
-    against, not an input)."""
+    against, not an input). One corpus stage (``_sorted_by``)."""
+    return _sorted_by(_lang_id(docs), "doc_id")
+
+
+def _lang_id(docs: DataFrame) -> DataFrame:
+    """lang_id's per-row kernel, unordered."""
     docs = docs.select("doc_id", "lang",
                        F.split(F.col("text"), " ").alias("ws"))
     words = F.col("ws")
@@ -112,11 +137,10 @@ def lang_id(docs: DataFrame) -> DataFrame:
     for lg in reversed(LANG_ORDER):
         cond = F.when(scores[lg] == best, F.lit(lg))
         pred = cond.otherwise(pred) if pred is not None else cond
-    out = docs.select(
+    return docs.select(
         "doc_id", F.col("lang").alias("labeled_lang"),
         *[scores[lg].alias(f"score_{lg}") for lg in LANG_ORDER],
         pred.alias("predicted_lang"))
-    return out.orderBy("doc_id")
 
 
 def lang_id_oracle() -> str:
@@ -139,16 +163,17 @@ FROM s ORDER BY doc_id
 
 def token_counts(docs: DataFrame) -> DataFrame:
     """Regex (BPE-ish pre-tokenizer) token counting + chars-per-token — the
-    cost-estimation primitives of an LLM data pipeline."""
+    cost-estimation primitives of an LLM data pipeline. One corpus stage
+    (``_sorted_by``)."""
     toks = F.regexp_extract_all(F.col("text"), F.lit(TOKEN_REGEX), 0)
     n = F.size(toks)
-    return docs.select(
+    return _sorted_by(docs.select(
         "doc_id",
         F.length("text").alias("n_chars_measured"),
         n.alias("n_regex_tokens"),
         F.round(F.length("text").cast("double") / n.cast("double"), 6)
         .alias("chars_per_token"),
-    ).orderBy("doc_id")
+    ), "doc_id")
 
 
 def token_counts_oracle() -> str:
@@ -165,7 +190,8 @@ FROM documents ORDER BY doc_id
 def doc_fingerprints(docs: DataFrame, k: int = FINGERPRINT_SHINGLE) -> DataFrame:
     """Document fingerprint: minimum md5 over k-word shingles (min-sampling of
     a rolling-hash family — one representative hash per doc, MOSS/winnowing
-    style). Equal fingerprints ⇒ shared k-shingle."""
+    style). Equal fingerprints ⇒ shared k-shingle. One corpus stage
+    (``_sorted_by``)."""
     # Hoist the split into a projected column: referencing split(text)
     # inside the transform lambda re-tokenizes the document once per
     # shingle in the interpreted higher-order-function path (~4x slower,
@@ -175,10 +201,10 @@ def doc_fingerprints(docs: DataFrame, k: int = FINGERPRINT_SHINGLE) -> DataFrame
             f"array_min(transform(sequence(0, size(ws) - {k}), "
             f"i -> md5(concat({shingle_parts})))) "
             f"ELSE md5(text) END")
-    return (docs
-            .select("doc_id", "text", F.split("text", " ").alias("ws"))
-            .select("doc_id", F.expr(expr).alias("fingerprint"))
-            .orderBy("doc_id"))
+    return _sorted_by(
+        docs.select("doc_id", "text", F.split("text", " ").alias("ws"))
+        .select("doc_id", F.expr(expr).alias("fingerprint")),
+        "doc_id")
 
 
 def doc_fingerprints_oracle(k: int = FINGERPRINT_SHINGLE) -> str:
@@ -198,16 +224,16 @@ def clean_text(docs: DataFrame) -> DataFrame:
     """Normalization stage of a training-data pipeline: lowercase, strip
     non-alphanumerics, collapse runs of whitespace, trim. Declared output
     is the cleaned text's md5 + lengths (hash-stable across engines; the
-    regexes use only character classes, identical in Java regex and RE2)."""
+    regexes use only character classes, identical in Java regex and RE2).
+    One corpus stage (``_sorted_by``)."""
     cleaned = F.trim(F.regexp_replace(
         F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9 ]", " "),
         " +", " "))
-    return (docs.select(
+    return _sorted_by(docs.select(
         "doc_id",
         F.length("text").alias("raw_len"),
         F.length(cleaned).alias("clean_len"),
-        F.md5(cleaned).alias("clean_md5"))
-        .orderBy("doc_id"))
+        F.md5(cleaned).alias("clean_md5")), "doc_id")
 
 
 CLEAN_TEXT_ORACLE = """
@@ -233,19 +259,22 @@ def quality_filter(docs: DataFrame) -> DataFrame:
     """The corpus-filter stage: threshold the text_stats metrics and emit
     per-doc keep/drop with the firing reasons (pipe-joined, ordered) — the
     audit output a data pipeline persists alongside the filtered corpus.
-    One pass over the metrics, no second scan of the text."""
-    m = text_stats(docs)
+    One corpus stage: text_stats' kernel runs once (``_sorted_by``)."""
+    return _sorted_by(_quality_filter(docs), "doc_id")
+
+
+def _quality_filter(docs: DataFrame) -> DataFrame:
+    """quality_filter's per-row kernel, unordered."""
+    m = _text_stats(docs)
     reasons = F.concat_ws(
         "|",
         F.when(F.col("n_tokens") < QF_MIN_TOKENS, F.lit("too_short")),
         F.when(F.col("stopword_ratio") > QF_MAX_STOP_RATIO, F.lit("stopword_heavy")),
         F.when(F.col("unique_ratio") < QF_MIN_UNIQUE_RATIO, F.lit("repetitive")),
         F.when(F.col("quality") < QF_MIN_QUALITY, F.lit("low_quality")))
-    return (m.select("doc_id", "n_tokens",
-                     F.col("quality"),
-                     (reasons == "").alias("keep"),
-                     reasons.alias("drop_reasons"))
-            .orderBy("doc_id"))
+    return m.select("doc_id", "n_tokens", F.col("quality"),
+                    (reasons == "").alias("keep"),
+                    reasons.alias("drop_reasons"))
 
 
 def quality_filter_oracle() -> str:
@@ -341,7 +370,8 @@ def mask_pii(docs: DataFrame) -> DataFrame:
     before training. Regexes restrict to alternation + character classes
     (identical in Java regex and RE2); declared output is the masked
     text's md5 + how many substitutions fired, so the transform is
-    hash-pinned without shipping raw text."""
+    hash-pinned without shipping raw text. One corpus stage
+    (``_sorted_by``)."""
     emailish = "[a-zA-Z0-9_.]+@[a-zA-Z0-9.]+"
     masked = F.regexp_replace(
         F.regexp_replace(F.col("text"), emailish, "[EMAIL]"),
@@ -349,12 +379,11 @@ def mask_pii(docs: DataFrame) -> DataFrame:
     n_email = F.size(F.split(F.col("text"), emailish)) - 1
     n_num = F.size(F.split(F.regexp_replace(F.col("text"), emailish, "[EMAIL]"),
                            "[0-9]+")) - 1
-    return (docs.select(
+    return _sorted_by(docs.select(
         "doc_id",
         F.md5(masked).alias("masked_md5"),
         n_email.alias("n_emails_masked"),
-        n_num.alias("n_numbers_masked"))
-        .orderBy("doc_id"))
+        n_num.alias("n_numbers_masked")), "doc_id")
 
 
 def mask_pii_oracle() -> str:
@@ -404,10 +433,10 @@ def doc_repetition_stats(docs: DataFrame) -> DataFrame:
     stuffing, and decoding loops all spike these; corpus curation drops the
     flagged docs before training.
 
-    Shape: pure per-row array expressions — no explode, no shuffle, embar-
-    rassingly parallel at any corpus size. The top-token count is one sort
-    of the tokens plus one run-length scan (``_top_run``), O(n log n) per
-    row."""
+    Shape: pure per-row array expressions — no explode, embarrassingly
+    parallel at any corpus size, and one corpus stage (``_sorted_by``).
+    The top-token count is one sort of the tokens plus one run-length scan
+    (``_top_run``), O(n log n) per row."""
     docs = docs.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
     words = F.col("ws")
     n = F.size(words)
@@ -426,13 +455,12 @@ def doc_repetition_stats(docs: DataFrame) -> DataFrame:
     top_word_frac = top_cnt.cast("double") / n.cast("double")
     repetitive = ((top_word_frac > REP_TOP_WORD_MAX)
                   | (dup_bigram_frac > REP_DUP_BIGRAM_MAX)).cast("int")
-    return (docs.select(
+    return _sorted_by(docs.select(
         "doc_id",
         n.alias("n_tokens"),
         F.round(top_word_frac, 6).alias("top_word_frac"),
         F.round(dup_bigram_frac, 6).alias("dup_bigram_frac"),
-        repetitive.alias("repetitive"))
-        .orderBy("doc_id"))
+        repetitive.alias("repetitive")), "doc_id")
 
 
 def doc_repetition_stats_oracle() -> str:
@@ -1070,7 +1098,7 @@ def lang_confusion(docs: DataFrame) -> DataFrame:
     lang-ID models. One grouped count plus a windowed row total."""
     from pyspark.sql import Window
 
-    pred = lang_id(docs).select("doc_id", "labeled_lang", "predicted_lang")
+    pred = _lang_id(docs).select("doc_id", "labeled_lang", "predicted_lang")
     counts = (pred.groupBy("labeled_lang", "predicted_lang")
               .agg(F.count(F.lit(1)).alias("n_docs")))
     row_total = F.sum("n_docs").over(Window.partitionBy("labeled_lang"))
@@ -1375,14 +1403,20 @@ def gopher_quality_signals(docs: DataFrame) -> DataFrame:
     dedup.py) rather than per-row.
 
     Scale shape (100 TB): pure per-row higher-order-function
-    expressions over one hoisted tokenize — no explode, no shuffle
-    (the final orderBy is presentation). The top n-gram of each order
+    expressions over one hoisted tokenize — no explode, and one corpus
+    stage: the kernel ends at a hash exchange on doc_id ahead of the
+    ordered output (``_sorted_by``). The top n-gram of each order
     is one sort of the gram array plus one run-length scan
     (``_top_run``), O(n log n) per row; among grams tied on the max
     count the lexicographically smallest wins, so both engines pick
     the same gram. Its (count, gram) struct is staged through a
     projected column because top_frac reads both fields and
     interpreted HOFs are not common-subexpression-eliminated."""
+    return _sorted_by(_gopher_signals(docs), "doc_id")
+
+
+def _gopher_signals(docs: DataFrame) -> DataFrame:
+    """gopher_quality_signals' per-row kernel, unordered."""
     staged = docs.select(
         "doc_id", "text", F.split(F.col("text"), " ").alias("ws"))
     for k in (2, 3):
@@ -1445,9 +1479,8 @@ def gopher_quality_signals(docs: DataFrame) -> DataFrame:
                F.lit("top_bigram_heavy")),
         F.when(F.col("top3_char_frac") > GOPHER_TOP3_MAX,
                F.lit("top_trigram_heavy")))
-    return (m.select("*", (reasons == "").alias("keep"),
-                     reasons.alias("drop_reasons"))
-            .orderBy("doc_id"))
+    return m.select("*", (reasons == "").alias("keep"),
+                    reasons.alias("drop_reasons"))
 
 
 def _gopher_top_frac_duck(k: int) -> str:

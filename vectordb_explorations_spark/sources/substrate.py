@@ -28,8 +28,9 @@ path falls back to a default geometry. An append accepts a ``building``
 sidecar that still carries ``build`` — that is the marker replay of an
 interrupted append, and it ends by writing ``ready``. An interrupted
 persist (``building`` without ``build``) only a rebuild can finish. The
-IVF-PQ/SQ8 layouts carry ``rows`` only; a layout without the sidecar is
-recounted by the caller (``pq._layout_corpus_n``).
+IVF-PQ/SQ8 layouts carry ``rows`` and ``schemas`` only; a layout without
+the sidecar is recounted by the caller (``pq._layout_corpus_n``) and
+read with schema inference.
 """
 
 from __future__ import annotations
@@ -114,13 +115,29 @@ def stamp(spark: SparkSession, base: str, build: dict, rows: int,
     """A persist's last write: the ``ready`` sidecar with the build
     geometry, the row count and each face's read-back schema
     (``faces`` maps face name to its number of hive levels)."""
+    write_ready(spark, base, {"build": build, "rows": int(rows),
+                              "schemas": face_schemas(spark, base, faces)})
+
+
+def face_schemas(spark: SparkSession, base: str,
+                 faces: dict[str, int]) -> dict[str, str]:
+    """The ``schemas`` sidecar value: each non-empty face's read-back
+    schema as JSON (``faces`` maps face name to its number of hive
+    levels)."""
     schemas = {}
     for face, levels in faces.items():
         schema = hive_leaf_schema(spark, _face_dir(base, face), levels)
         if schema is not None:
             schemas[face] = schema.json()
-    write_ready(spark, base, {"build": build, "rows": int(rows),
-                              "schemas": schemas})
+    return schemas
+
+
+def face_schema(meta: dict, face: str):
+    """The StructType a sidecar stamps for ``face``, or None."""
+    from pyspark.sql.types import StructType
+
+    s = meta.get("schemas", {}).get(face)
+    return StructType.fromJson(json.loads(s)) if s else None
 
 
 def read_meta(spark: SparkSession, base: str, op: str,
@@ -176,14 +193,10 @@ def read_probe(spark: SparkSession, base: str, meta: dict, face: str,
     ``a * pack + b`` isin keeps the probe exact inside the pruned
     rectangle. One isin, not an OR-chain: an OR over hundreds of pairs
     overflows Catalyst's expression-tree conversion."""
-    from pyspark.sql.types import StructType
-
     keys = {tuple(int(v) for v in k) for k in keys}
     d = _face_dir(base, face)
-    s = meta["schemas"].get(face)
-    idx = read_hive_pruned(
-        spark, d, levels, keys,
-        schema=StructType.fromJson(json.loads(s)) if s else None)
+    idx = read_hive_pruned(spark, d, levels, keys,
+                           schema=face_schema(meta, face))
     if idx is None:
         idx = spark.read.parquet(d).limit(0)
     pred = None
