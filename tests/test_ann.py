@@ -916,36 +916,26 @@ def test_ivf_delete_partitioned_lifecycle(spark, sf_dir, tmp_path):
     assert a1 == a2
 
 
-def test_ivf_delete_routing_assign_n_mismatch_raises(spark, sf_dir,
-                                                     tmp_path):
-    """The routing locate path finds replicas only under the build's
-    assign_n; a smaller caller value would silently leave replicas
-    serving the erased ids (r13 ADVICE) — the residual guard must
-    catch it, and the matching value must pass the same guard."""
+def test_ivf_delete_routing_erases_every_replica(spark, sf_dir, tmp_path):
+    """The routing locate path routes the victims with the sidecar's
+    stamped assign_n, so it finds every replica of a vector held in two
+    lists: none serves the erased id afterwards."""
     from vectordb_explorations_spark.operators.ann import (
         ivf_delete_partitioned, ivf_persist_partitioned)
 
     emb = load_table(spark, "embeddings", sf_dir)
-    assigned, cents = ivf_build(emb, num_centroids=8, assign_n=2)
+    assigned, cents = ivf_build(emb, num_centroids=8)
     idx_rows = assigned.groupBy("vec_id").count()
-    # need a victim that actually HAS two distinct lists, else
-    # assign_n=1 routing would coincidentally find everything
+    # a victim that actually HAS two distinct lists
     vid = idx_rows.where(F.col("count") >= 2).select("vec_id").first()[0]
     vict = emb.where(F.col("vec_id") == vid)
 
-    path = str(tmp_path / "ivf_mismatch")
+    path = str(tmp_path / "ivf_replicas")
     ivf_persist_partitioned(assigned, path)
-    with pytest.raises(RuntimeError, match="assign_n"):
-        ivf_delete_partitioned(spark, path, [], centroids=cents,
-                               assign_n=1, delete_vectors=vict)
-
-    # correct assign_n erases every replica and the guard stays silent
-    path2 = str(tmp_path / "ivf_match")
-    ivf_persist_partitioned(assigned, path2)
-    n = ivf_delete_partitioned(spark, path2, [], centroids=cents,
-                               assign_n=2, delete_vectors=vict)
+    n = ivf_delete_partitioned(spark, path, [], centroids=cents,
+                               delete_vectors=vict)
     assert n == 2
-    assert spark.read.parquet(path2) \
+    assert spark.read.parquet(path) \
         .where(F.col("vec_id") == vid).count() == 0
 
 
@@ -1009,6 +999,50 @@ def test_hnsw_delete_partitioned_lifecycle(spark, sf_dir, tmp_path):
     got_ids = {r["vec_id"] for r in got.collect()}
     assert not (got_ids & set(victims))
     assert got_ids
+
+
+def test_hnsw_delete_rebuilds_with_the_build_seed(spark, sf_dir, tmp_path):
+    """Each graph records the seed it was built with (the build's seed
+    + shard), and a delete rebuilds a touched shard with it: the
+    rewritten shard equals a fresh HnswGraph(seed=7 + shard) bulk-built
+    over the shard's survivors."""
+    import pickle
+
+    import numpy as np
+
+    from vectordb_explorations_spark.operators.hnsw import (
+        hnsw_delete_partitioned, hnsw_persist_partitioned)
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    path = str(tmp_path / "hnsw_seed7")
+    hnsw_persist_partitioned(
+        hnsw_build(emb, num_shards=4, shard_by="kmeans", seed=7), path)
+
+    def graphs():
+        return {int(r["shard"]): pickle.loads(r["blob"]) for r in
+                spark.read.parquet(path).select("shard", "blob").collect()}
+
+    before = graphs()
+    victim = before[min(before)].ids[0]
+    hnsw_delete_partitioned(spark, path, [victim])
+    after = graphs()
+    touched = [s for s, g in before.items() if victim in g.ids]
+    assert touched
+    for s in touched:
+        old = before[s]
+        keep = np.asarray(old.ids) != victim
+        ids = np.asarray(old.ids, dtype=np.int64)[keep]
+        order = np.argsort(ids, kind="stable")
+        want = HnswGraph(dim=old.dim, m=old.m,
+                         ef_construction=old.ef_construction, seed=7 + s)
+        want.bulk_add(ids[order], old.vectors[: old.n][keep][order])
+        got = after[s]
+        assert (got.ids, got.levels, got.entry) == \
+            (want.ids, want.levels, want.entry)
+        for a, b in zip(got.__getstate__()["_packed_adj"],
+                        want.__getstate__()["_packed_adj"]):
+            assert np.array_equal(a, b)
+        assert got.seed == 7 + s
 
 
 def _hnsw_members_rows(spark, path):
@@ -1169,11 +1203,10 @@ def test_hnsw_delete_stale_sidecar_never_drops_survivors(
 
 
 def test_ivf_delete_full_erasure_with_verify(spark, sf_dir, tmp_path):
-    """Review regression (r14 continuation): deleting EVERY vector via
-    the routing path with verify_residuals=True must return the full
-    count, not crash — the post-rewrite verification read has no
-    parquet left to infer a schema from once all list directories are
-    gone."""
+    """Deleting EVERY vector via the routing path returns the full
+    count and does not crash once no list directory is left: the
+    sidecar's stamped schema reads the empty layout (there is no
+    parquet left to infer one from), and its row count drops to 0."""
     import os
 
     from vectordb_explorations_spark.operators.ann import (
@@ -1186,7 +1219,8 @@ def test_ivf_delete_full_erasure_with_verify(spark, sf_dir, tmp_path):
     total = spark.read.parquet(path).count()
 
     n = ivf_delete_partitioned(
-        spark, path, None, delete_vectors=emb, centroids=cents,
-        verify_residuals=True)
+        spark, path, None, delete_vectors=emb, centroids=cents)
     assert n == total
     assert not [d for d in os.listdir(path) if d.startswith("list_id=")]
+    from vectordb_explorations_spark.sources.substrate import read_rows
+    assert read_rows(spark, path) == 0

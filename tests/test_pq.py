@@ -197,42 +197,43 @@ def test_append_clears_corpus_memo(spark, sf_dir, tmp_path):
     assert _corpus_rows(df, rep) == n0  # snapshot semantics, recounted
 
 
-def test_layout_corpus_n_fallback_counts_unpruned(spark, tmp_path):
-    """When the sidecar is missing, _layout_corpus_n counts the FULL
-    layout (never a probe-pruned frame) and warns; with the sidecar it
-    is job-free and silent."""
-    import warnings
+def test_layout_without_sidecar_raises(spark, sf_dir, tmp_path):
+    """A codes layout without its sidecar is not recounted or inferred:
+    the probe and the append raise, and nothing is written. With the
+    sidecar the corpus N is the stamped ``rows``."""
+    import os
 
-    from vectordb_explorations_spark.operators.pq import _layout_corpus_n
-    from vectordb_explorations_spark.sources.substrate import write_ready
+    from vectordb_explorations_spark.operators.pq import (
+        ivfpq_append_partitioned, ivfpq_build, ivfpq_persist_partitioned,
+        ivfpq_probe_partitioned)
+    from vectordb_explorations_spark.sources.substrate import (
+        SubstrateMetaError, meta_path, read_rows)
 
+    emb = load_table(spark, "embeddings", sf_dir)
+    codes, cents, books = ivfpq_build(emb, num_centroids=8, m_subspaces=8,
+                                      k_codes=16)
     path = str(tmp_path / "nosidecar")
-    (spark.range(200).selectExpr("id AS vec_id", "id % 4 AS list_id")
-     .write.partitionBy("list_id").parquet(path))
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        n = _layout_corpus_n(spark, path, 2)
-    assert n == 100  # 200 rows / replication 2 — the UNPRUNED count
-    assert any("_meta.json" in str(w.message) for w in caught)
+    ivfpq_persist_partitioned(codes, path)
+    assert read_rows(spark, path) == emb.count()
 
-    write_ready(spark, path, {"rows": 100})
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        assert _layout_corpus_n(spark, path, 2) == 100
-    assert not [w for w in caught if "corpus" in str(w.message)]
+    os.remove(meta_path(path))
+    files = sorted(os.listdir(path))
+    with pytest.raises(SubstrateMetaError, match="missing"):
+        ivfpq_probe_partitioned(spark, path, cents, books,
+                                sample_queries(emb, 2), K, nprobe=3,
+                                refine_with=emb, refine_factor="auto")
+    with pytest.raises(SubstrateMetaError, match="missing"):
+        ivfpq_append_partitioned(path, cents, books, emb.limit(5))
+    assert sorted(os.listdir(path)) == files
 
 
 def test_corpus_meta_sidecar_on_uri_layout(spark, sf_dir, tmp_path):
     """The corpus-size sidecar goes through the Hadoop FS API, so a
     layout addressed by URI (``file://`` here; HDFS / object stores the
-    same way) keeps it: N resolves with no count job and no
-    missing-sidecar warning, and the layout serves."""
-    import warnings
-
-    from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
+    same way) keeps it: N resolves with no count job, and the layout
+    serves."""
     from vectordb_explorations_spark.operators.pq import (
-        _layout_corpus_n, ivfpq_build,
-        ivfpq_persist_partitioned, ivfpq_probe_partitioned)
+        ivfpq_build, ivfpq_persist_partitioned, ivfpq_probe_partitioned)
     from vectordb_explorations_spark.sources.substrate import read_rows
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -246,14 +247,11 @@ def test_corpus_meta_sidecar_on_uri_layout(spark, sf_dir, tmp_path):
     sc = spark.sparkContext
     sc.setJobGroup("corpus-meta-uri", "resolve corpus N")
     try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            assert _layout_corpus_n(spark, path, IVF_ASSIGN_N) == n
+        assert read_rows(spark, path) == n
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup("corpus-meta-uri")) == []
-    assert not [w for w in caught if "_meta.json" in str(w.message)]
 
     queries = sample_queries(emb, 3)
     served = ivfpq_probe_partitioned(spark, path, cents, books, queries, K,

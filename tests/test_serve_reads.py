@@ -128,11 +128,13 @@ def test_refine_query_side_is_not_a_python_rdd(spark, layouts, tmp_path):
 
 
 # Spark jobs per serve call over a local (pandas-built) query frame.
-# IVF-PQ/SQ8: the probe scan and the exact re-score; the layout is read
-# with the schema its sidecar stamps. HNSW: schema discovery of its
-# layout (it has no sidecar), the centroid collect and the blob scan.
-# Merges, ranking and the served frame are driver-side.
-SERVE_JOBS = {"hnsw_probe_partitioned": 3,
+# Every layout is read with the schema its sidecar stamps, so no call
+# runs a schema-discovery job. IVF-PQ/SQ8: the probe scan and the exact
+# re-score, with merges, ranking and the served frame on the driver.
+# HNSW: the centroid collect and the blob scan. IVF-flat: the probe scan
+# and its ranking exchange.
+SERVE_JOBS = {"hnsw_probe_partitioned": 2,
+              "ivf_probe_partitioned": 2,
               "ivfpq_probe_partitioned": 2,
               "ivfsq_probe_partitioned": 2}
 

@@ -25,9 +25,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from vectordb_explorations_spark.schemas import EMBEDDING_DIM
+from vectordb_explorations_spark.sources import substrate
 
 
-# ---------------- scale-adaptive candidate policy (r7 verdict item 3) --
+# ---------------- scale-adaptive candidate policy ----------------
 #
 # The 200k/1M probes (SCALE_NOTES) measured WHY a fixed bucket_cap decays
 # recall: hot-bucket refinement bounds candidates per probe at ~cap, so
@@ -53,7 +54,7 @@ LSH_CAP_FRACTION = 1024 / 100_000  # ≈1% — cap/N at the 100k anchor
 LSH_MULTIPROBE_THRESHOLD = 500_000
 # Past this corpus size LSH's candidate-pair EXCHANGE, not its probe
 # count, is the serving bottleneck (10M measured: ring 188 s / ranked-24
-# 127 s per batch-100 vs IVF 9.1 s, SQ8 3.7 s — SCALE_NOTES r10); serving
+# 127 s per batch-100 vs IVF 9.1 s, SQ8 3.7 s — SCALE_NOTES); serving
 # without an explicit probe_budget warns and points at the partitioned
 # IVF families.
 LSH_EXCHANGE_WARN_N = 5_000_000
@@ -156,6 +157,18 @@ def rank_pool(pool, dist_col: str, n: int, qid_col: str, id_col: str):
            .drop_duplicates([qid_col, id_col])
            .groupby(qid_col, sort=False).head(n))
     return top.assign(rank=top.groupby(qid_col, sort=False).cumcount() + 1)
+
+
+def list_rows(lists: np.ndarray, ids: np.ndarray):
+    """Per inverted list in one Arrow batch of an IVF-family scan: the
+    list id and the positions of its rows, one row per distinct id. A
+    replayed append can leave a list holding an id twice, and a repeat
+    must not take two of a query's top-n slots there; keeping one row
+    per batch and list is enough, because the merges keep one row per
+    (query, id)."""
+    for li in np.unique(lists):
+        sel = np.flatnonzero(lists == li)
+        yield int(li), sel[np.unique(ids[sel], return_index=True)[1]]
 
 
 def local_result(spark, top, dist_col: str, qid_col: str,
@@ -263,9 +276,9 @@ def lsh_refine_hot_buckets(index: DataFrame, vectors: DataFrame,
     row + the hot rows — driver transfer bounded by hot buckets, never
     the key space): cap = max(floor, N * LSH_CAP_FRACTION), holding the
     inspected candidate fraction — and therefore recall — constant as N
-    grows (r7 verdict item 3; the 1M probe measured the decay of a fixed
-    cap). A fixed int cap below the calibrated fraction emits a loud
-    RuntimeWarning instead of silently degrading.
+    grows (the 1M probe measured the decay of a fixed cap). A fixed int
+    cap below the calibrated fraction emits a loud RuntimeWarning
+    instead of silently degrading.
 
     ``materialize=True`` returns the refined index already cached and
     counted, overlapping the no-hot-buckets result's materialization with
@@ -276,8 +289,8 @@ def lsh_refine_hot_buckets(index: DataFrame, vectors: DataFrame,
 
     On clustered corpora hyperplane signs are dominated by the cluster
     offset, so whole clusters land in one (table, bucket) and the candidate
-    set degenerates to a large corpus fraction (round-1 SCALE_NOTES measured
-    ~60% at 200k; VERDICT item 5). Extra *hyperplanes* can't fix that — the
+    set degenerates to a large corpus fraction (SCALE_NOTES measured
+    ~60% at 200k). Extra *hyperplanes* can't fix that — the
     offset dominates their signs too — so hot buckets are refined with a
     small seeded k-means (k = ceil(size/cap)) fit on the bucket's own
     members: data-adaptive sub-buckets that split the cluster where random
@@ -291,7 +304,7 @@ def lsh_refine_hot_buckets(index: DataFrame, vectors: DataFrame,
     - sub_centroids: a LIST of Rows (table_id, bucket, sub, centroid) —
       bounded by construction at total_hot_members / cap rows, so it is
       collected here rather than returned lazily: a lazy DF re-ran the
-      whole k-means stage once per downstream action (round-2 profiling),
+      whole k-means stage once per downstream action (profiled),
       and search-side collect cost one Spark job per query batch.
 
     Scale shape: one narrow agg for sizes, one join that moves only HOT
@@ -325,10 +338,9 @@ def lsh_refine_hot_buckets(index: DataFrame, vectors: DataFrame,
     # price the fixed-cap recall-risk check — and (b) the HOT bucket
     # list. Collecting the full histogram for both would be driver
     # transfer bounded only by min(2^num_planes, N) * num_tables rows —
-    # O(N * num_tables) once the plane count outgrows the corpus (the
-    # r8 ADVICE regression vs the old Spark-side sz > cap filter).
+    # O(N * num_tables) once the plane count outgrows the corpus.
     # With a FIXED cap the stats ride the hot-row collect itself via an
-    # Observation (one job, no cache — the r9 cache + stats-agg + collect
+    # Observation (one job, no cache — a cache + stats-agg + collect
     # triple cost ~0.6-1.8 s of extra cold stages/codegen at sf0.1); only
     # 'auto' pays a stats job first, because the cap the filter needs IS
     # the thing being resolved, and there the cached histogram keeps it
@@ -527,8 +539,8 @@ def lsh_search(vectors: DataFrame, queries: DataFrame, k: int,
         warnings.warn(
             f"LSH serving at N={corpus_n:,}: the candidate-pair exchange "
             f"dominates past ~{LSH_EXCHANGE_WARN_N:,} rows (10M measured: "
-            f"ring 188 s/batch100 vs IVF 9 s, SQ8 3.7 s — SCALE_NOTES "
-            f"r10). Pass probe_budget~=24 (ranked probing, ~recall-0.02) "
+            f"ring 188 s/batch100 vs IVF 9 s, SQ8 3.7 s — SCALE_NOTES). "
+            f"Pass probe_budget~=24 (ranked probing, ~recall-0.02) "
             f"or serve a partition-pruned IVF/IVF-PQ layout instead.",
             RuntimeWarning, stacklevel=2)
 
@@ -662,10 +674,13 @@ def lsh_search(vectors: DataFrame, queries: DataFrame, k: int,
 
 # ---------------- IVF (inverted-file / coarse k-means) ----------------
 
-# Default boundary replication for IVF assignment. Shared constant (r7
-# ADVICE): ivfpq_build samples its residual-fit population at this same
+# Boundary replication of every IVF-family build and of the kmeans HNSW
+# build. ivfpq_build samples its residual-fit population at this same
 # replication so the fitted residuals match the encoded population — a
 # drift between the two would silently skew the codebooks with no error.
+# Each persisted layout stamps the value it was built with
+# (``build.assign_n`` in its sidecar), and its maintenance reads it from
+# there, so changing this constant cannot mis-route an older layout.
 IVF_ASSIGN_N = 2
 
 
@@ -673,22 +688,21 @@ def ivf_build(vectors: DataFrame, num_centroids: int = 16, seed: int = 42,
               vec_col: str = "embedding",
               max_iter: int = 10,
               fit_sample: int = 50_000,
-              assign_n: int = IVF_ASSIGN_N,
               id_col: str = "vec_id") -> tuple[DataFrame, np.ndarray]:
     """IVF coarse quantizer: seeded k-means centroids, each vector assigned
-    to its ``assign_n`` nearest centroids' lists. Returns
+    to its ``IVF_ASSIGN_N`` nearest centroids' lists. Returns
     (assigned_df, centroids).
 
     Scale: the fit runs DRIVER-SIDE on a bounded sample (centroid quality
     depends on the distribution, not the corpus size — fitting on 100 TB
     would iterate the whole corpus max_iter times; an MLlib fit on the
     same bounded sample still costs ~2 Spark jobs per Lloyd iteration,
-    which round-2 profiling measured as most of the build wall time).
+    which profiling measured as most of the build wall time).
     ASSIGNMENT is the distributed half: one Arrow-batched GEMM pass over
     the full table. Persist the assignment bucketed by list_id for pruned
     probes.
 
-    ``assign_n=2`` is spill-style replication: boundary vectors (whose
+    ``IVF_ASSIGN_N=2`` is spill-style replication: boundary vectors (whose
     true neighbors straddle two cells) land in both lists, which measured
     +0.15-0.2 recall@10 at fixed nprobe on the fixture corpus for a 2x
     index footprint — the classic IVF replication trade. Search must
@@ -699,7 +713,7 @@ def ivf_build(vectors: DataFrame, num_centroids: int = 16, seed: int = 42,
     from vectordb_explorations_spark.operators.pq import _kmeans_1d
 
     # Hash-ordered fit sample: an unordered LIMIT is partition-layout-
-    # dependent, so centroids would differ run to run (round-1 ADVICE);
+    # dependent, so centroids would differ run to run;
     # ordering by xxhash64(id) is deterministic AND unbiased (an id-prefix
     # sample correlates with the data when ids encode e.g. labels), and
     # orderBy+limit plans as TakeOrderedAndProject — no global sort.
@@ -721,7 +735,7 @@ def ivf_build(vectors: DataFrame, num_centroids: int = 16, seed: int = 42,
             best, best_inertia = cand, inertia
     centroids = best
 
-    assigned = ivf_assign(vectors, centroids, assign_n=assign_n,
+    assigned = ivf_assign(vectors, centroids, assign_n=IVF_ASSIGN_N,
                           vec_col=vec_col)
     return assigned, centroids
 
@@ -753,7 +767,7 @@ def ivf_assign(vectors: DataFrame, centroids: np.ndarray,
             # kind='stable' so exactly-equal distances break toward the
             # SMALLER centroid index — the (dist, seed_id) tie-break the
             # join-path twin documents; the default introsort gives no
-            # such guarantee on equal keys (r8 ADVICE).
+            # such guarantee on equal keys.
             near = np.argsort(d, axis=1, kind="stable")[:, :an]  # (n, an)
             out = pdf.loc[pdf.index.repeat(an)].copy()
             out["list_id"] = near.reshape(-1).astype(np.int32)
@@ -818,10 +832,9 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries: DataFrame,
             mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
             lists = pdf["list_id"].to_numpy(dtype=np.int64)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li in np.unique(lists):
-                sel = lists == li
+            for li, sel in list_rows(lists, ids):
                 sub, sids = mat[sel], ids[sel]
-                for qi in list_q[int(li)]:
+                for qi in list_q[li]:
                     # identical per-row arithmetic to the joined shape
                     # (row - query, einsum self-dot): bit-equal distances
                     d = sub - qmat[qi]
@@ -838,7 +851,7 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries: DataFrame,
         })
         # Dedupe assign_n replicas WITHIN the partition first: duplicate
         # rows would eat top-k slots (measured recall 0.96 -> 0.66 without
-        # this). Cross-partition duplicates can still survive — the bounded
+        # this). Cross-partition duplicates can still survive; the bounded
         # merge dedupes again.
         yield (flat.sort_values([qid_col, "dist", id_col])
                .drop_duplicates([qid_col, id_col])
@@ -885,7 +898,7 @@ def ann_search(vectors: DataFrame, queries: DataFrame, k: int,
     - **hyperplane LSH** wins on near-uniform corpora (tiny candidate sets,
       build is a narrow map), but on clustered corpora whole clusters share
       hyperplane signs and buckets degenerate. Hot-bucket refinement
-      (``lsh_refine_hot_buckets``) bounds the damage (round 1 measured
+      (``lsh_refine_hot_buckets``) bounds the damage (SCALE_NOTES measured
       candidates at ~60% of a 200k clustered corpus unbounded; ~25% with
       refinement at recall 0.86) but cannot make LSH *good* there;
     - **IVF** fits centroids to the data, so clusters are exactly what it
@@ -896,8 +909,8 @@ def ann_search(vectors: DataFrame, queries: DataFrame, k: int,
     ``lsh_bucket_skew`` — the fraction of index rows in over-cap buckets —
     and routes to IVF when it exceeds ``hot_frac_threshold``, else serves
     refined LSH. The decision statistic is one narrow agg over (table_id,
-    bucket) counts: no vectors move. (Round-1 VERDICT item 5: LSH demoted
-    to near-uniform corpora, IVF the routed default elsewhere.)
+    bucket) counts: no vectors move. LSH serves near-uniform corpora;
+    IVF is the routed default elsewhere.
     """
     if method not in ("auto", "lsh", "ivf"):
         raise ValueError(f"unknown ANN method {method!r}")
@@ -966,7 +979,7 @@ def lsh_probe_bucketed(spark, table_name: str,
     The conf is toggled only while the returned DataFrame's physical plan
     is forced (QueryExecution is memoized per Dataset, so later actions
     reuse the bucket-pruned plan), then restored — no session-wide side
-    effect (round-1 ADVICE)."""
+    effect."""
     conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
     prev = spark.conf.get(conf_key, "true")
     spark.conf.set(conf_key, "false")
@@ -983,6 +996,78 @@ def lsh_probe_bucketed(spark, table_name: str,
         spark.conf.set(conf_key, prev)
 
 
+def _write_lists(df: DataFrame, path: str, persist: bool) -> int:
+    """Hive-append ``df`` (its columns plus list_id) under ``path`` by
+    list_id and return the rows written, an observed metric of the write
+    job. A persist writes into the base ``substrate.begin_persist``
+    emptied, one file per list directory (``sinks.repartition_for_hive``);
+    an append adds files only to the lists its rows touch, on the v1
+    committer (``sinks.V1_COMMITTER``)."""
+    from pyspark.sql import Observation
+
+    from vectordb_explorations_spark.sources.sinks import (
+        V1_COMMITTER, repartition_for_hive)
+
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    if persist:
+        df = repartition_for_hive(df, "list_id")
+    (df.write.mode("append").options(**({} if persist else V1_COMMITTER))
+     .partitionBy("list_id").parquet(path))
+    return int(obs.get.get("rows") or 0)
+
+
+def persist_lists(df: DataFrame, path: str, rows: int | None = None) -> None:
+    """Persist an IVF-family layout (IVF-flat, IVF-PQ, IVF-SQ8) under the
+    substrate sidecar (``sources/substrate.py``): ``building``, the list
+    directories, then the ``ready`` stamp with ``build.assign_n`` (the
+    ``IVF_ASSIGN_N`` every IVF build replicates with), the read-back
+    schema and ``rows``: the rows written, unless the caller counts
+    vectors."""
+    spark = df.sparkSession
+    substrate.begin_persist(spark, path)
+    written = _write_lists(df, path, persist=True)
+    substrate.stamp(spark, path, {"assign_n": IVF_ASSIGN_N},
+                    written if rows is None else rows, {"": 1})
+
+
+def append_lists(path: str, op: str, centroids: np.ndarray,
+                 new_vectors: DataFrame, encode, count_vectors: bool,
+                 id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+    """The append shared by the IVF-family layouts: assign ONLY the new
+    batch to its ``build.assign_n`` nearest FROZEN centroids (the stamp's
+    value, through the build's own ``ivf_assign``), ``encode`` the
+    assigned rows into the layout's columns plus list_id, and hive-append
+    them between a ``building`` marker and the ``ready`` stamp. ``rows``
+    advances by the rows written, or by the vectors written when
+    ``count_vectors`` (``ivf_assign`` emits exactly assign_n rows per
+    vector), so the batch is read once. A path holding no layout yet
+    starts one (``substrate.read_append_meta``).
+
+    Contract: batch ids are new to the layout and unique within the
+    batch. A crash after the write leaves ``building``; replaying the
+    append writes the batch again and counts ``rows`` from the marker's
+    pre-append value, and the repeated rows do not change what is served
+    (``list_rows`` scores one row per id, the merges keep one per
+    query and id)."""
+    from vectordb_explorations_spark.operators.pq import invalidate_corpus_n
+
+    spark = new_vectors.sparkSession
+    meta = substrate.read_append_meta(spark, path, op,
+                                      {"assign_n": IVF_ASSIGN_N})
+    an = max(1, min(int(meta["build"]["assign_n"]), centroids.shape[0]))
+    assigned = ivf_assign(new_vectors.select(id_col, vec_col), centroids,
+                          assign_n=an, vec_col=vec_col)
+    substrate.write_building(spark, path, meta, op)
+    written = _write_lists(encode(assigned), path, persist=False)
+    substrate.write_ready(spark, path, {
+        **meta, "rows": meta["rows"] + written // (an if count_vectors else 1),
+        "schemas": (meta["schemas"]
+                    or substrate.face_schemas(spark, path, {"": 1}))})
+    # the layout grew: a memoized count over an older frame of it is stale
+    invalidate_corpus_n()
+
+
 def ivf_persist_partitioned(assigned: DataFrame, path: str,
                             id_col: str = "vec_id",
                             vec_col: str = "embedding") -> None:
@@ -991,14 +1076,13 @@ def ivf_persist_partitioned(assigned: DataFrame, path: str,
     ``list_id IN (...)`` filter prunes unprobed lists at the FILE LISTING
     (PartitionFilters in the scan), before any byte is read. At 100 TB
     the per-probe I/O is nprobe/num_centroids of the index regardless of
-    corpus size."""
-    (assigned.select(id_col, vec_col, "list_id")
-     .write.mode("overwrite").partitionBy("list_id").parquet(path))
+    corpus size. The sidecar (``persist_lists``) counts index rows, one
+    per (vector, list) replica."""
+    persist_lists(assigned.select(id_col, vec_col, "list_id"), path)
 
 
 def ivf_append_partitioned(path: str, centroids: np.ndarray,
                            new_vectors: DataFrame,
-                           assign_n: int = 2,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding") -> None:
     """Incremental IVF maintenance: assign ONLY the new batch against the
@@ -1010,25 +1094,19 @@ def ivf_append_partitioned(path: str, centroids: np.ndarray,
     same code path), so probes over the appended layout equal
     ivf_search over the logical union — pinned by tests/test_ann.py.
     Centroid drift is handled by periodic re-train + full rewrite (the
-    standard IVF maintenance split; list-size telemetry via a trivial
-    partition count says when)."""
-    from vectordb_explorations_spark.sources.sinks import V1_COMMITTER
-
-    (ivf_assign(new_vectors, centroids, assign_n=assign_n,
-                vec_col=vec_col)
-     .select(id_col, vec_col, "list_id")
-     .write.mode("append").options(**V1_COMMITTER)
-     .partitionBy("list_id").parquet(path))
+    standard IVF maintenance split). Sidecar and replay contract in
+    ``append_lists``."""
+    append_lists(path, "ivf_append_partitioned", centroids, new_vectors,
+                 lambda a: a.select(id_col, vec_col, "list_id"),
+                 count_vectors=False, id_col=id_col, vec_col=vec_col)
 
 
 def ivf_delete_partitioned(spark, path: str,
                            delete_ids: "list[int] | DataFrame",
                            centroids: np.ndarray | None = None,
-                           assign_n: int = 2,
                            id_col: str = "vec_id",
                            vec_col: str = "embedding",
-                           delete_vectors: DataFrame | None = None,
-                           verify_residuals: bool = True) -> int:
+                           delete_vectors: DataFrame | None = None) -> int:
     """Delete vectors by id from the persisted IVF layout, rewriting
     ONLY the list directories that contain them — the missing third of
     the index lifecycle (persist / append / probe / DELETE; GDPR
@@ -1038,11 +1116,12 @@ def ivf_delete_partitioned(spark, path: str,
 
     Locating the victims: with ``delete_vectors`` (an (id, vector)
     frame) their lists come from routing against the FROZEN centroids
-    exactly as the build/append did (``ivf_assign`` — same code path,
-    same assign_n, so ALL replicas are found): O(batch), zero index
-    reads. With ids only, ONE narrow scan of (vec_id, list_id) locates
-    them — column pruning means the embedding bytes are never read,
-    so even this path reads a few percent of the index's footprint.
+    exactly as the build/append did (``ivf_assign`` with the stamped
+    ``build.assign_n``, so ALL replicas are found): O(batch), zero
+    index reads. With ids only, ONE narrow scan of (vec_id, list_id)
+    locates them — column pruning means the embedding bytes are never
+    read, so even this path reads a few percent of the index's
+    footprint.
 
     Rewrite discipline: the touched lists' SURVIVOR rows are
     localCheckpointed (bounded: nprobe-like fraction of the index;
@@ -1051,23 +1130,20 @@ def ivf_delete_partitioned(spark, path: str,
     directories keep their exact bytes (pinned by tests). A list whose
     rows are ALL deleted would be invisible to a dynamic overwrite
     (no partition in the output -> old files survive), so emptied
-    list directories are removed explicitly via the Hadoop FS API.
-
-    Residual guard (r13 ADVICE): the routing path finds replicas only
-    if the caller's ``assign_n`` matches the build's — a mismatch
-    would silently leave replicas behind, still serving erased ids.
-    With ``verify_residuals`` (default), the routing path re-scans the
-    rewritten index's narrow (id, list_id) columns for surviving
-    victim rows and raises if any exist (the ids-only path needs no
-    guard — its locate IS that scan). The verification costs one
-    column-pruned two-column pass; erasure-at-scale callers who
-    persist assign_n with the index may disable it."""
-    idx = spark.read.parquet(path)
+    list directories are removed explicitly
+    (``substrate.remove_dirs``). The writes run between a ``building``
+    marker and the ``ready`` stamp, whose ``rows`` is recounted from
+    the rewritten layout, so replaying an interrupted delete finishes
+    it."""
+    op = "ivf_delete_partitioned"
+    meta = substrate.read_meta(spark, path, op, replay=True)
+    idx = substrate.read_face(spark, path, meta)
     if delete_vectors is not None:
         if centroids is None:
             raise ValueError("delete_vectors routing needs the index's "
                              "frozen centroids")
-        routed = ivf_assign(delete_vectors, centroids, assign_n=assign_n,
+        routed = ivf_assign(delete_vectors, centroids,
+                            assign_n=int(meta["build"]["assign_n"]),
                             vec_col=vec_col)
         touched = sorted({int(r["list_id"]) for r in
                           routed.select("list_id").distinct().collect()})
@@ -1079,60 +1155,39 @@ def ivf_delete_partitioned(spark, path: str,
                           delete_ids.select(id_col).distinct().collect()})
         else:
             ids = sorted(set(int(i) for i in delete_ids))
-        if not ids:
-            return 0
         touched = sorted({int(r["list_id"]) for r in
                           idx.where(F.col(id_col).isin(ids))
-                          .select("list_id").distinct().collect()})
-    if not touched:
+                          .select("list_id").distinct().collect()}
+                         ) if ids else []
+    if not touched and meta["state"] == "ready":
         return 0
-    touched_rows = idx.where(F.col("list_id").isin(touched))
-    n_removed = touched_rows.where(F.col(id_col).isin(ids)).count()
-    survivors = (touched_rows.where(~F.col(id_col).isin(ids))
-                 .select(id_col, vec_col, "list_id")
-                 .localCheckpoint())
-    kept_lists = {int(r["list_id"]) for r in
-                  survivors.select("list_id").distinct().collect()}
-    if kept_lists:
-        # no repartition("list_id"): a single inverted list can be GBs
-        # at real scale, and collapsing it to one writer task is the
-        # inverse of the build-time many-tiny-dirs fix; survivors keep
-        # the pruned read's parallelism (sinks.delete_rows_partitioned
-        # documents the same trade)
-        from vectordb_explorations_spark.sources.sinks import V1_COMMITTER
-        (survivors
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .options(**V1_COMMITTER)
-         .partitionBy("list_id").parquet(path))
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        spark._jsc.hadoopConfiguration())
-    for li in sorted(set(touched) - kept_lists):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/list_id={li}"),
-                  True)
-    if delete_vectors is not None and verify_residuals:
-        # a delete that emptied EVERY list leaves no parquet to read
-        # (schema inference would throw on the bare _SUCCESS dir) —
-        # and trivially no residuals (r14 continuation review)
-        remaining_dirs = [s.getPath().getName() for s in
-                          fs.listStatus(
-                              jvm.org.apache.hadoop.fs.Path(path))
-                          if s.isDirectory()
-                          and s.getPath().getName()
-                          .startswith("list_id=")]
-        if not remaining_dirs:
-            return n_removed
-        residual = (spark.read.parquet(path)
-                    .select(id_col, "list_id")
-                    .where(F.col(id_col).isin(ids)).count())
-        if residual:
-            raise RuntimeError(
-                f"ivf_delete_partitioned: {residual} replica row(s) of "
-                f"the victim ids survive outside the routed lists — "
-                f"the caller's assign_n={assign_n} does not match the "
-                f"build's. Re-run with the build's assign_n or the "
-                f"ids-only path (delete_ids=...) to finish the erasure.")
+    substrate.write_building(spark, path, meta, op)
+    n_removed = 0
+    if touched:
+        touched_rows = idx.where(F.col("list_id").isin(touched))
+        n_removed = touched_rows.where(F.col(id_col).isin(ids)).count()
+        survivors = (touched_rows.where(~F.col(id_col).isin(ids))
+                     .select(id_col, vec_col, "list_id")
+                     .localCheckpoint())
+        kept_lists = {int(r["list_id"]) for r in
+                      survivors.select("list_id").distinct().collect()}
+        if kept_lists:
+            # no repartition("list_id"): a single inverted list can be
+            # GBs at real scale, and collapsing it to one writer task is
+            # the inverse of the build-time many-tiny-dirs fix; survivors
+            # keep the pruned read's parallelism
+            # (sinks.delete_rows_partitioned documents the same trade)
+            from vectordb_explorations_spark.sources.sinks import (
+                V1_COMMITTER)
+            (survivors
+             .write.mode("overwrite")
+             .option("partitionOverwriteMode", "dynamic")
+             .options(**V1_COMMITTER)
+             .partitionBy("list_id").parquet(path))
+        substrate.remove_dirs(spark, path, [
+            f"list_id={li}" for li in sorted(set(touched) - kept_lists)])
+    substrate.write_ready(spark, path, {
+        **meta, "rows": substrate.read_face(spark, path, meta).count()})
     return n_removed
 
 
@@ -1142,10 +1197,13 @@ def ivf_probe_partitioned(spark, path: str, centroids: np.ndarray,
                           qid_col: str = "query_id",
                           qvec_col: str = "query_vec") -> DataFrame:
     """Serve from the partitioned index: ``ivf_search`` over the unpruned
-    hive layout. Its one query collect and one probe selection yield the
-    probed-list union as a LITERAL ``list_id IN (...)`` filter, which
-    partition-prunes the scan (unprobed list directories are never read),
-    and its closure probe map restricts each query to ITS lists."""
-    return ivf_search(spark.read.parquet(path), centroids, queries, k,
-                      nprobe=nprobe, id_col=id_col, vec_col=vec_col,
-                      qid_col=qid_col, qvec_col=qvec_col)
+    hive layout, read with the schema its sidecar stamps (no
+    schema-discovery job). Its one query collect and one probe selection
+    yield the probed-list union as a LITERAL ``list_id IN (...)`` filter,
+    which partition-prunes the scan (unprobed list directories are never
+    read), and its closure probe map restricts each query to ITS
+    lists."""
+    meta = substrate.read_meta(spark, path, "ivf_probe_partitioned")
+    return ivf_search(substrate.read_face(spark, path, meta), centroids,
+                      queries, k, nprobe=nprobe, id_col=id_col,
+                      vec_col=vec_col, qid_col=qid_col, qvec_col=qvec_col)

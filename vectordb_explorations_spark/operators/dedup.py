@@ -886,7 +886,7 @@ def minhash_persist(docs: DataFrame, base_dir: str,
         buckets = substrate.auto_buckets(n_docs)
     build = {"num_hashes": num_hashes, "band_size": band_size,
              "buckets": buckets}
-    substrate.write_building(spark, base_dir)
+    substrate.begin_persist(spark, base_dir)
     _write_minhash_faces(sets, base_dir, build, mode="overwrite")
     # one shingle-set row per substrate doc — the same unit the sh face
     # stores and delete decrements by
@@ -1265,8 +1265,8 @@ def band_state_budget(docs: DataFrame,
     distinct band keys are occupied — each occupied key IS one state row
     in ``streaming/documents.near_dup_stream`` — plus the member
     distribution (total banded docs, max and 6-dp-average members per
-    key). This is the capacity-planning query behind
-    tools/state_growth_probe.py's SCALE_NOTES table, turned into a
+    key). This is the capacity-planning query behind the SCALE_NOTES
+    table 'streaming near-dedup state growth', turned into a
     declared operator so the sizing math itself is oracle-verified.
 
     Scale shape: one narrow banding projection (doc_id + 32-char key),
@@ -1363,7 +1363,8 @@ def _resolve_sem_clusters(num_clusters,
     return c, n
 
 
-# Measured crossover (tools/semantic_dedup_probe.py): the codegen pair
+# Measured crossover (SCALE_NOTES, 'semantic_dedup pair-kernel
+# crossover and fixed-vs-auto cluster cost'): the codegen pair
 # stage runs ~25k pairs/s on a vanilla JVM (the SMJ-condition method is
 # >8 KB bytecode, never JIT'd) and ~400k/s with the factory's
 # -XX:-DontCompileHugeMethods; the GEMM kernel >100M pairs/s either

@@ -597,7 +597,7 @@ def maxsim_persist(docs: DataFrame, base_dir: str,
     spark = docs.sparkSession
     build = {"win": win, "stride": stride, "num_tables": num_tables,
              "num_planes": num_planes, "seed": seed}
-    substrate.write_building(spark, base_dir)
+    substrate.begin_persist(spark, base_dir)
     obs = Observation()
     (_chunk_weights(docs, win, stride)
      .observe(obs, F.count(F.lit(1)).alias("rows"))

@@ -1027,13 +1027,13 @@ def perceptual_persist(docs: DataFrame, base_dir: str,
     n = h.count()
     if buckets == "auto":
         buckets = substrate.auto_buckets(n)
-    substrate.write_building(spark, base_dir)
+    substrate.begin_persist(spark, base_dir)
     # repartition on the partition columns: one file per occupied
     # directory instead of one per writer task per directory (a
     # multi-file layout buries the pruned read in listings/opens)
     (repartition_for_hive(_banded_from_hashes(h, buckets),
                           "band_idx", "bucket")
-     .write.mode("overwrite")
+     .write.mode("append")
      .partitionBy("band_idx", "bucket")
      .parquet(base_dir))
     substrate.stamp(spark, base_dir, {"buckets": buckets}, n, {"": 2})

@@ -146,7 +146,7 @@ def _kmeans_1d(data: np.ndarray, k: int, seed: int, iters: int = 20) -> np.ndarr
         assign = np.argmin(
             -2.0 * data @ cents.T + (cents ** 2).sum(-1), axis=1)
         # vectorized centroid update: per-cluster boolean masks cost
-        # O(k·n) passes (the round-2 bench hot spot at m=16, k=64);
+        # O(k·n) passes (a measured bench hot spot at m=16, k=64);
         # scatter-add + bincount is two passes total
         counts = np.bincount(assign, minlength=k)
         sums = np.zeros_like(cents)
@@ -168,7 +168,7 @@ def pq_train(vectors: DataFrame, m_subspaces: int = 8, k_codes: int = 32,
 
     The fit sample is xxhash64(id)-ordered before the limit: an unordered
     LIMIT is partition-layout-dependent, which made codebooks (and bench
-    recalls) non-reproducible across runs (round-1 ADVICE); hash order is
+    recalls) non-reproducible across runs; hash order is
     deterministic AND unbiased (an id-prefix sample correlates with the
     data when ids encode e.g. labels). orderBy+limit plans as
     TakeOrderedAndProject — no global sort materializes."""
@@ -540,9 +540,7 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
             codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (N, m)
             lists = pdf["list_id"].to_numpy(dtype=np.int64)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li in np.unique(lists):
-                li = int(li)
-                sel = lists == li
+            for li, sel in ANN.list_rows(lists, ids):
                 c, sids = codes[sel], ids[sel]
                 qis = by_list[li]
                 if li not in luts:
@@ -578,92 +576,21 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
 
 
 # ---- partitioned serving for the compressed composite ----
-# IVF and sharded HNSW already had hive-partitioned serving; the
-# COMPRESSED router family did not — yet at 100 TB it is exactly the
-# configuration you'd serve (probe-pruned file listing over 16-byte
-# codes instead of 256-byte vectors: the scan that survives is
-# nprobe/C of the INDEX bytes, already 16x smaller than the corpus).
-
-def _layout_corpus_n(spark, path: str, replication: int) -> int:
-    """Corpus N for a persisted layout: the sidecar's ``rows`` when
-    present (job-free), else ONE count over the UNPRUNED layout. The
-    fallback must never count a probe-pruned frame — that badly
-    underestimates N and resolves ``refine_factor='auto'`` too small
-    (silently degraded recall) while pricing the fixed-rf warning
-    against the wrong N."""
-    n = substrate.read_rows(spark, path)
-    if n is not None:
-        return n
-    import warnings
-    warnings.warn(
-        f"{substrate.meta_path(path)} is missing — resolving "
-        f"auto policies with a one-off count over the full layout; "
-        f"persist via the engine's build/append helpers to make probe "
-        f"policy resolution job-free.", RuntimeWarning, stacklevel=3)
-    return spark.read.parquet(path).count() // max(1, int(replication))
-
-
-def _read_layout(spark, path: str) -> DataFrame:
-    """A persisted codes layout, read with the schema its sidecar stamps
-    (no schema-inference job); a layout without one is inferred."""
-    meta = substrate.read_json_sidecar(spark, substrate.meta_path(path))
-    schema = substrate.face_schema(meta or {}, "")
-    return (spark.read if schema is None
-            else spark.read.schema(schema)).parquet(path)
-
+# At 100 TB this is the configuration you'd serve: a probe-pruned file
+# listing over 16-byte codes instead of 256-byte vectors, so the scan
+# that survives is nprobe/C of the INDEX bytes, already 16x smaller
+# than the corpus.
 
 def ivfpq_persist_partitioned(codes_df: DataFrame, path: str,
                               id_col: str = "vec_id") -> None:
     """Persist IVF-PQ codes hive-partitioned by list_id: each inverted
     list of m-byte codes is its own directory, so a probe's literal
     ``list_id IN (...)`` prunes unprobed lists at the FILE LISTING.
-    Writes the corpus row count (distinct ids — the replication-corrected
-    N) and the read-back schema as sidecar metadata, so a probe resolves
-    its refine policy and reads the layout without a job."""
-    spark = codes_df.sparkSession
-    (codes_df.select(id_col, "codes", "list_id")
-     .write.mode("overwrite").partitionBy("list_id").parquet(path))
-    substrate.write_ready(
-        spark, path,
-        {"rows": codes_df.select(id_col).distinct().count(),
-         "schemas": substrate.face_schemas(spark, path, {"": 1})})
-
-
-def _append_codes_partitioned(path: str, codes: DataFrame,
-                              assign_rows_per_vec: int,
-                              id_col: str = "vec_id") -> None:
-    """Shared hive-append + sidecar-advance for the compressed layouts
-    (IVF-PQ and IVF-SQ8 appends differ only in how ``codes`` was made).
-    The corpus increment rides the SAME write job as an observed row
-    count — ivf_assign emits exactly ``assign_rows_per_vec`` rows per
-    batch vector, so no second source scan and no distinct shuffle.
-
-    Contract: batch ids are NEW to the layout and unique within the
-    batch (the ingest semantics every append path here shares);
-    re-ingesting existing ids would inflate the sidecar N — corrections
-    go through the batch rebuild. The parquet write -> meta write pair
-    is not atomic: a crash between them undercounts N until the next
-    append or rebuild; the streaming wrappers' epoch markers make
-    replays no-ops, a full rebuild recovers anything else."""
-    from pyspark.sql import Observation
-
-    from vectordb_explorations_spark.sources.sinks import V1_COMMITTER
-
-    obs = Observation()
-    (codes.observe(obs, F.count(F.lit(1)).alias("rows"))
-     .select(id_col, "codes", "list_id")
-     .write.mode("append").options(**V1_COMMITTER)
-     .partitionBy("list_id").parquet(path))
-    inc = int(obs.get.get("rows") or 0) // max(1, assign_rows_per_vec)
-    spark = codes.sparkSession
-    meta = substrate.read_json_sidecar(spark, substrate.meta_path(path)) or {}
-    substrate.write_ready(spark, path,
-                          {**meta, "rows": int(meta.get("rows", 0)) + inc})
-    # The layout just grew: any memoized count over a pre-existing
-    # DataFrame of it is stale. Appends are rare next to searches, so
-    # clearing the whole memo (one re-count per live index, worst case)
-    # beats a silently wrong auto policy.
-    invalidate_corpus_n()
+    The sidecar (``ann.persist_lists``) counts vectors (distinct ids —
+    the replication-corrected N), so a probe resolves its refine policy
+    and reads the layout without a job."""
+    ANN.persist_lists(codes_df.select(id_col, "codes", "list_id"), path,
+                      rows=codes_df.select(id_col).distinct().count())
 
 
 def ivfpq_append_partitioned(path: str, centroids: np.ndarray,
@@ -681,15 +608,13 @@ def ivfpq_append_partitioned(path: str, centroids: np.ndarray,
     a rebuild; appended codes are bit-identical to a rebuild's because
     build and append share ``_ivfpq_encode``. Codebook/centroid drift is
     handled by periodic re-train + full rewrite (the standard IVF
-    maintenance split, same as ivf_append_partitioned); id/atomicity
-    contract in ``_append_codes_partitioned``."""
-    from vectordb_explorations_spark.operators.ann import ivf_assign
-
-    an = max(1, min(ANN.IVF_ASSIGN_N, centroids.shape[0]))
-    assigned = ivf_assign(new_vectors.select(id_col, vec_col), centroids,
-                          assign_n=an, vec_col=vec_col)
-    codes = _ivfpq_encode(assigned, centroids, codebooks, id_col, vec_col)
-    _append_codes_partitioned(path, codes, an, id_col)
+    maintenance split, same as ivf_append_partitioned); sidecar, id and
+    replay contract in ``ann.append_lists``."""
+    ANN.append_lists(
+        path, "ivfpq_append_partitioned", centroids, new_vectors,
+        lambda a: _ivfpq_encode(a, centroids, codebooks, id_col, vec_col)
+        .select(id_col, "codes", "list_id"),
+        count_vectors=True, id_col=id_col, vec_col=vec_col)
 
 
 def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
@@ -709,13 +634,14 @@ def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
     probe map restricts each query to ITS lists. The code scan runs at
     Spark's split size (one task for a small probed set), its pools merge
     on the driver (at most tasks·Q·k·refine_factor candidate rows), and
-    ``refine_with`` re-scores them in one more pass. The refine policy
-    resolves from the sidecar corpus metadata — no count job."""
-    return ivfpq_search(_read_layout(spark, path), centroids, codebooks,
-                        queries, k,
+    ``refine_with`` re-scores them in one more pass. The layout's schema
+    and the refine policy's N come from its sidecar: no schema or count
+    job."""
+    meta = substrate.read_meta(spark, path, "ivfpq_probe_partitioned")
+    return ivfpq_search(substrate.read_face(spark, path, meta), centroids,
+                        codebooks, queries, k,
                         nprobe=nprobe, refine_with=refine_with,
                         refine_factor=refine_factor,
                         id_col=id_col, vec_col=vec_col,
                         qid_col=qid_col, qvec_col=qvec_col,
-                        corpus_n=_layout_corpus_n(
-                            spark, path, ANN.IVF_ASSIGN_N))
+                        corpus_n=int(meta["rows"]))

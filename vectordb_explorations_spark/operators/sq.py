@@ -27,9 +27,11 @@ from pyspark.sql import types as T
 
 from vectordb_explorations_spark.functions.rounding import r6, round6
 from vectordb_explorations_spark.functions.vectors import l2_distance
+from vectordb_explorations_spark.operators import ann as ANN
 from vectordb_explorations_spark.operators.ann import (
     _probe_map, coalesce_to_split_size, collect_query_arrays, local_result,
     rank_pool)
+from vectordb_explorations_spark.sources import substrate
 
 SQ_LEVELS = 255  # codes 0..255
 
@@ -293,10 +295,9 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
         _exact_refine, _resolve_refine_factor)
 
     if refine_with is not None:
-        from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
         refine_factor = _resolve_refine_factor(
             refine_factor, codes_df, k, IVFSQ_REFINE_FRACTION, "ivfsq",
-            corpus_n=corpus_n, replication=IVF_ASSIGN_N)
+            corpus_n=corpus_n, replication=ANN.IVF_ASSIGN_N)
 
     scales = _scales(mins, maxs)
     qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col,
@@ -331,10 +332,9 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
             rowsq = (deq ** 2).sum(-1)
             lists = pdf["list_id"].to_numpy(dtype=np.int64)
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li in np.unique(lists):
-                sel = lists == li
+            for li, sel in ANN.list_rows(lists, ids):
                 dsub, rsq, sids = deq[sel], rowsq[sel], ids[sel]
-                for qi in list_q[int(li)]:
+                for qi in list_q[li]:
                     # identical per-row arithmetic to the joined shape
                     # (einsum row-dot against a stride-0 query view):
                     # bit-equal distances
@@ -393,19 +393,14 @@ def ivfsq_append_partitioned(path: str, centroids: np.ndarray,
     (sq_encode is extent-deterministic and shared). Extent drift (a new
     batch outside the trained min/max clips to the range edge) is the
     documented SQ8 trade — re-train + rewrite when the quantization
-    audit says so; id/atomicity contract in
-    ``pq._append_codes_partitioned``."""
-    from vectordb_explorations_spark.operators.ann import (IVF_ASSIGN_N,
-                                                           ivf_assign)
-    from vectordb_explorations_spark.operators.pq import (
-        _append_codes_partitioned)
-
-    an = max(1, min(IVF_ASSIGN_N, centroids.shape[0]))
-    assigned = ivf_assign(new_vectors.select(id_col, vec_col), centroids,
-                          assign_n=an, vec_col=vec_col)
-    codes = sq_encode(assigned, mins, maxs, id_col=id_col, vec_col=vec_col,
-                      keep_cols=("list_id",))
-    _append_codes_partitioned(path, codes, an, id_col)
+    audit says so; sidecar, id and replay contract in
+    ``ann.append_lists``."""
+    ANN.append_lists(
+        path, "ivfsq_append_partitioned", centroids, new_vectors,
+        lambda a: sq_encode(a, mins, maxs, id_col=id_col, vec_col=vec_col,
+                            keep_cols=("list_id",))
+        .select(id_col, "codes", "list_id"),
+        count_vectors=True, id_col=id_col, vec_col=vec_col)
 
 
 def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
@@ -423,16 +418,13 @@ def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
     probed-list isin (PartitionFilters pruning); the code scan runs at
     Spark's split size, its pools merge on the driver (at most
     tasks·Q·k·refine_factor candidate rows) and ``refine_with``
-    re-scores them in one more pass. The refine policy resolves from
-    sidecar metadata."""
-    from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
-    from vectordb_explorations_spark.operators.pq import (
-        _layout_corpus_n, _read_layout)
-    return ivfsq_search(_read_layout(spark, path), centroids, mins, maxs,
-                        queries, k,
+    re-scores them in one more pass. The layout's schema and the refine
+    policy's N come from its sidecar."""
+    meta = substrate.read_meta(spark, path, "ivfsq_probe_partitioned")
+    return ivfsq_search(substrate.read_face(spark, path, meta), centroids,
+                        mins, maxs, queries, k,
                         nprobe=nprobe, refine_with=refine_with,
                         refine_factor=refine_factor,
                         id_col=id_col, vec_col=vec_col,
                         qid_col=qid_col, qvec_col=qvec_col,
-                        corpus_n=_layout_corpus_n(
-                            spark, path, IVF_ASSIGN_N))
+                        corpus_n=int(meta["rows"]))

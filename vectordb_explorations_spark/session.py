@@ -46,7 +46,8 @@ _DEFAULT_CONF = {
     # exceed that inside a single generated method (a SortMergeJoin
     # condition doesn't get split the way WholeStageCodegen projections
     # do). Measured on semantic_dedup's pair predicate at N=5k: 143 s
-    # interpreted -> 8 s with the flag (tools/semantic_dedup_probe.py).
+    # interpreted -> 8 s with the flag (SCALE_NOTES, 'semantic_dedup
+    # pair-kernel crossover and fixed-vs-auto cluster cost').
     # On a real cluster set the executor twin too (local mode has none).
     "spark.driver.extraJavaOptions": "-XX:-DontCompileHugeMethods",
     "spark.executor.extraJavaOptions": "-XX:-DontCompileHugeMethods",

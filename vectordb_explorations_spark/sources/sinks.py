@@ -304,12 +304,10 @@ def delete_rows_partitioned(spark: SparkSession, path: str,
         # parallelism, so files per rewritten directory stay bounded by
         # the directory's own input file count.
         overwrite_partitions(survivors, path, partition_by)
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.get(
-        spark._jsc.hadoopConfiguration())
-    for t in sorted(tkeys - kept):
-        sub = "/".join(f"{c}={v}" for c, v in zip(partition_by, t))
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}"), True)
+    from vectordb_explorations_spark.sources.substrate import remove_dirs
+    remove_dirs(spark, path, [
+        "/".join(f"{c}={v}" for c, v in zip(partition_by, t))
+        for t in sorted(tkeys - kept)])
     return n_removed
 
 

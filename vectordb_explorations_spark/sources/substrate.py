@@ -1,6 +1,6 @@
-"""Metadata core of the persisted substrates (MinHash, perceptual,
-MaxSim, IVF-PQ, IVF-SQ8): one sidecar, one bucket policy, one pruned
-probe read.
+"""Metadata core of the seven persisted substrates (MinHash, perceptual,
+MaxSim, IVF-flat, IVF-PQ, IVF-SQ8, HNSW): one sidecar, one bucket policy,
+one pruned probe read.
 
 The sidecar contract
 --------------------
@@ -10,27 +10,32 @@ and read only through this module, via the Hadoop FS API, so it lives on
 whatever filesystem the layout does. Keys:
 
 - ``state``: ``"building"`` or ``"ready"``. A persist writes
-  ``{"state": "building"}`` before its first face write; an append
-  rewrites the current stamp with ``state`` set to ``"building"`` (so it
-  keeps ``build``). Both write the full ``ready`` stamp last. A crash in
-  between leaves ``building`` behind.
+  ``{"state": "building"}`` before its first face write; an append or
+  delete rewrites the current stamp with ``state`` set to
+  ``"building"`` and ``op`` set to its own name (so it keeps ``build``).
+  All of them write the full ``ready`` stamp last. A crash in between
+  leaves ``building`` behind.
 - ``build``: the build's geometry (bucket count, banding, hyperplanes,
-  chunking). Serve and append read it from here; callers never pass it.
-- ``rows``: the substrate's row count (documents, or vectors for the
-  compressed IVF layouts), maintained by persist, append and delete.
+  chunking, IVF/HNSW replication ``assign_n``). Serve and maintenance
+  read it from here; callers never pass it.
+- ``rows``: the substrate's row count, maintained by persist, append
+  and delete: documents (MinHash, perceptual, MaxSim), vectors (IVF-PQ,
+  IVF-SQ8: the N their refine policy resolves against), index rows
+  (IVF-flat, one per (vector, list) replica) or graph memberships
+  (HNSW, one per (vector, shard) replica).
 - ``schemas``: the read-back schema of each hive face, keyed by face
   name (``""`` is the base directory itself), so a probe skips the
   footer read and partition-type inference.
 
 A missing sidecar, an unreadable or truncated one, or a ``building``
-one raises :class:`SubstrateMetaError` on admit, serve and delete: no
-path falls back to a default geometry. An append accepts a ``building``
-sidecar that still carries ``build`` — that is the marker replay of an
-interrupted append, and it ends by writing ``ready``. An interrupted
-persist (``building`` without ``build``) only a rebuild can finish. The
-IVF-PQ/SQ8 layouts carry ``rows`` and ``schemas`` only; a layout without
-the sidecar is recounted by the caller (``pq._layout_corpus_n``) and
-read with schema inference.
+one raises :class:`SubstrateMetaError` on admit, serve, append and
+delete: no path falls back to a default geometry, a recount or schema
+inference. The one exception is replay: an append or delete accepts a
+``building`` sidecar that carries ``build`` and was left by the same
+call (``op``), and ends by writing ``ready``. An interrupted persist
+(``building`` without ``build``) only a rebuild can finish. An append
+into a path that holds no layout at all (no sidecar, no partition
+directory) starts a new one (:func:`read_append_meta`).
 """
 
 from __future__ import annotations
@@ -98,15 +103,29 @@ def require_face(spark: SparkSession, path: str, op: str) -> None:
             f"{op}: {path} is missing; rebuild the substrate")
 
 
+def begin_persist(spark: SparkSession, base: str) -> None:
+    """A persist's first write: remove whatever ``base`` held, then
+    mark it ``building``. The persist then writes its faces into the
+    empty base, a face that IS the base directory with mode('append'):
+    a mode('overwrite') write would delete the marker along with the
+    old files, and a crash inside that write would leave no sidecar."""
+    fs, p = _fs(spark, base)
+    fs.delete(p, True)
+    write_building(spark, base)
+
+
 def write_building(spark: SparkSession, base: str,
-                   meta: dict | None = None) -> None:
+                   meta: dict | None = None, op: str | None = None) -> None:
     """Mark the substrate mid-write: a persist passes no ``meta``; an
-    append passes the current stamp so a replay can read ``build``."""
+    append or delete passes the current stamp and its own name, so a
+    replay of that call (and no other call) can read ``build``."""
     write_json_sidecar(spark, meta_path(base),
-                       {**(meta or {}), "state": "building"})
+                       {**(meta or {}), "state": "building",
+                        **({"op": op} if op else {})})
 
 
 def write_ready(spark: SparkSession, base: str, meta: dict) -> None:
+    meta = {k: v for k, v in meta.items() if k != "op"}
     write_json_sidecar(spark, meta_path(base), {**meta, "state": "ready"})
 
 
@@ -143,25 +162,67 @@ def face_schema(meta: dict, face: str):
 def read_meta(spark: SparkSession, base: str, op: str,
               replay: bool = False) -> dict:
     """The ``ready`` sidecar, or SubstrateMetaError. ``replay=True``
-    (appends only) also accepts an interrupted append's ``building``."""
+    (appends and deletes) also accepts the ``building`` marker an
+    interrupted run of the same ``op`` left."""
     path = meta_path(base)
     meta = read_json_sidecar(spark, path)
     if meta is None:
         raise SubstrateMetaError(
             f"{op}: {path} is missing; rebuild the substrate with its "
             f"persist function")
-    if meta.get("state") != "ready" and not (replay and "build" in meta):
+    if meta.get("state") != "ready" and not (
+            replay and "build" in meta and meta.get("op", op) == op):
         raise SubstrateMetaError(
-            f"{op}: {path} says state={meta.get('state')!r}; a persist "
-            f"or append was interrupted. Replay the append, or rebuild")
+            f"{op}: {path} says state={meta.get('state')!r}"
+            f"{' after ' + meta['op'] if 'op' in meta else ''}; a persist, "
+            f"append or delete was interrupted. Replay that call, or "
+            f"rebuild")
     return meta
 
 
-def read_rows(spark: SparkSession, base: str) -> int | None:
-    """The sidecar's row count, or None when the layout has no
-    sidecar."""
-    meta = read_json_sidecar(spark, meta_path(base))
-    return None if meta is None else int(meta["rows"])
+def read_append_meta(spark: SparkSession, base: str, op: str,
+                     build: dict) -> dict:
+    """:func:`read_meta` with ``replay=True`` for an append, except that
+    a path holding no layout yet (no sidecar and no partition directory:
+    a streaming ingest's first batch) starts a new one with ``build``,
+    no rows and no schemas."""
+    if read_json_sidecar(spark, meta_path(base)) is None:
+        fs, p = _fs(spark, base)
+        if not fs.exists(p) or not any(
+                st.isDirectory() and "=" in st.getPath().getName()
+                for st in fs.listStatus(p)):
+            return {"build": build, "rows": 0, "schemas": {}}
+    return read_meta(spark, base, op, replay=True)
+
+
+def read_rows(spark: SparkSession, base: str) -> int:
+    """The ``ready`` sidecar's row count."""
+    return int(read_meta(spark, base, "read_rows")["rows"])
+
+
+def read_face(spark: SparkSession, base: str, meta: dict,
+              face: str = "") -> DataFrame:
+    """A whole face, read with the schema the sidecar stamps: no
+    footer read and no partition inference, and a face whose rows were
+    all deleted reads as an empty frame."""
+    schema = face_schema(meta, face)
+    if schema is None:
+        raise SubstrateMetaError(
+            f"{meta_path(base)} stamps no schema for face {face!r}: the "
+            f"substrate was persisted empty; rebuild it")
+    return spark.read.schema(schema).parquet(_face_dir(base, face))
+
+
+def remove_dirs(spark: SparkSession, base: str, subdirs) -> None:
+    """Recursively delete ``{base}/{sub}`` for each ``sub`` through the
+    filesystem of ``base`` itself (``Path.getFileSystem``), not the
+    session's default filesystem, so a ``file://`` or other-scheme
+    layout loses its emptied partition directories however
+    ``fs.defaultFS`` is set."""
+    fs, _ = _fs(spark, base)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    for sub in subdirs:
+        fs.delete(jpath(f"{base.rstrip('/')}/{sub}"), True)
 
 
 def auto_buckets(n: int) -> int:

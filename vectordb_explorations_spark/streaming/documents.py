@@ -98,11 +98,11 @@ def near_dup_stream(docs: DataFrame,
     semantic: a later batch's doc is flagged against an earlier batch's
     representative even when its id is smaller.
 
-    **State growth (r7 verdict item 6)**: with the default
+    **State growth**: with the default
     ``state_ttl_ms=None`` the store keeps one row per occupied
-    (band_idx, band_key) FOREVER — tools/state_growth_probe.py measured
-    the occupancy curve (≈ num_bands distinct keys per unique
-    neighborhood; SCALE_NOTES has the 100k-1M table), so at daily-crawl
+    (band_idx, band_key) FOREVER — the occupancy curve is ≈ num_bands
+    distinct keys per unique neighborhood (SCALE_NOTES, 'streaming
+    near-dedup state growth', has the 100k-1M table), so at daily-crawl
     scale the store grows with the unique-document count. Pass a TTL to
     bound it: a band whose representative has seen no arrival for the
     TTL is evicted (ProcessingTimeTimeout, refreshed on every touch —

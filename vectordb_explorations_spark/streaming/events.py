@@ -163,7 +163,7 @@ def _batch_key(batch_df: DataFrame, epoch_id: int) -> str:
     exposes no files (non-file sources), where replays-within-a-run are
     the only replays possible.
 
-    SET-key caveat (r10 ADVICE): hashing the whole file set is only
+    SET-key caveat: hashing the whole file set is only
     restart-safe while batches hold one file — a restart that REGROUPS
     files (old+new in one batch) mints a new set key and re-ingests the
     already-applied file. The ingest wrappers therefore route through
@@ -181,7 +181,7 @@ def _batch_key(batch_df: DataFrame, epoch_id: int) -> str:
 
 
 def _files_to_ingest(batch_df: DataFrame, index_dir: str, epoch_id: int):
-    """Per-FILE idempotence (r10 ADVICE): ``_batch_key`` hashes the whole
+    """Per-FILE idempotence: ``_batch_key`` hashes the whole
     input-file SET, which is only restart-safe while batches hold one
     file (maxFilesPerTrigger=1) — a checkpoint-less restart that REGROUPS
     files (old+new in one batch) would mint a new set key and re-ingest
@@ -242,10 +242,11 @@ def _epoch_applied(index_dir: str, key: str) -> bool:
     ``mark.ingest_key`` — per-ingest subdir overwrite
     (incremental_index_refresh, documents.span_admission_ingest) or
     dynamic partition overwrite (latesim.maxsim_append_ingest) — so the
-    replay REPLACES its rows. The hive IVF/IVF-PQ appends keep the
-    documented append-only residual (duplicate code rows + inflated
-    sidecar N until the periodic re-train/rewrite that IS their
-    maintenance cycle recovers it)."""
+    replay REPLACES its rows. The hive IVF/IVF-PQ appends keep an
+    append-only residual: the replayed batch's rows repeat (served once:
+    every IVF-family scan scores one row per id, ``ann.list_rows``) and
+    the sidecar N counts them twice until the periodic re-train/rewrite
+    that IS their maintenance cycle."""
     return os.path.exists(os.path.join(index_dir, f"_epoch_{key}"))
 
 
@@ -294,8 +295,7 @@ def incremental_index_refresh(spark: SparkSession, sf_dir: str,
 
 
 def incremental_ivf_ingest(spark: SparkSession, sf_dir: str,
-                           index_dir: str, centroids,
-                           assign_n: int = 2) -> "object":
+                           index_dir: str, centroids) -> "object":
     """foreachBatch incremental IVF maintenance: each micro-batch of new
     embeddings is assigned against the index's FROZEN centroids and
     appended into the hive-partitioned serving layout
@@ -304,7 +304,8 @@ def incremental_ivf_ingest(spark: SparkSession, sf_dir: str,
     current without retraining or corpus re-assignment. Epoch files land
     only in touched list directories; replayed epochs are no-ops
     (_epoch_applied); drift triggers a batch re-train + rewrite, not a
-    streaming concern."""
+    streaming concern. An ``index_dir`` that holds no layout yet starts
+    one: the first batch's append stamps its sidecar."""
     from vectordb_explorations_spark.operators.ann import (
         ivf_append_partitioned)
     from vectordb_explorations_spark.sources.catalog import (
@@ -317,8 +318,7 @@ def incremental_ivf_ingest(spark: SparkSession, sf_dir: str,
         df, mark = _files_to_ingest(batch_df, index_dir, epoch_id)
         if df is None or df.isEmpty():
             return
-        ivf_append_partitioned(index_dir, centroids, df,
-                               assign_n=assign_n)
+        ivf_append_partitioned(index_dir, centroids, df)
         mark()
 
     return (stream.writeStream
@@ -362,10 +362,10 @@ def incremental_ivfpq_ingest(spark: SparkSession, sf_dir: str,
 
 
 def streaming_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declared correctness pin for the stateful-dedup path (round-1
-    VERDICT item 10): drain ``streaming_dedup`` with availableNow into a
-    uniquely-named memory sink, then aggregate the deduped stream into a
-    deterministic per-event_type summary. The oracle applies the same
+    """Declared correctness pin for the stateful-dedup path: drain
+    ``streaming_dedup`` with availableNow into a uniquely-named memory
+    sink, then aggregate the deduped stream into a deterministic
+    per-event_type summary. The oracle applies the same
     (event_id, ts) dedup and aggregate in SQL, so the driver hash-checks
     the streaming path end to end."""
     import uuid
@@ -399,9 +399,9 @@ ORDER BY event_type
 def streaming_index_refresh_stats(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Declared correctness pin for the foreachBatch incremental index
-    refresh (round-1 VERDICT item 10): run ``incremental_index_refresh``
-    into a fresh temp dir, then audit the written LSH index — row count
-    must be vectors x num_tables with all 8 tables present. The audit
+    refresh: run ``incremental_index_refresh`` into a fresh temp dir,
+    then audit the written LSH index — row count must be vectors x
+    num_tables with all 8 tables present. The audit
     columns are chosen to be SQL-derivable so the check is a full oracle
     hash, not rows-only."""
     import tempfile
@@ -666,7 +666,7 @@ ORDER BY c_mktsegment, event_type
 
 
 def streaming_hll_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declared correctness pin (staged r14 for r15) for SKETCHES ON A
+    """Declared correctness pin for SKETCHES ON A
     STREAM: per-event-type HyperLogLog registers maintained by an
     update-mode streaming aggregation — register-wise max is
     commutative and idempotent, which is exactly why HLL is THE
@@ -715,7 +715,7 @@ def streaming_hll_monitor_oracle() -> str:
 
 
 def streaming_cms_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Declared correctness pin (r14 continuation) for the sketch
+    """Declared correctness pin for the sketch
     family's SECOND streaming member: Count-Min counter cells
     maintained by an update-mode streaming aggregation. Per-cell
     counts are monotone across a key's update rows, so the drained
