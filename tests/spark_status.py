@@ -41,15 +41,15 @@ def traced(spark, fn):
     return out, len(jobs), plans
 
 
-def input_stages(spark, fn):
-    """Run ``fn()`` under a fresh job group. Returns ``(result, n)``: the
-    number of distinct stages its jobs ran that read input
+def input_stage_tasks(spark, fn):
+    """Run ``fn()`` under a fresh job group. Returns ``(result, tasks)``:
+    the task count of each distinct stage its jobs ran that read input
     (``inputBytes`` > 0 in the application status store): input files,
     or cached and checkpointed blocks. A stage that was skipped, or that
-    reads only shuffle output, counts 0."""
+    reads only shuffle output, is not listed."""
     out, jobs = _in_group(spark, fn)
     store = spark.sparkContext._jsc.sc().statusStore()
-    reading = set()
+    reading = {}
     for job_id in jobs:
         ids = store.job(job_id).stageIds()
         for i in range(ids.size()):
@@ -58,7 +58,15 @@ def input_stages(spark, fn):
                                            False, None)
             except Py4JJavaError:
                 continue  # never ran
-            if any(attempts.apply(j).inputBytes() > 0
-                   for j in range(attempts.size())):
-                reading.add(ids.apply(i))
-    return out, len(reading)
+            ran = [attempts.apply(j) for j in range(attempts.size())]
+            if any(a.inputBytes() > 0 for a in ran):
+                reading[ids.apply(i)] = ran[-1].numTasks()
+    return out, [reading[s] for s in sorted(reading)]
+
+
+def input_stages(spark, fn):
+    """Run ``fn()`` under a fresh job group. Returns ``(result, n)``: the
+    number of distinct stages its jobs ran that read input (see
+    :func:`input_stage_tasks`)."""
+    out, tasks = input_stage_tasks(spark, fn)
+    return out, len(tasks)

@@ -1045,6 +1045,76 @@ def test_hnsw_delete_rebuilds_with_the_build_seed(spark, sf_dir, tmp_path):
         assert got.seed == 7 + s
 
 
+def test_hnsw_append_after_emptied_sub_shard_keeps_replicas(
+        spark, sf_dir, tmp_path):
+    """An append after a delete that emptied a middle sub-shard of a
+    split cell still gives every appended id its assign_n replicas: the
+    append routes over each cell's live shards, so no row is aimed at
+    the removed shard, whose rebuild would drop it silently."""
+    from collections import Counter
+
+    from vectordb_explorations_spark.operators.ann import IVF_ASSIGN_N
+    from vectordb_explorations_spark.operators.hnsw import (
+        _blob_members, hnsw_append_partitioned, hnsw_delete_partitioned,
+        hnsw_persist_partitioned)
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    path = str(tmp_path / "hnsw_split_cells")
+    hnsw_persist_partitioned(
+        hnsw_build(emb.where(F.col("vec_id") % 5 != 0), num_shards=4,
+                   shard_by="kmeans", shard_cap=60), path)
+    cells = {}
+    for r in spark.read.parquet(path).select("shard", "centroid").collect():
+        cells.setdefault(tuple(r["centroid"]), []).append(int(r["shard"]))
+    middle = min(sorted(s) for s in cells.values() if len(s) >= 3)[1]
+    victims = [int(r["vec_id"]) for r in
+               _blob_members(spark.read.parquet(path))
+               .where(F.col("shard") == middle).collect()]
+    hnsw_delete_partitioned(spark, path, victims)
+
+    new = emb.where(F.col("vec_id") % 5 == 0)
+    hnsw_append_partitioned(spark, path, new)
+    held = Counter(int(r["vec_id"]) for r in
+                   _blob_members(spark.read.parquet(path)).collect())
+    short = [int(r[0]) for r in new.select("vec_id").collect()
+             if held[int(r[0])] != IVF_ASSIGN_N]
+    assert not short, short
+
+
+def test_route_to_shards_keeps_the_build_sub_shard_formula(spark):
+    """Given each cell's contiguous sub-shard range ``[b, b + n)``, the
+    routing kernel picks sub-shard ``b + h % n`` for the mixed id hash
+    ``h``, so a build's shard assignment does not depend on whether the
+    kernel takes ranges or (base, count) pairs."""
+    import numpy as np
+
+    from vectordb_explorations_spark.operators.hnsw import _route_to_shards
+
+    rng = np.random.default_rng(3)
+    cents = rng.normal(size=(3, 4))
+    ids = np.arange(200, dtype=np.int64) * 7919
+    vecs = rng.normal(size=(200, 4))
+    base, count = np.array([0, 1, 4]), np.array([1, 3, 2])
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, vecs)],
+        "vec_id long, embedding array<double>")
+    got = sorted((int(r["vec_id"]), int(r["shard"])) for r in
+                 _route_to_shards(df, cents,
+                                  [list(range(b, b + n))
+                                   for b, n in zip(base, count)],
+                                  2, "vec_id", "embedding").collect())
+
+    h = ids.astype(np.uint64)
+    for mult in (0xFF51AFD7ED558CCD, 0xC4CEB9FE1A85EC53):
+        h = (h ^ (h >> np.uint64(33))) * np.uint64(mult)
+    h = (h ^ (h >> np.uint64(33))).astype(np.int64)
+    near = np.argsort(-2.0 * vecs @ cents.T + (cents ** 2).sum(-1),
+                      axis=1)[:, :2]
+    want = sorted((int(ids[i]), int(base[c] + h[i] % count[c]))
+                  for i in range(len(ids)) for c in near[i])
+    assert got == want
+
+
 def _hnsw_members_rows(spark, path):
     from vectordb_explorations_spark.operators.hnsw import _blob_members
     return sorted(tuple(r) for r in

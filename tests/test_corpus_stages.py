@@ -1,4 +1,5 @@
-"""Each curation op reads its corpus in exactly one Spark stage per call.
+"""Each per-document corpus op reads its corpus in exactly one Spark
+stage per call.
 
 A corpus stage is a stage that reads the documents' parquet files. A
 second one re-tokenizes and re-hashes the whole corpus, which at scale is
@@ -15,7 +16,8 @@ shuffle the whole token stream, which costs more than a second tokenize.
 
 import pytest
 
-from vectordb_explorations_spark.operators import sampling, textops
+from vectordb_explorations_spark.operators import (
+    multimodal, sampling, textops)
 from vectordb_explorations_spark.sources import load_table
 from spark_status import input_stages
 
@@ -31,6 +33,8 @@ OPS = {
     "token_counts": textops.token_counts,
     "dsir_select": sampling.dsir_select,
     "source_kl_divergence": sampling.source_kl_divergence,
+    "doc_chunks": sampling.doc_chunks,
+    "gif_frame_sample": multimodal.gif_frame_sample,
 }
 
 

@@ -45,6 +45,19 @@ def test_build_contract(setup):
     assert codes.select("vec_id").distinct().count() == n
 
 
+def test_build_with_one_centroid(spark, sf_dir):
+    """One coarse cell: the residual-fit sample replicates each vector
+    into at most as many cells as exist, as the assignment does, so
+    every vector is encoded once into list 0."""
+    emb = load_table(spark, "embeddings", sf_dir)
+    codes, cents, books = PQ.ivfpq_build(emb, num_centroids=1,
+                                         m_subspaces=8, k_codes=16)
+    assert cents.shape == (1, 64) and books.shape == (8, 16, 8)
+    rows = codes.select("vec_id", "list_id").collect()
+    assert {r["list_id"] for r in rows} == {0}
+    assert len(rows) == len({r["vec_id"] for r in rows}) == emb.count()
+
+
 def test_probe_scans_only_probed_lists(setup):
     """The ADC stage's input is the broadcast-probe join: rows from
     unprobed lists must not reach it (that bound is the whole point of

@@ -25,7 +25,7 @@ from vectordb_explorations_spark.operators.sq import (
     ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned,
     ivfsq_search)
 from vectordb_explorations_spark.sources import load_table
-from spark_status import traced
+from spark_status import input_stage_tasks, traced
 
 K = 5
 NUM_Q = 12
@@ -127,13 +127,25 @@ def test_refine_query_side_is_not_a_python_rdd(spark, layouts, tmp_path):
     assert len(rows) == NUM_Q * K
 
 
+def _local_queries(spark, emb):
+    """The sample queries as a pandas-built (local) frame: reading it
+    runs no Spark job."""
+    import pandas as pd
+
+    rows = [(int(r[0]), [float(x) for x in r[1]])
+            for r in sample_queries(emb, NUM_Q).collect()]
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=["query_id", "query_vec"]),
+        "query_id long, query_vec array<double>")
+
+
 # Spark jobs per serve call over a local (pandas-built) query frame.
 # Every layout is read with the schema its sidecar stamps, so no call
 # runs a schema-discovery job. IVF-PQ/SQ8: the probe scan and the exact
 # re-score, with merges, ranking and the served frame on the driver.
-# HNSW: the centroid collect and the blob scan. IVF-flat: the probe scan
-# and its ranking exchange.
-SERVE_JOBS = {"hnsw_probe_partitioned": 2,
+# HNSW: the blob scan alone (it routes from the sidecar's cell table).
+# IVF-flat: the probe scan and its ranking exchange.
+SERVE_JOBS = {"hnsw_probe_partitioned": 1,
               "ivf_probe_partitioned": 2,
               "ivfpq_probe_partitioned": 2,
               "ivfsq_probe_partitioned": 2}
@@ -141,17 +153,22 @@ SERVE_JOBS = {"hnsw_probe_partitioned": 2,
 
 @pytest.mark.parametrize("call", sorted(SERVE_JOBS))
 def test_serve_call_job_count(spark, layouts, call):
-    import pandas as pd
-
-    rows = [(int(r[0]), [float(x) for x in r[1]])
-            for r in sample_queries(layouts["emb"], NUM_Q).collect()]
-    qdf = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["query_id", "query_vec"]),
-        "query_id long, query_vec array<double>")
+    qdf = _local_queries(spark, layouts["emb"])
     served, jobs, _ = traced(
         spark, lambda: _serve_calls(spark, layouts)[call](qdf).collect())
     assert len(served) == NUM_Q * K
     assert jobs == SERVE_JOBS[call], (call, jobs)
+
+
+def test_routed_hnsw_blob_scan_runs_one_task(spark, layouts):
+    """The routed blob scan is coalesced to Spark's split size: the
+    test layout's routed shards (four files, well under one split) are
+    read by one Python task, not one task per shard file."""
+    qdf = _local_queries(spark, layouts["emb"])
+    served, tasks = input_stage_tasks(spark, lambda: hnsw_probe_partitioned(
+        spark, layouts["hnsw"], qdf, K, probe_shards="auto").collect())
+    assert len(served) == NUM_Q * K
+    assert tasks == [1], tasks
 
 
 def _in_memory_calls(spark, lay):

@@ -373,3 +373,85 @@ def test_repeated_list_row_takes_one_slot(spark, sf_dir, family):
     repeated = layout.unionByName(layout.where(F.col("vec_id") == best))
     assert _sorted_rows(search(repeated.coalesce(1))) == served
     assert len(served) == K
+
+
+def _live_cells(spark, path):
+    """(centroid, shard ids) per cell, read from the HNSW layout's own
+    (shard, centroid) rows."""
+    cells = {}
+    for r in spark.read.parquet(path).select("shard", "centroid").collect():
+        cells.setdefault(tuple(r["centroid"]), []).append(int(r["shard"]))
+    return sorted((list(c), sorted(s)) for c, s in cells.items())
+
+
+def _stamped_cells(spark, path):
+    cells = substrate.read_meta(spark, path, "test")["cells"]
+    assert [c["shards"] for c in cells] == sorted(
+        sorted(c["shards"]) for c in cells)  # ascending, by first shard
+    return sorted((c["centroid"], c["shards"]) for c in cells)
+
+
+def test_hnsw_cells_stamp_tracks_the_layout(spark, sf_dir, tmp_path):
+    """The HNSW sidecar's ``cells`` stamp equals the layout's live
+    (shard, centroid) rows after persist, after append, and after a
+    delete that empties whole shards: an emptied sub-shard leaves its
+    cell's shard list, and a cell left with no shard leaves the
+    table."""
+    import pickle
+
+    from pyspark.sql import functions as F
+
+    from vectordb_explorations_spark.operators.hnsw import (
+        hnsw_append_partitioned, hnsw_build, hnsw_delete_partitioned,
+        hnsw_persist_partitioned)
+    from vectordb_explorations_spark.sources import load_table
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    path = str(tmp_path / "hnsw_cells")
+    hnsw_persist_partitioned(
+        hnsw_build(emb.where(F.col("vec_id") % 10 != 0), num_shards=4,
+                   shard_by="kmeans", shard_cap=100), path)
+    live = _live_cells(spark, path)
+    assert any(len(s) > 1 for _, s in live)  # a split cell
+    assert _stamped_cells(spark, path) == live
+
+    hnsw_append_partitioned(spark, path, emb.where(F.col("vec_id") % 10 == 0))
+    assert _stamped_cells(spark, path) == _live_cells(spark, path) == live
+
+    # empty one sub-shard of a split cell, and every shard of the cell
+    # with the fewest memberships
+    split = next(s for _, s in live if len(s) > 1)
+    gone = {split[-1]} | set(min(
+        (s for _, s in live if s != split),
+        key=lambda s: len(s)))
+    victims = set()
+    for r in (spark.read.parquet(path).where(F.col("shard").isin(sorted(gone)))
+              .select("blob").collect()):
+        victims |= {int(i) for i in pickle.loads(r["blob"]).ids}
+    hnsw_delete_partitioned(spark, path, sorted(victims))
+    after = _live_cells(spark, path)
+    assert not gone & {sh for _, s in after for sh in s}
+    assert len(after) == len(live) - 1
+    assert _stamped_cells(spark, path) == after
+
+
+@pytest.mark.parametrize("call", ["probe", "append"])
+def test_hnsw_sidecar_without_cells_raises(spark, sf_dir, tmp_path, call):
+    """A ready HNSW sidecar that stamps no cell table raises on the
+    routed probe and on append, which route from it; nothing falls back
+    to reading the centroids from the layout."""
+    from pyspark.sql import functions as F
+
+    from vectordb_explorations_spark.operators.hnsw import (
+        hnsw_append_partitioned)
+    from vectordb_explorations_spark.sources import load_table
+
+    path, serve = _ann_layout(spark, sf_dir, tmp_path, "hnsw")
+    meta = substrate.read_meta(spark, path, "test")
+    substrate.write_ready(spark, path,
+                          {k: v for k, v in meta.items() if k != "cells"})
+    emb = load_table(spark, "embeddings", sf_dir)
+    run = serve if call == "probe" else lambda: hnsw_append_partitioned(
+        spark, path, emb.where(F.col("vec_id") % 50 == 0))
+    with pytest.raises(substrate.SubstrateMetaError, match="'cells'"):
+        run()

@@ -45,7 +45,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from vectordb_explorations_spark.operators.ann import (
-    IVF_ASSIGN_N, collect_query_arrays, local_result, rank_pool)
+    IVF_ASSIGN_N, coalesce_to_split_size, collect_query_arrays,
+    local_result, rank_pool)
 from vectordb_explorations_spark.sources import substrate
 
 
@@ -556,8 +557,10 @@ def hnsw_build(vectors: DataFrame, num_shards: int = 8, m: int = 8,
         })
 
     if shard_by == "kmeans":
-        sharded = _route_to_shards(vectors, centroids, sub_base, n_sub, an,
-                                   id_col, vec_col)
+        sharded = _route_to_shards(
+            vectors, centroids,
+            [list(range(b, b + n)) for b, n in zip(sub_base, n_sub)], an,
+            id_col, vec_col)
     else:
         sharded = vectors.select(
             (F.col(id_col) % num_shards).cast("int").alias("shard"),
@@ -566,16 +569,21 @@ def hnsw_build(vectors: DataFrame, num_shards: int = 8, m: int = 8,
 
 
 def _route_to_shards(vectors: DataFrame, cents: np.ndarray,
-                     sub_base: np.ndarray, n_sub: np.ndarray, an: int,
+                     cell_shards: list[list[int]], an: int,
                      id_col: str, vec_col: str) -> DataFrame:
     """(shard, id, vector) rows: each vector in its ``an`` nearest cells
-    and, inside a cell split into ``n_sub`` sub-shards from id
-    ``sub_base``, the sub-shard a hash of its id picks. One Arrow-batched
-    GEMM pass; only the (cells x dim) centroid table rides the
-    broadcast. The build and the append share it, so an appended vector
-    lands where a rebuild would put it."""
+    and, inside a cell, the shard ``shards[h % len(shards)]`` of its
+    ``cell_shards`` list that a hash ``h`` of its id picks. One
+    Arrow-batched GEMM pass; only the (cells x dim) centroid table and
+    the shard lists ride the broadcast. The build passes each cell's
+    contiguous sub-shard range; the append passes the live shards the
+    sidecar stamps, so a delete that emptied a sub-shard leaves no
+    appended row aimed at it."""
+    width = max(len(s) for s in cell_shards)
+    table = np.asarray([s + s[:1] * (width - len(s)) for s in cell_shards],
+                       dtype=np.int64)
     bc = vectors.sparkSession.sparkContext.broadcast(
-        (cents, np.asarray(sub_base), np.asarray(n_sub)))
+        (cents, table, np.asarray([len(s) for s in cell_shards])))
     cnorm = (cents ** 2).sum(-1)
     schema = T.StructType(
         [T.StructField("shard", T.IntegerType())]
@@ -583,7 +591,7 @@ def _route_to_shards(vectors: DataFrame, cents: np.ndarray,
            for f in vectors.select(id_col, vec_col).schema.fields])
 
     def assign(batches):
-        C, sb, ns = bc.value
+        C, tab, ns = bc.value
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -591,7 +599,7 @@ def _route_to_shards(vectors: DataFrame, cents: np.ndarray,
             near = np.argpartition(-2.0 * X @ C.T + cnorm, an - 1,
                                    axis=1)[:, :an]  # cells
             # deterministic hash sub-shard within each (possibly split)
-            # cell; n_sub==1 cells collapse to the cell itself. MIX the
+            # cell; a one-shard cell always picks its shard. MIX the
             # id (murmur3 finalizer), don't use it raw: ids that encode
             # attributes (e.g. label = id mod k) make raw-modulo
             # sub-shards degenerate to whole clusters
@@ -599,7 +607,7 @@ def _route_to_shards(vectors: DataFrame, cents: np.ndarray,
             h = (h ^ (h >> np.uint64(33))) * np.uint64(0xFF51AFD7ED558CCD)
             h = (h ^ (h >> np.uint64(33))) * np.uint64(0xC4CEB9FE1A85EC53)
             h = (h ^ (h >> np.uint64(33))).astype(np.int64)
-            shards = sb[near] + (h[:, None] % ns[near])
+            shards = tab[near, h[:, None] % ns[near]]
             out = pdf[[id_col, vec_col]].loc[pdf.index.repeat(an)].copy()
             out.insert(0, "shard", shards.reshape(-1).astype(np.int32))
             yield out
@@ -643,6 +651,33 @@ def _warn_probe_recall_risk(nn: int, n_cells: int) -> None:
             f"recall.", RuntimeWarning, stacklevel=3)
 
 
+def _cell_table(rows) -> list[dict] | None:
+    """The routing table of a sharded index from its ``(shard,
+    centroid)`` rows: one entry per cell, ``{"centroid": [...],
+    "shards": [...]}``, its shard ids ascending and the entries in
+    order of their first shard. ``shard_cap`` sub-shards share their
+    cell's centroid, and a routed query probes the whole cell (its
+    members hash-scatter across the sub-shards). None for a
+    hash-sharded index (NULL centroids). This is the ``cells`` value a
+    persisted layout's sidecar stamps."""
+    cells: dict[tuple, list[int]] = {}
+    for shard, cent in rows:
+        if cent is None:
+            return None
+        cells.setdefault(tuple(cent), []).append(int(shard))
+    return sorted(({"centroid": list(c), "shards": sorted(s)}
+                   for c, s in cells.items()),
+                  key=lambda c: c["shards"][0])
+
+
+def _require_cells(cells, op: str) -> None:
+    if cells is None:
+        raise ValueError(
+            f"{op} requires a kmeans-sharded index "
+            f"(hnsw_build(shard_by='kmeans')); hash shards are uniform "
+            f"samples and cannot be routed")
+
+
 def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
                 ef_search: int = 128,
                 qid_col: str = "query_id", qvec_col: str = "query_vec",
@@ -653,12 +688,16 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
 
     The query frame is collected once (``collect_query_batch``); routing
     and scoring both work from that batch. One Spark stage scans the
-    (routed) shard blobs and each task yields every routed query's
-    per-shard top-k; those rows are collected and ranked on the driver
+    (routed) shard blobs, coalesced to Spark's file-split size
+    (``ann.coalesce_to_split_size``): a routed set smaller than one
+    split runs as ONE Python task, because each Python-worker task pays
+    a fixed start-up cost (SCALE_NOTES.md, "Python-worker tasks") far
+    above the graph search of a small shard, and a large one keeps one
+    task per split. Each task yields every routed query's per-shard
+    top-k; those rows are collected and ranked on the driver
     (``ann.rank_pool``: the assign_n replicas of a vector keep their
     minimum distance, ties break by id), so the driver holds at most
-    shards·Q·k rows. The blob scan keeps its spread: graph search is
-    real Python work per shard.
+    shards·Q·k rows.
 
     With ``probe_shards=None`` every query runs on every shard (required
     for hash-sharded indexes, whose shards are uniform corpus samples).
@@ -667,40 +706,36 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
     probe-selection pattern; a split cell's sub-shards all probe — so
     serving work is O(n cells), not O(shards): the scale path when shard
     count grows with the corpus. Routing is a (Q, cells) NumPy argmin
-    over driver-resident centroids (num_shards rows collected once); no
-    vectors move, and the union of routed shards prunes the blob scan.
-    ``probe_shards='auto'`` resolves the count from the index's cell
-    count at the calibrated probed-fraction operating point (policy
-    block above); a fixed int below that fraction emits one loud
-    RuntimeWarning instead of silently degrading.
+    over the cell table (:func:`_cell_table`, collected here from the
+    frame's (shard, centroid) columns; ``hnsw_probe_partitioned`` reads
+    it from the sidecar instead); no vectors move, and the union of
+    routed shards prunes the blob scan. ``probe_shards='auto'`` resolves
+    the count from the index's cell count at the calibrated
+    probed-fraction operating point (policy block above); a fixed int
+    below that fraction emits one loud RuntimeWarning instead of
+    silently degrading.
 
     ef_search defaults to 128: at the 200k probe this lifts recall@10
     0.865 → 0.935 for <25% extra beam work (per-shard graphs are small, so
     a wider beam is cheap relative to the fan-out overhead)."""
+    cells = None if probe_shards is None else _cell_table(
+        index_df.select("shard", "centroid").collect())
+    return _search(index_df, cells, queries, k, ef_search, qid_col,
+                   qvec_col, id_col, probe_shards)
+
+
+def _search(index_df: DataFrame, cells: list[dict] | None,
+            queries: DataFrame, k: int, ef_search: int, qid_col: str,
+            qvec_col: str, id_col: str,
+            probe_shards: int | str | None) -> DataFrame:
+    """:func:`hnsw_search` over the cell table ``cells``, which only a
+    routed call (``probe_shards`` not None) reads."""
     routed: dict[int, list[int]] | None = None
     if probe_shards is None:
         qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
     else:
-        cent_rows = index_df.select("shard", "centroid").collect()
-        if any(r["centroid"] is None for r in cent_rows):
-            raise ValueError(
-                "probe_shards requires a kmeans-sharded index "
-                "(hnsw_build(shard_by='kmeans')); hash shards are uniform "
-                "samples and cannot be routed")
-        # group shards by CELL: shard_cap sub-shards share their cell's
-        # centroid, and a routed query must probe the whole cell (its
-        # members hash-scatter across the sub-shards)
-        cell_of: dict[tuple, int] = {}
-        cell_shards: list[list[int]] = []
-        cell_cents: list[list[float]] = []
-        for r in cent_rows:
-            key = tuple(r["centroid"])
-            if key not in cell_of:
-                cell_of[key] = len(cell_shards)
-                cell_shards.append([])
-                cell_cents.append(list(key))
-            cell_shards[cell_of[key]].append(int(r["shard"]))
-        C = np.asarray(cell_cents, dtype=np.float64)
+        _require_cells(cells, "probe_shards")
+        C = np.asarray([c["centroid"] for c in cells], dtype=np.float64)
         qids, qmat = collect_query_arrays(queries, qid_col, qvec_col,
                                           C.shape[1])
         if probe_shards == "auto":
@@ -713,7 +748,7 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
         routed = {}
         for qi in range(len(qids)):
             for ci in near[qi]:
-                for s in cell_shards[ci]:
+                for s in cells[ci]["shards"]:
                     routed.setdefault(s, []).append(qi)
 
     out_schema = T.StructType([
@@ -747,7 +782,8 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
         # (on a shard-partitioned persisted index this is partition
         # pruning — only the probed shards' files are read)
         probed_df = probed_df.where(F.col("shard").isin(sorted(routed)))
-    pool = probed_df.mapInPandas(probe, schema=out_schema).toPandas()
+    pool = (coalesce_to_split_size(probed_df)
+            .mapInPandas(probe, schema=out_schema).toPandas())
     top = rank_pool(pool, "dist", k, qid_col, id_col)
     return local_result(index_df.sparkSession, top, "dist", qid_col, id_col)
 
@@ -803,13 +839,18 @@ def _write_members(index_df: DataFrame, path: str, touched: bool) -> None:
          .parquet(_members_path(path)))
 
 
-def _stamp_rows(spark, path: str, meta: dict) -> None:
+def _restamp(spark, path: str, meta: dict) -> None:
     """A maintenance call's last write: the ``ready`` stamp with ``rows``
-    recounted as the graphs' memberships (one narrow column of the
-    rewritten layout), so a replayed call counts right."""
-    rows = (substrate.read_face(spark, path, meta)
-            .agg(F.sum("n_vectors")).first()[0])
-    substrate.write_ready(spark, path, {**meta, "rows": int(rows or 0)})
+    (the graphs' memberships) and ``cells`` (:func:`_cell_table`)
+    re-read from the rewritten layout's narrow (shard, centroid,
+    n_vectors) columns, one row per shard. A shard a delete emptied
+    leaves the cell table, and so does a cell left with no shard; a
+    replayed call stamps what an uninterrupted one would."""
+    shards = (substrate.read_face(spark, path, meta)
+              .select("shard", "centroid", "n_vectors").collect())
+    substrate.write_ready(spark, path, {
+        **meta, "rows": sum(int(r["n_vectors"]) for r in shards),
+        "cells": _cell_table((r["shard"], r["centroid"]) for r in shards)})
 
 
 def hnsw_persist_partitioned(index_df: DataFrame, path: str) -> None:
@@ -829,19 +870,24 @@ def hnsw_persist_partitioned(index_df: DataFrame, path: str) -> None:
 
     The sidecar (``sources/substrate.py``) goes ``building`` before the
     first write and ``ready`` after the last, stamping
-    ``build.assign_n``, ``rows`` (graph memberships, observed on the
-    index write) and the index face's read-back schema. Each graph
-    carries its own dim, m, ef_construction and seed."""
+    ``build.assign_n``, ``rows`` (graph memberships), ``cells`` (the
+    routing table, :func:`_cell_table`; both observed on the index
+    write, so no extra job runs) and the index face's read-back schema.
+    Each graph carries its own dim, m, ef_construction and seed."""
     from pyspark.sql import Observation
 
     spark = index_df.sparkSession
     substrate.begin_persist(spark, path)
     obs = Observation()
-    (index_df.observe(obs, F.sum("n_vectors").alias("rows"))
+    (index_df.observe(obs, F.sum("n_vectors").alias("rows"),
+                      F.collect_list(F.struct("shard", "centroid"))
+                      .alias("cells"))
      .write.mode("append").partitionBy("shard").parquet(path))
     _write_members(index_df, path, touched=False)
+    got = obs.get
     substrate.stamp(spark, path, {"assign_n": IVF_ASSIGN_N},
-                    obs.get.get("rows") or 0, {"": 1})
+                    got["rows"] or 0, {"": 1},
+                    cells=_cell_table(got["cells"]))
 
 
 def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
@@ -852,21 +898,22 @@ def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
                            id_col: str = "vec_id") -> DataFrame:
     """Serve from the partitioned index: ``hnsw_search`` over the
     unpruned hive layout, read with the schema its sidecar stamps,
-    returning its local frame (qid, id, dist, rank). It reads the (tiny)
-    shard -> centroid columns, collects the query batch once, routes
-    every query once over the full cell population, and applies the
-    union of routed shards as a literal ``shard IN (...)`` filter — that
-    is what partition-prunes the blob scan, so unrouted shard
-    directories are never read. The per-shard top-k rows (at most routed
-    shards·Q·k) are ranked on the driver. Bit-equal to the in-memory
-    ``hnsw_search`` over the same index (pinned by tests/test_ann.py).
-    Requires a kmeans-sharded index (non-null centroids); hash shards
-    cannot be routed."""
-    meta = substrate.read_meta(spark, path, "hnsw_probe_partitioned")
-    return hnsw_search(substrate.read_face(spark, path, meta), queries, k,
-                       ef_search=ef_search, qid_col=qid_col,
-                       qvec_col=qvec_col, id_col=id_col,
-                       probe_shards=probe_shards)
+    returning its local frame (qid, id, dist, rank). It routes from the
+    sidecar's ``cells`` stamp (no Spark job), collects the query batch
+    once, routes every query once over the full cell population, and
+    applies the union of routed shards as a literal ``shard IN (...)``
+    filter — that is what partition-prunes the blob scan, so unrouted
+    shard directories are never read. The per-shard top-k rows (at most
+    routed shards·Q·k) are ranked on the driver. Bit-equal to the
+    in-memory ``hnsw_search`` over the same index (pinned by
+    tests/test_ann.py). Requires a kmeans-sharded index (non-null
+    centroids); hash shards cannot be routed. A sidecar without
+    ``cells`` raises SubstrateMetaError."""
+    op = "hnsw_probe_partitioned"
+    meta = substrate.read_meta(spark, path, op)
+    return _search(substrate.read_face(spark, path, meta),
+                   substrate.stamped(path, meta, "cells", op), queries, k,
+                   ef_search, qid_col, qvec_col, id_col, probe_shards)
 
 
 def _rebuilt_row(shard: int, g_old: HnswGraph, ids: np.ndarray,
@@ -907,7 +954,8 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
     reproduces the append-only graph bit for bit); untouched shard
     directories keep their exact files (dynamic partition overwrite); a
     fully-emptied shard's directory is removed explicitly
-    (``substrate.remove_dirs``) — a dynamic overwrite cannot see it.
+    (``substrate.remove_dirs``) — a dynamic overwrite cannot see it —
+    and leaves the stamped cell table with any cell it emptied.
     The writes run between a ``building`` marker and the ``ready``
     stamp, so replaying an interrupted delete finishes it."""
     from vectordb_explorations_spark.sources.sinks import (
@@ -964,7 +1012,7 @@ def hnsw_delete_partitioned(spark, path: str, delete_ids,
         substrate.remove_dirs(spark, path, [
             f"shard={sh}" for sh in sorted(set(touched) - survivors)])
         delete_rows_partitioned(spark, mp, ["shard"], "vec_id", victims)
-    _stamp_rows(spark, path, meta)
+    _restamp(spark, path, meta)
     return sum(per_shard.values())
 
 
@@ -973,7 +1021,8 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
                             vec_col: str = "embedding") -> None:
     """Incremental HNSW maintenance on the shard-partitioned layout:
     route the new batch to its ``build.assign_n`` (stamped) nearest
-    cells (the SAME mixed-hash sub-shard formula the build uses),
+    cells of the stamped cell table (the SAME mixed-hash sub-shard
+    formula the build uses, over each cell's live shards),
     rebuild ONLY the touched shards — each rebuild unpickles the
     shard's graph, merges members with the new rows, and re-runs the
     deterministic bulk build with the shard's own recorded
@@ -995,24 +1044,18 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     from the rebuilt graphs."""
     op = "hnsw_append_partitioned"
     meta = substrate.read_meta(spark, path, op, replay=True)
+    cells = substrate.stamped(path, meta, "cells", op)
+    _require_cells(cells, op)
     mp = _members_path(path)
     substrate.require_face(spark, mp, op)
-    full = substrate.read_face(spark, path, meta)
-    cent_rows = full.select("shard", "centroid").collect()
-    if any(r["centroid"] is None for r in cent_rows):
-        raise ValueError("hnsw_append_partitioned requires a kmeans-"
-                         "sharded index (hnsw_build(shard_by='kmeans'))")
-    cells: dict[tuple, list[int]] = {}
-    for r in cent_rows:
-        cells.setdefault(tuple(r["centroid"]), []).append(int(r["shard"]))
-    cell_cents = np.asarray(list(cells), dtype=np.float64)
-    cell_shards = [sorted(v) for v in cells.values()]
-    # route the batch DISTRIBUTED with the build's own kernel: no
-    # O(batch) driver collect, symmetric with ivf_append_partitioned
-    an = max(1, min(int(meta["build"]["assign_n"]), len(cell_cents)))
+    # route the batch DISTRIBUTED with the build's own kernel over the
+    # stamped live shards: no O(batch) driver collect, symmetric with
+    # ivf_append_partitioned
+    an = max(1, min(int(meta["build"]["assign_n"]), len(cells)))
     new_rows_df = _route_to_shards(
-        new_vectors, cell_cents, [s[0] for s in cell_shards],
-        [len(s) for s in cell_shards], an, id_col,
+        new_vectors,
+        np.asarray([c["centroid"] for c in cells], dtype=np.float64),
+        [c["shards"] for c in cells], an, id_col,
         vec_col).localCheckpoint(eager=True)
     # touched-shard list is bounded by shard count, not batch size
     touched = sorted(r["shard"] for r in
@@ -1022,8 +1065,9 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
         if meta["state"] != "ready":
             substrate.write_ready(spark, path, meta)
         return
-    old_blobs = full.where(F.col("shard").isin(touched)) \
-        .select("shard", "blob", "centroid")
+    old_blobs = (substrate.read_face(spark, path, meta)
+                 .where(F.col("shard").isin(touched))
+                 .select("shard", "blob", "centroid"))
 
     def rebuild(old_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
         if old_pdf.empty:
@@ -1055,4 +1099,4 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     finally:
         rebuilt.unpersist()
         new_rows_df.unpersist()
-    _stamp_rows(spark, path, meta)
+    _restamp(spark, path, meta)

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from vectordb_explorations_spark.functions.rounding import r6, round6
+from vectordb_explorations_spark.operators.textops import _sorted_by
 from pyspark.sql import types as T
 
 def _optional_import(name: str):
@@ -852,8 +853,11 @@ def gif_frame_sample(docs: DataFrame) -> DataFrame:
     (bytes == chars) exactly like the perceptual asset stages.
 
     Scale shape: one narrow projection, one Arrow-batched kernel, no
-    shuffle until the final presentation sort. Cites hnsw.cc: none —
-    north-star extension."""
+    shuffle until the final presentation sort. The kernel ends at a
+    hash exchange on the sort key (``textops._sorted_by``), so the
+    sort's range-sampling job reads shuffle output and the GIF encode
+    and decode run once per call. Cites hnsw.cc: none — north-star
+    extension."""
     n = GIF_N_FRAMES * GIF_FRAME_BYTES
     elig = docs.where(
         (F.length("text") >= n)
@@ -894,8 +898,8 @@ def gif_frame_sample(docs: DataFrame) -> DataFrame:
                                    * 1_000_000.0 + 0.5) / 1_000_000.0)
             yield pd.DataFrame(out)
 
-    return (src.mapInPandas(run, schema=GIF_FRAMES_SCHEMA)
-            .orderBy("doc_id", "frame_idx"))
+    return _sorted_by(src.mapInPandas(run, schema=GIF_FRAMES_SCHEMA),
+                      "doc_id", "frame_idx")
 
 
 def gif_frame_sample_oracle() -> str:

@@ -409,8 +409,9 @@ def ivfpq_build(vectors: DataFrame, num_centroids: int = 16,
     # just to keep 4096 rows (measured as most of the build's wall time;
     # at 100 TB it is a whole extra corpus pass). Both replicas of each
     # sampled vector contribute a residual, matching ivf_build's
-    # assign_n=2 replication in the encoded population.
-    an = ANN.IVF_ASSIGN_N  # the replication ivf_build encodes with
+    # assign_n=2 replication in the encoded population (capped at the
+    # centroid count, as ivf_assign caps it).
+    an = max(1, min(ANN.IVF_ASSIGN_N, len(centroids)))
     svecs = (vectors.orderBy(F.xxhash64(F.col(id_col)), id_col)
              .limit(max(1, sample_n // an)).select(vec_col).collect())
     smat = np.asarray([r[0] for r in svecs], dtype=np.float64)

@@ -26,16 +26,22 @@ whatever filesystem the layout does. Keys:
 - ``schemas``: the read-back schema of each hive face, keyed by face
   name (``""`` is the base directory itself), so a probe skips the
   footer read and partition-type inference.
+- ``cells`` (HNSW only): the routing table, one entry per k-means cell
+  with its centroid and the live shard ids that share it, ascending
+  (``null`` for a hash-sharded index). Persist stamps it; append and
+  delete re-read it from the rewritten layout, so a shard a delete
+  empties leaves it. The routed probe and the append route from it.
 
 A missing sidecar, an unreadable or truncated one, or a ``building``
 one raises :class:`SubstrateMetaError` on admit, serve, append and
 delete: no path falls back to a default geometry, a recount or schema
-inference. The one exception is replay: an append or delete accepts a
-``building`` sidecar that carries ``build`` and was left by the same
-call (``op``), and ends by writing ``ready``. An interrupted persist
-(``building`` without ``build``) only a rebuild can finish. An append
-into a path that holds no layout at all (no sidecar, no partition
-directory) starts a new one (:func:`read_append_meta`).
+inference; so does a ``ready`` one without a key its reader needs
+(:func:`stamped`). The one exception is replay: an append or delete
+accepts a ``building`` sidecar that carries ``build`` and was left by
+the same call (``op``), and ends by writing ``ready``. An interrupted
+persist (``building`` without ``build``) only a rebuild can finish. An
+append into a path that holds no layout at all (no sidecar, no
+partition directory) starts a new one (:func:`read_append_meta`).
 """
 
 from __future__ import annotations
@@ -130,12 +136,23 @@ def write_ready(spark: SparkSession, base: str, meta: dict) -> None:
 
 
 def stamp(spark: SparkSession, base: str, build: dict, rows: int,
-          faces: dict[str, int]) -> None:
+          faces: dict[str, int], **keys) -> None:
     """A persist's last write: the ``ready`` sidecar with the build
-    geometry, the row count and each face's read-back schema
-    (``faces`` maps face name to its number of hive levels)."""
+    geometry, the row count, each face's read-back schema (``faces``
+    maps face name to its number of hive levels) and the substrate's
+    own ``keys``."""
     write_ready(spark, base, {"build": build, "rows": int(rows),
-                              "schemas": face_schemas(spark, base, faces)})
+                              "schemas": face_schemas(spark, base, faces),
+                              **keys})
+
+
+def stamped(base: str, meta: dict, key: str, op: str):
+    """``meta[key]``, or SubstrateMetaError when the stamp lacks it."""
+    if key not in meta:
+        raise SubstrateMetaError(
+            f"{op}: {meta_path(base)} stamps no {key!r}; rebuild the "
+            f"substrate with its persist function")
+    return meta[key]
 
 
 def face_schemas(spark: SparkSession, base: str,
