@@ -12,6 +12,10 @@ kernels read straight off the scan. Counted from Spark's status store
 unigram_logprob is left out on purpose: it scores each document's tokens
 against the corpus-wide vocabulary, so one corpus stage would have to
 shuffle the whole token stream, which costs more than a second tokenize.
+doc_chunks is left out for the same reason: its kernel is a codegen
+split, explode and md5, and an exchange ahead of its sort would shuffle
+the fanned-out chunk stream, twice the bytes its sort alone writes, to
+save re-running that cheap kernel.
 """
 
 import pytest
@@ -33,7 +37,6 @@ OPS = {
     "token_counts": textops.token_counts,
     "dsir_select": sampling.dsir_select,
     "source_kl_divergence": sampling.source_kl_divergence,
-    "doc_chunks": sampling.doc_chunks,
     "gif_frame_sample": multimodal.gif_frame_sample,
 }
 

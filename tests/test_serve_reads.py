@@ -24,7 +24,7 @@ from vectordb_explorations_spark.operators.pq import (
 from vectordb_explorations_spark.operators.sq import (
     ivfsq_build, ivfsq_persist_partitioned, ivfsq_probe_partitioned,
     ivfsq_search)
-from vectordb_explorations_spark.sources import load_table
+from vectordb_explorations_spark.sources import load_table, substrate
 from spark_status import input_stage_tasks, traced
 
 K = 5
@@ -169,6 +169,22 @@ def test_routed_hnsw_blob_scan_runs_one_task(spark, layouts):
         spark, layouts["hnsw"], qdf, K, probe_shards="auto").collect())
     assert len(served) == NUM_Q * K
     assert tasks == [1], tasks
+
+
+def test_unrouted_hnsw_blob_scan_keeps_its_spread(spark, layouts):
+    """An unrouted probe searches every shard for every query, so its
+    blob scan is not coalesced: it runs as many tasks as a plain read of
+    the layout's blob column does."""
+    path = layouts["hnsw"]
+    face = substrate.read_face(spark, path,
+                               substrate.read_meta(spark, path, "test"))
+    _, plain = input_stage_tasks(spark, lambda: face.select(
+        "shard", "blob").write.format("noop").mode("overwrite").save())
+    qdf = _local_queries(spark, layouts["emb"])
+    served, tasks = input_stage_tasks(spark, lambda: hnsw_probe_partitioned(
+        spark, path, qdf, K, probe_shards=None).collect())
+    assert len(served) == NUM_Q * K
+    assert plain[0] > 1 and tasks == plain, (tasks, plain)
 
 
 def _in_memory_calls(spark, lay):

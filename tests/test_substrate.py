@@ -455,3 +455,26 @@ def test_hnsw_sidecar_without_cells_raises(spark, sf_dir, tmp_path, call):
         spark, path, emb.where(F.col("vec_id") % 50 == 0))
     with pytest.raises(substrate.SubstrateMetaError, match="'cells'"):
         run()
+
+
+def test_hnsw_unrouted_probe_reads_no_cells(spark, sf_dir, tmp_path):
+    """An unrouted probe (``probe_shards=None``) never routes, so it
+    serves the same rows from a ready sidecar that stamps no cell table
+    as from one that does."""
+    from vectordb_explorations_spark.operators.hnsw import (
+        hnsw_probe_partitioned)
+    from vectordb_explorations_spark.operators.knn import sample_queries
+    from vectordb_explorations_spark.sources import load_table
+
+    path, _ = _ann_layout(spark, sf_dir, tmp_path, "hnsw")
+    qs = sample_queries(load_table(spark, "embeddings", sf_dir), 5)
+
+    def serve():
+        return sorted(hnsw_probe_partitioned(spark, path, qs, K,
+                                             probe_shards=None).collect())
+
+    want = serve()
+    meta = substrate.read_meta(spark, path, "test")
+    substrate.write_ready(spark, path,
+                          {k: v for k, v in meta.items() if k != "cells"})
+    assert want and serve() == want

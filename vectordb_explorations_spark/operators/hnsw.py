@@ -688,13 +688,17 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
 
     The query frame is collected once (``collect_query_batch``); routing
     and scoring both work from that batch. One Spark stage scans the
-    (routed) shard blobs, coalesced to Spark's file-split size
-    (``ann.coalesce_to_split_size``): a routed set smaller than one
-    split runs as ONE Python task, because each Python-worker task pays
-    a fixed start-up cost (SCALE_NOTES.md, "Python-worker tasks") far
-    above the graph search of a small shard, and a large one keeps one
-    task per split. Each task yields every routed query's per-shard
-    top-k; those rows are collected and ranked on the driver
+    (routed) shard blobs. A routed scan is coalesced to Spark's
+    file-split size (``ann.coalesce_to_split_size``): a routed set
+    smaller than one split runs as ONE Python task, because each
+    Python-worker task pays a fixed start-up cost (SCALE_NOTES.md,
+    "Python-worker tasks") far above the graph search of the few cells
+    a query routes to, and a large one keeps one task per split. An
+    unrouted scan keeps its partitions: there every query searches
+    every shard, so its graph search grows with the shard count and
+    stays spread across cores (SCALE_NOTES.md measures the trade on
+    four). Each task yields every routed query's
+    per-shard top-k; those rows are collected and ranked on the driver
     (``ann.rank_pool``: the assign_n replicas of a vector keep their
     minimum distance, ties break by id), so the driver holds at most
     shards·Q·k rows.
@@ -781,9 +785,9 @@ def _search(index_df: DataFrame, cells: list[dict] | None,
         # and without this every task still receives all shards' bytes
         # (on a shard-partitioned persisted index this is partition
         # pruning — only the probed shards' files are read)
-        probed_df = probed_df.where(F.col("shard").isin(sorted(routed)))
-    pool = (coalesce_to_split_size(probed_df)
-            .mapInPandas(probe, schema=out_schema).toPandas())
+        probed_df = coalesce_to_split_size(
+            probed_df.where(F.col("shard").isin(sorted(routed))))
+    pool = probed_df.mapInPandas(probe, schema=out_schema).toPandas()
     top = rank_pool(pool, "dist", k, qid_col, id_col)
     return local_result(index_df.sparkSession, top, "dist", qid_col, id_col)
 
@@ -907,13 +911,15 @@ def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
     routed shards·Q·k) are ranked on the driver. Bit-equal to the
     in-memory ``hnsw_search`` over the same index (pinned by
     tests/test_ann.py). Requires a kmeans-sharded index (non-null
-    centroids); hash shards cannot be routed. A sidecar without
-    ``cells`` raises SubstrateMetaError."""
+    centroids); hash shards cannot be routed. A routed call on a
+    sidecar without ``cells`` raises SubstrateMetaError; an unrouted
+    one (``probe_shards=None``) never reads the stamp."""
     op = "hnsw_probe_partitioned"
     meta = substrate.read_meta(spark, path, op)
-    return _search(substrate.read_face(spark, path, meta),
-                   substrate.stamped(path, meta, "cells", op), queries, k,
-                   ef_search, qid_col, qvec_col, id_col, probe_shards)
+    cells = None if probe_shards is None else substrate.stamped(
+        path, meta, "cells", op)
+    return _search(substrate.read_face(spark, path, meta), cells, queries,
+                   k, ef_search, qid_col, qvec_col, id_col, probe_shards)
 
 
 def _rebuilt_row(shard: int, g_old: HnswGraph, ids: np.ndarray,

@@ -302,25 +302,22 @@ def doc_chunks(docs: DataFrame, win: int = CHUNK_WIN,
 
     Scale shape: one explode per document (fan-out bounded by
     ceil(doc_len/stride)), all expressions codegen — no shuffle except the
-    declared output order, whose range-sampling job reads the hash
-    exchange ``textops._sorted_by`` puts before it, so the corpus is
-    read once; chunking parallelizes per-document at any corpus size."""
-    from vectordb_explorations_spark.operators.textops import _sorted_by
-
+    declared output order; chunking parallelizes per-document at any
+    corpus size."""
     toks = docs.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
     n = F.size("ws")
     n_chunks = (F.lit(1) + F.greatest(
         F.lit(0),
         F.ceil((n - F.lit(win)).cast("double") / F.lit(stride)))).cast("int")
     ck = F.slice("ws", F.col("chunk_id") * stride + 1, win)
-    return _sorted_by(
-        toks.withColumn("chunk_id", F.explode(F.sequence(F.lit(0),
+    return (toks
+            .withColumn("chunk_id", F.explode(F.sequence(F.lit(0),
                                                          n_chunks - 1)))
-        .select("doc_id", "chunk_id",
-                (F.col("chunk_id") * stride).alias("chunk_start"),
-                F.size(ck).alias("chunk_len"),
-                F.md5(F.concat_ws(" ", ck)).alias("chunk_md5")),
-        "doc_id", "chunk_id")
+            .select("doc_id", "chunk_id",
+                    (F.col("chunk_id") * stride).alias("chunk_start"),
+                    F.size(ck).alias("chunk_len"),
+                    F.md5(F.concat_ws(" ", ck)).alias("chunk_md5"))
+            .orderBy("doc_id", "chunk_id"))
 
 
 def doc_chunks_oracle(win: int = CHUNK_WIN, stride: int = CHUNK_STRIDE) -> str:
