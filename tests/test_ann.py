@@ -222,6 +222,7 @@ def test_ivf_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
         ivf_search)
     from vectordb_explorations_spark.operators.knn import sample_queries
     from vectordb_explorations_spark.sources import load_table
+    from spark_status import traced
 
     emb = load_table(spark, "embeddings", sf_dir)
     assigned, cents = ivf_build(emb, num_centroids=8)
@@ -229,8 +230,10 @@ def test_ivf_partitioned_probe_prunes_and_matches(spark, sf_dir, tmp_path):
     ivf_persist_partitioned(assigned, path)
     queries = sample_queries(emb, 5).cache()
 
-    served = ivf_probe_partitioned(spark, path, cents, queries, 5, nprobe=2)
-    plan = served._jdf.queryExecution().executedPlan().toString()
+    # the served frame is a local table: read the plans the call executed
+    served, _, plans = traced(spark, lambda: ivf_probe_partitioned(
+        spark, path, cents, queries, 5, nprobe=2))
+    plan = "\n".join(plans)
     assert "PartitionFilters" in plan and "list_id" in plan
     import re
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
@@ -548,6 +551,37 @@ def test_query_batch_cap_guard(spark):
     assert len(collect_query_batch(qs, "query_id", "query_vec", cap=10)) == 10
     with _pytest.raises(ValueError, match="serving cap"):
         collect_query_batch(qs, "query_id", "query_vec", cap=9)
+
+
+def test_probe_map_bounds_its_temporary():
+    """``_probe_map`` blocks its (queries, centroids, dim) difference
+    temporary on the query axis: 500 queries x 512 centroids x 64 dims
+    (264 MB unblocked) peak under 64 MB, and the map equals the
+    unblocked formula."""
+    import tracemalloc
+
+    import numpy as np
+
+    from vectordb_explorations_spark.operators.ann import _probe_map
+
+    rng = np.random.default_rng(3)
+    cents = rng.standard_normal((512, 64))
+    qmat = rng.standard_normal((500, 64))
+    tracemalloc.start()
+    try:
+        got = _probe_map(cents, qmat, 8)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 64 * 2 ** 20, peak
+
+    cdist = ((qmat[:, None, :] - cents[None, :, :]) ** 2).sum(-1)
+    want = {}
+    for qi in range(len(qmat)):
+        for li in np.lexsort((np.arange(len(cents)), cdist[qi]))[:8]:
+            want.setdefault(int(li), []).append(qi)
+    assert sorted(got) == sorted(want)
+    assert all(got[li].tolist() == want[li] for li in want)
 
 
 def test_lsh_exchange_warning_at_scale(spark, sf_dir):

@@ -99,27 +99,6 @@ def test_boilerplate_ngrams_partial_agg(spark, sf_dir):
     assert "partial_count" in plan
 
 
-def test_search_merges_single_exchange(spark, sf_dir):
-    """ivf_search's dedupe + ranking share one repartition-on-query
-    exchange (round-6): no ENSURE_REQUIREMENTS hash exchange may appear
-    on the narrow merge rows above the Arrow scoring stage."""
-    import re
-
-    from vectordb_explorations_spark.operators.ann import ivf_build, ivf_search
-    from vectordb_explorations_spark.operators.knn import sample_queries
-    from vectordb_explorations_spark.sources import load_table
-
-    emb = load_table(spark, "embeddings", sf_dir)
-    assigned, cents = ivf_build(emb, num_centroids=8)
-    df = ivf_search(assigned, cents, sample_queries(emb, 5), 5)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    above_arrow = plan.split("MapInPandas")[0]
-    ensure_hash = re.findall(r"Exchange hashpartitioning.*ENSURE_REQUIREMENTS",
-                             above_arrow)
-    assert not ensure_hash, f"merge re-shuffles: {ensure_hash}"
-    assert "REPARTITION_BY_COL" in above_arrow
-
-
 def test_runtime_bloom_filter_prunes_join_probe(spark, sf_dir):
     """Runtime bloom-filter join pruning (the 100 TB scan-reduction
     feature AQE adds when a selective dimension filters a big-probe SMJ):

@@ -10,9 +10,11 @@ evaluated; one read of a Q-row frame adds exactly Q.
 """
 
 import pytest
+from pyspark.sql import functions as F
 
 from vectordb_explorations_spark.operators.ann import (
-    ivf_build, ivf_persist_partitioned, ivf_probe_partitioned, ivf_search)
+    coalesce_to_split_size, ivf_build, ivf_persist_partitioned,
+    ivf_probe_partitioned, ivf_search)
 from vectordb_explorations_spark.operators.hnsw import (
     hnsw_build, hnsw_persist_partitioned, hnsw_probe_partitioned,
     hnsw_search)
@@ -141,12 +143,12 @@ def _local_queries(spark, emb):
 
 # Spark jobs per serve call over a local (pandas-built) query frame.
 # Every layout is read with the schema its sidecar stamps, so no call
-# runs a schema-discovery job. IVF-PQ/SQ8: the probe scan and the exact
-# re-score, with merges, ranking and the served frame on the driver.
-# HNSW: the blob scan alone (it routes from the sidecar's cell table).
-# IVF-flat: the probe scan and its ranking exchange.
+# runs a schema-discovery job, and every call merges, ranks and builds
+# the served frame on the driver. HNSW and IVF-flat: the probe scan
+# alone (HNSW routes from the sidecar's cell table). IVF-PQ/SQ8: the
+# probe scan and the exact re-score.
 SERVE_JOBS = {"hnsw_probe_partitioned": 1,
-              "ivf_probe_partitioned": 2,
+              "ivf_probe_partitioned": 1,
               "ivfpq_probe_partitioned": 2,
               "ivfsq_probe_partitioned": 2}
 
@@ -160,15 +162,29 @@ def test_serve_call_job_count(spark, layouts, call):
     assert jobs == SERVE_JOBS[call], (call, jobs)
 
 
-def test_routed_hnsw_blob_scan_runs_one_task(spark, layouts):
-    """The routed blob scan is coalesced to Spark's split size: the
-    test layout's routed shards (four files, well under one split) are
-    read by one Python task, not one task per shard file."""
+@pytest.mark.parametrize("call", ["hnsw_probe_partitioned",
+                                  "ivf_probe_partitioned"])
+def test_routed_probe_scan_runs_one_task(spark, layouts, call):
+    """A routed scan is coalesced to Spark's split size: the test
+    layout's probed shards or lists (a few files, well under the 4 MB
+    open cost) are read by one Python task, not one task per file."""
     qdf = _local_queries(spark, layouts["emb"])
-    served, tasks = input_stage_tasks(spark, lambda: hnsw_probe_partitioned(
-        spark, layouts["hnsw"], qdf, K, probe_shards="auto").collect())
+    served, tasks = input_stage_tasks(
+        spark, lambda: _serve_calls(spark, layouts)[call](qdf).collect())
     assert len(served) == NUM_Q * K
     assert tasks == [1], tasks
+
+
+def test_split_size_spreads_a_large_scan(spark):
+    """``coalesce_to_split_size`` follows Spark's whole file-split rule: a
+    scan estimated under one open cost runs as one task, and one estimated
+    at 80 MB per core keeps a task per core (the maxPartitionBytes part
+    alone would pack it into fewer)."""
+    par = spark.sparkContext.defaultParallelism
+    big = spark.range(0, 10_000_000 * par, numPartitions=2 * par)
+    small = spark.range(0, 1000, numPartitions=2 * par)
+    assert coalesce_to_split_size(big).rdd.getNumPartitions() == par
+    assert coalesce_to_split_size(small).rdd.getNumPartitions() == 1
 
 
 def test_unrouted_hnsw_blob_scan_keeps_its_spread(spark, layouts):
@@ -185,6 +201,26 @@ def test_unrouted_hnsw_blob_scan_keeps_its_spread(spark, layouts):
         spark, path, qdf, K, probe_shards=None).collect())
     assert len(served) == NUM_Q * K
     assert plain[0] > 1 and tasks == plain, (tasks, plain)
+
+
+def test_unrouted_search_over_built_index_runs_a_task_per_shard(spark,
+                                                                 layouts):
+    """``hnsw_build`` places each shard in its own partition, as many as
+    the shard count (capped by the session's shuffle width), so an
+    unrouted search over a cached 4-shard index runs 4 blob-scan tasks,
+    one per shard."""
+    idx = hnsw_build(layouts["emb"], num_shards=4).cache()
+    try:
+        idx.count()
+        placed = idx.groupBy(F.spark_partition_id()).count().collect()
+        qdf = _local_queries(spark, layouts["emb"])
+        served, tasks = input_stage_tasks(
+            spark, lambda: hnsw_search(idx, qdf, K).collect())
+    finally:
+        idx.unpersist()
+    assert len(served) == NUM_Q * K
+    assert sorted(r["count"] for r in placed) == [1, 1, 1, 1], placed
+    assert tasks == [4], tasks
 
 
 def _in_memory_calls(spark, lay):

@@ -478,3 +478,43 @@ def test_hnsw_unrouted_probe_reads_no_cells(spark, sf_dir, tmp_path):
     substrate.write_ready(spark, path,
                           {k: v for k, v in meta.items() if k != "cells"})
     assert want and serve() == want
+
+
+@pytest.mark.parametrize("call", ["probe", "append"])
+def test_emptied_hnsw_layout(spark, sf_dir, tmp_path, call):
+    """A routed HNSW layout whose every vector was deleted stamps an
+    empty cell table: a routed probe serves an empty frame with the
+    served dtypes, as an empty query batch does, and an append raises
+    SubstrateMetaError naming the path, since no live cell is left to
+    route the batch to."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from vectordb_explorations_spark.operators.hnsw import (
+        hnsw_append_partitioned, hnsw_build, hnsw_delete_partitioned,
+        hnsw_persist_partitioned, hnsw_probe_partitioned)
+    from vectordb_explorations_spark.operators.knn import sample_queries
+    from vectordb_explorations_spark.sources import load_table
+
+    emb = load_table(spark, "embeddings", sf_dir)
+    vecs = emb.orderBy("vec_id").limit(100)
+    ids = [int(r[0]) for r in vecs.select("vec_id").collect()]
+    assert len(ids) == 100
+    path = str(tmp_path / "hnsw_emptied")
+    hnsw_persist_partitioned(
+        hnsw_build(vecs, num_shards=2, shard_by="kmeans"), path)
+    assert hnsw_delete_partitioned(spark, path, ids) >= 100
+    assert substrate.read_meta(spark, path, "test")["cells"] == []
+    if call == "probe":
+        served = hnsw_probe_partitioned(spark, path,
+                                        sample_queries(emb, 5), K)
+        assert served.dtypes == [("query_id", "bigint"),
+                                 ("vec_id", "bigint"), ("dist", "double"),
+                                 ("rank", "int")]
+        assert served.collect() == []
+    else:
+        with pytest.raises(substrate.SubstrateMetaError,
+                           match=f"{re.escape(path)}.*no live cell"):
+            hnsw_append_partitioned(spark, path,
+                                    emb.where(F.col("vec_id") % 50 == 0))

@@ -15,7 +15,9 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(1, os.path.join(ROOT, "tests"))
 
 SF = "/root/testdata/sf0.01"
 
@@ -561,7 +563,28 @@ def facts(df) -> list[str]:
     # plans.explain.plan_summary can never diverge
     from vectordb_explorations_spark.plans.explain import plan_summary
 
-    s = plan_summary(df)
+    return render(plan_summary(df))
+
+
+def served_facts(spark, serve) -> list[str]:
+    """facts of the physical plans the call ``serve()`` executes, read
+    from the SQL status store (``tests/spark_status.traced``): a serve
+    call that returns a local frame ran its scan before returning, so
+    the frame's own plan is only a local table."""
+    from vectordb_explorations_spark.plans.explain import summarize_plan
+    from spark_status import traced
+
+    mode = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "extended")
+    try:
+        _, _, plans = traced(spark, lambda: serve().collect())
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", mode)
+    return render(summarize_plan("\n".join(
+        p.split("== Physical Plan ==")[-1] for p in plans)))
+
+
+def render(s: dict) -> list[str]:
     out = [f"- shuffle exchanges: **{s['shuffle_exchanges']}**, "
            f"broadcast exchanges: **{s['broadcast_exchanges']}**"]
     if s["join_strategies"]:
@@ -635,7 +658,8 @@ def main() -> None:
     from vectordb_explorations_spark.sources import load_table
 
     emb = load_table(spark, "embeddings", SF)
-    queries = sample_queries(emb, 5).cache()
+    # a local query batch: collecting it adds no plan to the traced ones
+    queries = spark.createDataFrame(sample_queries(emb, 5).toPandas())
     with tempfile.TemporaryDirectory() as d:
         assigned, cents = ivf_build(emb, num_centroids=8)
         ivf_persist_partitioned(assigned, f"{d}/ivf")
@@ -644,9 +668,12 @@ def main() -> None:
              "Hive-partitioned inverted lists: the probe union's list_id "
              "IN filter prunes unprobed list directories at the file "
              "listing; per-probe I/O is nprobe/num_centroids of the "
-             "index regardless of corpus size.",
-             ivf_probe_partitioned(spark, f"{d}/ivf", cents, queries, 5,
-                                   nprobe=2)),
+             "index regardless of corpus size. The pruned scan is the "
+             "call's one Spark job: its per-task pools merge on the "
+             "driver (ann.probe_and_merge), so the plan holds no "
+             "exchange.",
+             lambda: ivf_probe_partitioned(spark, f"{d}/ivf", cents,
+                                           queries, 5, nprobe=2)),
         ]
         idx = hnsw_build(emb, num_shards=4, shard_by="kmeans").cache()
         idx.count()
@@ -658,8 +685,8 @@ def main() -> None:
              "never read (the file-level completion of 'unrouted shards "
              "are pruned at the scan'); results are bit-equal to the "
              "in-memory hnsw_search (tests/test_ann.py).",
-             hnsw_probe_partitioned(spark, f"{d}/hnsw", queries, 5,
-                                    probe_shards=2)))
+             lambda: hnsw_probe_partitioned(spark, f"{d}/hnsw", queries,
+                                            5, probe_shards=2)))
         emb.write.partitionBy("label").parquet(f"{d}/facet")
         fq = (emb.orderBy("vec_id").limit(3)
               .select(F.col("vec_id").alias("query_id"),
@@ -671,16 +698,16 @@ def main() -> None:
              "byte is read; the broadcast facet-join then scopes each "
              "query to its own facet (tests/test_knn.py pins "
              "bit-equality with the in-memory facet join).",
-             knn_filtered_partitioned(spark, f"{d}/facet", fq, 5, dim=64)))
+             lambda: knn_filtered_partitioned(spark, f"{d}/facet", fq, 5,
+                                              dim=64)))
         lines.append("## Persisted serving layouts (partition pruning)")
         lines.append("")
-        for name, note, df in serving:
-            df.collect()
+        for name, note, serve in serving:
             lines.append(f"### {name}")
             lines.append("")
             lines.append(note)
             lines.append("")
-            lines.extend(facts(df))
+            lines.extend(served_facts(spark, serve))
             lines.append("")
         idx.unpersist()
 

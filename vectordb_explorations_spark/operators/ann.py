@@ -137,15 +137,18 @@ def collect_query_arrays(queries: DataFrame, qid_col: str, qvec_col: str,
 
 
 def coalesce_to_split_size(df: DataFrame) -> DataFrame:
-    """``df`` in ``max(1, ceil(size estimate / maxPartitionBytes))`` tasks:
-    Spark's own file-split size applied to the plan's size estimate. A
-    Python-worker task pays a fixed start-up cost, so a small probed scan
-    runs as one task, while a large layout keeps the parallelism its
-    splits would give it."""
+    """``df`` in ``max(1, ceil(size estimate / split))`` tasks, where
+    ``split`` is Spark's own file-split size for a scan of that many
+    bytes: ``min(maxPartitionBytes, max(openCostInBytes, estimate /
+    default parallelism))``. A Python-worker task pays a fixed start-up
+    cost, so a scan under one open cost (4 MB) runs as one task, while a
+    larger one spreads over the cores as Spark's splits would."""
     est = int(df._jdf.queryExecution().optimizedPlan().stats()
               .sizeInBytes())
-    split = (df.sparkSession._jsparkSession.sessionState().conf()
-             .filesMaxPartitionBytes())
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    split = min(conf.filesMaxPartitionBytes(), max(
+        conf.filesOpenCostInBytes(),
+        est // df.sparkSession.sparkContext.defaultParallelism))
     return df.coalesce(min(max(1, -(-est // split)), 2 ** 31 - 1))
 
 
@@ -157,18 +160,6 @@ def rank_pool(pool, dist_col: str, n: int, qid_col: str, id_col: str):
            .drop_duplicates([qid_col, id_col])
            .groupby(qid_col, sort=False).head(n))
     return top.assign(rank=top.groupby(qid_col, sort=False).cumcount() + 1)
-
-
-def list_rows(lists: np.ndarray, ids: np.ndarray):
-    """Per inverted list in one Arrow batch of an IVF-family scan: the
-    list id and the positions of its rows, one row per distinct id. A
-    replayed append can leave a list holding an id twice, and a repeat
-    must not take two of a query's top-n slots there; keeping one row
-    per batch and list is enough, because the merges keep one row per
-    (query, id)."""
-    for li in np.unique(lists):
-        sel = np.flatnonzero(lists == li)
-        yield int(li), sel[np.unique(ids[sel], return_index=True)[1]]
 
 
 def local_result(spark, top, dist_col: str, qid_col: str,
@@ -194,19 +185,107 @@ def _probe_map(centroids: np.ndarray, qmat: np.ndarray,
                nprobe: int) -> dict[int, np.ndarray]:
     """IVF-family probe selection: list id -> indices (ascending) of the
     queries whose ``nprobe`` nearest centroids include it, ties broken by
-    list id. A (Q, C) NumPy distance over driver-resident centroids; the
-    keys are the probed-list union, which the searches apply as a literal
-    ``list_id IN (...)`` filter — on a hive list_id layout that filter
-    partition-prunes the scan."""
-    cd = qmat[:, None, :] - centroids[None, :, :]
-    cdist = (cd * cd).sum(-1)  # (Q, C)
-    n_lists = centroids.shape[0]
+    list id. A NumPy distance over driver-resident centroids, blocked on
+    the query axis so its one (block, C, dim) buffer stays near 32 MB
+    whatever the batch size; each block squares its differences in place
+    and sums them as the unblocked ``((q - c) ** 2).sum(-1)`` does, so
+    the map does not depend on the block size."""
+    n_lists, dim = centroids.shape
     nn = min(nprobe, n_lists)
+    block = max(1, min(len(qmat), (1 << 22) // max(1, n_lists * dim)))
+    buf = np.empty((block, n_lists, dim))
     by_list: dict[int, list[int]] = {}
-    for qi in range(len(qmat)):
-        for li in np.lexsort((np.arange(n_lists), cdist[qi]))[:nn]:
-            by_list.setdefault(int(li), []).append(qi)
+    for q0 in range(0, len(qmat), block):
+        cd = buf[:len(qmat) - q0]
+        np.subtract(qmat[q0:q0 + block, None, :], centroids[None, :, :],
+                    out=cd)
+        cdist = np.multiply(cd, cd, out=cd).sum(-1)  # (block, C)
+        for qi, row in enumerate(cdist, q0):
+            for li in np.lexsort((np.arange(n_lists), row))[:nn]:
+                by_list.setdefault(int(li), []).append(qi)
     return {li: np.asarray(v, dtype=np.int64) for li, v in by_list.items()}
+
+
+def probe_and_merge(scan: DataFrame, group_col: str,
+                    probes: dict[int, np.ndarray] | None, score,
+                    qids: np.ndarray, qmat: np.ndarray, k: int,
+                    refine_with: DataFrame | None = None,
+                    refine_factor: int = 1, id_col: str = "vec_id",
+                    vec_col: str = "embedding",
+                    qid_col: str = "query_id") -> DataFrame:
+    """The serve kernel of IVF-flat, IVF-SQ8, IVF-PQ and HNSW: score the
+    collected query batch (``qids``, ``qmat``) against the groups of
+    ``scan`` (inverted lists or graph shards) and return the served local
+    frame ``(qid, id, dist, rank)``.
+
+    ``probes`` maps each probed group id to the ascending indices of the
+    queries that probe it (``_probe_map``). Its keys prune the scan as a
+    literal ``group_col IN (...)`` filter, which partition-prunes a hive
+    layout, and the pruned scan is coalesced to Spark's split size
+    (``coalesce_to_split_size``), so a probed set under 4 MB runs as one
+    Python task and a larger one keeps a task per core. ``probes=None``
+    sends every query to every group: the scan is neither pruned nor
+    coalesced and keeps its partitions, since its work grows with the
+    group count.
+
+    ``score(group, rows, qis)`` is the search's own arithmetic: given one
+    group's rows of an Arrow batch and the indices of its probing queries
+    it yields ``(qi, ids, dists)`` per query. When the scan carries
+    ``id_col`` the rows hold one row per distinct id, so an id repeated
+    by a replayed append cannot take two of a query's slots. Each task
+    keeps the ``n`` best rows per (group, query) and then per query
+    (``rank_pool``; ``n`` is ``k``, or ``k·refine_factor`` with
+    ``refine_with``), so the one Spark job returns at most tasks·Q·n
+    pool rows to the driver. There ``rank_pool`` merges them: the
+    replicas of a vector that ``IVF_ASSIGN_N`` put in several groups
+    keep their minimum distance, and rows order by (distance, id).
+    Without ``refine_with`` the top k are served through
+    ``local_result``; with it the top n per query are re-scored exactly
+    by ``pq._exact_refine``."""
+    import pandas as pd
+
+    n = k * refine_factor if refine_with is not None else k
+    if probes is not None:
+        scan = coalesce_to_split_size(
+            scan.where(F.col(group_col).isin(sorted(probes))))
+    every = np.arange(len(qids))
+    schema = T.StructType([
+        T.StructField(qid_col, T.LongType()),
+        T.StructField(id_col, T.LongType()),
+        T.StructField("dist", T.DoubleType()),
+    ])
+
+    def task(batches):
+        accs = []
+        for pdf in batches:
+            groups = pdf[group_col].to_numpy(np.int64)
+            ids = (pdf[id_col].to_numpy(np.int64) if id_col in pdf
+                   else None)
+            for g in np.unique(groups):
+                sel = np.flatnonzero(groups == g)
+                if ids is not None:
+                    sel = sel[np.unique(ids[sel], return_index=True)[1]]
+                qis = every if probes is None else probes.get(int(g), [])
+                if not len(qis):
+                    continue
+                for qi, gids, dist in score(int(g), pdf.iloc[sel], qis):
+                    top = np.lexsort((gids, dist))[:n]
+                    accs.append((qids[qi], gids[top], dist[top]))
+        if accs:
+            yield rank_pool(pd.DataFrame({
+                qid_col: np.concatenate(
+                    [np.full(len(i), q, dtype=np.int64) for q, i, _ in accs]),
+                id_col: np.concatenate([i for _, i, _ in accs]),
+                "dist": np.concatenate([d for _, _, d in accs]),
+            }), "dist", n, qid_col, id_col).drop(columns="rank")
+
+    top = rank_pool(scan.mapInPandas(task, schema=schema).toPandas(),
+                    "dist", n, qid_col, id_col)
+    if refine_with is None:
+        return local_result(scan.sparkSession, top, "dist", qid_col, id_col)
+    from vectordb_explorations_spark.operators.pq import _exact_refine
+    return _exact_refine(top, qids, qmat, refine_with, k, qmat.shape[1],
+                         id_col, vec_col, qid_col)
 
 
 def _hyperplanes(num_tables: int, num_planes: int, dim: int, seed: int) -> np.ndarray:
@@ -706,7 +785,7 @@ def ivf_build(vectors: DataFrame, num_centroids: int = 16, seed: int = 42,
     true neighbors straddle two cells) land in both lists, which measured
     +0.15-0.2 recall@10 at fixed nprobe on the fixture corpus for a 2x
     index footprint — the classic IVF replication trade. Search must
-    dedupe candidates (ivf_search does).
+    dedupe candidates (``probe_and_merge`` does).
     """
     import pandas as pd
 
@@ -780,21 +859,13 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries: DataFrame,
                k: int, nprobe: int = 8,
                id_col: str = "vec_id", vec_col: str = "embedding",
                qid_col: str = "query_id", qvec_col: str = "query_vec") -> DataFrame:
-    """Probe the ``nprobe`` nearest centroid lists per query, exact-score
-    within them, global top-k. Equivalent role to HNSW's upper-layer
-    routing (hnsw.cc:150-156): coarse structure prunes, fine search scores.
-
-    Scale shape: the probe map (list -> probing-query indices, tiny: Q x
-    nprobe entries) rides the UDF closure, so probed vectors stream through
-    the Arrow stage ONCE — the earlier probe-frame broadcast JOIN
-    replicated every probed row per probing query (measured 12.6x at 1M:
-    25.2M joined rows from a 2M-row code table, ~13 GB of duplicated
-    embeddings through Arrow; 6.9 s -> this shape). Scoring + per-(list,
-    query) local top-k happen inside the stage, so the global window merge
-    ranks only <= partitions x Q x k narrow rows. Build-side replication
-    (ivf_build assign_n > 1) can surface a vector twice for one query —
-    exact distances make the replicas tie, so the bounded merge just
-    dedupes before ranking.
+    """Probe the ``nprobe`` nearest centroid lists per query and score
+    their vectors exactly; returns a local frame (qid, id, dist, rank).
+    Equivalent role to HNSW's upper-layer routing (hnsw.cc:150-156):
+    coarse structure prunes, fine search scores. Probe selection is
+    ``_probe_map`` over the driver-resident centroids; scan pruning,
+    per-task top-k, the merge of the assign_n replicas (exact distances,
+    so they tie) and the served frame are ``probe_and_merge``'s.
 
     When to use which (10M in-memory measurement, SCALE_NOTES): on a
     CACHED corpus the blockwise exact GEMM is competitive past what
@@ -806,69 +877,20 @@ def ivf_search(assigned: DataFrame, centroids: np.ndarray, queries: DataFrame,
     reads ~nprobe/C of the corpus BYTES off storage, and bytes-scanned,
     not FLOPs, is the 100 TB bottleneck.
     """
-    import pandas as pd
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col,
+                                      centroids.shape[1])
 
-    # Probe selection is a (Q, C) argmin over driver-resident centroids —
-    # pure NumPy, no crossJoin/window stage (queries and centroids are both
-    # tiny; the cluster only ever sees the final probed-list isin filter).
-    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col,
-                                         centroids.shape[1])
-    list_q = _probe_map(centroids, qmat, nprobe)
-    scan = (assigned.where(F.col("list_id").isin(sorted(list_q)))
-            .select("list_id", id_col, vec_col))
-    out_schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("dist", T.DoubleType()),
-    ])
+    def score(li, rows, qis):
+        sub = np.asarray(list(rows[vec_col]), dtype=np.float64)
+        sids = rows[id_col].to_numpy(np.int64)
+        for qi in qis:
+            d = sub - qmat[qi]
+            yield qi, sids, np.sqrt(np.einsum("ij,ij->i", d, d))
 
-    def score(batches):
-        # Accumulate per partition, emit once: per-(list, query) local
-        # top-k pools bound the merge shuffle to partitions x Q x k rows.
-        accs = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li, sel in list_rows(lists, ids):
-                sub, sids = mat[sel], ids[sel]
-                for qi in list_q[li]:
-                    # identical per-row arithmetic to the joined shape
-                    # (row - query, einsum self-dot): bit-equal distances
-                    d = sub - qmat[qi]
-                    dist = np.sqrt(np.einsum("ij,ij->i", d, d))
-                    top = np.lexsort((sids, dist))[:k]
-                    accs.append((qid_arr[qi], sids[top], dist[top]))
-        if not accs:
-            return
-        flat = pd.DataFrame({
-            qid_col: np.concatenate(
-                [np.full(len(i), q, dtype=np.int64) for q, i, _ in accs]),
-            id_col: np.concatenate([i for _, i, _ in accs]),
-            "dist": np.concatenate([d for _, _, d in accs]),
-        })
-        # Dedupe assign_n replicas WITHIN the partition first: duplicate
-        # rows would eat top-k slots (measured recall 0.96 -> 0.66 without
-        # this). Cross-partition duplicates can still survive; the bounded
-        # merge dedupes again.
-        yield (flat.sort_values([qid_col, "dist", id_col])
-               .drop_duplicates([qid_col, id_col])
-               .groupby(qid_col, sort=False).head(k))
-
-    local = scan.mapInPandas(score, schema=out_schema)
-    # One exchange for both the cross-batch dedupe and the ranking window:
-    # hash(qid) clusters rows for the (qid, id) distinct AND for the
-    # window's partitioning, so neither inserts its own shuffle — without
-    # the explicit repartition, dropDuplicates shuffles on (qid, id) and
-    # the window re-shuffles the survivors on qid.
-    w = Window.partitionBy(qid_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    return (local.repartition(F.col(qid_col))
-            .dropDuplicates([qid_col, id_col])
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(qid_col, id_col, F.round("dist", 6).alias("dist"), "rank"))
+    return probe_and_merge(
+        assigned.select("list_id", id_col, vec_col), "list_id",
+        _probe_map(centroids, qmat, nprobe), score, qids, qmat, k,
+        id_col=id_col, qid_col=qid_col)
 
 
 def lsh_bucket_skew(index: DataFrame, bucket_cap: int = 1024) -> float:
@@ -1048,8 +1070,7 @@ def append_lists(path: str, op: str, centroids: np.ndarray,
     batch. A crash after the write leaves ``building``; replaying the
     append writes the batch again and counts ``rows`` from the marker's
     pre-append value, and the repeated rows do not change what is served
-    (``list_rows`` scores one row per id, the merges keep one per
-    query and id)."""
+    (``probe_and_merge`` scores one row per id)."""
     from vectordb_explorations_spark.operators.pq import invalidate_corpus_n
 
     spark = new_vectors.sparkSession
@@ -1198,11 +1219,8 @@ def ivf_probe_partitioned(spark, path: str, centroids: np.ndarray,
                           qvec_col: str = "query_vec") -> DataFrame:
     """Serve from the partitioned index: ``ivf_search`` over the unpruned
     hive layout, read with the schema its sidecar stamps (no
-    schema-discovery job). Its one query collect and one probe selection
-    yield the probed-list union as a LITERAL ``list_id IN (...)`` filter,
-    which partition-prunes the scan (unprobed list directories are never
-    read), and its closure probe map restricts each query to ITS
-    lists."""
+    schema-discovery job); the probed-list filter partition-prunes it
+    (``probe_and_merge``), so unprobed list directories are never read."""
     meta = substrate.read_meta(spark, path, "ivf_probe_partitioned")
     return ivf_search(substrate.read_face(spark, path, meta), centroids,
                       queries, k, nprobe=nprobe, id_col=id_col,

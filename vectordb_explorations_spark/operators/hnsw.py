@@ -45,8 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from vectordb_explorations_spark.operators.ann import (
-    IVF_ASSIGN_N, coalesce_to_split_size, collect_query_arrays,
-    local_result, rank_pool)
+    IVF_ASSIGN_N, _probe_map, collect_query_arrays, probe_and_merge)
 from vectordb_explorations_spark.sources import substrate
 
 
@@ -565,7 +564,15 @@ def hnsw_build(vectors: DataFrame, num_shards: int = 8, m: int = 8,
         sharded = vectors.select(
             (F.col(id_col) % num_shards).cast("int").alias("shard"),
             id_col, vec_col)
-    return sharded.groupBy("shard").applyInPandas(build, schema=INDEX_SCHEMA)
+    # shard s builds in partition s mod n_parts, n_parts = min(shard
+    # count, shuffle width): shards never share a partition while there
+    # are enough of them (a hash of the shard ids would pair some), so
+    # the builds and a cached index's unrouted scans run side by side
+    n_shards = len(shard_cell) if shard_cell is not None else num_shards
+    n_parts = min(n_shards, int(vectors.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions")))
+    return (sharded.repartitionById(n_parts, "shard").groupBy("shard")
+            .applyInPandas(build, schema=INDEX_SCHEMA))
 
 
 def _route_to_shards(vectors: DataFrame, cents: np.ndarray,
@@ -684,40 +691,28 @@ def hnsw_search(index_df: DataFrame, queries: DataFrame, k: int,
                 id_col: str = "vec_id",
                 probe_shards: int | str | None = None) -> DataFrame:
     """Per-shard graph search + global top-k merge — SURVEY §3 entry point
-    C; returns a local frame (qid, id, dist, rank).
-
-    The query frame is collected once (``collect_query_batch``); routing
-    and scoring both work from that batch. One Spark stage scans the
-    (routed) shard blobs. A routed scan is coalesced to Spark's
-    file-split size (``ann.coalesce_to_split_size``): a routed set
-    smaller than one split runs as ONE Python task, because each
-    Python-worker task pays a fixed start-up cost (SCALE_NOTES.md,
-    "Python-worker tasks") far above the graph search of the few cells
-    a query routes to, and a large one keeps one task per split. An
-    unrouted scan keeps its partitions: there every query searches
-    every shard, so its graph search grows with the shard count and
-    stays spread across cores (SCALE_NOTES.md measures the trade on
-    four). Each task yields every routed query's
-    per-shard top-k; those rows are collected and ranked on the driver
-    (``ann.rank_pool``: the assign_n replicas of a vector keep their
-    minimum distance, ties break by id), so the driver holds at most
-    shards·Q·k rows.
+    C; returns a local frame (qid, id, dist, rank). The query frame is
+    collected once; scan pruning, per-task top-k, the driver merge (the
+    assign_n replicas of a vector keep their minimum distance) and the
+    served frame are ``ann.probe_and_merge``'s, with the graph search as
+    the per-shard scorer.
 
     With ``probe_shards=None`` every query runs on every shard (required
-    for hash-sharded indexes, whose shards are uniform corpus samples).
-    With ``probe_shards=n`` on a kmeans-sharded index (centroid column
-    non-null), each query routes to its n nearest CELLS — the IVF
-    probe-selection pattern; a split cell's sub-shards all probe — so
-    serving work is O(n cells), not O(shards): the scale path when shard
-    count grows with the corpus. Routing is a (Q, cells) NumPy argmin
-    over the cell table (:func:`_cell_table`, collected here from the
-    frame's (shard, centroid) columns; ``hnsw_probe_partitioned`` reads
-    it from the sidecar instead); no vectors move, and the union of
-    routed shards prunes the blob scan. ``probe_shards='auto'`` resolves
-    the count from the index's cell count at the calibrated
-    probed-fraction operating point (policy block above); a fixed int
-    below that fraction emits one loud RuntimeWarning instead of
-    silently degrading.
+    for hash-sharded indexes, whose shards are uniform corpus samples),
+    and the blob scan keeps its partitions: its graph search grows with
+    the shard count and stays spread across cores (SCALE_NOTES.md,
+    "Python-worker tasks", measures the trade on four). With
+    ``probe_shards=n`` on a kmeans-sharded index (centroid column
+    non-null), each query routes to its n nearest CELLS through
+    ``ann._probe_map`` over the cell table (:func:`_cell_table`,
+    collected here from the frame's (shard, centroid) columns;
+    ``hnsw_probe_partitioned`` reads it from the sidecar instead), and
+    every shard of a routed cell probes, so serving work is O(n cells),
+    not O(shards): the scale path when shard count grows with the
+    corpus. ``probe_shards='auto'`` resolves the count from the index's
+    cell count at the calibrated probed-fraction operating point (policy
+    block above); a fixed int below that fraction emits one loud
+    RuntimeWarning instead of silently degrading.
 
     ef_search defaults to 128: at the 200k probe this lifts recall@10
     0.865 → 0.935 for <25% extra beam work (per-shard graphs are small, so
@@ -733,63 +728,36 @@ def _search(index_df: DataFrame, cells: list[dict] | None,
             qvec_col: str, id_col: str,
             probe_shards: int | str | None) -> DataFrame:
     """:func:`hnsw_search` over the cell table ``cells``, which only a
-    routed call (``probe_shards`` not None) reads."""
-    routed: dict[int, list[int]] | None = None
+    routed call (``probe_shards`` not None) reads. An empty cell table
+    (every vector deleted) routes no query and serves an empty frame."""
+    probes = None
     if probe_shards is None:
         qids, qmat = collect_query_arrays(queries, qid_col, qvec_col)
     else:
         _require_cells(cells, "probe_shards")
         C = np.asarray([c["centroid"] for c in cells], dtype=np.float64)
         qids, qmat = collect_query_arrays(queries, qid_col, qvec_col,
-                                          C.shape[1])
+                                          C.shape[-1])
         if probe_shards == "auto":
             nn = min(adaptive_probe_shards(len(C)), len(C))
         else:
             nn = min(int(probe_shards), len(C))
             _warn_probe_recall_risk(nn, len(C))
-        d2 = -2.0 * qmat @ C.T + (C ** 2).sum(-1)  # (Q, cells)
-        near = np.argpartition(d2, nn - 1, axis=1)[:, :nn]
-        routed = {}
-        for qi in range(len(qids)):
-            for ci in near[qi]:
-                for s in cells[ci]["shards"]:
-                    routed.setdefault(s, []).append(qi)
+        probes = {s: qis for ci, qis in _probe_map(
+                      C.reshape(len(C), qmat.shape[1]), qmat, nn).items()
+                  for s in cells[ci]["shards"]}
 
-    out_schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("dist", T.DoubleType()),
-    ])
+    def score(shard, rows, qis):
+        for blob in rows["blob"]:
+            g: HnswGraph = pickle.loads(blob)
+            for qi in qis:
+                found = g.search(qmat[qi], k, ef_search)
+                yield (qi, np.asarray([v for v, _ in found], dtype=np.int64),
+                       np.asarray([d for _, d in found], dtype=np.float64))
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for shard, blob in zip(pdf["shard"], pdf["blob"]):
-                if routed is not None:
-                    q_sel = routed.get(int(shard), [])
-                else:
-                    q_sel = range(len(qids))
-                if not len(q_sel):
-                    continue
-                g: HnswGraph = pickle.loads(blob)
-                rows_q, rows_i, rows_d = [], [], []
-                for qi in q_sel:
-                    for vid, d in g.search(qmat[qi], k, ef_search):
-                        rows_q.append(qids[qi])
-                        rows_i.append(vid)
-                        rows_d.append(d)
-                yield pd.DataFrame({qid_col: rows_q, id_col: rows_i, "dist": rows_d})
-
-    probed_df = index_df.select("shard", "blob")
-    if routed is not None:
-        # prune unrouted shards at the SCAN: blobs are the heavy payload,
-        # and without this every task still receives all shards' bytes
-        # (on a shard-partitioned persisted index this is partition
-        # pruning — only the probed shards' files are read)
-        probed_df = coalesce_to_split_size(
-            probed_df.where(F.col("shard").isin(sorted(routed))))
-    pool = probed_df.mapInPandas(probe, schema=out_schema).toPandas()
-    top = rank_pool(pool, "dist", k, qid_col, id_col)
-    return local_result(index_df.sparkSession, top, "dist", qid_col, id_col)
+    return probe_and_merge(index_df.select("shard", "blob"), "shard", probes,
+                           score, qids, qmat, k, id_col=id_col,
+                           qid_col=qid_col)
 
 
 def _members_path(path: str) -> str:
@@ -903,17 +871,14 @@ def hnsw_probe_partitioned(spark, path: str, queries: DataFrame, k: int,
     """Serve from the partitioned index: ``hnsw_search`` over the
     unpruned hive layout, read with the schema its sidecar stamps,
     returning its local frame (qid, id, dist, rank). It routes from the
-    sidecar's ``cells`` stamp (no Spark job), collects the query batch
-    once, routes every query once over the full cell population, and
-    applies the union of routed shards as a literal ``shard IN (...)``
-    filter — that is what partition-prunes the blob scan, so unrouted
-    shard directories are never read. The per-shard top-k rows (at most
-    routed shards·Q·k) are ranked on the driver. Bit-equal to the
-    in-memory ``hnsw_search`` over the same index (pinned by
-    tests/test_ann.py). Requires a kmeans-sharded index (non-null
-    centroids); hash shards cannot be routed. A routed call on a
-    sidecar without ``cells`` raises SubstrateMetaError; an unrouted
-    one (``probe_shards=None``) never reads the stamp."""
+    sidecar's ``cells`` stamp (no Spark job), and the routed-shard filter
+    partition-prunes the blob scan (``ann.probe_and_merge``), so unrouted
+    shard directories are never read. Bit-equal to the in-memory
+    ``hnsw_search`` over the same index (pinned by tests/test_ann.py).
+    Requires a kmeans-sharded index (non-null centroids); hash shards
+    cannot be routed. A routed call on a sidecar without ``cells`` raises
+    SubstrateMetaError; an unrouted one (``probe_shards=None``) never
+    reads the stamp."""
     op = "hnsw_probe_partitioned"
     meta = substrate.read_meta(spark, path, op)
     cells = None if probe_shards is None else substrate.stamped(
@@ -1052,6 +1017,11 @@ def hnsw_append_partitioned(spark, path: str, new_vectors: DataFrame,
     meta = substrate.read_meta(spark, path, op, replay=True)
     cells = substrate.stamped(path, meta, "cells", op)
     _require_cells(cells, op)
+    if not cells:
+        raise substrate.SubstrateMetaError(
+            f"{op}: the layout at {path} has no live cell to route the "
+            f"batch to (every vector was deleted); rebuild it with "
+            f"hnsw_persist_partitioned")
     mp = _members_path(path)
     substrate.require_face(spark, mp, op)
     # route the batch DISTRIBUTED with the build's own kernel over the

@@ -495,85 +495,45 @@ def ivfpq_search(codes_df: DataFrame, centroids: np.ndarray,
     """Probe the nprobe nearest lists per query and ADC-score their
     residual codes; returns a local frame (qid, id, dist, rank).
 
-    Shape: one collect of the query batch; the probed-list union becomes
-    a literal ``list_id IN (...)`` scan filter, and the scan is coalesced
-    to Spark's split size (``ann.coalesce_to_split_size``). The query
-    rows, the list -> probing-queries map, the centroids and the
-    codebooks ride the closure; each task builds a list's (nq, m, kc)
-    residual LUTs when it first meets the list, scores that list's codes
-    once per probing query, and emits a per-query top-n pool (n = k, or
-    k·refine_factor with ``refine_with``). The pools are collected and
-    merged on the driver (``ann.rank_pool``: replicas keep their
-    minimum distance, since assign_n puts a vector in two lists with
-    different residual estimates), so the driver holds at most
-    tasks·Q·n candidate rows. With ``refine_with`` the top n per query go
-    through ``_exact_refine``; without it the ADC distance is served.
+    Probe selection is ``ann._probe_map``; scan pruning, per-task pools,
+    the driver merge (replicas keep their minimum distance, since
+    assign_n puts a vector in two lists with different residual
+    estimates) and the optional exact refine of the top k·refine_factor
+    are ``ann.probe_and_merge``'s. The scorer builds a list's (nq, m, kc)
+    residual LUTs when its task first meets the list and scores the
+    list's codes once per probing query; without ``refine_with`` the ADC
+    distance is served.
 
     ``refine_factor='auto'`` / the fixed-rf warning follow pq_search's
     corpus-adaptive policy (1M probe: 0.878 at rf=10 -> 0.961 at the
     resolved rf=50)."""
-    import pandas as pd
-
     if refine_with is not None:
         refine_factor = _resolve_refine_factor(
             refine_factor, codes_df, k, IVFPQ_REFINE_FRACTION, "ivfpq",
             corpus_n=corpus_n, replication=ANN.IVF_ASSIGN_N)
     m, kc, dsub = codebooks.shape
     qids, qmat = collect_query_arrays(queries, qid_col, qvec_col, m * dsub)
-    by_list = _probe_map(centroids, qmat, nprobe)
-    scan = ANN.coalesce_to_split_size(
-        codes_df.where(F.col("list_id").isin(sorted(by_list)))
-        .select("list_id", id_col, "codes"))
-
-    n_local = k * refine_factor if refine_with is not None else k
-    out_schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("adc_dist", T.DoubleType()),
-    ])
     marange = np.arange(m)
+    luts = {}
 
-    def score2(batches):
-        accs, luts = [], {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.int64)  # (N, m)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li, sel in ANN.list_rows(lists, ids):
-                c, sids = codes[sel], ids[sel]
-                qis = by_list[li]
-                if li not in luts:
-                    luts[li] = _residual_luts(qmat[qis] - centroids[li],
-                                              codebooks)
-                # d2[q, n] = sum_s LUT[q, s, c[n, s]]. Chunk the query
-                # axis so the (nq, n, m) gather temp stays bounded even
-                # when every query probes the same hot list.
-                for q0 in range(0, len(qis), 32):
-                    d2 = luts[li][q0:q0 + 32][:, marange[None, :], c].sum(-1)
-                    dist = np.sqrt(np.maximum(d2, 0.0))
-                    for row, qid in enumerate(qids[qis[q0:q0 + 32]]):
-                        top = np.lexsort((sids, dist[row]))[:n_local]
-                        accs.append((qid, sids[top], dist[row][top]))
-        if not accs:
-            return
-        allf = pd.DataFrame({
-            qid_col: np.concatenate(
-                [np.full(len(i), q, dtype=np.int64) for q, i, _ in accs]),
-            id_col: np.concatenate([i for _, i, _ in accs]),
-            "adc_dist": np.concatenate([d for _, _, d in accs]),
-        })
-        yield ANN.rank_pool(allf, "adc_dist", n_local, qid_col,
-                                 id_col).drop(columns="rank")
+    def score(li, rows, qis):
+        c = np.asarray(list(rows["codes"]), dtype=np.int64)  # (N, m)
+        sids = rows[id_col].to_numpy(np.int64)
+        if li not in luts:
+            luts[li] = _residual_luts(qmat[qis] - centroids[li], codebooks)
+        # d2[q, n] = sum_s LUT[q, s, c[n, s]]. Chunk the query axis so
+        # the (nq, n, m) gather temp stays bounded even when every query
+        # probes the same hot list.
+        for q0 in range(0, len(qis), 32):
+            d2 = luts[li][q0:q0 + 32][:, marange[None, :], c].sum(-1)
+            dist = np.sqrt(np.maximum(d2, 0.0))
+            for row, qi in enumerate(qis[q0:q0 + 32]):
+                yield qi, sids, dist[row]
 
-    pool = scan.mapInPandas(score2, schema=out_schema).toPandas()
-    top = ANN.rank_pool(pool, "adc_dist", n_local, qid_col, id_col)
-    if refine_with is None:
-        return ANN.local_result(codes_df.sparkSession, top, "adc_dist",
-                                qid_col, id_col)
-    return _exact_refine(top, qids, qmat, refine_with, k, m * dsub,
-                         id_col, vec_col, qid_col)
+    return ANN.probe_and_merge(
+        codes_df.select("list_id", id_col, "codes"), "list_id",
+        _probe_map(centroids, qmat, nprobe), score, qids, qmat, k,
+        refine_with, refine_factor, id_col, vec_col, qid_col)
 
 
 # ---- partitioned serving for the compressed composite ----
@@ -628,15 +588,10 @@ def ivfpq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
     """Serve IVF-PQ from the hive layout: ``ivfpq_search`` over the
-    unpruned layout, returning its local frame (qid, id, dist, rank).
-    Its one query collect and one probe selection yield the probed-list
-    union as a literal ``list_id IN (...)`` filter (PartitionFilters
-    pruning — unprobed list directories are never read), and its closure
-    probe map restricts each query to ITS lists. The code scan runs at
-    Spark's split size (one task for a small probed set), its pools merge
-    on the driver (at most tasks·Q·k·refine_factor candidate rows), and
-    ``refine_with`` re-scores them in one more pass. The layout's schema
-    and the refine policy's N come from its sidecar: no schema or count
+    unpruned layout, returning its local frame (qid, id, dist, rank);
+    the probed-list filter partition-prunes it (``ann.probe_and_merge``),
+    so unprobed list directories are never read. The layout's schema and
+    the refine policy's N come from its sidecar: no schema or count
     job."""
     meta = substrate.read_meta(spark, path, "ivfpq_probe_partitioned")
     return ivfpq_search(substrate.read_face(spark, path, meta), centroids,

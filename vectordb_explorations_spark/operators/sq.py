@@ -26,11 +26,9 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from vectordb_explorations_spark.functions.rounding import r6, round6
-from vectordb_explorations_spark.functions.vectors import l2_distance
 from vectordb_explorations_spark.operators import ann as ANN
 from vectordb_explorations_spark.operators.ann import (
-    _probe_map, coalesce_to_split_size, collect_query_arrays, local_result,
-    rank_pool)
+    _probe_map, collect_query_arrays)
 from vectordb_explorations_spark.sources import substrate
 
 SQ_LEVELS = 255  # codes 0..255
@@ -274,25 +272,17 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
                  qvec_col: str = "query_vec",
                  corpus_n: int | None = None) -> DataFrame:
     """Probe the ``nprobe`` nearest centroid lists and score their
-    DEQUANTIZED codes; returns a local frame (qid, id, dist, rank).
-
-    The twin of ``pq.ivfpq_search``: one collect of the query batch; the
-    probed-list union is a literal ``list_id IN (...)`` scan filter and
-    the scan is coalesced to Spark's split size; the list ->
-    probing-queries map rides the closure, so probed codes stream through
-    Arrow once and each task emits a per-query top-n pool (n = k, or
-    k·refine_factor with ``refine_with``). The pools are merged on the
-    driver (``ann.rank_pool``; SQ codes are vector-level, so the assign_n
-    replicas of a vector tie exactly), which holds at most tasks·Q·n
-    candidate rows; with ``refine_with`` the top n per query go through
-    ``pq._exact_refine``. ``refine_factor='auto'`` holds rf*k at
+    DEQUANTIZED codes; returns a local frame (qid, id, dist, rank). The
+    twin of ``pq.ivfpq_search``: probe selection is ``ann._probe_map``,
+    and scan pruning, per-task pools, the driver merge and the optional
+    exact refine of the top k·refine_factor are ``ann.probe_and_merge``'s
+    (SQ codes are vector-level, so the assign_n replicas of a vector tie
+    exactly). ``refine_factor='auto'`` holds rf*k at
     IVFSQ_REFINE_FRACTION of the corpus; a fixed rf below the fraction
     warns (the shared decay policy).
     """
-    import pandas as pd
-
     from vectordb_explorations_spark.operators.pq import (
-        _exact_refine, _resolve_refine_factor)
+        _resolve_refine_factor)
 
     if refine_with is not None:
         refine_factor = _resolve_refine_factor(
@@ -300,71 +290,23 @@ def ivfsq_search(codes_df: DataFrame, centroids: np.ndarray,
             corpus_n=corpus_n, replication=ANN.IVF_ASSIGN_N)
 
     scales = _scales(mins, maxs)
-    qid_arr, qmat = collect_query_arrays(queries, qid_col, qvec_col,
-                                         len(mins))
+    qids, qmat = collect_query_arrays(queries, qid_col, qvec_col, len(mins))
     qsq = (qmat ** 2).sum(-1)
-    # Probe map in the UDF closure (Q x nprobe entries) — probed code rows
-    # stream through Arrow ONCE instead of once per probing query (the
-    # probe-frame broadcast join measured 12.6x row replication at 1M:
-    # the 64-byte code arrays alone were ~1.6 GB of duplicated Arrow
-    # traffic; 10.1 s -> this shape).
-    list_q = _probe_map(centroids, qmat, nprobe)
-    scan = coalesce_to_split_size(
-        codes_df.where(F.col("list_id").isin(sorted(list_q)))
-        .select("list_id", id_col, "codes"))
 
-    n_local = k * refine_factor if refine_with is not None else k
-    schema = T.StructType([
-        T.StructField(qid_col, T.LongType()),
-        T.StructField(id_col, T.LongType()),
-        T.StructField("sq_dist", T.DoubleType()),
-    ])
+    def score(li, rows, qis):
+        deq = np.asarray(list(rows["codes"]), dtype=np.float64) * scales + mins
+        rsq = (deq ** 2).sum(-1)
+        sids = rows[id_col].to_numpy(np.int64)
+        for qi in qis:
+            # einsum row-dot against a stride-0 query view
+            q = np.broadcast_to(qmat[qi], deq.shape)
+            d2 = qsq[qi] - 2.0 * np.einsum("ij,ij->i", q, deq) + rsq
+            yield qi, sids, np.sqrt(np.maximum(d2, 0.0))
 
-    def score(batches):
-        # Accumulate per partition, emit once — per-(list, query) local
-        # top-n pools bound the merge shuffle input.
-        accs = []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.asarray(list(pdf["codes"]), dtype=np.float64)
-            deq = codes * scales + mins
-            rowsq = (deq ** 2).sum(-1)
-            lists = pdf["list_id"].to_numpy(dtype=np.int64)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            for li, sel in ANN.list_rows(lists, ids):
-                dsub, rsq, sids = deq[sel], rowsq[sel], ids[sel]
-                for qi in list_q[li]:
-                    # identical per-row arithmetic to the joined shape
-                    # (einsum row-dot against a stride-0 query view):
-                    # bit-equal distances
-                    q = np.broadcast_to(qmat[qi], dsub.shape)
-                    d2 = qsq[qi] - 2.0 * np.einsum("ij,ij->i", q, dsub) \
-                        + rsq
-                    dist = np.sqrt(np.maximum(d2, 0.0))
-                    top = np.lexsort((sids, dist))[:n_local]
-                    accs.append((qid_arr[qi], sids[top], dist[top]))
-        if not accs:
-            return
-        flat = pd.DataFrame({
-            qid_col: np.concatenate(
-                [np.full(len(i), q, dtype=np.int64) for q, i, _ in accs]),
-            id_col: np.concatenate([i for _, i, _ in accs]),
-            "sq_dist": np.concatenate([d for _, _, d in accs]),
-        })
-        # replication dedupe before the local head bounds the pool
-        # without duplicates eating top-n slots (ivf_search's measured
-        # 0.96 -> 0.66 recall failure mode)
-        yield rank_pool(flat, "sq_dist", n_local, qid_col,
-                        id_col).drop(columns="rank")
-
-    pool = scan.mapInPandas(score, schema=schema).toPandas()
-    top = rank_pool(pool, "sq_dist", n_local, qid_col, id_col)
-    if refine_with is None:
-        return local_result(codes_df.sparkSession, top, "sq_dist",
-                            qid_col, id_col)
-    return _exact_refine(top, qid_arr, qmat, refine_with, k, qmat.shape[1],
-                         id_col, vec_col, qid_col)
+    return ANN.probe_and_merge(
+        codes_df.select("list_id", id_col, "codes"), "list_id",
+        _probe_map(centroids, qmat, nprobe), score, qids, qmat, k,
+        refine_with, refine_factor, id_col, vec_col, qid_col)
 
 
 def ivfsq_persist_partitioned(codes_df: DataFrame, path: str,
@@ -413,13 +355,10 @@ def ivfsq_probe_partitioned(spark, path: str, centroids: np.ndarray,
                             qid_col: str = "query_id",
                             qvec_col: str = "query_vec") -> DataFrame:
     """Serve IVF-SQ8 from the hive layout: ``ivfsq_search`` over the
-    unpruned layout, returning its local frame (qid, id, dist, rank).
-    Its one query collect and one probe selection yield the literal
-    probed-list isin (PartitionFilters pruning); the code scan runs at
-    Spark's split size, its pools merge on the driver (at most
-    tasks·Q·k·refine_factor candidate rows) and ``refine_with``
-    re-scores them in one more pass. The layout's schema and the refine
-    policy's N come from its sidecar."""
+    unpruned layout, returning its local frame (qid, id, dist, rank);
+    the probed-list filter partition-prunes it (``ann.probe_and_merge``).
+    The layout's schema and the refine policy's N come from its
+    sidecar."""
     meta = substrate.read_meta(spark, path, "ivfsq_probe_partitioned")
     return ivfsq_search(substrate.read_face(spark, path, meta), centroids,
                         mins, maxs, queries, k,

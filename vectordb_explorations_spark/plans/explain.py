@@ -73,7 +73,11 @@ def plan_summary(df: DataFrame) -> dict:
     """Load-bearing facts of the EXECUTED physical plan (AQE-final when
     available): exchange counts, join strategies, top-k operator, codegen
     spans, Python stages, bucket pruning, pushed filters, read schemas."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    return summarize_plan(df._jdf.queryExecution().executedPlan().toString())
+
+
+def summarize_plan(plan: str) -> dict:
+    """:func:`plan_summary`'s facts of a physical plan's tree string."""
     pushed = [p for p in re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
               if p.strip()]
     schemas = _read_schemas(plan)

@@ -244,7 +244,7 @@ def _epoch_applied(index_dir: str, key: str) -> bool:
     dynamic partition overwrite (latesim.maxsim_append_ingest) — so the
     replay REPLACES its rows. The hive IVF/IVF-PQ appends keep an
     append-only residual: the replayed batch's rows repeat (served once:
-    every IVF-family scan scores one row per id, ``ann.list_rows``) and
+    every IVF-family scan scores one row per id, ``ann.probe_and_merge``) and
     the sidecar N counts them twice until the periodic re-train/rewrite
     that IS their maintenance cycle."""
     return os.path.exists(os.path.join(index_dir, f"_epoch_{key}"))
